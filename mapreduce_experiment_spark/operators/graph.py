@@ -26,12 +26,15 @@ Scale notes (SURVEY §4, §7 hard parts):
   its lowest-degree corner. This bounds per-node candidate fan-out by
   O(m^0.5) instead of O(max_degree) — the standard literature
   optimization the reference lacks — and is what survives heavy-tailed
-  degree distributions at 100 TB. Since r18 the closure is a per-edge
-  adjacency-array intersection (no open-triad rows are ever
-  materialized; see :func:`_edge_common_closers`).
+  degree distributions. The closure is a per-edge intersection of
+  out-adjacency arrays, so no open-triad rows are ever materialized
+  (see :func:`_edge_common_closers`).
 - Edge dedup happens BEFORE the candidate stage (the reference
   dedups only at the very end, after a quadratic candidate explosion:
   4,055,477 raw emissions for 587,314 distinct on 100k.txt).
+- A triangle query materializes exactly two tables, both as eager
+  ``localCheckpoint``s: the deduped edge set and the oriented
+  out-adjacency arrays. Nothing is registered in the SQL cache.
 - No ``collect()`` anywhere; adjacency lists exist only as a parity
   demo (:func:`adjacency`), never on the triangle path.
 - AQE skew-join handles residual hot keys (session.py).
@@ -39,7 +42,7 @@ Scale notes (SURVEY §4, §7 hard parts):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -170,6 +173,13 @@ def candidate_pair_counts(edges: DataFrame) -> DataFrame:
 
 
 # --- §2 rows 6-9: triangle enumeration --------------------------------------
+def closure_partitions(spark: SparkSession) -> int:
+    """Partition count of the closure's explicit exchange on the
+    oriented low endpoint: 2x the cluster's cores, so every core stays
+    busy through stragglers and the count scales with the cluster."""
+    return 2 * spark.sparkContext.defaultParallelism
+
+
 def _edge_common_closers(edges: DataFrame,
                          assume_canonical: bool = False,
                          _input_materialized: bool = False) -> DataFrame:
@@ -186,90 +196,35 @@ def _edge_common_closers(edges: DataFrame,
     orientation are OMITTED (the inner join on x drops them) — their
     intersection is necessarily empty, so both current consumers are
     unaffected, but a consumer expecting one row per oriented edge
-    must outer-join (r18 ADVICE).
+    must outer-join.
 
-    r18 optimization round (guide §1.2 "the distributed algorithm"):
-    this replaces the 2-path self-join + LEFT SEMI closure, which
-    materialized every open triad as a join row — P = Σ C(d+(w), 2)
-    rows (41.1M at sf0.1) probed one-by-one against the closing-edge
-    hash table, and at scale SORTED for the closure's sort-merge join
-    (the 10× probe's only spill: 13 GB of triad sort buffers). The
-    intersection does the same element-level work inside two
-    edge-count-sized joins — no triad rows exist, no O(P) sort, and
-    the only payload crossing an exchange is the adjacency arrays
-    (Σ|N+| = m elements) plus per-edge array copies. Measured (noop
-    sink, scripts/attr_triangle.py): count at sf0.1 79.4 → 65.1 s CPU,
-    enumeration 123.2 → 59.2 s CPU; at the 10× scale point 1,772 →
-    499 s CPU and 98.1 → 26.4 s wall with the spill gone. Orientation
-    bounds every array by O(√m) (max 97 at sf0.1), so per-row memory
-    is small and a hot ``x`` join key carries small arrays."""
-    # The canonical edge set feeds degrees AND orientation — cut and
-    # materialize it once so the upstream scan/dedup (or, in the
-    # derived-edges case, a whole join pipeline) runs once. At
-    # cluster scale this is the deduped simple graph: far smaller
-    # than the raw input and the right thing to keep hot.
-    #
-    # r19 cache-lifecycle fix (r18 VERDICT "What's wrong" #2 / ADVICE):
-    # eager localCheckpoint instead of persist()+count() — the same
-    # materialization job and the same blocks, but GC-scoped (the
-    # ContextCleaner frees them when the returned plan is dropped)
-    # rather than a plan-keyed CacheManager entry that outlived every
-    # invocation. Nothing downstream reuses ce's (u,v)-hash
-    # partitioning, so the checkpoint's partitioning loss is free.
-    # ``_input_materialized=True`` (faithful mode) skips even that:
-    # the caller already checkpointed the edge set and this call's
-    # canonical_edges is a pure column rename of it (the r18 ADVICE's
-    # "second persisted copy").
+    The intersection does the element-level work of the classic
+    2-path closure inside one edge-count-sized join: no triad rows
+    exist, and the only payload crossing an exchange is the adjacency
+    arrays (Σ|N+| = m elements). Orientation bounds every array by
+    O(√m), so per-row memory is small and a hot ``x`` join key carries
+    small arrays.
+
+    ``_input_materialized=True`` means the caller already checkpointed
+    the edge set, so ``canonical_edges`` here is a rename of it and is
+    not materialized again (faithful mode)."""
+    # The canonical edge set feeds both the degrees and the
+    # orientation: materialize it once so the upstream scan and dedup
+    # run once.
     ce = canonical_edges(edges, assume_canonical)
     if not _input_materialized:
         ce = ce.localCheckpoint(eager=True)
-    # Re-shuffle the (small) oriented edge set on its low endpoint.
-    # Without this, AQE coalesces the tiny upstream aggregates into a
-    # handful of partitions and the compute-bound intersection stage
-    # inherits that near-serial layout (same class as the pre-r18
-    # triad join's measured 1.3–1.8× regression under AQE coalescing,
-    # BENCHNOTES.md round-5). Orientation bounds per-key fan-out by
-    # O(sqrt(m)), so hashing on lo cannot itself create a hot
-    # partition.
-    #
-    # The partition COUNT must be explicit: AQE's coalescing targets
-    # bytes (the 64 MB advisory size), but this exchange feeds work
-    # proportional to Σ(|N+(w)|+|N+(x)|) per edge — far more compute
-    # per shuffled byte than byte-based coalescing assumes. 2× the
-    # cluster's core count keeps every core busy through stragglers
-    # and scales with the cluster instead of hard-coding this box;
-    # the floor of 64 preserves the measured local[32] operating
-    # point even under smaller test sessions.
-    nparts = max(64, 2 * ce.sparkSession.sparkContext.defaultParallelism)
-    # The oriented edge set feeds e1's stream side AND both adj
-    # broadcasts, and the adjacency table feeds two
-    # DIFFERENTLY-ALIASED broadcasts whose subplans do not unify —
-    # unmaterialized, the executed plan ran the degrees+orientation+
-    # repartition pipeline THREE times and the collect_list twice
-    # (read in the r18 executed plan; the same double-build the
-    # streaming closure measured at 109 → 68 s CPU).
-    #
-    # r19 lifecycle: o is persisted only long enough to derive adj on
-    # its exchange-free partitioning (the groupBy below reuses the
-    # repartition's hash(lo) layout — cached-plan partitioning IS
-    # visible statically, unlike a checkpoint's), then both survive
-    # to the returned plan as eager localCheckpoints: GC-scoped RDD
-    # blocks (ContextCleaner-freed with the result) instead of the
-    # pre-r19 THREE CacheManager entries per invocation that nothing
-    # ever unpersisted (r18 VERDICT What's-wrong #2). The extra cost
-    # is one in-memory copy of o's blocks (no shuffle — fingerprint
-    # pins unchanged); the checkpoint RDDs keep the 2×cores physical
-    # partition layout for the intersection stage.
-    o_p = _oriented_repartitioned(ce, nparts).persist()
-    # Out-adjacency arrays, grouped on the SAME key/partitioning as the
-    # repartition above — no extra exchange; the arrays total m
-    # elements and each is O(√m) by orientation.
-    adj = _out_adjacency(o_p).localCheckpoint(eager=True)
-    o = o_p.localCheckpoint(eager=True)  # copy from the cache, no shuffle
-    o_p.unpersist()
-    e1 = o.join(adj, "lo").select(
-        F.col("lo").alias("w"), F.col("hi").alias("x"),
-        F.col("nbrs").alias("n_lo"))
+    # The out-adjacency arrays are the closure's only other
+    # materialized table: they feed both sides of the join below, and
+    # e1 is derived from them by an in-row explode. The groupBy reuses
+    # the repartition's hash(lo) layout (no extra exchange), and the
+    # checkpoint keeps its physical partitions, so the compute-bound
+    # intersection stage runs closure_partitions() tasks.
+    adj = _out_adjacency(
+        _oriented_repartitioned(ce, closure_partitions(ce.sparkSession))
+    ).localCheckpoint(eager=True)
+    e1 = adj.select(F.col("lo").alias("w"), F.explode("nbrs").alias("x"),
+                    F.col("nbrs").alias("n_lo"))
     e2 = e1.join(adj.select(F.col("lo").alias("x"),
                             F.col("nbrs").alias("n_hi")), "x")
     return e2.select(
@@ -278,18 +233,22 @@ def _edge_common_closers(edges: DataFrame,
 
 def _oriented_repartitioned(ce: DataFrame, nparts: int) -> DataFrame:
     """The oriented edge set, explicitly REPARTITION_BY_NUM on its low
-    endpoint — the pre-checkpoint subplan of the closure's stream
-    side. Factored so the plan pins (test_plans) can explain the
-    ACTUAL code path: since the r19 checkpoint lifecycle the final
-    query plan truncates at the checkpoint scan, so the r6
-    explicit-partition-count contract is pinned on this subplan."""
+    endpoint. Without an explicit count AQE coalesces this exchange by
+    shuffle bytes, but the stage it feeds does work proportional to
+    Σ(|N+(w)|+|N+(x)|) per edge — far more compute per shuffled byte
+    than byte-based coalescing assumes — and would run near-serial.
+    Orientation bounds per-key fan-out by O(√m), so hashing on lo
+    cannot itself create a hot partition. Factored so the plan pins in
+    test_plans can inspect the subplan before the checkpoint truncates
+    it."""
     return _oriented(ce).repartition(nparts, F.col("lo"))
 
 
 def _out_adjacency(o: DataFrame) -> DataFrame:
     """Out-neighbor arrays per oriented low endpoint (bounded O(√m)
-    by the degree orientation) — the closure's build side, factored
-    for the same plan-pin reason as :func:`_oriented_repartitioned`."""
+    by the degree orientation) — the closure's only join input,
+    factored for the same plan-pin reason as
+    :func:`_oriented_repartitioned`."""
     return o.groupBy("lo").agg(F.collect_list("hi").alias("nbrs"))
 
 
@@ -299,9 +258,9 @@ def _simple_triangle_corners(edges: DataFrame,
     """Each triangle exactly once as (w, x, y): w the triangle's
     low-(degree,id) source corner, x its oriented out-neighbor on this
     edge, y the closing common out-neighbor — NOT yet sorted into
-    canonical (a,b,c) order (x < y is NOT guaranteed, unlike the
-    pre-r18 triad form; both consumers sort or count). Shared by the
-    enumeration (which canonicalizes) and faithful mode."""
+    canonical (a,b,c) order (x < y is NOT guaranteed; both consumers
+    sort or count). Shared by the enumeration (which canonicalizes)
+    and faithful mode."""
     ec = _edge_common_closers(edges, assume_canonical, _input_materialized)
     return ec.select("w", "x", F.explode("common").alias("y"))
 
@@ -361,15 +320,12 @@ def triangles(edges: DataFrame, mode: str = "simple",
             abc.getItem(2).alias("c"),
         )
     if mode == "faithful":
-        # Degenerate-output DECOMPOSITION (r18 optimization round).
-        # The pre-r18 form replayed the reference's multiset-adjacency
-        # condition literally: pair ⋈ madj ⋈ madj over the UNORIENTED
-        # adjacency — O(Σ d(x)·mult) candidate rows, measured 332 s
-        # executor CPU at sf0.1 where the oriented simple path costs
-        # 73 s for the same clean input. But the condition factors
-        # EXACTLY into three disjoint classes by the output triple's
-        # node-multiset pattern (distinct triples; S = the simple
-        # support graph, L = self-loop nodes):
+        # The reference's condition factors EXACTLY into three
+        # disjoint classes by the output triple's node-multiset
+        # pattern (distinct triples; S = the simple support graph,
+        # L = self-loop nodes), so faithful mode stays all joins over
+        # the oriented simple path instead of replaying multiset
+        # adjacency lists (O(Σ d(x)·mult) candidate rows):
         #
         # - 3 distinct nodes (x<y, w∉{x,y}): {x,y},{w,x},{w,y} ∈ S —
         #   precisely the simple-mode triangles of the support graph,
@@ -385,20 +341,27 @@ def triangles(edges: DataFrame, mode: str = "simple",
         # The classes cannot overlap (different node-multiset
         # patterns) and each is produced exactly once below, so the
         # union IS the distinct set — no final distinct() needed.
-        # Equivalence to the literal multadj replay is pinned by
-        # test_faithful_decomposition_matches_multadj_replay on random
-        # dirty graphs (self-loops + duplicates) and by the reference
-        # goldens (30k.txt carries a real self-loop). On clean input
+        # Equivalence to the literal multiset-adjacency replay is
+        # pinned by test_faithful_decomposition_matches_multadj_replay
+        # and by the dirty-graph goldens in test_graph. On clean input
         # L = ∅ and this costs exactly the simple path.
-        # Eager localCheckpoint, not persist (r19 cache-lifecycle fix):
-        # consumed by the corners path and 2 joins; GC-scoped, so no
-        # CacheManager entry outlives the returned plan. The simple
-        # path below is told the input is already materialized so it
-        # does not checkpoint a second copy of the same edge set (the
-        # r18 ADVICE item).
-        ce = canonical_edges(edges).localCheckpoint(eager=True)
-        loops = (edges.where(F.col("src") == F.col("dst"))
-                 .select(F.col("src").alias("l")).distinct())
+        #
+        # The input is scanned once: one checkpointed distinct of the
+        # unordered pairs, self-loops kept, splits into S (u != v) and
+        # L (u == v). Both are already distinct, and the simple path
+        # is told S is materialized so it does not checkpoint a copy.
+        # least/greatest skip nulls, so a row with one null endpoint
+        # is dropped first rather than read as a self-loop.
+        pairs = (
+            edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            .select(F.least("src", "dst").alias("u"),
+                    F.greatest("src", "dst").alias("v"))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
+        ce = pairs.where(F.col("u") != F.col("v"))
+        loops = pairs.where(F.col("u") == F.col("v")).select(
+            F.col("u").alias("l"))
         simple_tris = triangles(
             ce.select(F.col("u").alias("src"), F.col("v").alias("dst")),
             mode="simple", assume_canonical=True,
@@ -420,12 +383,11 @@ def triangle_count(edges: DataFrame, mode: str = "simple",
                    assume_canonical: bool = False) -> DataFrame:
     """Total triangle count (§2 derived operator; the published metric).
 
-    The simple-mode count never materializes per-triangle rows at all
-    (r18): each oriented edge contributes |N+(w) ∩ N+(x)| — summing
-    the intersection sizes counts every triangle exactly once without
-    the explode or the canonical (a,b,c) sort projection. coalesce(0)
-    matches the pre-r18 count-rows form on an edgeless input (sum over
-    zero rows is NULL, count was 0).
+    The simple-mode count never materializes per-triangle rows at all:
+    each oriented edge contributes |N+(w) ∩ N+(x)| — summing the
+    intersection sizes counts every triangle exactly once without the
+    explode or the canonical (a,b,c) sort projection. coalesce(0) makes
+    an edgeless input count 0 (a sum over zero rows is NULL).
     """
     if mode == "simple":
         return _edge_common_closers(edges, assume_canonical).agg(

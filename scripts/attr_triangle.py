@@ -43,7 +43,7 @@ from mapreduce_experiment_spark.sources.tables import derive_edges  # noqa: E402
 def oriented_with_parts(edges, assume_canonical=True):
     ce = G.canonical_edges(edges, assume_canonical).persist()
     ce.count()
-    nparts = max(64, 2 * ce.sparkSession.sparkContext.defaultParallelism)
+    nparts = G.closure_partitions(ce.sparkSession)
     o = G._oriented(ce).repartition(nparts, F.col("lo"))
     return ce, o, nparts
 

