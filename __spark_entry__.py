@@ -1,9 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry contract for the spark-graft engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` is
+compared against the matching ``oracle_sql()[name]`` via DuckDB
+(row-count + schema + order-insensitive values), as
+``tests/test_registry_oracle.py`` does at sf0.001 and sf0.01.
 
 All real logic lives in the ``mapreduce_experiment_spark`` package;
 this module only adapts it to the driver's interface.
@@ -34,8 +34,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle per query.
 
-    Every registered query has one: the driver has no rows-only mode
-    (an omitted oracle is recorded as ``err: no_oracle``, observed in
-    round 2), so even the approximate sketches carry oracles — exact
-    values plus in-bounds booleans the oracle pins to TRUE."""
+    Every registered query has one (``register`` requires it; there is
+    no rows-only check), so even the approximate sketches carry
+    oracles — exact values plus in-bounds booleans the oracle pins to
+    TRUE."""
     return _registry.ORACLE_SQL()

@@ -226,8 +226,8 @@ def main() -> None:
         out["sf2"] = _sf_from_dir(second)
     # Contention context: this box carries bursty EXTERNAL load
     # (observed 1-min loadavg 0.4 → 9.9 across a single run), which
-    # dominates round-over-round wall-clock deltas. Recording it makes
-    # each BENCH_r{N}.json self-describing (see BENCHNOTES.md).
+    # dominates run-over-run wall-clock deltas. Recording it makes
+    # each bench record self-describing (see BENCHNOTES.md).
     out["loadavg_1m_before"] = round(load_before[0], 2)
     out["loadavg_1m_after"] = round(os.getloadavg()[0], 2)
     print(json.dumps(out))

@@ -481,8 +481,8 @@ def fingerprints(docs: DataFrame, text_col: str = "text",
     tokenize re-split the text several times per evaluation) AND the
     pushed-down NULL filter evaluated the entire fingerprint
     expression a second time below the projection (two interpreted
-    full evaluations per doc, plans/r18/fingerprints_before.txt
-    operators (3)+(4)); on the single-row-group local scan that was
+    full evaluations per doc: the Filter and Project operators of the
+    formatted plan); on the single-row-group local scan that was
     one task doing everything — measured 12.2 s wall ≈ 11.6 s CPU.
     The exploded form is whole-stage codegen, hashes each gram once,
     and parallelizes past the exchange. Values identical: same gram

@@ -490,10 +490,8 @@ def _clean_corpus_oracle() -> str:
     return surv + span + _SPAN_REMOVAL_TAIL
 
 
-# headline (r7): the r6 verdict's item 4 — the 7 headline queries
-# dated from r1 and under-represented the LLM-pipeline path; the
-# composed curation chain now gets round-over-round plan-work
-# fingerprints in BENCH_r{N}.json.
+# headline: the composed curation chain is the LLM-pipeline path's
+# representative in bench.py, which records its plan-work metrics.
 @register("clean_corpus", oracle=_clean_corpus_oracle(), headline=True)
 def q_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shipped artifact of a curation pipeline, end-to-end: doc-

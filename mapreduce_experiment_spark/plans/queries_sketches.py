@@ -3,11 +3,9 @@ driver-checkable.
 
 Sketch outputs are engine-specific estimators (Spark HyperLogLog++ /
 GK percentile sketches have no DuckDB equivalent), so the raw
-estimates can never value-match a cross-engine oracle. Round 2
-registered them with ``oracle=None`` expecting the driver's rows-only
-mode — but the driver has no such mode (it emitted ``err:
-no_oracle``). Round 3 restates each query as an oracle-compatible
-contract:
+estimates can never value-match a cross-engine oracle. Every
+registered query must carry an oracle (there is no rows-only check),
+so each query is stated as an oracle-compatible contract:
 
 - the output carries the EXACT values (oracle-computable in DuckDB:
   exact distinct counts / exact continuous quantiles), plus
@@ -67,8 +65,8 @@ def q_approx_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate by every distinct key value — which allocates the three
     # rsd=0.01 HLL++ buffers (~13 KB each) PER DISTINCT KEY GROUP
     # (~190k groups at sf0.1 = ~7 GB of register arrays; measured 190 s
-    # executor CPU / 76 s wall, plans/r18/approx_distinct_counts_before
-    # .txt operator (3)). Split, the HLL pass is a plain two-phase
+    # executor CPU / 76 s wall, in the partial HashAggregate above the
+    # Expand). Split, the HLL pass is a plain two-phase
     # scalar aggregate (3 buffers per task total) and the exact pass
     # Expands with only count buffers; the two 1-row results cross-join
     # back. Values are identical: same aggregates over the same rows,

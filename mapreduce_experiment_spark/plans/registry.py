@@ -1,16 +1,19 @@
-"""Named-query registry — the driver contract's backing store.
+"""Named-query registry: every query the engine serves, with its oracle.
 
 Every operator the engine claims (SURVEY §2 plus north-star
 extensions) registers here as a ``(spark, sf_dir) -> DataFrame``
-callable, optionally paired with the ANSI-SQL oracle DuckDB runs on
-the same parquet tables. ``__spark_entry__.py`` just re-exports these.
+callable paired with the ANSI-SQL oracle DuckDB runs on the same
+parquet tables. ``__spark_entry__.py`` re-exports these, and
+``tests/test_registry_oracle.py`` checks every query against its
+oracle. ``QUERIES()``, ``ORACLE_SQL()`` and ``SPECS()`` list the
+queries in registration order.
 
-Conventions (driver contract):
+Conventions (the oracle comparison in ``tests/oracle_util.py``):
 
 - Every computed column is aliased identically in the Spark plan and
-  the oracle SQL — the driver sorts columns by name before hashing.
+  the oracle SQL — columns are matched by name.
 - Floating-point aggregates are rounded (ROUND(x, 2..6)) on BOTH
-  sides so summation-order drift between engines can't flip a hash.
+  sides so summation-order drift between engines can't flip a value.
 - Queries must be deterministic sets (no LIMIT without a total order).
 """
 
@@ -26,10 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB SQL; None is recorded err:no_oracle by
-    # the driver (no rows-only mode exists) — every query must ship one
+    oracle: str  # DuckDB SQL over the same parquet tables
     headline: bool = False  # included in bench.py
-    module: str = ""  # defining plans module (rotation-contract test)
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -113,7 +114,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set(_SHUFFLE_DECIDED_CONF, "true")
 
 
-def register(name: str, oracle: str | None = None, headline: bool = False):
+def register(name: str, oracle: str, headline: bool = False):
     """Decorator: add a (spark, sf_dir) -> DataFrame query to the registry."""
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,120 +122,24 @@ def register(name: str, oracle: str | None = None, headline: bool = False):
             return fn(spark, sf_dir)
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
-        _REGISTRY[name] = QuerySpec(name, wrapped, oracle, headline,
-                                    module=fn.__module__)
+        _REGISTRY[name] = QuerySpec(name, wrapped, oracle, headline)
         return fn
     return deco
 
 
-# Exposure order. The round driver verifies a PREFIX of the registry
-# (observed: exactly the first 50 registrations), so ordering is part
-# of the driver contract: queries that are NEW, CHANGED this round, or
-# whose last verdict is stalest go first; stable queries proven green
-# in a recent round rotate to the back. Names not listed keep their
-# registration order after the listed ones.
-#
-# WINDOW is the single source of truth for the driver's observed
-# verification-prefix size: tests/test_registry_order.py pins _ORDER
-# to it and scripts/rehearse.py splits the halves on it (ADVICE r13:
-# a hardcoded 50 in the rehearsal script would silently test the
-# wrong halves if the window ever changed). Its correctness against
-# the driver's ACTUAL behavior is machine-checked each round by
-# test_driver_window_contract_holds (len(CORRECTNESS keys) == WINDOW).
-WINDOW = 50
-#
-# SATURATION: with a 50-query window on alternate-round rotation, 100
-# registered queries is the EXACT ceiling at which every entry can
-# hold a driver verdict <= 1 round old (50 verified this round, 50
-# last round). Round 9's window re-verifies the 48 r7-greens the r8
-# window rotated out, and spends the two slack slots exactly as the
-# r8 verdict prescribed — promoting the two strongest 100 TB claims
-# from unit-test-verified to driver-verified:
-# stateful_streaming_sessions_evicting (the DEPLOYMENT-mode
-# sessionizer with event-time-evicted state, previously reached from
-# no registered query; oracle = the batch gap-and-islands SQL with
-# ts-keyed session ids) and embedding_near_dups_maintained (the SRP
-# index write→append→compact maintenance cycle, previously pinned
-# only by rebuild-parity unit tests; oracle = full recompute over
-# corpus+batch). Registry: 100 — AT the ceiling: from r10 onward
-# every rotation is exactly the 50 rotated-out queries with zero
-# slack, so any new registration must be funded by a retirement
-# (next candidate per the r8 verdict: srp_bucket_stats, whose
-# occupancy stats are implied by the indexed query's oracle-checked
-# candidate set).
-#
-# ROUND 19: steady-state alternate-round cadence, ninth full cycle —
-# the r18 driver verdict landed (CORRECTNESS_r18.json, 50/50 green,
-# keys == WINDOW_r18.json), so the r18 window's queries are all
-# freshly verified and rotate out. This window = the registry's
-# stalest set: exactly the 50 r17-greens (WINDOW_r17.json keys,
-# verbatim — nothing retired or deferred in r18, 50 = 50, zero
-# slack). This window delivers the FIRST post-change driver verdicts
-# for the r18 optimization round's heaviest rewrites, which all sit
-# in the r17 half (the r18 VERDICT's item 2 names exactly this):
-# triangle_count / triangles (adjacency-intersection closure),
-# connected_components + clean_corpus / dedup_clusters /
-# dedup_survivors / decontaminated_corpus (lazy checkpoint +
-# assume_canonical), streaming_minhash_dedup (double-evaluation
-# removal), and streaming_triangle_count (r18 degree-capped
-# intersection AND this round's delta-shaped state). Any r19 edit
-# whose VALUES could move a query must target queries inside this
-# window; out-of-window touches are attested with a value-neutrality
-# argument in test_registry_order.py (the attestation file is
-# authoritative — this comment is narrative).
-_ORDER: list[str] = [
-    # -- the 50 r17-greens (WINDOW_r17.json order, verbatim) --
-    "knn_ivf_maintained", "streaming_minhash_dedup",
-    "stateful_streaming_sessions", "streaming_view_attribution",
-    "knn_ivf_pruned", "embedding_near_dups_indexed",
-    "streaming_event_dedup", "embedding_near_dups_probe",
-    "approx_order_percentiles", "asia_market_share", "clean_corpus",
-    "connected_components", "decontaminated_corpus",
-    "decontamination_external", "decontamination_pairs",
-    "dedup_clusters", "dedup_survivors", "doc_chunks",
-    "event_type_counts_salted", "hourly_event_counts",
-    "ivf_assignments", "knn_bruteforce", "knn_ivf",
-    "lineitem_profile", "media_byte_histograms", "media_frame_sample",
-    "media_metadata", "monthly_retention_cohorts",
-    "nation_participants_full_outer", "order_size_distribution",
-    "packed_sequence_fragments", "packed_sequences",
-    "price_quantity_correlation", "purchase_last_click_asof",
-    "quality_filtered_corpus", "repetition_scores", "session_stats",
-    "session_window_stats", "signup_to_purchase_funnel",
-    "source_mixture_sample", "stratified_event_sample",
-    "streaming_hourly_counts", "streaming_triangle_count",
-    "top_parts_per_nation", "triangle_count", "triangles",
-    "trigram_counts", "value_band_range_join",
-    "value_distribution_stats", "volume_shipping",
-    # ---- verification-window boundary: len(_ORDER) == 50, pinned by
-    #      test_order_is_exactly_the_window ----
-    # r18-green unchanged queries follow in registration order.
-]
-
-
-def _ordered() -> dict[str, QuerySpec]:
-    out: dict[str, QuerySpec] = {}
-    for n in _ORDER:
-        if n in _REGISTRY:
-            out[n] = _REGISTRY[n]
-    for n, s in _REGISTRY.items():
-        out.setdefault(n, s)
-    return out
-
-
 def QUERIES() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     _load_all()
-    return {n: s.fn for n, s in _ordered().items()}
+    return {n: s.fn for n, s in _REGISTRY.items()}
 
 
 def ORACLE_SQL() -> dict[str, str]:
     _load_all()
-    return {n: s.oracle for n, s in _ordered().items() if s.oracle is not None}
+    return {n: s.oracle for n, s in _REGISTRY.items()}
 
 
 def SPECS() -> dict[str, QuerySpec]:
     _load_all()
-    return _ordered()
+    return dict(_REGISTRY)
 
 
 _loaded = False

@@ -51,7 +51,7 @@ In-contract means the documented engine contracts stay respected:
 Usage:
 
     python scripts/adversarial_rehearse.py                  # all 100
-    python scripts/adversarial_rehearse.py --half window
+    python scripts/adversarial_rehearse.py --only triangles,knn_ivf
     python scripts/adversarial_rehearse.py --seed 3         # new corpus
 
 Any FAIL is a finding: either a real engine/oracle divergence to fix
@@ -618,14 +618,12 @@ def write_advdata(out_dir: str, base_dir: str, seed: int) -> None:
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--half", choices=("window", "complement", "all"),
-                    default="all")
     ap.add_argument("--base", default="/root/testdata/sf0.001")
     ap.add_argument("--out", default="/tmp/spark_graft_advdata")
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--cpus", type=int, default=16)
     ap.add_argument("--only", default=None,
-                    help="comma-separated query names (overrides --half)")
+                    help="comma-separated query names (default: all)")
     args = ap.parse_args()
 
     write_advdata(args.out, args.base, args.seed)
@@ -637,32 +635,25 @@ def main() -> int:
              .config("spark.ui.enabled", "false").getOrCreate())
 
     import __spark_entry__ as entry
-    from mapreduce_experiment_spark.plans.registry import WINDOW
     from tests.oracle_util import assert_matches, run_oracle
 
     q, o = entry.queries(), entry.oracle_sql()
-    names = list(q)
-    half = {"window": names[:WINDOW], "complement": names[WINDOW:],
-            "all": names}[args.half]
-    if args.only:
-        half = [n for n in args.only.split(",") if n]
+    names = [n for n in args.only.split(",") if n] if args.only else list(q)
     t00 = time.time()
     failures: list[tuple[str, str]] = []
-    for i, name in enumerate(half):
+    for i, name in enumerate(names):
         t0 = time.time()
         try:
-            if name not in o:
-                raise AssertionError("no_oracle")
             df = q[name](spark, args.out)
             assert_matches(df, run_oracle(o[name], args.out), name)
             verdict = "OK"
         except Exception as ex:  # noqa: BLE001 — report and continue
             verdict = f"FAIL {str(ex)[:300]}"
             failures.append((name, verdict))
-        print(f"[{i + 1}/{len(half)}] {name}: {verdict} "
+        print(f"[{i + 1}/{len(names)}] {name}: {verdict} "
               f"({time.time() - t0:.1f}s)", flush=True)
-    print(f"RESULT adversarial {args.half} seed={args.seed}: "
-          f"{len(half) - len(failures)}/{len(half)} OK, "
+    print(f"RESULT adversarial seed={args.seed}: "
+          f"{len(names) - len(failures)}/{len(names)} OK, "
           f"wall {time.time() - t00:.0f}s")
     for name, msg in failures:
         print("FAIL", name, msg)

@@ -1,14 +1,15 @@
-"""r19 optimization-round profiler: wall + stage metrics + formatted
-plan for EVERY registered query at one sf (default sf0.1).
+"""Registry profiler: wall + stage metrics + formatted plan for EVERY
+registered query at one sf (default sf0.1).
 
-Unlike bench.py (10 headliners, driver contract), this measures the
-full 100-query registry to rank optimization targets and snapshots
-each query's .explain("formatted") to plans/r19/<name>_<tag>.txt so
-plan claims in OPTIMIZATION_r19.md are checkable offline.
+Unlike bench.py (the headline queries), this measures the full
+registry to rank optimization targets and snapshots each query's
+.explain("formatted") to <out>/plans/<name>_<tag>.txt so plan claims
+are checkable offline.
 
-Usage: python scripts/profile_r19.py [--tag before] [--sf-dir DIR]
-       [--only name1,name2] [--runs 2]
-Writes JSON to PROFILE_r19_<tag>.json in the repo root.
+Usage: python scripts/profile.py [--tag before] [--sf-dir DIR]
+       [--only name1,name2] [--runs 2] [--no-plans]
+Writes JSON to <out>/<tag>.json, where <out> is /tmp/spark-graft-profile
+(outside the checkout, so profiling leaves the tree clean).
 """
 
 from __future__ import annotations
@@ -21,6 +22,10 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+OUT = "/tmp/spark-graft-profile"
+# This file's name shadows the stdlib ``profile`` module, which
+# cProfile imports (via pyspark): keep scripts/ off the import path.
+sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != HERE]
 sys.path.insert(0, ROOT)
 
 from bench import _merge_deltas, _stage_delta, _stage_snapshot  # noqa: E402
@@ -44,7 +49,7 @@ def main() -> None:
     ap.add_argument("--no-plans", action="store_true")
     args = ap.parse_args()
 
-    plans_dir = os.path.join(ROOT, "plans", "r19")
+    plans_dir = os.path.join(OUT, "plans")
     os.makedirs(plans_dir, exist_ok=True)
 
     spark = get_session(app_name=f"spark-graft-profile-{args.tag}")
@@ -103,7 +108,7 @@ def main() -> None:
             rec["error"] = f"{type(e).__name__}: {e}"[:500]
         out[name] = rec
 
-    path = os.path.join(ROOT, f"PROFILE_r19_{args.tag}.json")
+    path = os.path.join(OUT, f"{args.tag}.json")
     with open(path, "w") as f:
         json.dump({"sf_dir": args.sf_dir, "runs": args.runs,
                    "loadavg_1m": round(os.getloadavg()[0], 2),

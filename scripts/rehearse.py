@@ -1,20 +1,14 @@
-"""Driver-parity rehearsal: run registry queries under a BARE
-SparkSession against their DuckDB oracles with the driver's gate
-(rows + schema + order-insensitive values, tests/oracle_util).
+"""Bare-session rehearsal: run every registry query under a BARE
+SparkSession against its DuckDB oracle with the oracle gate (rows +
+schema + order-insensitive values, tests/oracle_util).
 
-This is the script BENCHNOTES' per-round "driver rehearsal" sections
-describe (previously re-written ad hoc each round; committed r13 so
-the protocol is reproducible):
+    python scripts/rehearse.py                      # default sf0.01
+    python scripts/rehearse.py --sf-dir DIR/sf0.1 --driver-mem 16g
 
-    python scripts/rehearse.py --half window        # _ORDER[:50]
-    python scripts/rehearse.py --half complement    # the other 50
-    python scripts/rehearse.py --half all --sf-dir /root/testdata/sf0.1 \
-        --driver-mem 16g                            # the r13 sf0.1 sweep
-
-Defaults mirror the driver: bare getOrCreate (ensure_session_confs
-must make every query self-sufficient), local[16], sf0.01. At sf0.1
-pass --driver-mem 16g: the streaming drains exhaust Spark's 1g local
-default (BENCHNOTES r13).
+Defaults: bare getOrCreate (ensure_session_confs must make every
+query self-sufficient), local[16], sf0.01. At sf0.1 pass
+--driver-mem 16g: the streaming drains exhaust Spark's 1g local
+default.
 """
 
 from __future__ import annotations
@@ -29,8 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--half", choices=("window", "complement", "all"),
-                    default="window")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--cpus", type=int, default=16)
     ap.add_argument("--driver-mem", default=None,
@@ -47,38 +39,25 @@ def main() -> int:
     spark = builder.getOrCreate()
 
     import __spark_entry__ as entry
-    from mapreduce_experiment_spark.plans.registry import WINDOW
     from tests.oracle_util import assert_matches, run_oracle
 
     q, o = entry.queries(), entry.oracle_sql()
     names = list(q)
-    # Split on the registry's own window constant, not a hardcoded 50
-    # (ADVICE r13: a literal here would silently test the wrong halves
-    # if the driver's window size ever changed).
-    half = {"window": names[:WINDOW], "complement": names[WINDOW:],
-            "all": names}[args.half]
     t00 = time.time()
     failures: list[tuple[str, str]] = []
-    for i, name in enumerate(half):
+    for i, name in enumerate(names):
         t0 = time.time()
         try:
-            # Driver parity: an omitted oracle is recorded err:no_oracle
-            # by the driver (no rows-only mode exists — registry.py),
-            # so a query missing one must FAIL here, not pass quietly
-            # (r13 review finding).
-            if name not in o:
-                raise AssertionError("no_oracle — the driver records "
-                                     "this as err, not a pass")
             df = q[name](spark, args.sf_dir)
             assert_matches(df, run_oracle(o[name], args.sf_dir), name)
             verdict = "OK"
         except Exception as ex:  # noqa: BLE001 — report and continue
             verdict = f"FAIL {str(ex)[:200]}"
             failures.append((name, verdict))
-        print(f"[{i + 1}/{len(half)}] {name}: {verdict} "
+        print(f"[{i + 1}/{len(names)}] {name}: {verdict} "
               f"({time.time() - t0:.1f}s)", flush=True)
-    print(f"RESULT {args.half}@{args.sf_dir}: "
-          f"{len(half) - len(failures)}/{len(half)} OK, "
+    print(f"RESULT {args.sf_dir}: "
+          f"{len(names) - len(failures)}/{len(names)} OK, "
           f"wall {time.time() - t00:.0f}s")
     for name, msg in failures:
         print("FAIL", name, msg)

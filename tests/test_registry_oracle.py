@@ -1,6 +1,5 @@
-"""The local correctness gate: every registered query with an oracle
-must match DuckDB at sf0.001 (fast) — mirroring the driver's sf0.01
-check. Queries without an oracle get a rows-run smoke check."""
+"""The local correctness gate: every registered query must match its
+DuckDB oracle at sf0.001 (fast) and at sf0.01 (slow)."""
 
 from __future__ import annotations
 
@@ -12,26 +11,37 @@ from tests.oracle_util import assert_matches, run_oracle
 _specs = SPECS()
 
 
+def test_registry_has_expected_size():
+    """An ImportError inside a plans module raises, but a module
+    dropped from ``_PLAN_MODULES`` by accident would silently shrink
+    the registry — pin the exact count."""
+    assert len(_specs) == 100
+
+
+def test_accessors_list_registration_order():
+    from mapreduce_experiment_spark.plans.registry import (
+        _REGISTRY, ORACLE_SQL, QUERIES)
+
+    assert list(_specs) == list(QUERIES()) == list(ORACLE_SQL()) \
+        == list(_REGISTRY)
+    assert all(isinstance(s.oracle, str) and s.oracle.strip()
+               for s in _specs.values())
+
+
 @pytest.mark.parametrize("name", sorted(_specs))
 def test_query_vs_oracle_smoke_sf(spark, sf_smoke, name):
     spec = _specs[name]
     df = spec.fn(spark, sf_smoke)
-    if spec.oracle is None:
-        assert df.count() >= 0  # rows-only check, like the driver
-    else:
-        assert_matches(df, run_oracle(spec.oracle, sf_smoke), name)
+    assert_matches(df, run_oracle(spec.oracle, sf_smoke), name)
 
 
 @pytest.mark.slow
 @pytest.mark.parametrize("name", sorted(_specs))
 def test_query_vs_oracle_correctness_sf(spark, sf_correctness, name):
-    """Full-fidelity mirror of the driver's t2 gate (sf0.01)."""
+    """Full-fidelity oracle check at sf0.01."""
     spec = _specs[name]
     df = spec.fn(spark, sf_correctness)
-    if spec.oracle is None:
-        assert df.count() >= 0
-    else:
-        assert_matches(df, run_oracle(spec.oracle, sf_correctness), name)
+    assert_matches(df, run_oracle(spec.oracle, sf_correctness), name)
 
 
 @pytest.mark.slow

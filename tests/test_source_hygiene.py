@@ -1,24 +1,26 @@
-"""Package-wide source hygiene pins.
+"""Repo-wide source hygiene pins.
 
-The r10-r12 advice cycle converted every load-bearing bare ``assert``
-in package code to an explicit raise, because ``python -O`` strips
-asserts: the simhash pigeonhole guard would have silently MISSED
-near-dup pairs, and the k=5→k=7 oracle-rewrite guard would have
-silently no-opped. The sweep is complete (grep found zero remaining);
-this test pins it mechanically so a new bare assert in the package —
-which would reintroduce the -O failure mode — fails review here
-instead of resurfacing as a silent semantic hole.
+Load-bearing checks in package code are explicit raises, not bare
+``assert``s, because ``python -O`` strips asserts: the simhash
+pigeonhole guard would silently MISS near-dup pairs, and the k=5→k=7
+oracle-rewrite guard would silently no-op. The pin below scans the
+package mechanically, so a new bare assert fails here instead of
+resurfacing as a silent semantic hole.
 
 Tests themselves are exempt: pytest rewrites their asserts and they
-never ship in the -O execution path — EXCEPT tests/oracle_util.py,
-which scripts/rehearse.py imports as the oracle gate for -O
-rehearsals, so it (plus scripts/, bench.py, __spark_entry__.py) is
-included in the scan.
+never run under -O — EXCEPT tests/oracle_util.py, the oracle gate the
+scripts/ rehearsals import (and which may run under -O), so it (plus
+scripts/, bench.py, __spark_entry__.py) is included in the scan.
+
+The repo root also stays free of round-stamped artifacts
+(``*_rN.json``, ``*_rN.md``, ``plans/rN/``): measurements go to
+CHANGES.md, and profiler output goes outside the checkout.
 """
 
 from __future__ import annotations
 
 import ast
+import fnmatch
 import os
 
 import mapreduce_experiment_spark as pkg
@@ -28,10 +30,9 @@ _PKG_DIR = os.path.dirname(os.path.abspath(pkg.__file__))
 
 _REPO_DIR = os.path.dirname(_PKG_DIR)
 
-# Non-test files that ALSO run in the -O execution path (r13 review
-# finding: scripts/rehearse.py is documented to run under python -O,
-# and it gates through tests/oracle_util.assert_matches — a bare
-# assert in either silently weakens the oracle gate to values-only).
+# Non-test files that ALSO run in the -O execution path: the rehearsal
+# scripts gate through tests/oracle_util.assert_matches, so a bare
+# assert in either silently weakens the oracle gate to values-only.
 _EXTRA_O_PATH_SOURCES = (
     os.path.join(_REPO_DIR, "tests", "oracle_util.py"),
     os.path.join(_REPO_DIR, "scripts"),
@@ -154,3 +155,19 @@ except AssertionError:
                        cwd=_REPO_DIR)
     assert r.returncode == 0, f"stdout:\n{r.stdout}\nstderr:\n{r.stderr[-2000:]}"
     assert "oracle-gate-fired" in r.stdout
+
+
+def test_no_round_stamped_artifacts_at_repo_root():
+    """Per-round BENCH/CORRECTNESS/PROFILE/WINDOW files and plan dumps
+    belong in git history, not in the tree: a profiler or bench that
+    writes them into the checkout fails here."""
+    root = os.listdir(_REPO_DIR)
+    stamped = [f for f in root
+               if fnmatch.fnmatch(f, "*_r[0-9]*.json")
+               or fnmatch.fnmatch(f, "*_r[0-9]*.md")]
+    plans = os.path.join(_REPO_DIR, "plans")
+    if os.path.isdir(plans):
+        stamped += [f"plans/{d}" for d in os.listdir(plans)
+                    if fnmatch.fnmatch(d, "r[0-9]*")
+                    and os.path.isdir(os.path.join(plans, d))]
+    assert not stamped, f"round-stamped artifacts in the repo root: {stamped}"
