@@ -108,9 +108,6 @@ def main() -> None:
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
     p = plans[0]._jdf.queryExecution().explainString(mode)
-    with open(os.path.join(ROOT, "plans", "r19",
-                           "pagerank_round_subplan_B.txt"), "w") as f:
-        f.write(p)
     print("round-6 subplan Exchange:", p.count("Exchange ("),
           "SMJ:", p.count("SortMergeJoin"),
           "SHJ:", p.count("ShuffledHashJoin"))

@@ -6,7 +6,7 @@ registry to rank optimization targets and snapshots each query's
 .explain("formatted") to <out>/plans/<name>_<tag>.txt so plan claims
 are checkable offline.
 
-Usage: python scripts/profile.py [--tag before] [--sf-dir DIR]
+Usage: python scripts/profile_registry.py [--tag before] [--sf-dir DIR]
        [--only name1,name2] [--runs 2] [--no-plans]
 Writes JSON to <out>/<tag>.json, where <out> is /tmp/spark-graft-profile
 (outside the checkout, so profiling leaves the tree clean).
@@ -23,9 +23,6 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 OUT = "/tmp/spark-graft-profile"
-# This file's name shadows the stdlib ``profile`` module, which
-# cProfile imports (via pyspark): keep scripts/ off the import path.
-sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != HERE]
 sys.path.insert(0, ROOT)
 
 from bench import _merge_deltas, _stage_delta, _stage_snapshot  # noqa: E402

@@ -22,6 +22,7 @@ from __future__ import annotations
 import ast
 import fnmatch
 import os
+import sys
 
 import mapreduce_experiment_spark as pkg
 
@@ -84,7 +85,6 @@ def test_explicit_guards_survive_python_O():
     touching the DataFrame, so no Spark session is needed. The
     checking script itself avoids assert — it runs under -O too."""
     import subprocess
-    import sys
 
     script = """
 import sys
@@ -121,7 +121,6 @@ def test_oracle_gate_fires_under_python_O():
     with asserts stripped. Duck-typed stand-in for the Spark side —
     assert_matches only touches .schema.fields and .toPandas()."""
     import subprocess
-    import sys
 
     script = """
 import sys
@@ -171,3 +170,13 @@ def test_no_round_stamped_artifacts_at_repo_root():
                     if fnmatch.fnmatch(d, "r[0-9]*")
                     and os.path.isdir(os.path.join(plans, d))]
     assert not stamped, f"round-stamped artifacts in the repo root: {stamped}"
+
+
+def test_no_script_shadows_a_stdlib_module():
+    """Running ``python scripts/X.py`` puts scripts/ ahead of the stdlib
+    on sys.path, so a script named like a stdlib module (``profile``,
+    which cProfile imports via pyspark) breaks every sibling script."""
+    scripts = os.path.join(_REPO_DIR, "scripts")
+    shadows = [f for f in os.listdir(scripts)
+               if f.endswith(".py") and f[:-3] in sys.stdlib_module_names]
+    assert not shadows, f"scripts shadowing stdlib modules: {shadows}"
