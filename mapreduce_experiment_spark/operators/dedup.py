@@ -474,9 +474,8 @@ def dedup_survivors(docs: DataFrame, threshold: float = 0.8,
     pairs = minhash_dedup_pairs(docs, threshold=threshold,
                                 id_col=id_col, text_col=text_col) \
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    # assume_canonical (r18): the LSH pairs are distinct id_a < id_b
-    # with no self-loops by construction, so CC's normalize+distinct
-    # pass (one extra shuffle + stage per invocation) is a no-op here.
+    # The LSH pairs are distinct id_a < id_b with no self-loops by
+    # construction, so CC's normalize+distinct shuffle is a no-op here.
     labels = G.connected_components(pairs, assume_canonical=True)
     removed = labels.where(F.col("component") != F.col("node")) \
         .select(F.col("node").alias(id_col))

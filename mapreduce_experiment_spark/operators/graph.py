@@ -35,15 +35,18 @@ Scale notes (SURVEY §4, §7 hard parts):
 - A triangle query materializes exactly two tables, both as eager
   ``localCheckpoint``s: the deduped edge set and the oriented
   out-adjacency arrays. Nothing is registered in the SQL cache.
-- No ``collect()`` anywhere; adjacency lists exist only as a parity
-  demo (:func:`adjacency`), never on the triangle path.
+- No ``collect()`` on the triangle path; adjacency lists exist only
+  as a parity demo (:func:`adjacency`), never on it.
 - AQE skew-join handles residual hot keys (session.py).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 # --- §2 row 3: edge symmetrization ---------------------------------------
@@ -463,28 +466,83 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
     return ranks
 
 
+def _fits_on_driver(df: DataFrame) -> bool:
+    """Whether a persisted, materialized table is no larger than the
+    session's broadcast-join threshold: the size Spark already ships
+    to the driver whenever it plans a broadcast join. The size is the
+    cached table's measured bytes; a negative threshold means never."""
+    threshold = df.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return 0 <= threshold and size <= threshold
+
+
+def _min_labels(u, v):
+    """Exact connected components of the edge arrays ``u``, ``v`` in
+    vectorized numpy: ``(nodes, component)`` with component = the
+    minimum node id of each node's component.
+
+    Nodes are replaced by their index into the sorted unique ids, so
+    the minimum index of a component is its minimum id. ``parent``
+    only ever points at a smaller index of the same component. Each
+    round hooks the larger root of every edge whose endpoints have
+    different roots onto the smaller one, then pointer-jumps until
+    every node points at its root; it stops when no edge spans two
+    roots, which leaves one root per component, its minimum."""
+    nodes, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[:len(u)], idx[len(u):]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[a], parent[b]
+        spans = ra != rb
+        if not spans.any():
+            return nodes, nodes[parent]
+        lo = np.minimum(ra[spans], rb[spans])
+        np.minimum.at(parent, ra[spans], lo)
+        np.minimum.at(parent, rb[spans], lo)
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
 def connected_components(edges: DataFrame, max_iter: int = 50,
                          assume_canonical: bool = False) -> DataFrame:
-    """Connected components by min-label propagation to fixpoint.
+    """Connected components: (node, component) with component = min
+    node id in the component.
 
-    Iterative joins (the capability class the reference's one-shot
-    pipeline lacks entirely): each round every node adopts the
-    minimum label in its closed neighborhood; stop when no label
-    changes. ``localCheckpoint`` truncates the lineage each round so
-    plans don't grow unboundedly — the standard Spark idiom for
-    iterative graph algorithms (GraphX does the same internally).
+    The canonical edge set is persisted and counted first, and its
+    measured size picks one of two exact paths:
 
-    Rounds needed = graph diameter ≤ ``max_iter``; each round is one
-    shuffle on node id. Returns (node, component) with component =
-    min node id in the component.
+    - At most ``spark.sql.autoBroadcastJoinThreshold`` bytes (and the
+      threshold not negative): the edges are collected to the driver
+      and labeled by :func:`_min_labels` in numpy. This skips every
+      fixpoint round and its jobs, which dominate on the small
+      near-duplicate graphs the dedup queries build.
+    - Larger: min-label propagation to fixpoint in Spark. Each round
+      every node adopts the minimum label in its closed neighborhood;
+      stop when no label changes. ``localCheckpoint`` truncates the
+      lineage each round so plans don't grow unboundedly — the
+      standard Spark idiom for iterative graph algorithms (GraphX
+      does the same internally). Rounds needed = graph diameter ≤
+      ``max_iter``; past that it warns and returns the labels so far.
     """
     ce = canonical_edges(edges, assume_canonical).persist()
     ce.count()
+    if _fits_on_driver(ce):
+        pdf = ce.toPandas()
+        ce.unpersist()
+        nodes, comp = _min_labels(pdf["u"].to_numpy(), pdf["v"].to_numpy())
+        t = ce.schema["u"].dataType
+        return ce.sparkSession.createDataFrame(
+            pd.DataFrame({"node": nodes, "component": comp}),
+            StructType([StructField("node", t), StructField("component", t)]))
     # Directed both ways once; reused every iteration.
     sym = ce.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
         ce.select(F.col("v").alias("a"), F.col("u").alias("b"))).persist()
-    # Lazy init checkpoint (r18): round 1's changed-count is the first
-    # action over it, same one-job-per-round rationale as the loop.
+    # Lazy init checkpoint: round 1 materializes it along with its own
+    # labels (see the loop).
     labels = (
         ce.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
         .distinct()
@@ -500,13 +558,13 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         )
         # The convergence flag rides INSIDE the propagation result, so
         # detecting a fixpoint costs one scan of the just-materialized
-        # checkpoint blocks — not a second join-shuffle job per round
-        # (the old labels never need re-reading). The checkpoint is
-        # LAZY (r18 optimization round): the changed-count below is
-        # the round's first action, so it materializes the checkpoint
-        # blocks as a side effect — one Spark job per round instead of
-        # two (eager checkpoint job + count job), halving the
-        # fixed-overhead floor of every fixpoint round.
+        # checkpoint blocks — not a second join-shuffle per round (the
+        # old labels never need re-reading). The checkpoint is lazy,
+        # but under AQE the localCheckpoint call still runs the
+        # round's shuffle-map stages itself (the adaptive plan is
+        # finalized to build its RDD); the count then runs only the
+        # round's final stage, which writes the checkpoint blocks as a
+        # side effect, plus its own one-row aggregate.
         new_labels = (
             labels.join(nbr_min, "node", "left")
             .select(

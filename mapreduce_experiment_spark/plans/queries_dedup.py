@@ -207,7 +207,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_dedup_pairs(docs, threshold=0.8).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    labels = G.connected_components(pairs)
+    # The LSH pairs are distinct id_a < id_b with no self-loops by
+    # construction: skip CC's normalize+distinct shuffle.
+    labels = G.connected_components(pairs, assume_canonical=True)
     out = (
         docs.select("doc_id")
         .join(labels.withColumnRenamed("node", "doc_id"), "doc_id", "left")

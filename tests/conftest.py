@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -37,3 +38,21 @@ def sf_smoke():
 @pytest.fixture(scope="session")
 def sf_correctness():
     return SF_CORRECTNESS
+
+
+@pytest.fixture
+def broadcast_off(spark):
+    """A context manager that sets ``spark.sql.autoBroadcastJoinThreshold``
+    to -1 (so ``connected_components`` takes its distributed loop) and
+    restores the previous value on exit."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextlib.contextmanager
+    def off():
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+    return off

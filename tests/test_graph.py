@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -266,14 +267,9 @@ def test_dirty_graph_goldens(spark, fname):
         assert got == want, mode
 
 
-def test_triangle_count_materializes_exactly_two_checkpoints(spark,
-                                                             monkeypatch):
-    """Each mode builds exactly two eager localCheckpoints — the edge
-    set and the oriented adjacency arrays — and persists nothing."""
-    pairs = [(1, 2), (2, 3), (1, 3), (3, 4), (2, 4), (4, 4), (2, 1)]
-    e = _edges(spark, pairs)
-    faithful, simple = _replay_counts([f"{a} {b}" for a, b in pairs])
-    cls = type(e)
+def _count_materializations(monkeypatch, cls) -> list:
+    """Shim ``cls``'s localCheckpoint, persist and cache to record
+    each call (``(name, eager)``) in the returned list."""
     calls = []
     real_checkpoint = cls.localCheckpoint
 
@@ -292,11 +288,87 @@ def test_triangle_count_materializes_exactly_two_checkpoints(spark,
     monkeypatch.setattr(cls, "localCheckpoint", counting_checkpoint)
     for name in ("persist", "cache"):
         monkeypatch.setattr(cls, name, counting_persist(name))
+    return calls
+
+
+def test_triangle_count_materializes_exactly_two_checkpoints(spark,
+                                                             monkeypatch):
+    """Each mode builds exactly two eager localCheckpoints — the edge
+    set and the oriented adjacency arrays — and persists nothing."""
+    pairs = [(1, 2), (2, 3), (1, 3), (3, 4), (2, 4), (4, 4), (2, 1)]
+    e = _edges(spark, pairs)
+    faithful, simple = _replay_counts([f"{a} {b}" for a, b in pairs])
+    calls = _count_materializations(monkeypatch, type(e))
     for mode, want in (("simple", simple), ("faithful", faithful)):
         calls.clear()
         df = G.triangle_count(e, mode=mode)
         assert calls == [("localCheckpoint", True)] * 2, mode
         assert df.collect()[0].n_triangles == want, mode
+
+
+# --- connected components: driver path vs distributed loop -----------------
+
+def _union_find_components(pairs) -> list[tuple[int, int]]:
+    """Pure-Python reference: sorted (node, min id of its component)
+    over the simple graph (self-loops dropped, so a node seen only in
+    a self-loop is absent)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+    for a, b in pairs:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return sorted((n, find(n)) for n in parent)
+
+
+def _cc_rows(df) -> list[tuple[int, int]]:
+    return sorted((r.node, r.component) for r in df.collect())
+
+
+CC_CASES = {  # name -> (pairs, assume_canonical)
+    "path40": ([(i, i + 1) for i in range(40)], True),
+    "star": ([(7, i) for i in range(8, 20)], True),
+    "triangle": ([(1, 2), (2, 3), (1, 3)], True),
+    "disjoint_pairs": ([(2 * i, 2 * i + 1) for i in range(10)], True),
+    "dup_reversed_self_loop": (
+        [(5, 3), (3, 5), (3, 5), (9, 3), (3, 9), (4, 4), (11, 12), (12, 11),
+         (12, 12)], False),
+    "all_self_loops": ([(1, 1), (2, 2), (3, 3)], False),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CC_CASES))
+def test_connected_components_paths_agree(spark, broadcast_off, case):
+    """The driver path (default threshold), the distributed loop
+    (threshold -1) and a union-find reference give identical rows."""
+    pairs, canonical = CC_CASES[case]
+    e = _edges(spark, pairs)
+    want = _union_find_components(pairs)
+    driver = G.connected_components(e, assume_canonical=canonical)
+    assert _cc_rows(driver) == want
+    assert driver.dtypes == [("node", "bigint"), ("component", "bigint")]
+    with broadcast_off():
+        loop = _cc_rows(G.connected_components(
+            e, assume_canonical=canonical))
+    assert loop == want
+
+
+def test_connected_components_driver_path_makes_no_checkpoint(spark,
+                                                              monkeypatch):
+    """Below the broadcast threshold the only materialization is the
+    persisted edge table: no fixpoint round, so no localCheckpoint."""
+    e = _edges(spark, [(1, 2), (2, 3), (5, 6)])
+    calls = _count_materializations(monkeypatch, type(e))
+    labels = G.connected_components(e)
+    assert calls == [("persist", None)]
+    assert _cc_rows(labels) == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
 
 
 # --- property-based invariants (SURVEY §5.2 item 4) --------------------------
@@ -305,6 +377,20 @@ edge_lists = st.lists(
     st.tuples(st.integers(1, 12), st.integers(1, 12)),
     min_size=1, max_size=25,
 )
+
+
+@settings(max_examples=200, deadline=None)
+@given(edge_lists)
+def test_min_labels_matches_union_find(pairs):
+    """The driver path's numpy labeling equals the union-find
+    reference on arbitrary small graphs (fed the non-loop edges, as
+    connected_components feeds it the canonical edge set)."""
+    simple = [(a, b) for a, b in pairs if a != b]
+    u = np.array([a for a, _ in simple], dtype=np.int64)
+    v = np.array([b for _, b in simple], dtype=np.int64)
+    nodes, comp = G._min_labels(u, v)
+    assert list(zip(nodes.tolist(), comp.tolist())) \
+        == _union_find_components(pairs)
 
 
 def test_triangle_queries_leave_no_cache_entries(spark):

@@ -307,6 +307,11 @@ def test_no_driver_collect_outside_bounded_state_sites():
         # (the run-key probe deciding whether the cross-run crash
         # window can exist) — O(micro-batches) strings, never data
         ("streaming/triangles.py", "streaming_triangles"),
+        # The canonical edge table, collected only when its measured
+        # size is within spark.sql.autoBroadcastJoinThreshold (the
+        # bound Spark already uses to ship a broadcast table); larger
+        # tables stay on the distributed fixpoint loop
+        ("operators/graph.py", "connected_components"),
     }
     pkg = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

@@ -44,6 +44,19 @@ def test_query_vs_oracle_correctness_sf(spark, sf_correctness, name):
     assert_matches(df, run_oracle(spec.oracle, sf_correctness), name)
 
 
+@pytest.mark.parametrize("name", ["connected_components",
+                                  "dedup_survivors"])
+def test_distributed_connected_components_vs_oracle(
+        spark, sf_smoke, broadcast_off, name):
+    """The registry oracles above see connected_components' driver
+    path (every test graph is broadcast-sized); a threshold of -1
+    keeps its distributed fixpoint loop under the same oracles."""
+    spec = _specs[name]
+    with broadcast_off():
+        df = spec.fn(spark, sf_smoke)
+        assert_matches(df, run_oracle(spec.oracle, sf_smoke), name)
+
+
 @pytest.mark.slow
 def test_queries_run_under_bare_driver_session():
     """Driver parity: the round driver calls queries() with ITS OWN
