@@ -17,10 +17,12 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [HERE, os.path.join(HERE, "perfbench")]
 
 from mapreduce_experiment_spark.plans.registry import SPECS  # noqa: E402
 from mapreduce_experiment_spark.session import get_session  # noqa: E402
+from status import StatusReader, sum_stages  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -30,87 +32,18 @@ def _sf_from_dir(path: str) -> float:
     return float(m.group(1)) if m else -1.0
 
 
-def _stage_snapshot(spark) -> dict | None:
-    """Per-stage metrics snapshot from the JVM AppStatusStore (works
-    with the UI disabled), keyed by (stageId, attemptId). A query's
-    work = the stages that appear between a before/after snapshot —
-    load-independent measures of plan work (bytes shuffled/spilled,
-    executor CPU) plus wall-affecting state wall-clock alone can't
-    arbitrate (GC time, peak execution memory). BENCHNOTES.md:
-    round-over-round wall deltas have been dominated by external box
-    load; these fields let a reader separate plan regressions from
-    noise. Returns None if the py4j surface ever drifts; the bench
-    then simply omits the fields rather than failing."""
-    try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        gw = sc._gateway
-        empty = gw.jvm.java.util.ArrayList()
-        quantiles = gw.new_array(gw.jvm.double, 0)
-        stages = store.stageList(empty, False, False, quantiles, empty)
-        snap = {}
-        for i in range(stages.size()):
-            s = stages.apply(i)
-            snap[(s.stageId(), s.attemptId())] = {
-                "shuffle_write_bytes": s.shuffleWriteBytes(),
-                "shuffle_read_bytes": s.shuffleReadBytes(),
-                "memory_spill_bytes": s.memoryBytesSpilled(),
-                "disk_spill_bytes": s.diskBytesSpilled(),
-                "jvm_gc_time_ms": s.jvmGcTime(),
-                "executor_run_time_ms": s.executorRunTime(),
-                "executor_cpu_time_ms": s.executorCpuTime() // 1_000_000,
-                "peak_execution_memory_bytes": s.peakExecutionMemory(),
-            }
-        return snap
-    except Exception:
-        return None
-
-
-def _stage_delta(before: dict, after: dict) -> dict[str, int]:
-    """Aggregate the stages that ran between two snapshots: cumulative
-    counters sum; peak execution memory is a max (it is a high-water
-    mark per stage, not a counter)."""
-    out = {k: 0 for k in next(iter(after.values()), {})}
-    for key, m in after.items():
-        if key in before:
-            continue
-        for k, v in m.items():
-            if k == "peak_execution_memory_bytes":
-                out[k] = max(out.get(k, 0), v)
-            else:
-                out[k] = out.get(k, 0) + v
-    return out
-
-
-def _merge_deltas(best: dict[str, int], delta: dict[str, int]) -> dict[str, int]:
-    """Merge one run's stage-metric delta into the best-so-far: min
-    over the runs that OBSERVED each key. Defaulting a missing key to
-    0 would permanently zero the metric (the r5 defect), and
-    intersecting keys would discard a metric one drifted/empty
-    snapshot failed to observe even though other runs measured it
-    validly (the first fix's defect). Module-level so the test pins
-    the ACTUAL merge code, not a re-implementation (r6 ADVICE)."""
-    return {
-        k: min(best[k], delta[k])
-        if k in best and k in delta
-        else best.get(k, delta.get(k))
-        for k in {*best, *delta}
-    }
-
-
 def _more_runs(runs: list[float]) -> bool:
     """Per-query run policy: 2 runs for trivial queries (min =
     reproducible capability); any query whose best run still exceeds
     1 s gets a mandatory 3rd run, and a 4th when the runs DISAGREE
-    (spread >1.4x). Quiet-window triage (BENCHNOTES.md r5) showed
-    identical plan work burning 54-157 executor-CPU-sec depending on
-    ambient box load, and a single mid-suite burst inflating three
-    sub-second queries 6-10x TOGETHER — two back-to-back runs can
-    agree on an inflated number, so non-trivial queries always get a
-    third sample rather than only retrying on disagreement. (A burst
-    spanning all 3-4 samples still wins; the recorded loadavg keys
-    and the load-independent query_metrics are the tiebreaker for
-    that case.)"""
+    (spread >1.4x). On a shared box the same plan has burned 54-157
+    executor-CPU-sec depending on ambient load, and a single burst has
+    inflated three sub-second queries 6-10x TOGETHER — two
+    back-to-back runs can agree on an inflated number, so non-trivial
+    queries always get a third sample rather than only retrying on
+    disagreement. (A burst spanning all 3-4 samples still wins; the
+    recorded loadavg keys and the load-independent query_metrics are
+    the tiebreaker for that case.)"""
     if len(runs) < 2:
         return True
     if min(runs) <= 1.0 or len(runs) >= 4:
@@ -118,11 +51,62 @@ def _more_runs(runs: list[float]) -> bool:
     return len(runs) < 3 or max(runs) / min(runs) > 1.4
 
 
-def _run_suite(spark, sf_dir: str, order_seed: int | None = None):
-    import random
+def measure(spark, build, more, reader: StatusReader | None = None) -> dict:
+    """Time ``build()`` and its noop-sink execution while ``more(walls)``
+    asks for another run; the one measurement loop of bench.py and the
+    profiling scripts.
 
+    Each run clears the cache (several operators persist intermediates
+    internally, so reuse would measure a warm cache) and drains the
+    status reader. The build phase is ``build()`` itself, eager
+    checkpoints included; the execute phase is the observed noop write.
+    Jobs are counted per phase. Returns the best run's ``wall_s``,
+    ``build_s``, ``exec_s``, ``build_jobs``, ``exec_jobs`` and ``rows``,
+    plus the per-field minimum over runs of :func:`sum_stages`: the
+    same plan moves the same bytes, and GC, spill and peak memory are
+    only ever inflated by transient pressure.
+
+    A caller that measures many queries passes one ``reader``: a fresh
+    one walks the whole retained status store on its first drain,
+    about 1.2 s at the default 1,000-stage retention."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
+
+    reader = reader or StatusReader(spark)
+    walls: list[float] = []
+    best: dict = {}
+    stages: dict = {}
+    while more(walls):
+        spark.catalog.clearCache()
+        reader.settle()
+        reader.new_stages()
+        reader.new_jobs()
+        obs = Observation()
+        t0 = time.perf_counter()
+        df = build()
+        build_s = time.perf_counter() - t0
+        reader.settle()
+        build_jobs = len(reader.new_jobs())
+        t0 = time.perf_counter()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")) \
+            .write.format("noop").mode("overwrite").save()
+        exec_s = time.perf_counter() - t0
+        reader.settle()
+        exec_jobs = len(reader.new_jobs())
+        run = sum_stages(reader.new_stages())
+        stages = {k: min(stages.get(k, v), v) for k, v in run.items()}
+        walls.append(build_s + exec_s)
+        if walls[-1] == min(walls):
+            best = {"wall_s": round(walls[-1], 3),
+                    "build_s": round(build_s, 3),
+                    "exec_s": round(exec_s, 3),
+                    "build_jobs": build_jobs, "exec_jobs": exec_jobs,
+                    "rows": int(obs.get["rows"])}
+    return {**best, **stages}
+
+
+def _run_suite(spark, sf_dir: str, order_seed: int | None = None):
+    import random
 
     specs = {n: s for n, s in SPECS().items() if s.headline}
     # Untimed warm-up: JIT/codegen compilation and filesystem metadata
@@ -130,62 +114,25 @@ def _run_suite(spark, sf_dir: str, order_seed: int | None = None):
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")) \
         .limit(1000).write.format("noop").mode("overwrite").save()
     # Per-invocation RANDOMIZED query order (seeded + recorded in the
-    # output): the suite used to run alphabetically, so this box's
-    # recurring late-run load burst landed on the same final query
-    # (triangle_count) invocation after invocation, poisoning exactly
-    # one query's round-over-round comparison (BENCHNOTES r7
-    # invocations 4-7; r7 verdict hygiene item). Randomizing
-    # decorrelates the burst from any particular query so best-of
-    # floors converge without hand-triage.
+    # output): in a fixed order a recurring late-run load burst lands
+    # on the same final query every invocation, poisoning exactly one
+    # query's comparison. Randomizing decorrelates the burst from any
+    # particular query so best-of floors converge without hand-triage.
     if order_seed is None:
         order_seed = int.from_bytes(os.urandom(4), "little")
     names = sorted(specs)
     random.Random(order_seed).shuffle(names)
     timings: dict[str, float] = {}
-    metrics: dict[str, dict[str, int]] = {}
-    # Min over an adaptive 2-4 runs per query (see _more_runs): JVM/GC
-    # noise on a shared box can skew a single run by 2x and a load
-    # burst can cover two; the minimum is the reproducible capability.
-    # Caches are cleared between runs so each run is cold (several
-    # operators persist intermediates internally — reusing them across
-    # runs would measure warm-cache time, not query time; the
-    # persisted-INDEX queries' app-memoized index survives by design,
-    # so their wall measures the probe, the recurring cost).
+    metrics: dict[str, dict] = {}
+    reader = StatusReader(spark)
+    # The persisted-INDEX queries' app-memoized index survives the
+    # per-run cache clear by design, so their wall measures the probe,
+    # the recurring cost.
     for name in names:
-        spec = specs[name]
-        best = None
-        best_delta: dict[str, int] | None = None
-        rows = None
-        runs: list[float] = []
-        while _more_runs(runs):
-            spark.catalog.clearCache()
-            before = _stage_snapshot(spark)
-            obs = Observation()
-            t0 = time.perf_counter()
-            df = spec.fn(spark, sf_dir)
-            df.observe(obs, F.count(F.lit(1)).alias("rows")) \
-                .write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            runs.append(dt)
-            best = dt if best is None else min(best, dt)
-            rows = int(obs.get["rows"])
-            after = _stage_snapshot(spark)
-            if before is not None and after is not None:
-                delta = _stage_delta(before, after)
-                # min over runs per field: identical plans shuffle
-                # identical bytes; the min is robust to stray
-                # concurrent jobs, and for GC/spill/peak-memory it is
-                # the reproducible floor (transient pressure inflates
-                # a single run, never deflates it).
-                if best_delta is None:
-                    best_delta = delta
-                else:
-                    best_delta = _merge_deltas(best_delta, delta)
-        timings[name] = round(best, 3)
-        m: dict[str, int] = {"output_rows": rows}
-        if best_delta is not None:
-            m.update(best_delta)
-        metrics[name] = m
+        rec = measure(spark, lambda n=name: specs[n].fn(spark, sf_dir),
+                      _more_runs, reader)
+        timings[name] = rec.pop("wall_s")
+        metrics[name] = rec
     return timings, metrics, {"order_seed": order_seed, "order": names}
 
 
@@ -199,15 +146,12 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        # Load-independent plan-work fingerprint per query (shuffle
-        # write/read byte deltas from the status store + observed
-        # output rows): lets round-over-round comparison separate plan
-        # regressions (bytes moved) from box noise (wall-clock).
+        # Per query: the build/execute split, jobs per phase, output
+        # rows and the stage counters (see measure). Bytes moved and
+        # CPU separate plan regressions from box noise in the walls.
         "query_metrics": metrics,
         # Randomized execution order, recorded so a burst-affected run
-        # is attributable to its position in the suite (r7 verdict
-        # hygiene item — alphabetical order pinned the box's tail
-        # burst on triangle_count).
+        # is attributable to its position in the suite.
         "order_seed": order["order_seed"],
         "query_order": order["order"],
         "sf": _sf_from_dir(SF_DIR),
@@ -227,7 +171,7 @@ def main() -> None:
     # Contention context: this box carries bursty EXTERNAL load
     # (observed 1-min loadavg 0.4 → 9.9 across a single run), which
     # dominates run-over-run wall-clock deltas. Recording it makes
-    # each bench record self-describing (see BENCHNOTES.md).
+    # each bench record self-describing.
     out["loadavg_1m_before"] = round(load_before[0], 2)
     out["loadavg_1m_after"] = round(os.getloadavg()[0], 2)
     print(json.dumps(out))
@@ -250,11 +194,9 @@ def main() -> None:
     # Best-effort only: a read-only checkout or full disk must never
     # suppress the compact line below (losing it would re-create the
     # truncation failure this exists to fix). BENCHFULL.json is the
-    # LATEST run, clobbered each invocation and gitignored; a curated
-    # quiet-window record is committed under a round-stamped name.
+    # LATEST run, clobbered each invocation and gitignored.
     try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCHFULL.json"), "w") as f:
+        with open(os.path.join(HERE, "BENCHFULL.json"), "w") as f:
             json.dump(out, f)
     except OSError:
         pass

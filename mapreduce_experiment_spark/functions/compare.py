@@ -61,8 +61,8 @@ def cents_sql(expr: str, scale: int = 100) -> str:
 # --- two-level money sums (hot-scan mitigation, r17) -----------------------
 #
 # Spark's decimal(29,0) accumulation costs ~318 ns/row/buffer vs
-# ~109 ns for a long add (measured: scripts/attr_pricing.py, sf0.1,
-# min-of-5) — with several money buffers over one huge scan the
+# ~109 ns for a long add (measured by a decimal-vs-long sum sweep at
+# sf0.1, min-of-5) — with several money buffers over one huge scan the
 # decimal sums dominate query CPU (71% of pricing_summary's at a
 # 10-task scan). The two-level form keeps the per-ROW adds long and
 # moves the decimal widening to per-CHUNK rows:

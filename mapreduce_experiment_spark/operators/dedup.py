@@ -654,14 +654,13 @@ def repeated_spans(docs: DataFrame, n: int = SPAN_N,
     join. Until r19 the corpus tokenize + window-slice + md5 scan ran
     twice per action — documented as the deliberate 100 TB trade
     (recompute beats materializing a corpus-scale intermediate). The
-    r19 A/B (scripts/attr_spans.py, VERDICT item 7) measured the
+    r19 A/B measured the
     opposite at BOTH scale points: eager localCheckpoint of fpw wins
     2.3 → 1.7 s executor CPU at sf0.1 and 39.0 → 29.1 s at the 10×
     corpus — the per-window md5 is the dominant cost and the
     checkpointed triple is narrow (24 B/window, memory-and-disk
     tier, GC-scoped blocks, no shuffle), so one materialization pass
-    beats two hash passes. Same flip in :func:`span_deduped_corpus`;
-    decision recorded in BENCHNOTES r19.
+    beats two hash passes. Same flip in :func:`span_deduped_corpus`.
     """
     fpw = span_window_fingerprints(docs, n, id_col, text_col) \
         .localCheckpoint(eager=True)

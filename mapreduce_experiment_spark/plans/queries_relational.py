@@ -73,7 +73,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate, same final double conversion; same oracle SQL), but
     the per-row decimal accumulation — measured at 318 ns/row/buffer
     vs 109 for long, 71% of this query's CPU at a 10-task scan
-    (scripts/attr_pricing.py, r17) — drops off the hot path: sf0.1
+    (r17 sweep) — drops off the hot path: sf0.1
     executor CPU 1,090 -> 386 ms, back to ~1.2x the pre-migration r1
     cost with the overflow safety kept. The level-1 exchange carries
     one row per (group, chunk) — at 10^12 input rows that is ~6 x
@@ -267,9 +267,8 @@ GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """,
 )
 def q_order_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Two-level money sum under the rollup (r18 optimization round —
-    # the composition the r17 BENCHNOTES scope note recorded): the
-    # one-level decimal qsum rode the rollup's Expand ×3, paying the
+    # Two-level money sum under the rollup (r18 optimization round):
+    # the one-level decimal qsum rode the rollup's Expand ×3, paying the
     # ~318 ns/row decimal add on every expanded copy. Level 1 groups
     # exactly (keys, chunk) with long adds; the rollup runs over the
     # tiny chunk-sum table. Grouping-set semantics are preserved —

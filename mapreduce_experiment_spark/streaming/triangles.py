@@ -33,8 +33,8 @@ by attempting the read (not ``os.path.exists``, which is always
 false on HDFS/S3 — r13 review), and a source that yields zero
 micro-batches returns an empty result instead of PATH_NOT_FOUND.
 
-State layout (r19 optimization round — guide §2.3/§6, VERDICT item
-1: make per-batch work proportional to the batch, not the state):
+State layout (guide §2.3/§6: make per-batch work proportional to
+the batch, not the state):
 THREE append-only per-batch state tables instead of one —
 
 - ``edge_state``   (u, v): the deduped edge delta, as before. Read
@@ -146,7 +146,7 @@ def _process_batch(batch: DataFrame, batch_key: str, state_dir: str,
     triangles it completes, and append this batch's state deltas.
 
     r19 optimization round (guide §2.3 "aggregate before you
-    shuffle" / §6 state layout; VERDICT item 1): per-batch work is
+    shuffle" / §6 state layout): per-batch work is
     now proportional to the BATCH, not the accumulated state. The
     pre-r19 shape re-derived everything per batch from the edge
     state — a 2m-row degree aggregate (hub check), a 2m-row
@@ -333,30 +333,19 @@ def streaming_triangles(spark: SparkSession, edges_dir: str,
         .start()
     )
     q.awaitTermination()
-    # .distinct() closes the one non-idempotent window left (ADVICE
-    # r13): a crash BETWEEN the triangles write and the state write,
-    # followed by a fresh-checkpoint rerun under a DIFFERENT run
-    # ordinal, leaves the half-committed r{run}b{N} triangles
-    # partition in place while the rerun re-derives the same triangles
-    # under its own key — duplicate rows across differently-keyed
-    # partitions that per-partition overwrite can't collapse. Rows are
-    # canonical (ta<=tb<=tc), so a set union over all partitions is
-    # exactly the intended semantics.
-    #
-    # r19 optimization round (guide §2.4 — "a distinct on data that is
-    # already unique"): that window REQUIRES partitions from two or
-    # more run ordinals to coexist under out_dir. Within one run the
-    # partitions are provably duplicate-free — each is internally
-    # distinct (the per-batch distinct) and cross-batch disjoint (a
-    # triangle is completed exactly once: its last edge enters state
-    # in exactly one batch, and the anti-join bars re-entry) — so the
-    # final distinct is a no-op there and is SKIPPED; it is applied
-    # exactly when >1 run key is present (the only case with possible
-    # duplicates; pinned by test_streaming_triangles_cross_run_half_
-    # commit_dedups, which creates that case). The run-key probe
-    # collects only the distinct Hive partition VALUES — bounded by
-    # the number of micro-batches, no data columns read. Measured:
-    # the distinct was 17 s executor CPU of the registered query's 88.
+    # The per-batch commits are duplicate-free within one run: each
+    # partition is internally distinct, and a triangle is completed
+    # exactly once (its last edge enters state in exactly one batch,
+    # and the anti-join bars re-entry). Duplicates need a second run
+    # ordinal somewhere under work_dir: a crashed run's half-committed
+    # triangles, or its orphaned deg/adj partitions, whose adjacency
+    # lets the rerun complete a triangle before it re-admits the
+    # orphan's edges and again after. So the final distinct (a no-op
+    # within one run, and 17 s of the registered query's 88 s executor
+    # CPU when it was unconditional) runs exactly when the triangle
+    # rows or any state table show more than one run ordinal. The
+    # probe reads only the Hive partition values, one row per
+    # partition with rows.
     try:
         keyed = spark.read.schema(
             "ta long, tb long, tc long, batch_key string").parquet(out_dir)
@@ -364,10 +353,18 @@ def streaming_triangles(spark: SparkSession, edges_dir: str,
         if not _is_missing_path(ex):
             raise
         return spark.createDataFrame([], "a long, b long, c long")
-    keys = [r.batch_key for r in
-            keyed.select("batch_key").distinct().collect()]
+    keys = keyed.select("batch_key")
+    for d in ("edge_state", "deg_state", "adj_state"):
+        try:
+            keys = keys.unionByName(spark.read.schema("batch_key string")
+                                    .parquet(os.path.join(work_dir, d)))
+        except AnalysisException as ex:
+            if not _is_missing_path(ex):
+                raise
+    runs = {r.batch_key.split("b", 1)[0]
+            for r in keys.distinct().collect()}
     out = keyed.select(F.col("ta").alias("a"), F.col("tb").alias("b"),
                        F.col("tc").alias("c"))
-    if len({k.split("b", 1)[0] for k in keys}) > 1:
+    if len(runs) > 1:
         out = out.distinct()
     return out

@@ -1,10 +1,10 @@
-"""Registry profiler: wall + stage metrics + formatted plan for EVERY
-registered query at one sf (default sf0.1).
+"""Registry profiler: wall, build/execute split, stage metrics and
+formatted plan for EVERY registered query at one sf (default sf0.1).
 
 Unlike bench.py (the headline queries), this measures the full
-registry to rank optimization targets and snapshots each query's
-.explain("formatted") to <out>/plans/<name>_<tag>.txt so plan claims
-are checkable offline.
+registry to rank optimization targets, through bench.py's measure
+loop, and snapshots each query's .explain("formatted") to
+<out>/plans/<name>_<tag>.txt so plan claims are checkable offline.
 
 Usage: python scripts/profile_registry.py [--tag before] [--sf-dir DIR]
        [--only name1,name2] [--runs 2] [--no-plans]
@@ -18,14 +18,13 @@ import argparse
 import json
 import os
 import sys
-import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 OUT = "/tmp/spark-graft-profile"
 sys.path.insert(0, ROOT)
 
-from bench import _merge_deltas, _stage_delta, _stage_snapshot  # noqa: E402
+from bench import StatusReader, measure  # noqa: E402
 from mapreduce_experiment_spark.plans.registry import SPECS  # noqa: E402
 from mapreduce_experiment_spark.session import get_session  # noqa: E402
 
@@ -57,33 +56,17 @@ def main() -> None:
         .limit(1000).write.format("noop").mode("overwrite").save()
 
     out: dict[str, dict] = {}
+    reader = StatusReader(spark)
     for i, name in enumerate(names):
         spec = specs[name]
         sys.stderr.write(f"[{i + 1}/{len(names)}] {name}\n")
         sys.stderr.flush()
         rec: dict = {}
         try:
-            best = None
-            best_delta = None
-            rows = None
-            for r in range(args.runs):
-                spark.catalog.clearCache()
-                spark.sparkContext.setJobDescription(f"{name} run{r}")
-                before = _stage_snapshot(spark)
-                t0 = time.perf_counter()
-                df = spec.fn(spark, args.sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                after = _stage_snapshot(spark)
-                best = dt if best is None else min(best, dt)
-                if before is not None and after is not None:
-                    delta = _stage_delta(before, after)
-                    best_delta = (delta if best_delta is None
-                                  else _merge_deltas(best_delta, delta))
-                spark.sparkContext.setJobDescription(None)
-            rec["wall_sec"] = round(best, 3)
-            if best_delta:
-                rec.update({k: int(v) for k, v in best_delta.items()})
+            spark.sparkContext.setJobDescription(name)
+            rec = measure(spark, lambda: spec.fn(spark, args.sf_dir),
+                          lambda walls: len(walls) < args.runs, reader)
+            spark.sparkContext.setJobDescription(None)
             if not args.no_plans:
                 df = spec.fn(spark, args.sf_dir)
                 plan = explain_formatted(df)
@@ -110,13 +93,15 @@ def main() -> None:
         json.dump({"sf_dir": args.sf_dir, "runs": args.runs,
                    "loadavg_1m": round(os.getloadavg()[0], 2),
                    "queries": out}, f, indent=1, sort_keys=True)
-    ranked = sorted(out.items(),
-                    key=lambda kv: -kv[1].get("wall_sec", 0.0))
+    ranked = sorted(out.items(), key=lambda kv: -kv[1].get("wall_s", 0.0))
+    print("  wall_s  build_s  exec_s  build_jobs   cpu_s  exch  query")
     for n, r in ranked[:25]:
-        print(f"{r.get('wall_sec', -1):8.3f}s  cpu={r.get('executor_cpu_time_ms', -1):>7}ms  "
-              f"exch={r.get('n_exchange', -1):>2}  {n}"
+        print(f"{r.get('wall_s', -1):8.3f} {r.get('build_s', -1):8.3f} "
+              f"{r.get('exec_s', -1):7.3f} {r.get('build_jobs', -1):11d} "
+              f"{r.get('cpu_ns', -1e9) / 1e9:7.2f} "
+              f"{r.get('n_exchange', -1):5d}  {n}"
               + (f"  ERROR {r['error']}" if "error" in r else ""))
-    print(f"total wall: {sum(r.get('wall_sec', 0.0) for r in out.values()):.1f}s -> {path}")
+    print(f"total wall: {sum(r.get('wall_s', 0.0) for r in out.values()):.1f}s -> {path}")
 
 
 if __name__ == "__main__":

@@ -1,4 +1,4 @@
-"""One-off 10x scale-up probe (r18, verdict item 3).
+"""10x scale-up probe.
 
 The engine's 100x-scale claims are plan-shape arguments (degree-
 oriented joins, banded LSH equi-joins, two-level money sums). This
@@ -23,9 +23,9 @@ Scaling construction (DuckDB, written to --out):
   stay ~1x); the probe records the workload metrics, not an output
   invariant, and prints the survivor count for the record.
 
-Methodology matches bench.py: noop sink, spark.catalog.clearCache()
-between runs, min-of-N wall and per-metric stage-delta min
-(_merge_deltas). Results land in BENCHNOTES.md (r18).
+Each query is timed by bench.py's measure loop: noop sink, cache
+cleared between runs, best-of-N wall with its build/execute split and
+the per-field stage minimum.
 
 Usage: python scripts/scale_probe.py [--runs 2] [--out /tmp/...]
 """
@@ -41,7 +41,7 @@ import time
 _HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.dirname(_HERE))
 
-from bench import _merge_deltas, _stage_delta, _stage_snapshot  # noqa: E402
+from bench import StatusReader, measure  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
 REPLICAS = 10
@@ -81,30 +81,6 @@ def build_scaled(out_dir: str) -> None:
         con.execute(f"""
             COPY (SELECT * FROM read_parquet('{SF01}/{t}.parquet'))
             TO '{out_dir}/{t}.parquet' (FORMAT parquet)""")
-
-
-def measure(spark, build, runs: int) -> dict:
-    best_wall, best_delta = None, None
-    for _ in range(runs):
-        spark.catalog.clearCache()
-        before = _stage_snapshot(spark)
-        t0 = time.perf_counter()
-        build().write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        after = _stage_snapshot(spark)
-        best_wall = wall if best_wall is None else min(best_wall, wall)
-        if before is not None and after is not None:
-            d = _stage_delta(before, after)
-            best_delta = d if best_delta is None else _merge_deltas(
-                best_delta, d)
-    out = {"wall_s": round(best_wall, 3)}
-    for k in ("executor_cpu_time_ms", "executor_run_time_ms",
-              "shuffle_write_bytes", "shuffle_read_bytes",
-              "memory_spill_bytes", "disk_spill_bytes",
-              "peak_execution_memory_bytes", "jvm_gc_time_ms"):
-        if best_delta and k in best_delta:
-            out[k] = best_delta[k]
-    return out
 
 
 def main() -> None:
@@ -151,10 +127,11 @@ def main() -> None:
     out["clean_corpus_survivors_sf1"] = surv
     print(f"clean_corpus survivors at 10x duplication: {surv}", flush=True)
 
+    reader = StatusReader(spark)
     for name in ("pricing_summary", "triangle_count", "clean_corpus"):
         for label, sf in (("sf0.1", SF01), (f"x{REPLICAS}", args.out)):
             m = measure(spark, lambda n=name, s=sf: specs[n].fn(spark, s),
-                        args.runs)
+                        lambda walls: len(walls) < args.runs, reader)
             out.setdefault(name, {})[label] = m
             print(f"{name} @ {label}: {json.dumps(m)}", flush=True)
 

@@ -18,7 +18,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # round; SPARK_GRAFT_SF_CORRECTNESS=/root/testdata/sf0.1 repeats it
 # through the ordinary test surface — budget ~35 min, and use a 16g
 # driver heap: the streaming drains at sf0.1 exhaust Spark's 1g
-# default, see BENCHNOTES r13).
+# default).
 SF_CORRECTNESS = os.environ.get("SPARK_GRAFT_SF_CORRECTNESS",
                                 "/root/testdata/sf0.01")
 REFERENCE_RESOURCES = "/root/reference/src/main/resources"

@@ -1,5 +1,6 @@
-"""Unit pins for bench.py's pure logic — the adaptive run policy and
-the per-field metric merge. No Spark session needed."""
+"""Pins for bench.py: the adaptive run policy, the seeded query order
+and the one measurement loop (``measure``) that bench.py and the
+profiling scripts share."""
 
 from __future__ import annotations
 
@@ -36,39 +37,38 @@ def test_more_runs_policy():
     assert not b._more_runs([2.0, 6.0, 5.0, 4.0])
 
 
-def test_stage_delta_sums_counters_and_maxes_peak():
-    b = _bench()
-    before = {(1, 0): {"shuffle_write_bytes": 10,
-                       "peak_execution_memory_bytes": 100}}
-    after = {
-        (1, 0): {"shuffle_write_bytes": 10,
-                 "peak_execution_memory_bytes": 100},  # pre-existing stage
-        (2, 0): {"shuffle_write_bytes": 7,
-                 "peak_execution_memory_bytes": 50},
-        (3, 0): {"shuffle_write_bytes": 5,
-                 "peak_execution_memory_bytes": 80},
-    }
-    d = b._stage_delta(before, after)
-    assert d["shuffle_write_bytes"] == 12        # counters sum
-    assert d["peak_execution_memory_bytes"] == 80  # high-water mark maxes
+def _once(walls):
+    return not walls
 
 
-def test_metric_merge_keeps_metrics_observed_by_any_run():
-    """The round-6 ADVICE fix, pinned from both directions by calling
-    bench's ACTUAL merge (extracted to _merge_deltas per r6 ADVICE —
-    the earlier source-substring pin could survive a regression that
-    kept the substring but changed surrounding logic): a key missing
-    from one run's delta must neither be zeroed (the original defect)
-    nor dropped (the first fix's defect) — the merge keeps the min
-    over the runs that observed it."""
+def test_measure_splits_build_and_execute_jobs(spark):
+    """A lazy plan runs no job until the noop write; an eager
+    checkpoint inside ``build()`` is counted as a build job."""
     b = _bench()
-    assert b._merge_deltas({"a": 5, "b": 9}, {"a": 7, "c": 3}) \
-        == {"a": 5, "b": 9, "c": 3}
-    # min is taken per-key, in both directions
-    assert b._merge_deltas({"a": 7}, {"a": 5}) == {"a": 5}
-    # an empty (drifted) snapshot neither zeroes nor drops anything
-    assert b._merge_deltas({"a": 4}, {}) == {"a": 4}
-    assert b._merge_deltas({}, {"a": 4}) == {"a": 4}
+    lazy = b.measure(spark, lambda: spark.range(10), _once)
+    assert lazy["build_jobs"] == 0 and lazy["exec_jobs"] >= 1
+    assert lazy["rows"] == 10
+    assert abs(lazy["wall_s"] - lazy["build_s"] - lazy["exec_s"]) <= 0.002
+    eager = b.measure(
+        spark, lambda: spark.range(10).localCheckpoint(eager=True), _once)
+    assert eager["build_jobs"] >= 1 and eager["rows"] == 10
+
+
+def test_measure_sums_the_stages_of_a_shuffle(spark):
+    """The stage counters cover every stage the run executed: a grouped
+    aggregate runs a map stage that writes shuffle bytes and a stage
+    that reads them; fields take the minimum over runs."""
+    from pyspark.sql import functions as F
+
+    b = _bench()
+    rec = b.measure(
+        spark,
+        lambda: spark.range(1000).groupBy((F.col("id") % 7).alias("k"))
+        .count(),
+        lambda walls: len(walls) < 2)
+    assert rec["rows"] == 7
+    assert rec["stages"] >= 2 and rec["tasks"] >= 2
+    assert rec["shuffle_write_bytes"] > 0 and rec["shuffle_read_bytes"] > 0
 
 
 def test_suite_order_is_seeded_and_recorded():

@@ -3815,9 +3815,8 @@ def _prop_config(narrow_batches_max: int) -> tuple[int, int, int]:
     test — ONE switch for both tests so the wide-stress shape can
     never silently diverge between them (review r9): the committed
     default stays narrow for suite wall time; SPARK_GRAFT_PROP_WIDE=1
-    is the re-run-after-any-group-function-edit config recorded in
-    BENCHNOTES (3,000 examples, 2,000-minute event range, up to 12
-    micro-batches)."""
+    is the re-run-after-any-group-function-edit config (3,000
+    examples, 2,000-minute event range, up to 12 micro-batches)."""
     if os.environ.get("SPARK_GRAFT_PROP_WIDE") == "1":
         return 3000, 2000, 12
     return 60, 600, narrow_batches_max

@@ -303,9 +303,9 @@ def test_no_driver_collect_outside_bounded_state_sites():
         # key/value rows — O(config keys), never data
         ("operators/similarity.py", "validate_srp_index_config"),
         ("operators/similarity.py", "compact_srp_index"),
-        # r19: distinct Hive partition VALUES of the triangle out_dir
-        # (the run-key probe deciding whether the cross-run crash
-        # window can exist) — O(micro-batches) strings, never data
+        # Distinct Hive partition VALUES of the triangle out_dir and
+        # state dirs (the run-key probe deciding whether a cross-run
+        # crash window can exist) — O(micro-batches) strings, never data
         ("streaming/triangles.py", "streaming_triangles"),
         # The canonical edge table, collected only when its measured
         # size is within spark.sql.autoBroadcastJoinThreshold (the

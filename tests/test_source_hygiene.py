@@ -180,3 +180,19 @@ def test_no_script_shadows_a_stdlib_module():
     shadows = [f for f in os.listdir(scripts)
                if f.endswith(".py") and f[:-3] in sys.stdlib_module_names]
     assert not shadows, f"scripts shadowing stdlib modules: {shadows}"
+
+
+def test_scripts_and_bench_import():
+    """Every script and bench.py imports cleanly without running its
+    ``main()``: a script that still imports a deleted helper fails
+    here rather than at its next manual run."""
+    import importlib.util
+
+    scripts = os.path.join(_REPO_DIR, "scripts")
+    paths = [os.path.join(_REPO_DIR, "bench.py")] + sorted(
+        os.path.join(scripts, f) for f in os.listdir(scripts)
+        if f.endswith(".py"))
+    for path in paths:
+        name = "_import_check_" + os.path.basename(path)[:-3]
+        spec = importlib.util.spec_from_file_location(name, path)
+        spec.loader.exec_module(importlib.util.module_from_spec(spec))
