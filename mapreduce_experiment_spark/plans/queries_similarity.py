@@ -19,45 +19,35 @@ from ..sources.io import app_artifact_dir
 from ..sources.tables import load_table
 from .registry import register
 
-# (prefix, applicationId, data dir) -> persisted index path, memoized
-# so repeated calls within one application measure PROBE cost, not
-# index-build cost (r6/r7 verdict item: the registered index queries
-# rewrote their index every run, so the bench number conflated build
-# with probe). Keyed by applicationId because the artifact dirs are
-# app-named: a NEW session must rebuild — its predecessor's dirs are
-# subject to the 24 h GC sweep. Keyed by the FULL normalized data
-# path, not its basename: two directories sharing a leaf name (two
-# tmp copies of sf0.001, bench's SF_DIR vs SF_DIR_2) hold different
-# vectors, and a basename key would silently serve the first one's
-# index for the second's probes. Same (app, full path) ⇒ same input
-# parquet ⇒ a byte-identical index, so the memo can never serve
-# stale data.
+# (prefix, applicationId, normalized data dir) -> persisted index path,
+# so repeated calls within one application measure the probe, not the
+# index build. The index lives in the application's own artifact dir
+# (sources.io.app_artifact_dir), which Spark removes only when the
+# application ends, and a new application has a new key. The full
+# path, not its basename, is keyed: two data dirs sharing a leaf name
+# hold different vectors.
 _INDEX_MEMO: dict[tuple[str, str, str], str] = {}
 
 
 def _memoized_index(spark: SparkSession, prefix: str, sf_dir: str,
-                    build, check=None) -> str:
+                    build) -> str:
     """Return the persisted-index path for (app, data dir), building
-    it via ``build(path)`` only on first use per application.
-    ``check`` (default: the dir exists) re-validates a memo hit so an
-    externally removed artifact triggers a rebuild instead of a read
-    failure."""
+    it via ``build(path)`` only on first use per application. The path
+    is recorded only after ``build`` returns, so a failed build is
+    never served."""
     import hashlib
 
     norm = os.path.abspath(os.path.normpath(sf_dir))
-    # Artifact-dir tag: human-readable leaf + a short full-path hash,
-    # so same-named data dirs land in DISTINCT on-disk index dirs too
-    # (the memo key alone would still rebuild into — and clobber —
-    # one shared path otherwise).
+    # Leaf name plus a short full-path hash: same-named data dirs get
+    # distinct on-disk index dirs (and catalog table names).
     tag = (os.path.basename(norm).replace(".", "_") + "_"
            + hashlib.sha256(norm.encode()).hexdigest()[:8])
     key = (prefix, spark.sparkContext.applicationId, norm)
     path = _INDEX_MEMO.get(key)
-    if path is not None and (check or os.path.isdir)(path):
-        return path
-    path = app_artifact_dir(spark, prefix, tag)
-    build(path)
-    _INDEX_MEMO[key] = path
+    if path is None:
+        path = app_artifact_dir(spark, prefix, tag)
+        build(path)
+        _INDEX_MEMO[key] = path
     return path
 
 
@@ -94,28 +84,6 @@ def _srp_sigs_cte() -> str:
     return ", sigs AS (" + "\nUNION ALL\n".join(selects) + ")"
 
 
-# RETIRED (r8): the ``embedding_near_dups`` registration — identical
-# output contract AND identical oracle as ``embedding_near_dups_indexed``
-# (the persisted-index path, r7-green), the redundancy the r7 verdict
-# named when it asked for displacement room. The recompute operator
-# itself (operators.similarity.embedding_near_dup_pairs_lsh) remains:
-# it is the one-shot shape (no index on disk), and
-# ``test_srp_index_value_parity`` keeps pinning it value-equal to the
-# indexed path, so the capability stays driver-checked through the
-# surviving registration without spending a window slot on a
-# duplicate (contract, oracle) pair.
-
-
-# RETIRED (r10): the ``srp_bucket_stats`` registration — the r8
-# verdict's named retirement candidate, funding knn_ivf_maintained
-# below. Its occupancy stats are a one-line groupBy over
-# operators.similarity.srp_signatures (which remains, exercised by
-# every SRP query), and the skew story it diagnosed is already
-# driver-checked through embedding_near_dups_indexed's oracle-checked
-# candidate set: any bucket whose occupancy the diagnostic would
-# report contributes its collision pairs to that query's hash.
-
-
 @register(
     "embedding_near_dups_indexed",
     headline=True,  # r7 verdict item 5: the persisted-index path gets
@@ -147,22 +115,13 @@ def q_embedding_near_dups_indexed(spark: SparkSession, sf_dir: str) -> DataFrame
     with the recompute path is both oracle-checked here and pinned by
     ``test_srp_index_value_parity``.
 
-    Like ``knn_ivf_pruned``, the index is written ONCE per (Spark
-    application, data dir) — memoized via
-    :func:`_memoized_index`, so
-    repeated calls (a bench's timed runs) measure the probe join, not
-    the index build — under the shared repo warehouse at an external
-    app-tagged path, with stale siblings from past applications GC'd
-    on the 24 h horizon (``sources.io.app_artifact_dir``; the
-    driver's own session may carry a different
-    spark.sql.warehouse.dir, so the explicit shared location is what
-    lets every session's sweep see every session's dirs)."""
+    Like ``knn_ivf_pruned``, the index is written once per (Spark
+    application, data dir) via :func:`_memoized_index`, so repeated
+    calls measure the probe join, not the index build."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _memoized_index(
         spark, "srp_index_", sf_dir,
-        build=lambda p: S.write_srp_index(emb, os.path.basename(p), path=p),
-        check=lambda p: os.path.isdir(p)
-        and spark.catalog.tableExists(os.path.basename(p)))
+        build=lambda p: S.write_srp_index(emb, os.path.basename(p), path=p))
     df = S.embedding_near_dups_from_index(
         spark, emb, os.path.basename(path), threshold=0.45)
     return df.withColumnRenamed("cos", "cos_sim")
@@ -211,9 +170,7 @@ def q_embedding_near_dups_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _memoized_index(
         spark, "srp_probe_index_", sf_dir,
         build=lambda p: S.write_srp_index(
-            corpus, os.path.basename(p), path=p),
-        check=lambda p: os.path.isdir(p)
-        and spark.catalog.tableExists(os.path.basename(p)))
+            corpus, os.path.basename(p), path=p))
     df = S.embedding_near_dups_probe_index(
         spark, batch, emb, os.path.basename(path), threshold=0.30)
     return df.withColumnRenamed("cos", "cos_sim")
@@ -282,9 +239,7 @@ def q_embedding_near_dups_maintained(spark: SparkSession,
                             path=os.path.join(p, "final"))
 
     path = _memoized_index(
-        spark, "srp_maint_index_", sf_dir, build=build,
-        check=lambda p: os.path.isdir(p)
-        and spark.catalog.tableExists(os.path.basename(p)))
+        spark, "srp_maint_index_", sf_dir, build=build)
     df = S.embedding_near_dups_from_index(
         spark, emb, os.path.basename(path), threshold=0.30)
     return df.withColumnRenamed("cos", "cos_sim")
@@ -318,17 +273,6 @@ def q_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = S.knn_bruteforce(load_table(spark, sf_dir, "embeddings"),
                           n_queries=N_KNN_QUERIES, k=5)
     return df.withColumnRenamed("cos", "cos_sim")
-
-
-# RETIRED (r7): the ``knn_bruteforce_blas`` registration — identical
-# output contract AND identical oracle (_KNN_BF_SQL) as
-# ``knn_bruteforce``, the overlap the r6 verdict named when it asked
-# for displacement room. The Arrow/BLAS operator itself
-# (operators.similarity.knn_bruteforce_blas) remains: it is the
-# execution shape wide-embedding corpora want, and
-# tests/test_pipeline_ops.py keeps pinning it value-equal to the JVM
-# path, so the capability stays covered without spending a
-# driver-window slot on a duplicate (name, oracle) pair.
 
 
 _IVF_ASSIGN_SQL = _V_CTE + f"""
@@ -604,8 +548,7 @@ def q_knn_ivf_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
         S.compact_ivf_index(spark, raw, os.path.join(p, "final"))
 
     path = _memoized_index(
-        spark, "ivf_maint_index_", sf_dir, build=build,
-        check=lambda p: os.path.isdir(os.path.join(p, "final")))
+        spark, "ivf_maint_index_", sf_dir, build=build)
     df = S.knn_ivf_pruned(spark, emb, os.path.join(path, "final"),
                           n_queries=N_IVF_MAINT_QUERIES, k=7)
     return df.withColumnRenamed("cos", "cos_sim")
@@ -620,15 +563,9 @@ def q_knn_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     proof). Output contract and oracle are identical to ``knn_ivf``:
     the pruned-index path must produce value-identical neighbors.
 
-    The index is written ONCE per (Spark application, data dir)
-    — memoized
-    via :func:`_memoized_index` (r6/r7 verdict item), so repeated
-    calls measure the partition-pruned PROBE, not the index build —
-    at an app-tagged path under the shared repo warehouse; the
-    uniqueness/GC contract (concurrent-session safety, 24 h sweep of
-    past applications' dirs) lives in
-    ``sources.io.app_artifact_dir``, shared with the SRP index and
-    streaming sink queries."""
+    The index is written once per (Spark application, data dir) via
+    :func:`_memoized_index`, so repeated calls measure the
+    partition-pruned probe, not the index build."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _memoized_index(
         spark, "ivf_index_", sf_dir,

@@ -66,81 +66,19 @@ def write_bucketed(df: DataFrame, table: str, bucket_cols: list[str],
        .sortBy(*bucket_cols).saveAsTable(table))
 
 
-def gc_stale_dirs(base: str, prefix: str, keep_prefix: str | None = None,
-                  horizon_s: int = 86400) -> None:
-    """Best-effort sweep of stale per-session artifact directories
-    (persisted index tables, streaming sink runs) under ``base``:
-    remove ``prefix*`` dirs older than ``horizon_s`` that do not also
-    match ``keep_prefix`` (the CURRENT session's own dirs).
-
-    The 24 h default horizon is deliberately NOT session-scale: a
-    long-lived concurrent session that wrote its artifact hours ago
-    can lazily re-execute a DataFrame that still reads those files,
-    and deleting them mid-scan would fail ITS query — a day
-    comfortably outlives any session on one box while still bounding
-    disk leakage from per-app naming. Failures are swallowed: GC must
-    never break the query that triggered it — and swallowed PER
-    DIRECTORY (r7 ADVICE): a sibling racing to deletion mid-sweep
-    (its getmtime throws) must not abort the remaining iterations, or
-    stale dirs sorting after the racer would survive every sweep.
-    """
-    import os
-    import shutil
-    import time
-
-    try:
-        entries = os.listdir(base)
-    except OSError:
-        return  # base not created yet — nothing to sweep
-    for d in entries:
-        if not d.startswith(prefix):
-            continue
-        if keep_prefix is not None and d.startswith(keep_prefix):
-            continue
-        full = os.path.join(base, d)
-        try:
-            if time.time() - os.path.getmtime(full) > horizon_s:
-                shutil.rmtree(full, ignore_errors=True)
-        except OSError:
-            continue
-
-
-def repo_warehouse(*subdirs: str) -> str:
-    """Absolute path under the repo's gitignored ``spark-warehouse``
-    (created on demand) — the ONE shared home for per-session
-    persisted artifacts (index tables, streaming sink runs), so every
-    session's GC sweep sees every session's dirs regardless of what
-    ``spark.sql.warehouse.dir`` each session carries."""
+def app_artifact_dir(spark: SparkSession, prefix: str, tag: str) -> str:
+    """``<SparkFiles root>/<prefix><tag>``: the home of a persisted
+    artifact (index table, streaming sink run) that lives as long as
+    ``spark``'s application. Spark creates that root per application
+    and deletes it on ``spark.stop()`` and in its JVM shutdown hook,
+    so concurrent sessions never share it and nothing outlives the
+    application. The dir itself is not created — table and stream
+    writers create their own target."""
     import os
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    base = os.path.join(repo, "spark-warehouse", *subdirs)
-    os.makedirs(base, exist_ok=True)
-    return base
+    from pyspark import SparkFiles
 
-
-def app_artifact_dir(spark: SparkSession, prefix: str, tag: str,
-                     subdir: str | None = None) -> str:
-    """The per-(Spark application, tag) artifact-directory contract in
-    ONE place (r7 ADVICE — three inline copies invited drift in the
-    keep_prefix/horizon contract): returns
-    ``<repo_warehouse>[/subdir]/<prefix><appId>_<tag>`` after sweeping
-    day-old ``prefix`` siblings from PAST applications.
-
-    The app-id naming is what makes concurrent sessions safe (a
-    driver-verify run and a local pytest run must never overwrite
-    index files the other's already-planned scan is lazily reading);
-    the sweep is what stops that naming leaking disk; ``keep_prefix``
-    exempts the CURRENT application's dirs so a long session never
-    GCs its own artifacts. The dir itself is not pre-created — table
-    and stream writers create their own target."""
-    import os
-
-    app = spark.sparkContext.applicationId.replace("-", "_")
-    base = repo_warehouse(*((subdir,) if subdir else ()))
-    gc_stale_dirs(base, prefix, keep_prefix=f"{prefix}{app}_")
-    return os.path.join(base, f"{prefix}{app}_{tag}")
+    return os.path.join(SparkFiles.getRootDirectory(), prefix + tag)
 
 
 def write_delta(df: DataFrame, path: str, **options) -> None:

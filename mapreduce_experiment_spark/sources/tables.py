@@ -3,7 +3,7 @@
 Loads are plain ``spark.read.parquet`` — columnar scan with predicate
 pushdown and column pruning supplied by Catalyst (the reference's text
 scan, mapreducePredictionTwitter100.java:24, gets neither). Schemas
-come from the parquet footers; :mod:`..schemas` documents them.
+come from the parquet footers (FIXTURES.md §2 documents them).
 """
 
 from __future__ import annotations
@@ -13,7 +13,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import TABLE_NAMES
+# The driver's test-data tables, one ``<name>.parquet`` each.
+TABLE_NAMES = ("region", "nation", "customer", "supplier", "part",
+               "orders", "lineitem", "events", "documents", "embeddings")
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

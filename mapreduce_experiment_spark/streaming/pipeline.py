@@ -92,21 +92,15 @@ def dedup_events(events: DataFrame) -> DataFrame:
 
 
 def _stream_sink_dir(spark: SparkSession, prefix: str) -> str:
-    """A fresh run directory for a checkpointed file sink under the
-    repo warehouse's ``stream_sinks``, sharing the per-app naming +
-    24 h stale-sibling GC contract with the persisted IVF/SRP index
-    dirs (``sources.io.app_artifact_dir``; a concurrent session's
-    returned DataFrame may lazily re-read its sink files hours after
-    the drain, so only day-old runs from PAST applications are
-    swept). Each call gets a fresh uuid tag: a sink dir + checkpoint
-    pair is single-use by construction."""
+    """A fresh run directory for a checkpointed file sink. Each call
+    gets a fresh uuid tag: a sink dir + checkpoint pair is single-use
+    by construction."""
     import os
     import uuid
 
     from ..sources.io import app_artifact_dir
 
-    run = app_artifact_dir(spark, prefix, uuid.uuid4().hex,
-                           subdir="stream_sinks")
+    run = app_artifact_dir(spark, "stream_sinks/" + prefix, uuid.uuid4().hex)
     os.makedirs(run, exist_ok=True)
     return run
 

@@ -524,7 +524,7 @@ def write_advdata(out_dir: str, base_dir: str, seed: int) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mapreduce_experiment_spark.schemas import TABLE_NAMES
+    from mapreduce_experiment_spark.sources.tables import TABLE_NAMES
 
     os.makedirs(out_dir, exist_ok=True)
     hostile = ("documents", "embeddings", "events", "region", "nation",

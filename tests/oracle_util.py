@@ -19,7 +19,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from mapreduce_experiment_spark.schemas import TABLE_NAMES
+from mapreduce_experiment_spark.sources.tables import TABLE_NAMES
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:

@@ -113,84 +113,43 @@ def test_events_ts_normalized_across_parquet_generations(spark, tmp_path):
     assert rows_n == rows_u
 
 
-def test_gc_stale_dirs_sweeps_only_stale_prefix_matches(tmp_path):
-    """The shared artifact-dir GC: removes prefix-matching dirs past
-    the horizon, never fresh dirs, never the current session's own
-    (keep_prefix) dirs, never unrelated dirs — and a missing base is
-    a no-op, not an error (GC must never break the query that
-    triggered it)."""
-    import os
-    import time
-
-    old = tmp_path / "pfx_old"
-    new = tmp_path / "pfx_new"
-    keep = tmp_path / "pfx_keep_mine"
-    other = tmp_path / "other_old"
-    for d in (old, new, keep, other):
-        d.mkdir()
-        (d / "f").write_text("x")
-    past = time.time() - 90000  # > the 24 h horizon
-    for d in (old, keep, other):
-        os.utime(d, (past, past))
-    EIO.gc_stale_dirs(str(tmp_path), "pfx_", keep_prefix="pfx_keep_")
-    assert not old.exists()          # stale + prefix match -> swept
-    assert new.exists()              # fresh -> kept
-    assert keep.exists()             # own session -> kept even stale
-    assert other.exists()            # different prefix -> untouched
-    EIO.gc_stale_dirs(str(tmp_path / "missing"), "pfx_")  # no raise
-
-
-def test_gc_stale_dirs_survives_racing_sibling(tmp_path, monkeypatch):
-    """r7 ADVICE: a sibling deleted by a concurrent session mid-sweep
-    (its getmtime raises) must not abort the remaining iterations —
-    the OSError guard is per-directory, so every other stale dir is
-    still swept."""
-    import os
-    import time
-
-    racer = tmp_path / "pfx_racer"
-    victim = tmp_path / "pfx_victim"
-    for d in (racer, victim):
-        d.mkdir()
-    past = time.time() - 90000
-    for d in (racer, victim):
-        os.utime(d, (past, past))
-
-    real_getmtime = os.path.getmtime
-
-    def racing_getmtime(p):
-        if "pfx_racer" in str(p):
-            raise OSError("concurrently deleted")
-        return real_getmtime(p)
-
-    monkeypatch.setattr("os.path.getmtime", racing_getmtime)
-    EIO.gc_stale_dirs(str(tmp_path), "pfx_")
-    assert not victim.exists(), "racing sibling aborted the sweep"
-
-
 def test_app_artifact_dir_contract(spark):
-    """The shared per-app artifact-dir helper (r7 ADVICE folded the
-    three inline copies): returns <warehouse>/<prefix><appId>_<tag>,
-    sweeps day-old prefix siblings from other applications, keeps the
-    current app's own stale dirs."""
+    """A per-application artifact dir is ``<SparkFiles root>/<prefix>
+    <tag>`` and is not created: the writer creates its own target."""
     import os
-    import shutil
-    import time
 
-    base = EIO.repo_warehouse()
-    app = spark.sparkContext.applicationId.replace("-", "_")
-    stale_other = os.path.join(base, "testgc_oldapp_x")
-    stale_mine = os.path.join(base, f"testgc_{app}_old")
-    try:
-        for d in (stale_other, stale_mine):
-            os.makedirs(d, exist_ok=True)
-            past = time.time() - 90000
-            os.utime(d, (past, past))
-        path = EIO.app_artifact_dir(spark, "testgc_", "t1")
-        assert path == os.path.join(base, f"testgc_{app}_t1")
-        assert not os.path.exists(path)  # reserved, not created
-        assert not os.path.exists(stale_other)   # past app, stale -> swept
-        assert os.path.exists(stale_mine)        # own app -> kept
-    finally:
-        for d in (stale_other, stale_mine):
-            shutil.rmtree(d, ignore_errors=True)
+    from pyspark import SparkFiles
+
+    path = EIO.app_artifact_dir(spark, "testart_", "t1")
+    assert path == os.path.join(SparkFiles.getRootDirectory(), "testart_t1")
+    assert not os.path.exists(path)
+
+
+def test_app_artifact_dir_removed_on_stop():
+    """Spark deletes the application's artifact root on ``stop()``: the
+    lifetime of every persisted index and stream sink rests on this.
+    A fresh process, because the suite's session must stay up."""
+    import os
+    import subprocess
+    import sys
+
+    script = """
+import os, sys
+sys.path.insert(0, ".")
+from pyspark.sql import SparkSession
+from mapreduce_experiment_spark.sources.io import app_artifact_dir
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+path = app_artifact_dir(spark, "stoptest_", "t")
+spark.range(10).write.parquet(path)
+if not os.path.isdir(path):
+    raise SystemExit("artifact not written")
+spark.stop()
+print("GONE" if not os.path.exists(path) else "LEFT " + path)
+"""
+    r = subprocess.run([sys.executable, "-c", script], capture_output=True,
+                       text=True, timeout=300,
+                       cwd=os.path.dirname(os.path.dirname(
+                           os.path.abspath(__file__))))
+    assert r.returncode == 0, f"stdout:\n{r.stdout}\nstderr:\n{r.stderr[-2000:]}"
+    assert "GONE" in r.stdout, r.stdout

@@ -1010,10 +1010,10 @@ def test_srp_probe_rejects_mismatched_banding(spark, sf_smoke, tmp_path):
 
 
 def test_registered_index_queries_memoize_index_build(spark, sf_smoke):
-    """r6/r7 verdict item: the registered persisted-index queries must
-    write their index ONCE per (application, sf) and serve repeat
-    calls from it — measured here by the index dir's mtime staying
-    put across a second call, with values identical."""
+    """The registered persisted-index queries, the two maintenance
+    cycles included, must write their index ONCE per (application, sf)
+    and serve repeat calls from it — measured here by the index dir's
+    mtime staying put across a second call, with values identical."""
 
     from mapreduce_experiment_spark.plans import queries_similarity as QS
 
@@ -1021,7 +1021,10 @@ def test_registered_index_queries_memoize_index_build(spark, sf_smoke):
 
     for name, prefix in (("knn_ivf_pruned", "ivf_index_"),
                          ("embedding_near_dups_indexed", "srp_index_"),
-                         ("embedding_near_dups_probe", "srp_probe_index_")):
+                         ("embedding_near_dups_probe", "srp_probe_index_"),
+                         ("knn_ivf_maintained", "ivf_maint_index_"),
+                         ("embedding_near_dups_maintained",
+                          "srp_maint_index_")):
         spec = SPECS()[name]
         first = {tuple(r) for r in spec.fn(spark, sf_smoke).collect()}
         norm = os.path.abspath(os.path.normpath(sf_smoke))

@@ -301,8 +301,7 @@ def test_no_driver_collect_outside_bounded_state_sites():
         ("operators/similarity.py", "knn_ivf_pruned"),  # <=10k probe ids
         # SHOW TBLPROPERTIES output: a handful of catalog metadata
         # key/value rows — O(config keys), never data
-        ("operators/similarity.py", "validate_srp_index_config"),
-        ("operators/similarity.py", "compact_srp_index"),
+        ("operators/similarity.py", "_tblproperties"),
         # Distinct Hive partition VALUES of the triangle out_dir and
         # state dirs (the run-key probe deciding whether a cross-run
         # crash window can exist) — O(micro-batches) strings, never data

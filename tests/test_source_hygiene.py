@@ -196,3 +196,19 @@ def test_scripts_and_bench_import():
         name = "_import_check_" + os.path.basename(path)[:-3]
         spec = importlib.util.spec_from_file_location(name, path)
         spec.loader.exec_module(importlib.util.module_from_spec(spec))
+
+
+def test_package_names_no_checkout_warehouse():
+    """Per-application artifacts (persisted indexes, stream sink runs)
+    live in the application's own temp dir, which Spark deletes when
+    the application ends; a module naming ``spark-warehouse`` would
+    put them back in the checkout, where nothing removes them."""
+    offenders = []
+    for root, _dirs, files in os.walk(_PKG_DIR):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(root, fn)
+                with open(path) as f:
+                    if "spark-warehouse" in f.read():
+                        offenders.append(os.path.relpath(path, _REPO_DIR))
+    assert not offenders, offenders
