@@ -60,9 +60,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "list":
         for name, spec in sorted(SPECS().items()):
-            kind = "oracle" if spec.oracle else "rows-only"
-            mark = " [headline]" if spec.headline else ""
-            print(f"{name:28s} {kind}{mark}")
+            print(name + (" [headline]" if spec.headline else ""))
         return 0
 
     spark = get_session(app_name=f"cli-{args.cmd}")

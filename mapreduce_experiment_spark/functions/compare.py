@@ -129,13 +129,13 @@ def dsum(chunk_sum_col: str) -> Column:
     return F.sum(F.col(chunk_sum_col).cast("decimal(19,0)"))
 
 
-def qsum(col: Column, scale: int = 100) -> Column:
-    """Exact quantized sum: ``sum(cents(x)) / scale`` (double out)."""
-    return F.sum(cents(col, scale)) / float(scale)
+def qsum(col: Column) -> Column:
+    """Exact quantized sum: ``sum(cents(x)) / 100`` (double out)."""
+    return F.sum(cents(col)) / 100.0
 
 
-def qsum_sql(expr: str, scale: int = 100) -> str:
-    return f"sum({cents_sql(expr, scale)}) / {scale}.0"
+def qsum_sql(expr: str) -> str:
+    return f"sum({cents_sql(expr)}) / 100.0"
 
 
 def qavg(col: Column, p: int = 4, scale: int = 100) -> Column:

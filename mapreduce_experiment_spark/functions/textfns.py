@@ -80,12 +80,12 @@ def word_ngrams(tokens: Column, n: int, distinct: bool = False) -> Column:
     return F.when(F.size(tokens) >= n, grams).otherwise(empty)
 
 
-def shingles(tokens: Column, n: int = 3) -> Column:
+def shingles(tokens: Column, n: int) -> Column:
     """Distinct word n-grams as strings (set semantics for Jaccard)."""
     return word_ngrams(tokens, n, distinct=True)
 
 
-def shingles_sql(tokens_expr: str, n: int = 3) -> str:
+def shingles_sql(tokens_expr: str, n: int) -> str:
     """NOTE (r14 adversarial sweep): DuckDB's list_distinct does NOT
     preserve first-occurrence order while Spark's array_distinct
     does, so on inputs with repeated n-grams the two engines return
@@ -110,21 +110,22 @@ def hash60_sql(expr: str) -> str:
     return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
+def shingle_hashes(text: Column, n: int) -> Column:
     """Distinct 60-bit hashes of the text's word n-grams."""
     return F.transform(shingles(tokenize(text), n), hash60)
 
 
-def shingle_hashes_sql(expr: str, n: int = 3) -> str:
+def shingle_hashes_sql(expr: str, n: int) -> str:
     sh = shingles_sql(tokenize_sql(expr), n)
     return f"list_transform({sh}, s -> {hash60_sql('s')})"
 
 
-def minhash_params(k: int, seed: int = 1_234_567) -> list[tuple[int, int]]:
-    """k fixed (a, b) permutation constants from a deterministic LCG —
-    baked identically into the Spark plan and the oracle SQL."""
+def minhash_params(k: int) -> list[tuple[int, int]]:
+    """k fixed (a, b) permutation constants from a deterministic LCG
+    seeded with 1,234,567 — baked identically into the Spark plan and
+    the oracle SQL."""
     params = []
-    x = seed
+    x = 1_234_567
     for _ in range(k):
         x = (1_103_515_245 * x + 12_345) % (1 << 31)
         a = (x | 1) % MERSENNE31 or 1

@@ -27,11 +27,11 @@ from ..functions.textfns import (
     MERSENNE31,
     hash60,
     minhash_params,
-    shingle_hashes,
     tokenize,
 )
 
 # MinHash configuration (mirrored in plans/queries_dedup.py oracle SQL).
+SHINGLE_N = 3   # words per shingle
 K = 64          # signature length
 BAND_R = 2      # rows per band
 BAND_B = K // BAND_R  # 32 bands → P(catch) = 1-(1-J^2)^32; ~1 at J>=0.8
@@ -39,24 +39,7 @@ SIMHASH_BITS = 48
 SIMHASH_CHUNKS = 8  # pigeonhole: hamming <= 7 guarantees a matching chunk
 
 
-def with_shingle_hashes(docs: DataFrame, text_col: str = "text",
-                        n: int = 3) -> DataFrame:
-    """Attach the distinct shingle-hash array.
-
-    Deliberately NO ``where(size(...) > 0)`` guard: a filter on the
-    computed array makes Spark evaluate the whole (interpreted)
-    shingle expression twice — once for the predicate, once for the
-    projection (measured 2.5× wall time). Too-short docs yield empty
-    arrays, which every consumer already drops for free: the JVM agg
-    signature path explodes (empty → no rows), the Arrow path drops
-    empty rows inside its generator (r13 — it previously crashed on
-    them), and the Jaccard paths null out under the threshold filter.
-    """
-    return docs.withColumn("shingle_hashes", shingle_hashes(F.col(text_col), n))
-
-
-def exploded_shingle_hashes(docs: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text", n: int = 3) -> DataFrame:
+def exploded_shingle_hashes(docs: DataFrame, n: int) -> DataFrame:
     """Shingle hashes as (id, h) rows — the codegen path.
 
     posexplode the tokens, form each n-gram with window leads, hash in
@@ -69,59 +52,56 @@ def exploded_shingle_hashes(docs: DataFrame, id_col: str = "doc_id",
     from pyspark.sql import Window
 
     toks = docs.select(
-        id_col, F.posexplode(tokenize(F.col(text_col))).alias("pos", "tok"))
+        "doc_id", F.posexplode(tokenize(F.col("text"))).alias("pos", "tok"))
     if n == 1:
         # Unigrams need no window join-up; the general path below
         # indexes leads[-1], which is empty for n=1 (r13 review —
         # IndexError, while the HOF sibling accepted n=1 fine).
-        return toks.select(id_col, hash60(F.col("tok")).alias("h"))
-    w = Window.partitionBy(id_col).orderBy("pos")
+        return toks.select("doc_id", hash60(F.col("tok")).alias("h"))
+    w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("tok", i).over(w) for i in range(1, n)]
     grams = toks.select(
-        id_col, F.concat_ws(" ", F.col("tok"), *leads).alias("gram"),
+        "doc_id", F.concat_ws(" ", F.col("tok"), *leads).alias("gram"),
         leads[-1].alias("_last"))
     return (grams.where(F.col("_last").isNotNull())
-            .select(id_col, hash60(F.col("gram")).alias("h")))
+            .select("doc_id", hash60(F.col("gram")).alias("h")))
 
 
-def shingle_sets(docs: DataFrame, id_col: str = "doc_id",
-                 text_col: str = "text", n: int = 3) -> DataFrame:
+def shingle_sets(docs: DataFrame) -> DataFrame:
     """Distinct shingle-hash set per doc (for exact Jaccard verify),
     built from the exploded codegen path."""
-    return (exploded_shingle_hashes(docs, id_col, text_col, n)
-            .groupBy(id_col)
+    return (exploded_shingle_hashes(docs, SHINGLE_N)
+            .groupBy("doc_id")
             .agg(F.collect_set("h").alias("shingle_hashes")))
 
 
-def minhash_signatures_from_agg(sh: DataFrame, id_col: str = "doc_id",
-                                k: int = K) -> DataFrame:
-    """k-element MinHash signatures via explode + k-min hash aggregate.
+def minhash_signatures_from_agg(sh: DataFrame) -> DataFrame:
+    """K-element MinHash signatures via explode + K-min hash aggregate.
 
     The pure-JVM shape: mins combine map-side (partial agg), so the
-    shuffle carries k longs per doc regardless of document size. Kept
+    shuffle carries K longs per doc regardless of document size. Kept
     as the no-Python reference path; tests pin it bit-equal to the
     Arrow path below, which is ~40% faster end-to-end.
     """
     p = F.lit(MERSENNE31)
     exploded = (
-        sh.select(id_col, F.explode("shingle_hashes").alias("h"))
-        .select(id_col, (F.col("h") % p).alias("hm"))
+        sh.select("doc_id", F.explode("shingle_hashes").alias("h"))
+        .select("doc_id", (F.col("h") % p).alias("hm"))
     )
     mins = [
         F.min((F.lit(a) * F.col("hm") + F.lit(b)) % p).alias(f"s{i}")
-        for i, (a, b) in enumerate(minhash_params(k))
+        for i, (a, b) in enumerate(minhash_params(K))
     ]
-    agg = exploded.groupBy(id_col).agg(*mins)
+    agg = exploded.groupBy("doc_id").agg(*mins)
     return agg.select(
-        id_col, F.array(*[f"s{i}" for i in range(k)]).alias("sig"))
+        "doc_id", F.array(*[f"s{i}" for i in range(K)]).alias("sig"))
 
 
-def minhash_signatures_from(sh: DataFrame, id_col: str = "doc_id",
-                            k: int = K,
+def minhash_signatures_from(sh: DataFrame,
                             passthrough: dict[str, str] | None = None,
                             ) -> DataFrame:
-    """k-element MinHash signatures from a shingle-hash table, computed
-    as one vectorized (k × n_shingles) modular matrix op per doc via
+    """K-element MinHash signatures from a shingle-hash table, computed
+    as one vectorized (K × n_shingles) modular matrix op per doc via
     Arrow `mapInPandas`.
 
     The arithmetic is exact int64 — a*h+b < 2^31·2^31 = 2^62 — so the
@@ -130,6 +110,7 @@ def minhash_signatures_from(sh: DataFrame, id_col: str = "doc_id",
     per-permutation folds. The input is the already-aggregated shingle
     SET table, so this is a map-side pass with no extra shuffle; the
     64 permutations never appear as separate Catalyst expressions.
+    ``doc_id`` keeps its own type (long or string).
 
     ``passthrough`` ({column: spark-ddl-type}) carries extra columns
     of ``sh`` through the map unchanged (one output row per input
@@ -140,7 +121,7 @@ def minhash_signatures_from(sh: DataFrame, id_col: str = "doc_id",
     import numpy as np
     import pandas as pd
 
-    params = np.array(minhash_params(k), dtype=np.int64)
+    params = np.array(minhash_params(K), dtype=np.int64)
     a_vec, b_vec = params[:, 0], params[:, 1]
     p = MERSENNE31
     extra = passthrough or {}
@@ -165,23 +146,18 @@ def minhash_signatures_from(sh: DataFrame, id_col: str = "doc_id",
             if not keep:
                 continue  # a 0-row frame would type `sig` float64,
                 # which Arrow can't map to the declared array<long>
-            out = pdf.iloc[keep][[id_col, *extra]].copy()
+            out = pdf.iloc[keep][["doc_id", *extra]].copy()
             out["sig"] = sigs
-            yield out[[id_col, "sig", *extra]]
+            yield out[["doc_id", "sig", *extra]]
 
-    # The id column keeps ITS OWN type (r13 review: a hardcoded `long`
-    # broke string-id callers the id_col parameter advertises, while
-    # the bit-equal agg sibling handled them fine).
-    id_ddl = sh.schema[id_col].dataType.simpleString()
+    id_ddl = sh.schema["doc_id"].dataType.simpleString()
     extra_ddl = "".join(f", {c} {t}" for c, t in extra.items())
-    return sh.select(id_col, "shingle_hashes", *extra).mapInPandas(
-        sig, schema=f"{id_col} {id_ddl}, sig array<long>{extra_ddl}")
+    return sh.select("doc_id", "shingle_hashes", *extra).mapInPandas(
+        sig, schema=f"doc_id {id_ddl}, sig array<long>{extra_ddl}")
 
 
-def minhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", k: int = K) -> DataFrame:
-    return minhash_signatures_from(
-        shingle_sets(docs, id_col, text_col), id_col, k)
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    return minhash_signatures_from(shingle_sets(docs))
 
 
 def _jaccard(a: F.Column, b: F.Column) -> F.Column:
@@ -189,9 +165,7 @@ def _jaccard(a: F.Column, b: F.Column) -> F.Column:
     return inter / (F.size(a) + F.size(b) - F.size(F.array_intersect(a, b)))
 
 
-def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Near-duplicate pairs: LSH candidates, exact-Jaccard verified.
 
     Scale shape: one narrow pass computes signatures; explode to
@@ -211,13 +185,13 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8,
     # separate up-front job — measured 1.74 → 1.49 s wall, equal CPU,
     # identical output. (ngram_jaccard_pairs below keeps its EAGER
     # checkpoints: they must materialize before ex.unpersist() runs.)
-    sh = shingle_sets(docs, id_col, text_col).localCheckpoint(eager=False)
-    sigs = minhash_signatures_from(sh, id_col)
+    sh = shingle_sets(docs).localCheckpoint(eager=False)
+    sigs = minhash_signatures_from(sh)
     # Shuffle discipline: the banded join moves only (id, band, key) —
     # the shingle-hash arrays (the wide payload) stay out of the 32×
     # band explosion and are joined back onto the small candidate set.
     bands = sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(BAND_B - 1)),
@@ -231,10 +205,10 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8,
                 ),
             )
         ).alias("bk"),
-    ).select(id_col, "bk.band", "bk.key")
+    ).select("doc_id", "bk.band", "bk.key")
 
-    left = bands.select(F.col(id_col).alias("id_a"), "band", "key")
-    right = bands.select(F.col(id_col).alias("id_b"), "band", "key")
+    left = bands.select(F.col("doc_id").alias("id_a"), "band", "key")
+    right = bands.select(F.col("doc_id").alias("id_b"), "band", "key")
     cands = (
         left.join(right, ["band", "key"])
         .where(F.col("id_a") < F.col("id_b"))
@@ -242,9 +216,9 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8,
         .distinct()
     )
     cands = (
-        cands.join(sh.select(F.col(id_col).alias("id_a"),
+        cands.join(sh.select(F.col("doc_id").alias("id_a"),
                              F.col("shingle_hashes").alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"),
+        .join(sh.select(F.col("doc_id").alias("id_b"),
                         F.col("shingle_hashes").alias("sh_b")), "id_b")
     )
     j = _jaccard(F.col("sh_a"), F.col("sh_b"))
@@ -257,15 +231,14 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8,
     )
 
 
-def ngram_jaccard_pairs_allpairs(docs: DataFrame, threshold: float = 0.8,
-                                 id_col: str = "doc_id",
-                                 text_col: str = "text") -> DataFrame:
+def ngram_jaccard_pairs_allpairs(docs: DataFrame,
+                                 threshold: float = 0.8) -> DataFrame:
     """Exact all-pairs n-gram Jaccard — quadratic reference used by
     tests to prove the prefix-filtered plan below loses nothing."""
-    sh = shingle_sets(docs, id_col, text_col)
-    a = sh.select(F.col(id_col).alias("id_a"),
+    sh = shingle_sets(docs)
+    a = sh.select(F.col("doc_id").alias("id_a"),
                   F.col("shingle_hashes").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"),
+    b = sh.select(F.col("doc_id").alias("id_b"),
                   F.col("shingle_hashes").alias("sh_b"))
     j = _jaccard(F.col("sh_a"), F.col("sh_b"))
     return (
@@ -276,9 +249,7 @@ def ngram_jaccard_pairs_allpairs(docs: DataFrame, threshold: float = 0.8,
     )
 
 
-def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """EXACT n-gram Jaccard pairs via prefix filtering — no cartesian.
 
     The set-similarity-join principle (Bayardo et al., WWW'07; Vernica
@@ -309,16 +280,16 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
     """
     from pyspark.sql import Window
 
-    ex = (exploded_shingle_hashes(docs, id_col, text_col)
+    ex = (exploded_shingle_hashes(docs, SHINGLE_N)
           .distinct()
           .persist())
     ex.count()
-    sh = (ex.groupBy(id_col)
+    sh = (ex.groupBy("doc_id")
           .agg(F.collect_set("h").alias("shingle_hashes"))
           .localCheckpoint())
 
     dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy(id_col).orderBy("df", "h")
+    w = Window.partitionBy("doc_id").orderBy("df", "h")
     # Per-doc shingle count from the ALREADY-materialized set table
     # (r19 optimization round, guide §2.3 — don't recompute what an
     # earlier stage aggregated): ex is distinct, so count(*) per doc
@@ -330,29 +301,29 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
     # one narrow row per doc off the checkpoint — broadcastable by
     # AQE locally, an id-keyed join at scale, either way dominated by
     # the ranking exchange that must happen anyway.
-    sizes = sh.select(id_col, F.size("shingle_hashes").alias("n"))
+    sizes = sh.select("doc_id", F.size("shingle_hashes").alias("n"))
     ranked = (
         ex.join(dfreq, "h")
-        .join(sizes, id_col)
-        .select(id_col, "h", F.row_number().over(w).alias("rk"), "n")
+        .join(sizes, "doc_id")
+        .select("doc_id", "h", F.row_number().over(w).alias("rk"), "n")
     )
     prefix_len = (F.col("n")
                   - F.floor(F.lit(threshold) * F.col("n")).cast("int") + 1)
-    prefix = (ranked.where(F.col("rk") <= prefix_len).select(id_col, "h")
+    prefix = (ranked.where(F.col("rk") <= prefix_len).select("doc_id", "h")
               .localCheckpoint())
     ex.unpersist()
 
     cands = (
-        prefix.select(F.col(id_col).alias("id_a"), "h")
-        .join(prefix.select(F.col(id_col).alias("id_b"), "h"), "h")
+        prefix.select(F.col("doc_id").alias("id_a"), "h")
+        .join(prefix.select(F.col("doc_id").alias("id_b"), "h"), "h")
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
     verified = (
-        cands.join(sh.select(F.col(id_col).alias("id_a"),
+        cands.join(sh.select(F.col("doc_id").alias("id_a"),
                              F.col("shingle_hashes").alias("sh_a")), "id_a")
-        .join(sh.select(F.col(id_col).alias("id_b"),
+        .join(sh.select(F.col("doc_id").alias("id_b"),
                         F.col("shingle_hashes").alias("sh_b")), "id_b")
     )
     j = _jaccard(F.col("sh_a"), F.col("sh_b"))
@@ -364,35 +335,31 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
     )
 
 
-def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """SimHash over shingle hashes: bit j is set iff the majority of
     shingles have bit j set (ties → set).
 
     Same shape as MinHash: explode once, one hash aggregate with
-    ``bits`` sum expressions (map-side partial agg, codegen) — the
-    shuffle carries ``bits`` longs per doc. Votes are over the
+    SIMHASH_BITS sum expressions (map-side partial agg, codegen) — the
+    shuffle carries SIMHASH_BITS longs per doc. Votes are over the
     DISTINCT shingle set (via shingle_sets), matching the oracle.
     """
-    sh = shingle_sets(docs, id_col, text_col)
-    exploded = sh.select(id_col, F.explode("shingle_hashes").alias("h"))
+    sh = shingle_sets(docs)
+    exploded = sh.select("doc_id", F.explode("shingle_hashes").alias("h"))
     votes = [
         F.sum(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) * 2 - 1)
          .alias(f"v{j}")
-        for j in range(bits)
+        for j in range(SIMHASH_BITS)
     ]
-    agg = exploded.groupBy(id_col).agg(*votes)
+    agg = exploded.groupBy("doc_id").agg(*votes)
     sig = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         term = F.when(F.col(f"v{j}") >= 0, F.lit(1 << j)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
-    return agg.select(id_col, sig.cast("long").alias("simhash"))
+    return agg.select("doc_id", sig.cast("long").alias("simhash"))
 
 
-def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 6,
-                           id_col: str = "doc_id",
-                           text_col: str = "text") -> DataFrame:
+def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Hamming-ball near-dup pairs via pigeonhole banding.
 
     Split the 48-bit signature into 8 six-bit chunks; any pair within
@@ -408,11 +375,11 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 6,
             f"max_hamming={max_hamming} breaks the pigeonhole bound: "
             f"with {SIMHASH_CHUNKS} chunks only distances "
             f"< {SIMHASH_CHUNKS} guarantee a shared chunk")
-    sigs = simhash_signatures(docs, id_col, text_col)
+    sigs = simhash_signatures(docs)
     chunk_bits = SIMHASH_BITS // SIMHASH_CHUNKS
     mask = (1 << chunk_bits) - 1
     chunks = sigs.select(
-        F.col(id_col), F.col("simhash"),
+        F.col("doc_id"), F.col("simhash"),
         F.explode(F.array(*[
             F.struct(
                 F.lit(c).alias("chunk"),
@@ -421,11 +388,11 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 6,
             )
             for c in range(SIMHASH_CHUNKS)
         ])).alias("cv"),
-    ).select(id_col, "simhash", "cv.chunk", "cv.val")
+    ).select("doc_id", "simhash", "cv.chunk", "cv.val")
 
-    left = chunks.select(F.col(id_col).alias("id_a"),
+    left = chunks.select(F.col("doc_id").alias("id_a"),
                          F.col("simhash").alias("sig_a"), "chunk", "val")
-    right = chunks.select(F.col(id_col).alias("id_b"),
+    right = chunks.select(F.col("doc_id").alias("id_b"),
                           F.col("simhash").alias("sig_b"), "chunk", "val")
     return (
         left.join(right, ["chunk", "val"])
@@ -440,20 +407,17 @@ def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 6,
     )
 
 
-def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact duplicate groups by content digest: one row per distinct
     text with the canonical (minimum) id and the copy count."""
     return (
-        docs.groupBy(F.md5(F.col(text_col)).alias("text_md5"))
-        .agg(F.min(id_col).alias("canonical_id"),
+        docs.groupBy(F.md5(F.col("text")).alias("text_md5"))
+        .agg(F.min("doc_id").alias("canonical_id"),
              F.count(F.lit(1)).alias("n_copies"))
     )
 
 
-def dedup_survivors(docs: DataFrame, threshold: float = 0.8,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def dedup_survivors(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Near-dedup REMOVAL: the corpus with every non-canonical cluster
     member dropped (MinHash/LSH pairs → connected components → keep
     the per-cluster minimum id and all singletons).
@@ -471,15 +435,14 @@ def dedup_survivors(docs: DataFrame, threshold: float = 0.8,
     """
     from . import graph as G
 
-    pairs = minhash_dedup_pairs(docs, threshold=threshold,
-                                id_col=id_col, text_col=text_col) \
+    pairs = minhash_dedup_pairs(docs, threshold=threshold) \
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # The LSH pairs are distinct id_a < id_b with no self-loops by
     # construction, so CC's normalize+distinct shuffle is a no-op here.
     labels = G.connected_components(pairs, assume_canonical=True)
     removed = labels.where(F.col("component") != F.col("node")) \
-        .select(F.col("node").alias(id_col))
-    return docs.join(removed, id_col, "left_anti")
+        .select(F.col("node").alias("doc_id"))
+    return docs.join(removed, "doc_id", "left_anti")
 
 
 # --- URL / metadata dedup ----------------------------------------------------
@@ -547,8 +510,7 @@ def canonical_url(col: F.Column) -> F.Column:
                     F.regexp_replace(c, URL_HOST_RE, ""))
 
 
-def canonical_url_groups(docs: DataFrame, id_col: str = "doc_id",
-                         url_col: str = "source") -> DataFrame:
+def canonical_url_groups(docs: DataFrame) -> DataFrame:
     """URL-level duplicate groups: one row per canonical URL with the
     canonical (minimum) id, member count, and distinct raw-variant
     count.
@@ -558,10 +520,10 @@ def canonical_url_groups(docs: DataFrame, id_col: str = "doc_id",
     shuffle moves canonicalized URL strings, never document bodies.
     """
     return (
-        docs.groupBy(canonical_url(F.col(url_col)).alias("canonical_url"))
-        .agg(F.min(id_col).alias("canonical_id"),
+        docs.groupBy(canonical_url(F.col("source")).alias("canonical_url"))
+        .agg(F.min("doc_id").alias("canonical_id"),
              F.count(F.lit(1)).alias("n_docs"),
-             F.count_distinct(F.col(url_col)).alias("n_variants"))
+             F.count_distinct(F.col("source")).alias("n_variants"))
     )
 
 
@@ -579,15 +541,13 @@ SPAN_N = 8  # window length in tokens (scale-down of Lee et al.'s 50
 # for the synthetic ~54-token documents; a real corpus run raises it)
 
 
-def span_window_fingerprints(docs: DataFrame, n: int = SPAN_N,
-                             id_col: str = "doc_id",
-                             text_col: str = "text") -> DataFrame:
+def span_window_fingerprints(docs: DataFrame, n: int) -> DataFrame:
     """One row per length-``n`` token window: (doc_id, i, fp) with
     ``i`` the 1-based token position and ``fp`` the 60-bit hash of
     the window text. The single corpus-scale intermediate of the
     span-dedup family: token-count-sized, produced by one narrow
     scan (tokenize once, expand in-row) — no shuffle below it."""
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(F.col("text"))
     win = F.transform(
         F.sequence(F.lit(1), F.size("_toks") - (n - 1)),
         lambda i: F.struct(
@@ -595,7 +555,7 @@ def span_window_fingerprints(docs: DataFrame, n: int = SPAN_N,
             hash60(F.concat_ws(" ", F.slice("_toks", i, n))).alias("fp")),
     )
     return (
-        docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
+        docs.select("doc_id", toks.alias("_toks"))
         .where(F.size("_toks") >= n)
         .select("doc_id", F.explode(win).alias("w"))
         .select("doc_id", F.col("w.i").cast("long").alias("i"), "w.fp")
@@ -634,9 +594,7 @@ def _merge_islands(flagged: DataFrame, n: int) -> DataFrame:
     )
 
 
-def repeated_spans(docs: DataFrame, n: int = SPAN_N,
-                   id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+def repeated_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     """Maximal cross-document repeated regions: every merged run of
     token windows whose fingerprint occurs in >= 2 distinct docs, as
     (doc_id, span_start, span_len, lead_fp).
@@ -662,8 +620,7 @@ def repeated_spans(docs: DataFrame, n: int = SPAN_N,
     tier, GC-scoped blocks, no shuffle), so one materialization pass
     beats two hash passes. Same flip in :func:`span_deduped_corpus`.
     """
-    fpw = span_window_fingerprints(docs, n, id_col, text_col) \
-        .localCheckpoint(eager=True)
+    fpw = span_window_fingerprints(docs, n).localCheckpoint(eager=True)
     rep = (fpw.groupBy("fp")
            .agg(F.count_distinct("doc_id").alias("n_docs"))
            .where(F.col("n_docs") >= 2)
@@ -671,9 +628,7 @@ def repeated_spans(docs: DataFrame, n: int = SPAN_N,
     return _merge_islands(fpw.join(rep, "fp"), n)
 
 
-def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     """Keep-first span removal (the Lee et al. removal step), at
     window granularity: a token is dropped iff it is covered by some
     repeated window whose keeper is ANOTHER doc (the window's
@@ -700,8 +655,7 @@ def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N,
     """
     # Eager localCheckpoint shared by the owner aggregate and the
     # flagging join — the r19 A/B flip documented in repeated_spans.
-    fpw = span_window_fingerprints(docs, n, id_col, text_col) \
-        .localCheckpoint(eager=True)
+    fpw = span_window_fingerprints(docs, n).localCheckpoint(eager=True)
     owner = (fpw.groupBy("fp")
              .agg(F.count_distinct("doc_id").alias("n_docs"),
                   F.min("doc_id").alias("min_doc"))
@@ -731,7 +685,7 @@ def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N,
                .groupBy("doc_id")
                .agg(F.collect_list(
                         F.struct("span_start", "span_len")).alias("_regs")))
-    toks = tokenize(F.col(text_col))
+    toks = tokenize(F.col("text"))
     covered = lambda i1: F.exists(  # noqa: E731 — named for readability
         "_regs",
         lambda r: (i1 >= r["span_start"])
@@ -746,7 +700,7 @@ def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N,
     # is actually small (the normal case — pinned at test sf) and
     # degrades to a co-partitioned join only when it truly is not.
     return (
-        docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
+        docs.select("doc_id", toks.alias("_toks"))
         .join(regions, "doc_id", "left")
         .select(
             "doc_id",

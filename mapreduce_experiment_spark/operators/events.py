@@ -19,14 +19,14 @@ from ..functions import cents
 SESSION_GAP_MIN = 30
 
 
-def sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MIN) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Assign a per-user session index: a new session starts when the
-    gap since the previous event exceeds ``gap_minutes``."""
+    gap since the previous event exceeds ``SESSION_GAP_MIN``."""
     w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     us = F.unix_micros(F.col("ts"))
     gap_us = us - F.lag(us).over(w)
     new_sess = F.when(
-        gap_us.isNull() | (gap_us > gap_minutes * 60 * 1_000_000), F.lit(1)
+        gap_us.isNull() | (gap_us > SESSION_GAP_MIN * 60 * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
     return (
         events.withColumn("_new", new_sess)
@@ -40,10 +40,9 @@ def sessionize(events: DataFrame, gap_minutes: int = SESSION_GAP_MIN) -> DataFra
     )
 
 
-def session_stats(events: DataFrame,
-                  gap_minutes: int = SESSION_GAP_MIN) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """One row per (user, session): bounds, size, value total."""
-    s = sessionize(events, gap_minutes)
+    s = sessionize(events)
     us = F.unix_micros(F.col("ts"))
     return s.groupBy("user_id", "session_id").agg(
         F.count(F.lit(1)).alias("n_events"),

@@ -108,7 +108,7 @@ def edge_multiplicity(edges: DataFrame) -> DataFrame:
 
 
 # --- §2 row 4-5: adjacency lists (parity demo only) ------------------------
-def adjacency(edges: DataFrame, as_string: bool = False) -> DataFrame:
+def adjacency(edges: DataFrame) -> DataFrame:
     """Sorted adjacency list per node (T100:42 + in-task sort T100:68-74).
 
     The reference materializes this with groupByKey (full value
@@ -116,23 +116,12 @@ def adjacency(edges: DataFrame, as_string: bool = False) -> DataFrame:
     (T100:45). Here it is a hash aggregate; it exists for parity and
     debugging — the triangle path never builds it (collect_list does
     not scale on heavy-tailed graphs; SURVEY §7 hard part b).
-
-    ``as_string=True`` renders the list as a comma-joined string for
-    cross-engine comparisons.
     """
-    adj = (
+    return (
         symmetrize(edges)
         .groupBy(F.col("src").alias("node"))
         .agg(F.array_sort(F.collect_list("dst")).alias("neighbors"))
     )
-    if as_string:
-        adj = adj.select(
-            "node",
-            F.concat_ws(
-                ",", F.transform("neighbors", lambda x: x.cast("string"))
-            ).alias("neighbors"),
-        )
-    return adj
 
 
 def degrees_from_canonical(ce: DataFrame) -> DataFrame:
@@ -183,9 +172,7 @@ def closure_partitions(spark: SparkSession) -> int:
     return 2 * spark.sparkContext.defaultParallelism
 
 
-def _edge_common_closers(edges: DataFrame,
-                         assume_canonical: bool = False,
-                         _input_materialized: bool = False) -> DataFrame:
+def _edge_common_closers(ce: DataFrame) -> DataFrame:
     """Each oriented edge with the ARRAY of out-neighbors common to its
     two endpoints: (w, x, common) where w→x is a degree-oriented edge
     and ``common`` = N+(w) ∩ N+(x). In the orientation DAG every
@@ -193,7 +180,10 @@ def _edge_common_closers(edges: DataFrame,
     triangle: w→x, w→y, plus the closing x→y), so each triangle
     appears exactly once — as y ∈ common on its (w, x) edge. Shared by
     the enumeration (explodes ``common``), the count (sums sizes — no
-    explode), and faithful mode via the simple path.
+    explode), and faithful mode via the simple path. ``ce`` is the
+    canonical ``(u, v)`` edge set, already checkpointed by the caller:
+    it feeds both the degrees and the orientation, so the upstream
+    scan and dedup run once.
 
     NOTE: oriented edges whose head ``x`` has no out-neighbors in the
     orientation are OMITTED (the inner join on x drops them) — their
@@ -206,17 +196,7 @@ def _edge_common_closers(edges: DataFrame,
     exist, and the only payload crossing an exchange is the adjacency
     arrays (Σ|N+| = m elements). Orientation bounds every array by
     O(√m), so per-row memory is small and a hot ``x`` join key carries
-    small arrays.
-
-    ``_input_materialized=True`` means the caller already checkpointed
-    the edge set, so ``canonical_edges`` here is a rename of it and is
-    not materialized again (faithful mode)."""
-    # The canonical edge set feeds both the degrees and the
-    # orientation: materialize it once so the upstream scan and dedup
-    # run once.
-    ce = canonical_edges(edges, assume_canonical)
-    if not _input_materialized:
-        ce = ce.localCheckpoint(eager=True)
+    small arrays."""
     # The out-adjacency arrays are the closure's only other
     # materialized table: they feed both sides of the join below, and
     # e1 is derived from them by an in-row explode. The groupBy reuses
@@ -255,17 +235,21 @@ def _out_adjacency(o: DataFrame) -> DataFrame:
     return o.groupBy("lo").agg(F.collect_list("hi").alias("nbrs"))
 
 
-def _simple_triangle_corners(edges: DataFrame,
-                             assume_canonical: bool = False,
-                             _input_materialized: bool = False) -> DataFrame:
-    """Each triangle exactly once as (w, x, y): w the triangle's
-    low-(degree,id) source corner, x its oriented out-neighbor on this
-    edge, y the closing common out-neighbor — NOT yet sorted into
-    canonical (a,b,c) order (x < y is NOT guaranteed; both consumers
-    sort or count). Shared by the enumeration (which canonicalizes)
-    and faithful mode."""
-    ec = _edge_common_closers(edges, assume_canonical, _input_materialized)
-    return ec.select("w", "x", F.explode("common").alias("y"))
+def _simple_triangle_corners(ce: DataFrame) -> DataFrame:
+    """Each triangle of the checkpointed canonical edge set ``ce``
+    exactly once, as canonical ``(a, b, c)``, ``a < b < c``: the
+    (w, x, y) corners of :func:`_edge_common_closers` (w the source
+    corner, x its out-neighbor on this edge, y the closing common
+    out-neighbor; x < y is not guaranteed) sorted. Shared by the
+    simple enumeration and faithful mode."""
+    tri = _edge_common_closers(ce).select(
+        "w", "x", F.explode("common").alias("y"))
+    abc = F.array_sort(F.array("w", "x", "y"))
+    return tri.select(
+        abc.getItem(0).alias("a"),
+        abc.getItem(1).alias("b"),
+        abc.getItem(2).alias("c"),
+    )
 
 
 def _oriented(ce: DataFrame) -> DataFrame:
@@ -295,8 +279,7 @@ def _oriented(ce: DataFrame) -> DataFrame:
 
 
 def triangles(edges: DataFrame, mode: str = "simple",
-              assume_canonical: bool = False,
-              _input_materialized: bool = False) -> DataFrame:
+              assume_canonical: bool = False) -> DataFrame:
     """Enumerate triangles as canonical ``(a, b, c)``, ``a <= b <= c``.
 
     ``simple``: per-edge adjacency intersection on the degree-oriented
@@ -314,14 +297,9 @@ def triangles(edges: DataFrame, mode: str = "simple",
     survey's golden counts).
     """
     if mode == "simple":
-        tri = _simple_triangle_corners(edges, assume_canonical,
-                                       _input_materialized)
-        abc = F.array_sort(F.array("w", "x", "y"))
-        return tri.select(
-            abc.getItem(0).alias("a"),
-            abc.getItem(1).alias("b"),
-            abc.getItem(2).alias("c"),
-        )
+        return _simple_triangle_corners(
+            canonical_edges(edges, assume_canonical)
+            .localCheckpoint(eager=True))
     if mode == "faithful":
         # The reference's condition factors EXACTLY into three
         # disjoint classes by the output triple's node-multiset
@@ -351,8 +329,8 @@ def triangles(edges: DataFrame, mode: str = "simple",
         #
         # The input is scanned once: one checkpointed distinct of the
         # unordered pairs, self-loops kept, splits into S (u != v) and
-        # L (u == v). Both are already distinct, and the simple path
-        # is told S is materialized so it does not checkpoint a copy.
+        # L (u == v). Both are already distinct, and S goes to the
+        # simple path as is, without a checkpoint of its own.
         # least/greatest skip nulls, so a row with one null endpoint
         # is dropped first rather than read as a self-loop.
         pairs = (
@@ -365,10 +343,7 @@ def triangles(edges: DataFrame, mode: str = "simple",
         ce = pairs.where(F.col("u") != F.col("v"))
         loops = pairs.where(F.col("u") == F.col("v")).select(
             F.col("u").alias("l"))
-        simple_tris = triangles(
-            ce.select(F.col("u").alias("src"), F.col("v").alias("dst")),
-            mode="simple", assume_canonical=True,
-            _input_materialized=True)
+        simple_tris = _simple_triangle_corners(ce)
         # u < v in ce, so each class-B triple is emitted pre-sorted.
         bl = ce.join(loops, F.col("u") == F.col("l")).select(
             F.col("u").alias("a"), F.col("u").alias("b"),
@@ -393,7 +368,9 @@ def triangle_count(edges: DataFrame, mode: str = "simple",
     an edgeless input count 0 (a sum over zero rows is NULL).
     """
     if mode == "simple":
-        return _edge_common_closers(edges, assume_canonical).agg(
+        ce = canonical_edges(edges, assume_canonical) \
+            .localCheckpoint(eager=True)
+        return _edge_common_closers(ce).agg(
             F.coalesce(F.sum(F.size("common")), F.lit(0))
             .cast("long").alias("n_triangles"))
     return triangles(edges, mode=mode).agg(
@@ -507,7 +484,11 @@ def _min_labels(u, v):
             parent = jumped
 
 
-def connected_components(edges: DataFrame, max_iter: int = 50,
+# Round budget of connected_components' distributed loop.
+CC_MAX_ITER = 50
+
+
+def connected_components(edges: DataFrame,
                          assume_canonical: bool = False) -> DataFrame:
     """Connected components: (node, component) with component = min
     node id in the component.
@@ -526,7 +507,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
       lineage each round so plans don't grow unboundedly — the
       standard Spark idiom for iterative graph algorithms (GraphX
       does the same internally). Rounds needed = graph diameter ≤
-      ``max_iter``; past that it warns and returns the labels so far.
+      ``CC_MAX_ITER``; past that it warns and returns the labels so far.
     """
     ce = canonical_edges(edges, assume_canonical).persist()
     ce.count()
@@ -550,7 +531,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
         .localCheckpoint(eager=False)
     )
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr_min = (
             sym.join(labels, sym.b == labels.node)
             .groupBy(F.col("a").alias("node"))
@@ -588,7 +569,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     if not converged:
         import warnings
         warnings.warn(
-            f"connected_components: max_iter={max_iter} reached before "
+            f"connected_components: {CC_MAX_ITER} rounds reached before "
             "fixpoint — labels may be unconverged (graph diameter "
             "exceeds the iteration budget)", RuntimeWarning)
     return labels

@@ -39,9 +39,8 @@ N_SHUFFLE_BUCKETS = 1024
 
 
 def corpus_shuffle(docs: DataFrame, seed: str = "shuffle-v1",
-                   id_col: str = "doc_id",
                    n_buckets: int = N_SHUFFLE_BUCKETS) -> DataFrame:
-    """Deterministic seeded shuffle order: (id, shuffle_pos) with
+    """Deterministic seeded shuffle order: (doc_id, shuffle_pos) with
     ``shuffle_pos`` in 1..N, the rank of ``hash60(seed || id)`` (id
     tie-break for the negligible collision case). Same seed → same
     order on any cluster, any partitioning, any engine — the DuckDB
@@ -53,12 +52,12 @@ def corpus_shuffle(docs: DataFrame, seed: str = "shuffle-v1",
         # legitimately non-positive.
         raise ValueError("n_buckets must be positive")
     width = _HASH60_SPACE // n_buckets
-    h = hash60(F.concat(F.lit(seed + ":"), F.col(id_col).cast("string")))
+    h = hash60(F.concat(F.lit(seed + ":"), F.col("doc_id").cast("string")))
     # Integer `div`, not float division: hashes exceed 2^53, where a
     # double quotient can round across a bucket boundary and break
     # the bucketing's monotonicity in h (global order would be wrong
     # exactly at boundaries). div is exact int64 and monotone.
-    hashed = docs.select(F.col(id_col), h.alias("_h")).withColumn(
+    hashed = docs.select(F.col("doc_id"), h.alias("_h")).withColumn(
         "_b", F.expr(f"_h div {width}"))
     counts = hashed.groupBy("_b").agg(F.count(F.lit(1)).alias("_n"))
     # Offsets over the B-row bucket-count table: the ONLY unpartitioned
@@ -71,9 +70,9 @@ def corpus_shuffle(docs: DataFrame, seed: str = "shuffle-v1",
         )).alias("_off"),
     ).select("_b", F.coalesce("_off", F.lit(0)).alias("_off"))
     within = F.row_number().over(
-        Window.partitionBy("_b").orderBy("_h", id_col))
+        Window.partitionBy("_b").orderBy("_h", "doc_id"))
     return (
         hashed.join(F.broadcast(offsets), "_b")
-        .select(id_col,
+        .select("doc_id",
                 (F.col("_off") + within).alias("shuffle_pos"))
     )

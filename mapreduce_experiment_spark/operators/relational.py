@@ -21,9 +21,8 @@ from pyspark.sql import functions as F
 
 
 def top_k_per_group(df: DataFrame, partition_by: Sequence[str],
-                    order_by: Sequence[Column], k: int,
-                    rank_col: str = "rn") -> DataFrame:
-    """Top-k rows per group via a ranking window.
+                    order_by: Sequence[Column], k: int) -> DataFrame:
+    """Top-k rows per group via a ranking window, ranked in ``rn``.
 
     ``order_by`` must include a unique tie-breaker for deterministic
     output. One shuffle on the partition keys; AQE handles skewed
@@ -33,8 +32,8 @@ def top_k_per_group(df: DataFrame, partition_by: Sequence[str],
     """
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     return (
-        df.withColumn(rank_col, F.row_number().over(w).cast("long"))
-        .where(F.col(rank_col) <= k)
+        df.withColumn("rn", F.row_number().over(w).cast("long"))
+        .where(F.col("rn") <= k)
     )
 
 
@@ -125,13 +124,14 @@ def range_join(facts: DataFrame, value_col: str, intervals: DataFrame,
 
 
 def stratified_sample(df: DataFrame, key_col: str, strata_col: str,
-                      pct_by_stratum: dict, default_pct: int = 0) -> DataFrame:
+                      pct_by_stratum: dict) -> DataFrame:
     """Deterministic hash-based stratified sampling (data mixing).
 
     Keep a row iff ``hash60(key) % 100 < pct`` for its stratum's
-    percentage. No RNG state anywhere: the keep/drop decision is a
-    pure function of the KEY, so (a) reruns and retries keep exactly
-    the same rows (restart-safe at 100 TB), (b) every table sampled
+    percentage (0 for strata not listed). No RNG state anywhere: the
+    keep/drop decision is a pure function of the KEY, so (a) reruns
+    and retries keep exactly the same rows (restart-safe at 100 TB),
+    (b) every table sampled
     with the same key joins consistently with other samples, and
     (c) the result is cross-engine value-checkable — Bernoulli
     samplers are none of these. Rates compose: re-sampling the output
@@ -139,7 +139,7 @@ def stratified_sample(df: DataFrame, key_col: str, strata_col: str,
     """
     from ..functions.textfns import hash60
 
-    pct = F.lit(int(default_pct))
+    pct = F.lit(0)
     for stratum, p in sorted(pct_by_stratum.items()):
         pct = F.when(F.col(strata_col) == stratum, F.lit(int(p))) \
                .otherwise(pct)
@@ -148,11 +148,11 @@ def stratified_sample(df: DataFrame, key_col: str, strata_col: str,
 
 
 def mixture_sample(df: DataFrame, weights: DataFrame, key_col: str,
-                   strata_col: str, ppm_col: str = "keep_ppm") -> DataFrame:
-    """Weighted data mixing driven by a WEIGHTS TABLE (source →
-    parts-per-million keep rate) instead of a CASE chain — the shape a
-    real corpus-mixing config takes when there are hundreds of
-    sources: the config is data, not code.
+                   strata_col: str) -> DataFrame:
+    """Weighted data mixing driven by a WEIGHTS TABLE (``strata_col`` →
+    ``keep_ppm``, the parts-per-million keep rate) instead of a CASE
+    chain — the shape a real corpus-mixing config takes when there
+    are hundreds of sources: the config is data, not code.
 
     The weights side broadcasts (config-sized); the keep decision is
     ``hash60(stratum || ':' || key) % 1_000_000 < keep_ppm`` — the
@@ -169,6 +169,6 @@ def mixture_sample(df: DataFrame, weights: DataFrame, key_col: str,
                                 F.col(key_col).cast("string"))) % 1_000_000
     return (
         df.join(F.broadcast(weights), strata_col)
-        .where(bucket < F.col(ppm_col))
-        .drop(ppm_col)
+        .where(bucket < F.col("keep_ppm"))
+        .drop("keep_ppm")
     )

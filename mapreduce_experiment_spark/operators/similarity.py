@@ -40,29 +40,28 @@ EMBED_DIM = 64  # testdata embeddings.parquet vector width
 
 
 @_functools.lru_cache(maxsize=8)
-def _srp_planes_cached(n_planes: int, dim: int) -> tuple[tuple[float, ...], ...]:
+def _srp_planes_cached(n_planes: int) -> tuple[tuple[float, ...], ...]:
     import hashlib
 
     return tuple(
         tuple(1.0 if hashlib.md5(
             f"srp-{p}-{i}".encode()).digest()[0] % 2 == 0
-            else -1.0 for i in range(dim))
+            else -1.0 for i in range(EMBED_DIM))
         for p in range(n_planes)
     )
 
 
-def srp_planes(n_planes: int = SRP_BANDS * SRP_ROWS,
-               dim: int = EMBED_DIM) -> list[list[float]]:
+def srp_planes(n_planes: int = SRP_BANDS * SRP_ROWS) -> list[list[float]]:
     """Deterministic Rademacher (±1) hyperplanes for sign-random-
     projection hashing. Components come from md5 of the (plane, index)
     pair — no RNG state, so the SAME planes are embeddable as literals
     in both the Spark plan and the DuckDB oracle SQL.
 
-    The md5 work (thousands of digests) is memoized per (n_planes,
-    dim) — this is called on every index write, probe-time config
+    The md5 work (thousands of digests) is memoized per n_planes —
+    this is called on every index write, probe-time config
     validation, and oracle build. The cache holds immutable tuples;
     the fresh outer lists returned here keep callers free to mutate."""
-    return [list(p) for p in _srp_planes_cached(n_planes, dim)]
+    return [list(p) for p in _srp_planes_cached(n_planes)]
 
 
 def srp_signatures(embeddings: DataFrame, bands: int = SRP_BANDS,
@@ -167,8 +166,7 @@ def _cos(va: F.Column, vb: F.Column, na: F.Column, nb: F.Column) -> F.Column:
 
     A zero-norm embedding has no direction: unguarded, Spark 4's
     ANSI-on default hard-fails the whole query with DIVIDE_BY_ZERO on
-    a single degenerate row, and the BLAS mirror's silent NaN ranked
-    FIRST under cos DESC (r13 review — both verified live). -1.0 is
+    a single degenerate row. -1.0 is
     the cosine floor, so degenerate vectors rank last in every kNN
     path and can never clear a near-dup threshold; a genuine
     antiparallel pair also scores -1, which is indistinguishable here
@@ -221,60 +219,6 @@ def knn_bruteforce(embeddings: DataFrame, n_queries: int = 10,
                 _cos(F.col("qv"), F.col("nv"), F.col("qn"), F.col("nn"))
                 .alias("cos"))
     )
-    return _topk(scored, k)
-
-
-def knn_bruteforce_blas(embeddings: DataFrame, n_queries: int = 10,
-                        k: int = 5) -> DataFrame:
-    """Brute-force top-k via Arrow + numpy matmul (`mapInPandas`).
-
-    Same contract and scores as :func:`knn_bruteforce`, different
-    execution: the tiny query matrix rides into each Arrow batch as a
-    closure; each corpus batch computes all query·corpus products as
-    ONE BLAS matmul. For wide embeddings (≥~256 dims) this beats the
-    JVM expression fold by an order of magnitude; per-query top-k
-    still happens in Spark so only |corpus_partition|×|queries| score
-    rows shuffle — and those could be pre-topped per partition if the
-    row count ever dominated.
-
-    Scores are quantized to 6dp like the JVM path; numpy's pairwise
-    summation can differ from the sequential fold in the last ulp,
-    which the quantization absorbs (verified against the same oracle).
-    """
-    import numpy as np
-    import pandas as pd
-
-    v = _prep(embeddings)
-    qrows = (v.where(F.col("vec_id") < n_queries)
-             .select("vec_id", "vec", "norm").collect())
-    q_ids = np.array([r.vec_id for r in qrows])
-    q_mat = np.array([r.vec for r in qrows], dtype=np.float64)
-    q_norm = np.array([r.norm for r in qrows], dtype=np.float64)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue  # empty Arrow batch: (0,) mat breaks the matmul
-            ids = pdf["vec_id"].to_numpy()
-            mat = np.array(list(pdf["vec"]), dtype=np.float64)
-            norm = pdf["norm"].to_numpy(dtype=np.float64)
-            # Mirror _cos's zero-norm floor: numpy 0/0 is a silent NaN
-            # that ranks FIRST under cos DESC (r13 review); divide by
-            # a substituted 1.0 so the masked lanes never raise.
-            den = q_norm[:, None] * norm[None, :]
-            cos = np.where(den == 0.0, -1.0,
-                           (q_mat @ mat.T) / np.where(den == 0.0, 1.0, den))
-            cos = np.floor(cos * 1_000_000 + 0.5) / 1_000_000.0
-            nq, nc = cos.shape
-            yield pd.DataFrame({
-                "query_id": np.repeat(q_ids, nc),
-                "neighbor_id": np.tile(ids, nq),
-                "cos": cos.ravel(),
-            })
-
-    corpus = v.where(F.col("vec_id") >= n_queries)
-    scored = corpus.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos double")
     return _topk(scored, k)
 
 
@@ -470,12 +414,12 @@ def kmeans_centroid_dists(embeddings: DataFrame, cent_ids, cents,
     return q.mapInPandas(gen, schema="query_id long, centroid_id long, dist long")
 
 
-def knn_ivf_trained(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-                    n_centroids: int = KMEANS_K, n_iter: int = KMEANS_ITER,
-                    nprobe: int = N_PROBE) -> DataFrame:
+def knn_ivf_trained(embeddings: DataFrame, n_queries: int = 10,
+                    k: int = 5) -> DataFrame:
     """IVF kNN over TRAINED centroids: Lloyd training, nearest-trained-
     centroid buckets, integer-L2 probe ranking, exact-cosine scoring
-    of the probed buckets (same output contract as :func:`knn_ivf`).
+    of the N_PROBE probed buckets (same output contract as
+    :func:`knn_ivf`).
 
     Assignment/probe use exact integer L2 (k-means' native metric);
     final scoring stays q6-quantized cosine so the contract matches
@@ -488,13 +432,13 @@ def knn_ivf_trained(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     :func:`knn_bruteforce` is gated at ≥0.8 (observed 0.90) by
     ``tests/test_pipeline_ops.py::test_ivf_recall_vs_bruteforce``.
     """
-    cent_ids, cents = kmeans_train(embeddings, n_centroids, n_iter)
+    cent_ids, cents = kmeans_train(embeddings)
 
     wp = Window.partitionBy("query_id").orderBy("dist", "centroid_id")
     probes = (
         kmeans_centroid_dists(embeddings, cent_ids, cents, n_queries)
         .withColumn("prn", F.row_number().over(wp))
-        .where(F.col("prn") <= nprobe)
+        .where(F.col("prn") <= N_PROBE)
         .select("query_id", "centroid_id")
     )
     buckets = kmeans_assignments_df(embeddings, cent_ids, cents).where(
@@ -601,10 +545,8 @@ def _ivf_probes(v: DataFrame, n_queries: int, n_centroids: int,
 
 def _topk(cands: DataFrame, k: int) -> DataFrame:
     """Per-query top-k by (cos desc, neighbor_id) — the shared final
-    ranking of every kNN path (since r13 actually called by every
-    path: brute-force, BLAS, trained, and the two IVF paths inlined
-    copies before, which a future tie-break change would have
-    silently skipped — r13 review)."""
+    ranking of every kNN path (brute-force, trained and both IVF
+    paths), so a tie-break change reaches all of them."""
     wk = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -664,40 +606,37 @@ def knn_ivf(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
 
 
 def _write_ivf_index(batch: DataFrame, centroids_src: DataFrame, path: str,
-                     mode: str, n_queries: int, n_centroids: int) -> None:
+                     mode: str, n_queries: int) -> None:
     """Assign ``batch``'s corpus rows to the seed centroids of
     ``centroids_src`` and write them, each with its precomputed norm,
     ``partitionBy(centroid_id)`` at ``path`` in ``mode``. Rows with ids
-    below ``n_queries`` / ``n_centroids`` are query vectors / centroid
+    below ``n_queries`` / ``N_CENTROIDS`` are query vectors / centroid
     seeds, never corpus, so they are filtered out: otherwise a probe
     would return a query as its own rank-1 neighbor. Scoring and
     tie-break are :func:`ivf_assignments`' own
     (:func:`_assign_to_centroids`)."""
     bv = _prep(batch).where(
-        F.col("vec_id") >= max(n_queries, n_centroids))
+        F.col("vec_id") >= max(n_queries, N_CENTROIDS))
     assign = _assign_to_centroids(
-        bv, _seed_centroids(_prep(centroids_src), n_centroids))
+        bv, _seed_centroids(_prep(centroids_src), N_CENTROIDS))
     (assign.join(bv, "vec_id")
      .select("vec_id", "vec", "norm", "centroid_id")
      .write.mode(mode).partitionBy("centroid_id").parquet(path))
 
 
 def write_ivf_index(embeddings: DataFrame, path: str,
-                    n_queries: int = 10,
-                    n_centroids: int = N_CENTROIDS) -> None:
+                    n_queries: int = 10) -> None:
     """Materialize the IVF index :func:`knn_ivf` describes: the
     bucketed corpus written ``partitionBy("centroid_id")``. This is the
     persistence step that turns the probe's equi-join into a
     partition-PRUNED scan — at 100 TB the index is written once and
-    every query batch reads only ``nprobe`` of ``n_centroids``
+    every query batch reads only ``nprobe`` of ``N_CENTROIDS``
     directories."""
-    _write_ivf_index(embeddings, embeddings, path, "overwrite",
-                     n_queries, n_centroids)
+    _write_ivf_index(embeddings, embeddings, path, "overwrite", n_queries)
 
 
 def append_ivf_index(batch: DataFrame, centroids_src: DataFrame, path: str,
-                     *, n_queries: int = 10,
-                     n_centroids: int = N_CENTROIDS) -> None:
+                     *, n_queries: int = 10) -> None:
     """Append a new vector batch into the persisted IVF index — the
     write half of the daily-ingest cycle (the SRP analogue is
     :func:`append_srp_index`). The batch is assigned against the SAME
@@ -706,8 +645,7 @@ def append_ivf_index(batch: DataFrame, centroids_src: DataFrame, path: str,
     partitions it touches, so probes keep pruning by directory. Value
     parity of the appended index with a full rebuild over corpus+batch
     is pinned by ``test_ivf_index_append_cycle``."""
-    _write_ivf_index(batch, centroids_src, path, "append",
-                     n_queries, n_centroids)
+    _write_ivf_index(batch, centroids_src, path, "append", n_queries)
 
 
 def compact_ivf_index(spark, path: str, new_path: str) -> None:
@@ -728,7 +666,7 @@ def compact_ivf_index(spark, path: str, new_path: str) -> None:
     place would yank files out from under a concurrent probe's
     already-planned partition-pruned scan. Unlike the SRP table there
     are no catalog properties to carry — the IVF contract (seed
-    centroids = ids below ``n_centroids``) is positional in the data
+    centroids = ids below ``N_CENTROIDS``) is positional in the data
     itself and survives the rewrite byte-for-byte (row multiset
     parity and probe value parity pinned by
     ``test_ivf_index_compaction``)."""
@@ -741,8 +679,7 @@ def compact_ivf_index(spark, path: str, new_path: str) -> None:
 SRP_INDEX_BUCKETS = 16
 
 
-def srp_config_props(bands: int, rows: int,
-                     dim: int = EMBED_DIM) -> dict[str, str]:
+def srp_config_props(bands: int, rows: int) -> dict[str, str]:
     """The banding configuration an SRP index is bound to, as table
     properties: bands/rows/dim plus an md5 fingerprint of the actual
     plane matrix (the planes are md5-derived from indices, so the
@@ -752,15 +689,15 @@ def srp_config_props(bands: int, rows: int,
     matrix, its repr, and the fingerprint are memoized — this runs on
     every index write AND every probe-time validation."""
     return {"srp.bands": str(bands), "srp.rows": str(rows),
-            "srp.dim": str(dim),
-            "srp.planes_md5": _srp_planes_md5(bands * rows, dim)}
+            "srp.dim": str(EMBED_DIM),
+            "srp.planes_md5": _srp_planes_md5(bands * rows)}
 
 
 @_functools.lru_cache(maxsize=8)
-def _srp_planes_md5(n_planes: int, dim: int) -> str:
+def _srp_planes_md5(n_planes: int) -> str:
     import hashlib
 
-    return hashlib.md5(repr(srp_planes(n_planes, dim)).encode()).hexdigest()
+    return hashlib.md5(repr(srp_planes(n_planes)).encode()).hexdigest()
 
 
 def _tblproperties(spark, table: str) -> dict[str, str]:
@@ -770,14 +707,14 @@ def _tblproperties(spark, table: str) -> dict[str, str]:
             for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
 
 
-def validate_srp_index_config(spark, table: str, bands: int, rows: int,
-                              dim: int = EMBED_DIM) -> None:
+def validate_srp_index_config(spark, table: str, bands: int,
+                              rows: int) -> None:
     """Raise ValueError unless ``table`` was written with exactly this
     banding configuration: a mismatched probe equi-join silently
     misses true pairs — band values pack ``rows`` sign bits, so there
     is no schema-level error to save you."""
     got = _tblproperties(spark, table)
-    want = srp_config_props(bands, rows, dim)
+    want = srp_config_props(bands, rows)
     bad = {k: (got.get(k), v) for k, v in want.items() if got.get(k) != v}
     if bad:
         raise ValueError(
@@ -992,7 +929,6 @@ def embedding_near_dups_probe_index(spark, batch: DataFrame,
 
 def knn_ivf_pruned(spark, embeddings: DataFrame, path: str,
                    n_queries: int = 10, k: int = 5,
-                   n_centroids: int = N_CENTROIDS,
                    nprobe: int = N_PROBE) -> DataFrame:
     """:func:`knn_ivf` served from the persisted index at ``path``
     (written by :func:`write_ivf_index`): value-identical output, but
@@ -1007,7 +943,7 @@ def knn_ivf_pruned(spark, embeddings: DataFrame, path: str,
     """
     v = _prep(embeddings)
     queries = _ivf_queries(v, n_queries)
-    probes = _ivf_probes(v, n_queries, n_centroids, nprobe)
+    probes = _ivf_probes(v, n_queries, N_CENTROIDS, nprobe)
     # Static pruning only makes sense for a bounded probe set: the
     # IN-list is driver state AND a per-task filter. A misconfigured
     # huge query batch must fail loudly here, not build a

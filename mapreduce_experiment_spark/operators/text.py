@@ -38,6 +38,9 @@ LANGS = tuple(STOPWORDS)  # fixed order = deterministic tie-break
 # now agree. Pinned by test_token_and_quality_survive_dirty_text.
 BPE_ISH = "[a-z0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]"
 
+# Word n-gram length of fingerprints and decontamination.
+GRAM_N = 5
+
 
 def _hits(tokens: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(*words))).cast("long")
@@ -48,14 +51,14 @@ def lang_scores(text: Column) -> dict[str, Column]:
     return {lang: _hits(toks, words) for lang, words in STOPWORDS.items()}
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Predict language by stopword hits; ties resolve in LANGS order,
     zero hits → 'und' (undetermined). NULL text folds into the
     empty-string case (zero hits everywhere → 'und') — unguarded, the
     hit counts were NULL and the when-chain fell through to a NULL
     pred_lang bucket (r13 text review, deferred to r14); the same
     convention quality_features uses."""
-    scores = lang_scores(F.coalesce(F.col(text_col), F.lit("")))
+    scores = lang_scores(F.coalesce(F.col("text"), F.lit("")))
     best = F.greatest(*[scores[lg] for lg in LANGS])
     pred = F.when(best == 0, F.lit("und"))
     for lg in LANGS:
@@ -64,7 +67,7 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", *cols, pred.alias("pred_lang"))
 
 
-def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Quality-scoring features + a bounded composite score.
 
     All ratios come from integer counts quantized with floor(+0.5), so
@@ -76,7 +79,7 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # through quality_filter's null-comparison when-chain as 'kept').
     # As '' it takes the ordinary path: one phantom token, zero
     # ratios, score 0.0, reason 'too_short'.
-    text = F.coalesce(F.col(text_col), F.lit(""))
+    text = F.coalesce(F.col("text"), F.lit(""))
     toks = tokenize(text)
     n_chars = F.length(text).cast("long")
     n_alpha = F.length(F.regexp_replace(F.lower(text), "[^a-z]", "")).cast("long")
@@ -108,8 +111,7 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def quality_filter(docs: DataFrame, min_tokens: int = 10,
                    min_alpha: float = 0.70, min_stop: float = 0.02,
-                   min_score: float = 0.55,
-                   text_col: str = "text") -> DataFrame:
+                   min_score: float = 0.55) -> DataFrame:
     """Keep/drop verdict per doc with a FIRST-FAILING-RULE reason —
     the audit trail a production filter chain emits so drop rates are
     attributable per rule (C4/Gopher-rules family).
@@ -119,7 +121,7 @@ def quality_filter(docs: DataFrame, min_tokens: int = 10,
     deterministic; the rule ORDER is part of the contract (a doc
     failing several rules reports the first).
     """
-    f = quality_features(docs, text_col)
+    f = quality_features(docs)
     reason = (
         F.when(F.col("n_tokens") < min_tokens, F.lit("too_short"))
         .when(F.col("alpha_ratio") < min_alpha, F.lit("low_alpha"))
@@ -133,10 +135,10 @@ def quality_filter(docs: DataFrame, min_tokens: int = 10,
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(docs: DataFrame) -> DataFrame:
     """Whitespace tokens vs BPE-ish regex segments (alnum runs +
     individual punctuation)."""
-    text = F.col(text_col)
+    text = F.col("text")
     return docs.select(
         "doc_id",
         F.size(tokenize(text)).cast("long").alias("n_words"),
@@ -150,8 +152,7 @@ PACK_SHARDS = 8
 
 
 def pack_sequences(docs: DataFrame, capacity: int = PACK_CAPACITY,
-                   n_shards: int = PACK_SHARDS, id_col: str = "doc_id",
-                   text_col: str = "text") -> DataFrame:
+                   n_shards: int = PACK_SHARDS) -> DataFrame:
     """Pack documents into fixed token-budget training sequences —
     the assembly step between a cleaned corpus and a trainer's
     dataloader.
@@ -178,15 +179,14 @@ def pack_sequences(docs: DataFrame, capacity: int = PACK_CAPACITY,
     if int(capacity) < 1:
         raise ValueError("capacity must be >= 1 (token budget per "
                          "sequence; DIV 0 is an ANSI hard-fail)")
-    return _pack_starts(docs, n_shards, id_col, text_col).select(
-        id_col, "n_tokens", "shard",
+    return _pack_starts(docs, n_shards).select(
+        "doc_id", "n_tokens", "shard",
         F.expr(f"_start DIV {int(capacity)}").alias("seq_id"),
         (F.col("_start") % capacity).alias("seq_offset"),
     )
 
 
-def _pack_starts(docs: DataFrame, n_shards: int, id_col: str,
-                 text_col: str) -> DataFrame:
+def _pack_starts(docs: DataFrame, n_shards: int) -> DataFrame:
     """Shared packing core: per-doc running token ``_start`` within its
     hash shard (see :func:`pack_sequences` for the ordering contract)."""
     from pyspark.sql import Window
@@ -197,7 +197,7 @@ def _pack_starts(docs: DataFrame, n_shards: int, id_col: str,
     # nonsensical partitioning (r14 second-pass review).
     if int(n_shards) < 1:
         raise ValueError("n_shards must be >= 1")
-    h = hash60(F.col(id_col).cast("string"))
+    h = hash60(F.col("doc_id").cast("string"))
     # NULL text folds into the empty-string case (one phantom ''
     # token), the repo-wide convention: unguarded, pack_sequences
     # emitted a NULL-n_tokens row (and poisoned every later _start in
@@ -205,22 +205,20 @@ def _pack_starts(docs: DataFrame, n_shards: int, id_col: str,
     # two views disagreed on corpus membership (r13 text review,
     # deferred to r14).
     t = docs.select(
-        F.col(id_col),
-        F.size(tokenize(F.coalesce(F.col(text_col), F.lit(""))))
+        F.col("doc_id"),
+        F.size(tokenize(F.coalesce(F.col("text"), F.lit(""))))
          .cast("long").alias("n_tokens"),
         h.alias("_h"),
         (h % n_shards).alias("shard"),
     )
-    w = (Window.partitionBy("shard").orderBy("_h", id_col)
+    w = (Window.partitionBy("shard").orderBy("_h", "doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     start = F.sum("n_tokens").over(w) - F.col("n_tokens")
-    return t.select(id_col, "n_tokens", "shard", start.alias("_start"))
+    return t.select("doc_id", "n_tokens", "shard", start.alias("_start"))
 
 
 def pack_sequence_fragments(docs: DataFrame, capacity: int = PACK_CAPACITY,
-                            n_shards: int = PACK_SHARDS,
-                            id_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
+                            n_shards: int = PACK_SHARDS) -> DataFrame:
     """Boundary-splitting sequence packing: the trainer-facing variant
     of :func:`pack_sequences`.
 
@@ -247,10 +245,9 @@ def pack_sequence_fragments(docs: DataFrame, capacity: int = PACK_CAPACITY,
     if c < 1:
         raise ValueError("capacity must be >= 1 (token budget per "
                          "sequence; DIV 0 is an ANSI hard-fail)")
-    t = _pack_starts(docs, n_shards, id_col, text_col).where(
-        F.col("n_tokens") > 0)
+    t = _pack_starts(docs, n_shards).where(F.col("n_tokens") > 0)
     f = t.select(
-        id_col, "shard", "_start", "n_tokens",
+        "doc_id", "shard", "_start", "n_tokens",
         F.explode(F.sequence(
             F.expr(f"_start DIV {c}"),
             F.expr(f"(_start + n_tokens - 1) DIV {c}"),
@@ -260,18 +257,16 @@ def pack_sequence_fragments(docs: DataFrame, capacity: int = PACK_CAPACITY,
     frag_to = F.least(F.col("_start") + F.col("n_tokens"),
                       (F.col("seq_id") + 1) * c)
     return f.select(
-        id_col, "shard", "seq_id",
+        "doc_id", "shard", "seq_id",
         (frag_from - F.col("seq_id") * c).alias("frag_offset"),
         (frag_to - frag_from).alias("frag_len"),
     )
 
 
 def contamination_pairs(docs: DataFrame, eval_mod: int = 50,
-                        min_shared: int = 3, n: int = 5,
-                        id_col: str = "doc_id",
-                        text_col: str = "text") -> DataFrame:
+                        min_shared: int = 3) -> DataFrame:
     """Benchmark decontamination: (train doc, eval doc) pairs sharing
-    ≥ ``min_shared`` distinct word ``n``-grams — the overlap check a
+    ≥ ``min_shared`` distinct word ``GRAM_N``-grams — the overlap check a
     training corpus runs against every eval benchmark before training.
 
     Here the "benchmark" is the deterministic slice ``id % eval_mod
@@ -295,15 +290,15 @@ def contamination_pairs(docs: DataFrame, eval_mod: int = 50,
     # expression references it three times (guard size, sequence
     # size, slice) and Generate inlines its generator — without the
     # projection the regex tokenizer runs thrice per corpus row.
-    t = docs.select(F.col(id_col), tok(F.col(text_col)).alias("_toks"))
+    t = docs.select(F.col("doc_id"), tok(F.col("text")).alias("_toks"))
     h = t.select(
-        F.col(id_col),
-        F.explode(F.transform(shingles(F.col("_toks"), n), hash60))
+        F.col("doc_id"),
+        F.explode(F.transform(shingles(F.col("_toks"), GRAM_N), hash60))
          .alias("g"))
-    ev = h.where(F.col(id_col) % eval_mod == 0).select(
-        F.col(id_col).alias("eval_doc_id"), "g")
-    tr = h.where(F.col(id_col) % eval_mod != 0).select(
-        F.col(id_col).alias("train_doc_id"), "g")
+    ev = h.where(F.col("doc_id") % eval_mod == 0).select(
+        F.col("doc_id").alias("eval_doc_id"), "g")
+    tr = h.where(F.col("doc_id") % eval_mod != 0).select(
+        F.col("doc_id").alias("train_doc_id"), "g")
     return (
         tr.join(F.broadcast(ev), "g")
         .groupBy("train_doc_id", "eval_doc_id")
@@ -314,19 +309,15 @@ def contamination_pairs(docs: DataFrame, eval_mod: int = 50,
 
 def contamination_pairs_external(train_docs: DataFrame,
                                  eval_docs: DataFrame,
-                                 min_shared: int = 3, n: int = 5,
-                                 train_id_col: str = "doc_id",
-                                 train_text_col: str = "text",
-                                 eval_id_col: str = "eval_id",
-                                 eval_text_col: str = "prompt") -> DataFrame:
+                                 min_shared: int = 3) -> DataFrame:
     """Decontamination against a genuinely EXTERNAL eval corpus.
 
     :func:`contamination_pairs` carves its "benchmark" out of the
     corpus itself (``id % eval_mod``); this is the deployment shape —
-    the eval side is a separate table with its own schema (here a
-    string ``eval_id`` + ``prompt``, deliberately different column
-    names/types from the train side, so train/eval schema drift is
-    exercised, not assumed away).
+    the eval side is a separate table with its own schema (a string
+    ``eval_id`` + ``prompt``, deliberately different column names and
+    types from the train side's ``doc_id`` + ``text``, so train/eval
+    schema drift is exercised, not assumed away).
 
     Same scale shape: the benchmark-sized eval shingle table
     BROADCASTS; the 100 TB train side explodes its shingles map-side
@@ -341,11 +332,11 @@ def contamination_pairs_external(train_docs: DataFrame,
         t = df.select(F.col(idc).alias(alias), tok(F.col(txt)).alias("_toks"))
         return t.select(
             alias,
-            F.explode(F.transform(shingles(F.col("_toks"), n), hash60))
+            F.explode(F.transform(shingles(F.col("_toks"), GRAM_N), hash60))
              .alias("g"))
 
-    tr = _grams(train_docs, train_id_col, "train_doc_id", train_text_col)
-    ev = _grams(eval_docs, eval_id_col, "eval_id", eval_text_col)
+    tr = _grams(train_docs, "doc_id", "train_doc_id", "text")
+    ev = _grams(eval_docs, "eval_id", "eval_id", "prompt")
     return (
         tr.join(F.broadcast(ev), "g")
         .groupBy("train_doc_id", "eval_id")
@@ -355,8 +346,7 @@ def contamination_pairs_external(train_docs: DataFrame,
 
 
 def tfidf_pairs(docs: DataFrame, threshold: float = 0.5,
-                max_df: int = 100, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+                max_df: int = 100) -> DataFrame:
     """Document-pair cosine similarity over TF-IDF weights.
 
     Inverted-index formulation: pairs are generated per TERM (join on
@@ -370,8 +360,8 @@ def tfidf_pairs(docs: DataFrame, threshold: float = 0.5,
     identical across engines, and outputs are 6dp-quantized.
     """
     toks = docs.select(
-        id_col, F.explode(tokenize(F.col(text_col))).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+        "doc_id", F.explode(tokenize(F.col("text"))).alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # N rides in the plan as a broadcast 1-row aggregate (a scalar
     # subquery shape) — no driver action anywhere in the operator.
@@ -380,17 +370,17 @@ def tfidf_pairs(docs: DataFrame, threshold: float = 0.5,
         tf.join(df_, "term")
         .where(F.col("df") <= max_df)
         .crossJoin(F.broadcast(n_docs))
-        .select(id_col, "term",
+        .select("doc_id", "term",
                 (F.col("tf") * F.log(F.col("_n") / F.col("df")))
                 .alias("w"))
     )
-    norm = w.groupBy(id_col).agg(F.sqrt(F.sum(F.col("w") * F.col("w")))
+    norm = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w")))
                                  .alias("norm"))
-    wa = (w.join(norm, id_col)
-          .select(F.col(id_col).alias("id_a"), "term",
+    wa = (w.join(norm, "doc_id")
+          .select(F.col("doc_id").alias("id_a"), "term",
                   F.col("w").alias("wa"), F.col("norm").alias("na")))
-    wb = (w.join(norm, id_col)
-          .select(F.col(id_col).alias("id_b"), "term",
+    wb = (w.join(norm, "doc_id")
+          .select(F.col("doc_id").alias("id_b"), "term",
                   F.col("w").alias("wb"), F.col("norm").alias("nb")))
     dots = (
         wa.join(wb, "term")
@@ -412,8 +402,7 @@ def tfidf_pairs(docs: DataFrame, threshold: float = 0.5,
     )
 
 
-def repetition_scores(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def repetition_scores(docs: DataFrame) -> DataFrame:
     """Intra-document repetition metrics (Gopher-rules family): the
     quality signal that catches boilerplate/SEO spam which LENGTH and
     stopword ratios miss.
@@ -429,32 +418,32 @@ def repetition_scores(docs: DataFrame, id_col: str = "doc_id",
     bounded by doc content not corpus size. Integer counts →
     cross-engine exact; ratios quantized like the other text ops.
     """
-    toks = docs.select(id_col, F.explode(tokenize(F.col(text_col)))
+    toks = docs.select("doc_id", F.explode(tokenize(F.col("text")))
                        .alias("tok"))
     tok_counts_ = (
-        toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col)
+        toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("doc_id")
         .agg(F.sum("c").alias("n_tokens"),
              F.count(F.lit(1)).alias("distinct_tokens"),
              F.max("c").alias("top_token_n"))
     )
-    t = docs.select(id_col, tokenize(F.col(text_col)).alias("toks"))
+    t = docs.select("doc_id", tokenize(F.col("text")).alias("toks"))
     grams = t.select(
-        id_col,
+        "doc_id",
         F.explode(word_ngrams(F.col("toks"), 2)).alias("gram"),
     )
     gram_counts = (
-        grams.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col)
+        grams.groupBy("doc_id", "gram").agg(F.count(F.lit(1)).alias("c"))
+        .groupBy("doc_id")
         .agg(F.sum("c").alias("n_bigrams"),
              F.count(F.lit(1)).alias("distinct_bigrams"),
              F.max("c").alias("top_bigram_n"))
     )
     q6 = lambda c: F.floor(c * 1_000_000 + 0.5) / 1_000_000.0  # noqa: E731
-    out = tok_counts_.join(gram_counts, id_col, "left")
+    out = tok_counts_.join(gram_counts, "doc_id", "left")
     zed = [F.coalesce(F.col(c), F.lit(0)).alias(c)
            for c in ("n_bigrams", "distinct_bigrams", "top_bigram_n")]
-    out = out.select(id_col, "n_tokens", "distinct_tokens", "top_token_n",
+    out = out.select("doc_id", "n_tokens", "distinct_tokens", "top_token_n",
                      *zed)
     return out.select(
         "*",
@@ -466,10 +455,9 @@ def repetition_scores(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text",
-                 n: int = 5) -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Single-value rolling-hash fingerprint: min 60-bit hash over
-    word n-grams (n=5). Equal fingerprints ⇒ near-identical prefixes
+    word ``GRAM_N``-grams. Equal fingerprints ⇒ near-identical prefixes
     of content; used for cheap shard-level dedup sweeps.
 
     r18 optimization round: computed via the exploded codegen path
@@ -498,7 +486,7 @@ def fingerprints(docs: DataFrame, text_col: str = "text",
     fingerprint row per input row (r18 ADVICE)."""
     from .dedup import exploded_shingle_hashes
 
-    return (exploded_shingle_hashes(docs, "doc_id", text_col, n)
+    return (exploded_shingle_hashes(docs, GRAM_N)
             .groupBy("doc_id")
             .agg(F.min("h").alias("fingerprint")))
 
@@ -508,8 +496,7 @@ CHUNK_OVERLAP = 50
 
 
 def chunk_documents(docs: DataFrame, chunk_chars: int = CHUNK_CHARS,
-                    overlap: int = CHUNK_OVERLAP, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+                    overlap: int = CHUNK_OVERLAP) -> DataFrame:
     """Sliding-window document chunking — the ingest step that turns a
     corpus into retrieval/embedding-sized pieces (RAG prep, context-
     window packing, chunk-level dedup all start here).
@@ -545,21 +532,19 @@ def chunk_documents(docs: DataFrame, chunk_chars: int = CHUNK_CHARS,
         raise ValueError("overlap must be < chunk_chars")
     stride = int(chunk_chars) - int(overlap)
     c = int(chunk_chars)
-    # The DIV expression references a FIXED internal alias, never the
-    # caller's text_col name (r13 text review: raw interpolation into
-    # F.expr broke on any column name needing quoting).
-    length = F.length(F.col(text_col))
+    # Integer DIV is written in SQL over the projected length.
+    length = F.length(F.col("text"))
     last_i = F.when(length <= c, F.lit(0)).otherwise(
         F.expr(f"(`__chunk_len` - {c} + {stride} - 1) DIV {stride}"))
     t = docs.select(
-        F.col(id_col), F.col(text_col), length.alias("__chunk_len"),
+        F.col("doc_id"), F.col("text"), length.alias("__chunk_len"),
     ).select(
-        F.col(id_col), F.col(text_col),
+        F.col("doc_id"), F.col("text"),
         F.explode(F.sequence(F.lit(0), last_i)).alias("chunk_id"))
     start = (F.col("chunk_id") * stride + 1).cast("long")
-    chunk = F.substring(F.col(text_col), start, c)
+    chunk = F.substring(F.col("text"), start, c)
     return t.select(
-        id_col,
+        "doc_id",
         F.col("chunk_id").cast("long").alias("chunk_id"),
         start.alias("chunk_start"),
         F.length(chunk).cast("long").alias("chunk_len"),
@@ -567,10 +552,10 @@ def chunk_documents(docs: DataFrame, chunk_chars: int = CHUNK_CHARS,
     )
 
 
-def ngram_counts(docs: DataFrame, n: int = 3, top_n: int = 200,
-                 text_col: str = "text") -> DataFrame:
+def ngram_counts(docs: DataFrame, n: int = 3) -> DataFrame:
     """Corpus-level word n-gram OCCURRENCE counts (LM-counts flavor):
-    the top ``top_n`` n-grams by frequency, ties broken by gram text.
+    the top ``NGRAM_TOP_N`` n-grams by frequency, ties broken by gram
+    text.
 
     Unlike the dedup shingle path this does NOT de-duplicate grams
     within a doc — language-model count tables need occurrences.
@@ -588,7 +573,7 @@ def ngram_counts(docs: DataFrame, n: int = 3, top_n: int = 200,
     non-cheap multi-referenced aliases separate; measured ~1.6× on
     the corpus scan).
     """
-    t = docs.select(tokenize(F.col(text_col)).alias("toks"))
+    t = docs.select(tokenize(F.col("text")).alias("toks"))
     grams = word_ngrams(F.col("toks"), n)
     counts = (
         t.select(F.explode(grams).alias("gram"))
@@ -597,10 +582,12 @@ def ngram_counts(docs: DataFrame, n: int = 3, top_n: int = 200,
     )
     return (
         counts.orderBy(F.col("n").desc(), F.col("gram"))
-        .limit(int(top_n))
+        .limit(NGRAM_TOP_N)
         .select("gram", "n")
     )
 
+
+NGRAM_TOP_N = 200
 
 # BM25 constants; repr() of these exact doubles is embedded in the
 # oracle SQL so both engines evaluate the same IEEE values.
@@ -610,10 +597,7 @@ BM25_TOP_K = 10
 
 
 def bm25_topk(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
-              b: float = BM25_B, top_k: int = BM25_TOP_K,
-              id_col: str = "doc_id", text_col: str = "text",
-              query_id_col: str = "query_id",
-              query_text_col: str = "qtext") -> DataFrame:
+              b: float = BM25_B, top_k: int = BM25_TOP_K) -> DataFrame:
     """BM25 retrieval: top-``top_k`` documents per query (Robertson/
     Sparck Jones probabilistic ranking — the lexical-retrieval
     baseline every RAG/data-curation stack ships).
@@ -637,7 +621,8 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
     table broadcasts twice (vocabulary semi-join, score fan-out); the
     corpus side reduces to (doc, matched-term) rows map-side; the
     final top-k is a per-query TakeOrdered window over only matched
-    docs. The 100 TB side never shuffles text.
+    docs. The 100 TB side never shuffles text. ``queries`` holds
+    (query_id, qtext).
     """
     # Parameter domain guards (r14 second-pass review — the
     # chunk_documents guard class): b > 1 makes the length-norm term
@@ -660,8 +645,8 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
     # rows out of the explode → vocab join even when a degenerate
     # query slips through.
     qterms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(F.array_distinct(tokenize(F.col(query_text_col))))
+        "query_id",
+        F.explode(F.array_distinct(tokenize(F.col("qtext"))))
          .alias("term")).where(F.length("term") > 0)
     vocab = qterms.select("term").distinct()
     # One tokenized base projection; dl (doc token length) rides
@@ -670,8 +655,7 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
     # would shuffle the whole corpus's doc list. (The token array is
     # materialized below the explode for single tokenizer evaluation,
     # same as the other n-gram operators.)
-    t = docs.select(F.col(id_col).alias("doc_id"),
-                    tokenize(F.col(text_col)).alias("_toks"))
+    t = docs.select("doc_id", tokenize(F.col("text")).alias("_toks"))
     base = t.select(
         "doc_id",
         F.size("_toks").cast("long").alias("dl"),

@@ -34,7 +34,7 @@ from ..operators import dedup as D
 from ..sources.tables import load_table
 from .registry import register
 
-_HS = shingle_hashes_sql("text")
+_HS = shingle_hashes_sql("text", D.SHINGLE_N)
 
 _SH_CTE = f"""
 WITH sh AS (
@@ -144,9 +144,12 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  threshold=0.5)
 
 
-def _dedup_clusters_oracle(depth: int = 8) -> str:
+_CLUSTER_DEPTH = 8
+
+
+def _dedup_clusters_oracle() -> str:
     """Pairs (exact all-pairs Jaccard ≥ 0.8) → connected components
-    (min-label propagation unrolled to ``depth``, MATERIALIZED like
+    (min-label propagation unrolled to ``_CLUSTER_DEPTH``, MATERIALIZED like
     the graph CC oracle) → one row per document with its cluster label
     and canonical flag. Depth 8 covers any near-dup chain the test
     data produces (dup clusters are near-cliques; verified converged
@@ -167,7 +170,7 @@ def _dedup_clusters_oracle(depth: int = 8) -> str:
   SELECT DISTINCT a AS node, a AS component FROM sym
 )""",
     ]
-    for i in range(1, depth + 1):
+    for i in range(1, _CLUSTER_DEPTH + 1):
         ctes.append(f"""l{i} AS MATERIALIZED (
   SELECT n.node,
          least(n.component, coalesce(m.mn, n.component)) AS component
@@ -183,7 +186,7 @@ SELECT d.doc_id,
          AS cluster_size,
        CAST(coalesce(l.component, d.doc_id) = d.doc_id AS BIGINT)
          AS is_canonical
-FROM documents d LEFT JOIN l{depth} l ON d.doc_id = l.node
+FROM documents d LEFT JOIN l{_CLUSTER_DEPTH} l ON d.doc_id = l.node
 """)
 
 
@@ -227,9 +230,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_sql(hs: str = "hs") -> str:
+def _simhash_sql() -> str:
     terms = [
-        f"(CASE WHEN list_sum(list_transform({hs},"
+        "(CASE WHEN list_sum(list_transform(hs,"
         f" h -> ((h >> {j}) & 1) * 2 - 1)) >= 0"
         f" THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
         for j in range(D.SIMHASH_BITS)

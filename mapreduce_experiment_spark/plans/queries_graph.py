@@ -163,8 +163,12 @@ def q_streaming_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.range(1).select(F.lit(n).cast("long").alias("n_triangles"))
 
 
-def _cc_oracle(depth: int = 8) -> str:
-    """Min-label propagation unrolled to a fixed depth (≥ the derived
+_CC_DEPTH = 8
+_PAGERANK_ITER = 10
+
+
+def _cc_oracle() -> str:
+    """Min-label propagation unrolled to ``_CC_DEPTH`` (≥ the derived
     graph's diameter, verified ≤4 at sf0.001/sf0.01 — margin 2×).
 
     Every CTE is MATERIALIZED: each l{i} references l{i-1} twice, so
@@ -183,7 +187,7 @@ def _cc_oracle(depth: int = 8) -> str:
     SELECT src AS node FROM edges UNION SELECT dst FROM edges)
 )""",
     ]
-    for i in range(1, depth + 1):
+    for i in range(1, _CC_DEPTH + 1):
         ctes.append(f"""l{i} AS MATERIALIZED (
   SELECT n.node,
          least(n.component, coalesce(m.mn, n.component)) AS component
@@ -193,7 +197,7 @@ def _cc_oracle(depth: int = 8) -> str:
   ) m ON n.node = m.node
 )""")
     return ("WITH " + ",\n".join(ctes)
-            + f"\nSELECT component, count(*) AS n_nodes FROM l{depth}"
+            + f"\nSELECT component, count(*) AS n_nodes FROM l{_CC_DEPTH}"
               " GROUP BY component")
 
 
@@ -208,8 +212,8 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cc.groupBy("component").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
-def _pagerank_oracle(n_iter: int = 10) -> str:
-    """Integer fixed-point PageRank unrolled to n_iter CTE rounds —
+def _pagerank_oracle() -> str:
+    """Integer fixed-point PageRank unrolled to _PAGERANK_ITER CTE rounds —
     the identical arithmetic as operators/graph.py::pagerank, so
     rank_micro matches exactly (int64 compare, no float tolerance)."""
     scale = G.PAGERANK_SCALE
@@ -226,7 +230,7 @@ def _pagerank_oracle(n_iter: int = 10) -> str:
   SELECT node, (SELECT {scale} // n FROM nn) AS rank_micro FROM nodes
 )""",
     ]
-    for i in range(1, n_iter + 1):
+    for i in range(1, _PAGERANK_ITER + 1):
         ctes.append(f"""r{i} AS (
   SELECT nd.node,
          (SELECT (15 * ({scale} // n)) // 100 FROM nn)
@@ -240,7 +244,7 @@ def _pagerank_oracle(n_iter: int = 10) -> str:
   ) s ON nd.node = s.node
 )""")
     return ("WITH " + ",\n".join(ctes)
-            + f"\nSELECT node, rank_micro FROM r{n_iter}")
+            + f"\nSELECT node, rank_micro FROM r{_PAGERANK_ITER}")
 
 
 @register("pagerank", oracle=_pagerank_oracle())
@@ -248,7 +252,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-iteration integer fixed-point PageRank (see operator
     docstring) — iterative-join capability with an EXACT int64
     value oracle, no float tolerance anywhere."""
-    return G.pagerank(derive_edges(spark, sf_dir), n_iter=10,
+    return G.pagerank(derive_edges(spark, sf_dir), n_iter=_PAGERANK_ITER,
                       assume_canonical=True)
 
 

@@ -330,7 +330,7 @@ def q_knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumnRenamed("cos", "cos_sim")
 
 
-def _kmeans_cte(k: int = S.KMEANS_K, t: int = S.KMEANS_ITER) -> str:
+def _kmeans_cte() -> str:
     """Unrolled Lloyd training as SQL — the bit-exact mirror of
     operators.similarity.kmeans_train: same int64 micro-unit
     quantization, same integer squared-L2 argmin with (dist,
@@ -338,6 +338,7 @@ def _kmeans_cte(k: int = S.KMEANS_K, t: int = S.KMEANS_ITER) -> str:
     Every CTE is MATERIALIZED: c{i}/a{i}/e are referenced by multiple
     later levels, and DuckDB's inliner re-derives non-materialized
     chains exponentially."""
+    k, t = S.KMEANS_K, S.KMEANS_ITER
     parts = [f"""
 e AS MATERIALIZED (
   SELECT vec_id,

@@ -582,8 +582,7 @@ def q_trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus trigram OCCURRENCE counts, top-200 (see operator
     docstring): the LM-counts table — wordcount one level up, with
     map-side partial aggregation and a TakeOrdered top-N."""
-    return TX.ngram_counts(load_table(spark, sf_dir, "documents"),
-                           n=3, top_n=200)
+    return TX.ngram_counts(load_table(spark, sf_dir, "documents"), n=3)
 
 
 # Literal retrieval benchmark for bm25_topk: query terms drawn from

@@ -142,30 +142,20 @@ def SPECS() -> dict[str, QuerySpec]:
     return dict(_REGISTRY)
 
 
-_loaded = False
-
-_PLAN_MODULES = ("queries_graph", "queries_relational", "queries_dedup",
-                 "queries_similarity", "queries_text", "queries_events",
-                 "queries_multimodal", "queries_asof", "queries_profiling",
-                 "queries_analytics", "queries_sketches", "queries_ordering")
-
-
 def _load_all() -> None:
-    """Import every module that registers queries (idempotent).
-
-    Only a missing plans module itself is tolerated (incremental
-    rounds); an ImportError raised from INSIDE a module (typo'd
-    import, renamed operator) propagates — silently dropping a whole
-    query set from the driver contract is worse than failing loudly.
-    """
-    global _loaded
-    if _loaded:
-        return
-    for mod in _PLAN_MODULES:
-        fq = f"{__package__}.{mod}"
-        try:
-            __import__(fq, fromlist=[mod])
-        except ModuleNotFoundError as e:
-            if e.name != fq:
-                raise
-    _loaded = True
+    """Import every module that registers queries, in registration
+    order (idempotent: a module registers once, on first import)."""
+    from . import (  # noqa: F401
+        queries_graph,
+        queries_relational,
+        queries_dedup,
+        queries_similarity,
+        queries_text,
+        queries_events,
+        queries_multimodal,
+        queries_asof,
+        queries_profiling,
+        queries_analytics,
+        queries_sketches,
+        queries_ordering,
+    )

@@ -55,11 +55,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str,
                    names: tuple[str, ...] = TABLE_NAMES) -> None:
     """Register the test tables as temp views for the SQL API."""

@@ -61,6 +61,10 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..operators.events import SESSION_GAP_MIN
 from .pipeline import drain_to_parquet, read_event_stream
 
+GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
+# Lateness budget of the evicting sessionizer's event-time watermark.
+WATERMARK_DELAY = "1 hour"
+
 _OUT_SCHEMA = (
     "user_id long, session_id long, n_events long, "
     "session_start timestamp, session_end timestamp, total_value double"
@@ -288,16 +292,14 @@ def _sessionize_group(
     yield _emit(out)
 
 
-def stateful_session_stats(spark: SparkSession, sf_dir: str,
-                           gap_minutes: int = SESSION_GAP_MIN) -> DataFrame:
+def stateful_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stateful sessionizer over the event stream and drain it
     (availableNow) into a static DataFrame."""
-    gap_us = gap_minutes * 60 * 1_000_000
     events = read_event_stream(spark, sf_dir).select(
         "user_id", "event_id", "ts", "value")
 
     def fn(key, pdfs, state):
-        return _sessionize_group(key, pdfs, state, gap_us)
+        return _sessionize_group(key, pdfs, state, GAP_US)
 
     result = events.groupBy("user_id").applyInPandasWithState(
         fn, _OUT_SCHEMA, _STATE_SCHEMA, "append",
@@ -434,10 +436,8 @@ def _sessionize_group_evicting(
     yield _emit(out)
 
 
-def stateful_session_stats_evicting(
-        spark: SparkSession, sf_dir: str,
-        gap_minutes: int = SESSION_GAP_MIN,
-        delay: str = "1 hour") -> DataFrame:
+def stateful_session_stats_evicting(spark: SparkSession,
+                                    sf_dir: str) -> DataFrame:
     """Drain :func:`sessionize_stream_evicting` over the event stream
     (availableNow) into a static DataFrame — the registered-query
     entry point for the DEPLOYMENT-mode sessionizer, mirroring
@@ -456,13 +456,11 @@ def stateful_session_stats_evicting(
     exactly what makes the state evictable; see
     :func:`sessionize_stream_evicting`)."""
     events = read_event_stream(spark, sf_dir)
-    result = sessionize_stream_evicting(events, gap_minutes, delay=delay)
+    result = sessionize_stream_evicting(events)
     return drain_to_parquet(spark, result, "sessions_ev_")
 
 
-def sessionize_stream_evicting(events: DataFrame,
-                               gap_minutes: int = SESSION_GAP_MIN,
-                               delay: str = "1 hour") -> DataFrame:
+def sessionize_stream_evicting(events: DataFrame) -> DataFrame:
     """Deployment-mode sessionizer, stream in → stream out: identical
     per-session accumulators to :func:`stateful_session_stats`, but
     with state EVICTED instead of retained forever.
@@ -487,7 +485,8 @@ def sessionize_stream_evicting(events: DataFrame,
       scheme needs non-negative times to keep orphan ids (negative)
       disjoint from real ids.
     - Each update arms an EVENT-time timeout at (last event + gap):
-      once the watermark — ``max(ts) - delay`` across the stream —
+      once the watermark — ``max(ts) - WATERMARK_DELAY`` across the
+      stream —
       passes it, no on-time event can extend the open session, the
       group function fires with ``hasTimedOut`` and removes the
       state. Event-time, not ProcessingTimeTimeout, for the same
@@ -511,14 +510,12 @@ def sessionize_stream_evicting(events: DataFrame,
     value parity with the batch sessionizer (modulo the id scheme) by
     ``test_stateful_sessions_evicting_matches_batch``.
     """
-    gap_us = gap_minutes * 60 * 1_000_000
-
     def fn(key, pdfs, state):
-        return _sessionize_group_evicting(key, pdfs, state, gap_us)
+        return _sessionize_group_evicting(key, pdfs, state, GAP_US)
 
     return (
         events.select("user_id", "event_id", "ts", "value")
-        .withWatermark("ts", delay)
+        .withWatermark("ts", WATERMARK_DELAY)
         .groupBy("user_id")
         .applyInPandasWithState(
             fn, _OUT_SCHEMA, _EVICT_STATE_SCHEMA, "append",

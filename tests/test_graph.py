@@ -360,6 +360,21 @@ def test_connected_components_paths_agree(spark, broadcast_off, case):
     assert loop == want
 
 
+def test_connected_components_warns_when_rounds_run_out(spark, broadcast_off,
+                                                       monkeypatch):
+    """Past CC_MAX_ITER rounds the distributed loop warns and returns
+    the labels it has: one round moves each label one hop along a
+    40-node path, so every node but the first still holds its left
+    neighbor's id instead of the component's minimum."""
+    pairs = [(i, i + 1) for i in range(40)]
+    monkeypatch.setattr(G, "CC_MAX_ITER", 1)
+    with broadcast_off(), pytest.warns(RuntimeWarning, match="fixpoint"):
+        labels = _cc_rows(G.connected_components(
+            _edges(spark, pairs), assume_canonical=True))
+    assert labels == [(0, 0)] + [(i, i - 1) for i in range(1, 41)]
+    assert labels != _union_find_components(pairs)
+
+
 def test_connected_components_driver_path_makes_no_checkpoint(spark,
                                                               monkeypatch):
     """Below the broadcast threshold the only materialization is the

@@ -1,78 +1,9 @@
-"""Format round-trip tests: every supported sink/reader pair preserves
-values; readers without schemas are rejected for text formats."""
+"""Source-side contracts: the events.ts normalization across parquet
+generations, and where persisted artifacts live."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from mapreduce_experiment_spark.sources import io as EIO
-
-
-@pytest.fixture(scope="module")
-def sample(spark):
-    return spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", -2.25), (3, None, 0.0)],
-        "id long, name string, score double",
-    )
-
-
-SCHEMA = "id long, name string, score double"
-
-
-@pytest.mark.parametrize("fmt", EIO.FORMATS)
-def test_roundtrip(spark, sample, tmp_path, fmt):
-    path = str(tmp_path / fmt)
-    EIO.write(sample, path, fmt=fmt)
-    back = EIO.read(spark, path, fmt=fmt, schema=SCHEMA)
-    want = {(r.id, r.name, r.score) for r in sample.collect()}
-    got = {(r.id, r.name, r.score) for r in back.collect()}
-    assert got == want
-
-
-def test_partitioned_write_prunes(spark, sample, tmp_path):
-    path = str(tmp_path / "part")
-    EIO.write(sample, path, fmt="parquet", partition_by=["name"])
-    back = EIO.read(spark, path, fmt="parquet").where(F.col("name") == "a")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert back.count() == 1
-    assert "PartitionFilters" in plan  # partition pruning reached the scan
-
-
-def test_schemaless_csv_read_rejected(spark, tmp_path):
-    with pytest.raises(ValueError, match="explicit schema"):
-        EIO.read(spark, str(tmp_path), fmt="csv")
-
-
-def test_unknown_format_rejected(spark, sample, tmp_path):
-    with pytest.raises(ValueError, match="unsupported format"):
-        EIO.write(sample, str(tmp_path / "x"), fmt="avro")
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    """Two tables bucketed on the join key SMJ with zero shuffles —
-    the pay-once join strategy for repeatedly-joined fact tables."""
-    left = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
-    right = spark.range(0, 1000).withColumn("w", F.col("id") + 1)
-    EIO.write_bucketed(left, "bkt_left", ["id"], n_buckets=8)
-    EIO.write_bucketed(right, "bkt_right", ["id"], n_buckets=8)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt_left").join(spark.table("bkt_right"), "id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_left")
-        spark.sql("DROP TABLE IF EXISTS bkt_right")
-
-
-def test_delta_is_stubbed(sample, tmp_path):
-    with pytest.raises(NotImplementedError, match="[Dd]elta"):
-        EIO.write_delta(sample, str(tmp_path / "d"))
 
 
 def test_events_ts_normalized_across_parquet_generations(spark, tmp_path):

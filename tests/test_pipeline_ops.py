@@ -141,8 +141,8 @@ def test_short_docs_dropped_not_garbled(spark):
 
 
 def test_arrow_signatures_drop_empty_arrays_like_agg(spark):
-    """r13 review: a row whose shingle_hashes array is EMPTY (the
-    with_shingle_hashes contract for too-short docs) crashed the
+    """r13 review: a row whose shingle_hashes array is EMPTY (what
+    shingle_hashes yields for too-short docs) crashed the
     Arrow path ('zero-size array to reduction operation minimum' in
     the worker) while the JVM agg path simply never emits such rows —
     only the streaming caller survived, via its own pre-filter. The
@@ -158,16 +158,16 @@ def test_arrow_signatures_drop_empty_arrays_like_agg(spark):
 
 
 def test_arrow_signatures_honor_string_ids(spark):
-    """r13 review: the Arrow path's output schema hardcoded the id
-    column as `long`, so the id_col genericity the parameter (and the
-    bit-equal agg sibling) advertises broke on string ids."""
+    """The Arrow path's output schema takes doc_id's own type: a
+    hardcoded `long` broke string ids, which the bit-equal agg sibling
+    handles."""
     sh = spark.createDataFrame(
         [("u-1", [7, 8, 9]), ("u-2", [7, 8, 10, 11])],
-        "url string, shingle_hashes array<long>")
-    fast = {r.url: list(r.sig)
-            for r in D.minhash_signatures_from(sh, id_col="url").collect()}
-    ref = {r.url: list(r.sig)
-           for r in D.minhash_signatures_from_agg(sh, id_col="url").collect()}
+        "doc_id string, shingle_hashes array<long>")
+    fast = {r.doc_id: list(r.sig)
+            for r in D.minhash_signatures_from(sh).collect()}
+    ref = {r.doc_id: list(r.sig)
+           for r in D.minhash_signatures_from_agg(sh).collect()}
     assert fast == ref and set(fast) == {"u-1", "u-2"}
 
 
@@ -175,11 +175,13 @@ def test_exploded_shingles_accept_unigrams(spark):
     """r13 review: exploded_shingle_hashes(n=1) raised IndexError
     (leads[-1] over an empty list) while the HOF sibling accepted
     n=1; the two shingle paths must agree on the same parameter."""
+    from mapreduce_experiment_spark.functions.textfns import shingle_hashes
+
     docs = _docs(spark, [(1, "alpha beta alpha")])
     got = sorted(r.h for r in
                  D.exploded_shingle_hashes(docs, n=1).distinct().collect())
     want = sorted(r.h for r in
-                  docs.select(F.explode(D.shingle_hashes(
+                  docs.select(F.explode(shingle_hashes(
                       F.col("text"), 1)).alias("h")).collect())
     assert got == want and len(got) == 2  # {alpha, beta}
 
@@ -589,14 +591,10 @@ def test_srp_index_value_parity(spark, sf_smoke, tmp_path):
 
 
 def test_zero_norm_embedding_never_crashes_or_ranks(spark):
-    """r13 review, both verified live against this Spark before the
-    fix: (a) Spark 4's ANSI-on default hard-failed every cosine query
-    with DIVIDE_BY_ZERO on a single all-zeros embedding; (b) the BLAS
-    kNN's numpy 0/0 produced a silent NaN that ranked FIRST under cos
-    DESC, returning a garbage rank-1 neighbor. _cos (and the BLAS
-    mirror) now floor degenerate vectors at cos = -1.0: no crash,
-    ranked last, never above a near-dup threshold, and both kNN paths
-    stay value-identical."""
+    """Spark 4's ANSI-on default hard-failed every cosine query with
+    DIVIDE_BY_ZERO on a single all-zeros embedding. _cos now floors
+    degenerate vectors at cos = -1.0: no crash, ranked last, never
+    above a near-dup threshold."""
     from mapreduce_experiment_spark.operators import similarity as S
 
     rows = [
@@ -608,9 +606,6 @@ def test_zero_norm_embedding_never_crashes_or_ranks(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     jvm = S.knn_bruteforce(emb, n_queries=1, k=3).collect()
-    blas = S.knn_bruteforce_blas(emb, n_queries=1, k=3).collect()
-    key = lambda rs: sorted((r.neighbor_id, r.rank, r.cos) for r in rs)
-    assert key(jvm) == key(blas)                     # path parity holds
     by_rank = {r.rank: r for r in jvm}
     assert by_rank[3].neighbor_id == 12              # degenerate ranks LAST
     assert by_rank[3].cos == -1.0
@@ -1072,22 +1067,6 @@ def test_index_memo_distinguishes_same_named_dirs(spark, sf_smoke,
              if pref == "ivf_index_" and a == app}
     assert len(paths) >= 2
     shutil.rmtree(copy_dir, ignore_errors=True)
-
-
-def test_knn_bruteforce_blas_matches_jvm_path(spark, sf_smoke):
-    """The Arrow+numpy matmul top-k must stay value-identical to the
-    JVM expression path. This pin replaced the retired
-    knn_bruteforce_blas driver registration (r7): the two
-    registrations shared one oracle, so retiring the duplicate
-    (name, oracle) pair moved the parity statement here."""
-    from mapreduce_experiment_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
-    blas = {(r.query_id, r.neighbor_id, r.rank, r.cos)
-            for r in S.knn_bruteforce_blas(emb).collect()}
-    jvm = {(r.query_id, r.neighbor_id, r.rank, r.cos)
-           for r in S.knn_bruteforce(emb).collect()}
-    assert blas == jvm and len(blas) == 50
 
 
 def test_retired_signature_oracles_still_hold(spark, sf_smoke):
@@ -1612,8 +1591,7 @@ def test_chunk_documents_rejects_bad_params(spark):
     """r13 text review (landed r14): a negative overlap silently made
     stride > chunk_chars — consecutive windows with UNCOVERED gaps —
     and chunk_chars <= 0 a nonsensical substring width; both now
-    raise. The DIV expression also no longer interpolates the
-    caller's column name into raw SQL: a name needing quoting works."""
+    raise."""
     import pytest
 
     docs = _docs(spark, [(1, "x" * 500)])
@@ -1623,10 +1601,6 @@ def test_chunk_documents_rejects_bad_params(spark):
         TX.chunk_documents(docs, chunk_chars=0, overlap=0)
     with pytest.raises(ValueError, match="< chunk_chars"):
         TX.chunk_documents(docs, chunk_chars=50, overlap=50)
-    odd = spark.createDataFrame([(1, "y" * 450)],
-                                "doc_id long, `my text` string")
-    got = TX.chunk_documents(odd, text_col="my text").collect()
-    assert len(got) == 3 and {r.chunk_len for r in got} == {200, 150}
 
 
 def test_word_ngrams_helper_semantics(spark):

@@ -296,7 +296,6 @@ def test_no_driver_collect_outside_bounded_state_sites():
 
     allowed = {
         # (module-relative path, enclosing function)
-        ("operators/similarity.py", "knn_bruteforce_blas"),  # n_queries rows
         ("operators/similarity.py", "kmeans_train"),  # k seeds + k*d sums
         ("operators/similarity.py", "knn_ivf_pruned"),  # <=10k probe ids
         # SHOW TBLPROPERTIES output: a handful of catalog metadata

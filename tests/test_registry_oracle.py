@@ -13,7 +13,7 @@ _specs = SPECS()
 
 def test_registry_has_expected_size():
     """An ImportError inside a plans module raises, but a module
-    dropped from ``_PLAN_MODULES`` by accident would silently shrink
+    dropped from ``registry._load_all``'s imports would silently shrink
     the registry — pin the exact count."""
     assert len(_specs) == 100
 
