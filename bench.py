@@ -56,8 +56,9 @@ def measure(spark, build, more, reader: StatusReader | None = None) -> dict:
     asks for another run; the one measurement loop of bench.py and the
     profiling scripts.
 
-    Each run clears the cache (several operators persist intermediates
-    internally, so reuse would measure a warm cache) and drains the
+    Each run clears the cache (``connected_components`` persists its
+    edge table for the length of the call, so a failed run could leave
+    it behind and the next would measure a warm cache) and drains the
     status reader. The build phase is ``build()`` itself, eager
     checkpoints included; the execute phase is the observed noop write.
     Jobs are counted per phase. Returns the best run's ``wall_s``,

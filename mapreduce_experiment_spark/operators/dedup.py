@@ -29,6 +29,7 @@ from ..functions.textfns import (
     minhash_params,
     tokenize,
 )
+from ..session import materialize
 
 # MinHash configuration (mirrored in plans/queries_dedup.py oracle SQL).
 SHINGLE_N = 3   # words per shingle
@@ -55,8 +56,7 @@ def exploded_shingle_hashes(docs: DataFrame, n: int) -> DataFrame:
         "doc_id", F.posexplode(tokenize(F.col("text"))).alias("pos", "tok"))
     if n == 1:
         # Unigrams need no window join-up; the general path below
-        # indexes leads[-1], which is empty for n=1 (r13 review —
-        # IndexError, while the HOF sibling accepted n=1 fine).
+        # indexes leads[-1], which is empty for n=1.
         return toks.select("doc_id", hash60(F.col("tok")).alias("h"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     leads = [F.lead("tok", i).over(w) for i in range(1, n)]
@@ -137,8 +137,7 @@ def minhash_signatures_from(sh: DataFrame,
                     # Empty shingle set (too-short doc): DROP the row,
                     # matching the JVM agg path (groupBy never creates
                     # it) — unguarded, np.min over a zero-width matrix
-                    # raised ValueError and killed the whole job (r13
-                    # review; only the streaming caller pre-filtered).
+                    # raises ValueError and kills the whole job.
                     continue
                 m = (a_vec[:, None] * hm[None, :] + b_vec[:, None]) % p
                 keep.append(i)
@@ -174,18 +173,10 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     a cheap array op on the joined rows. No cross join anywhere.
     """
     # The shingle-set table is reused three times (signatures + two
-    # verify joins) — localCheckpoint so tokenize/shingle/md5 runs
-    # once per doc, via the codegen exploded path. NOT .persist():
-    # a lazy persist with no unpersist leaked one CacheManager entry
-    # per invocation (r13 dedup review); the checkpoint's blocks are
-    # freed when the DataFrame is GC'd, the same lifecycle the ngram
-    # prefix-filter path below uses. eager=False (r18 optimization
-    # round): all three consumers sit in the caller's ONE action, so
-    # the checkpoint materializes inside that job instead of paying a
-    # separate up-front job — measured 1.74 → 1.49 s wall, equal CPU,
-    # identical output. (ngram_jaccard_pairs below keeps its EAGER
-    # checkpoints: they must materialize before ex.unpersist() runs.)
-    sh = shingle_sets(docs).localCheckpoint(eager=False)
+    # verify joins), so tokenize/shingle/md5 runs once per doc. All
+    # three consumers sit in the caller's one action, so it is lazy
+    # and materializes inside that job.
+    sh = materialize(shingle_sets(docs), eager=False)
     sigs = minhash_signatures_from(sh)
     # Shuffle discipline: the banded join moves only (id, band, key) —
     # the shingle-hash arrays (the wide payload) stay out of the 32×
@@ -266,39 +257,25 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     rows per doc; the wide shingle arrays join back onto the small
     verified candidate set only.
 
-    Cache lifecycle: the exploded shingle table feeds THREE consumers
-    (set-collect, doc-frequency, prefix ranking), so it is persisted
-    and eagerly materialized (parallel stages race past a lazy cache).
-    The two derived tables the returned plan actually needs are then
-    ``localCheckpoint``-ed — eager, and their blocks are freed by the
-    ContextCleaner when the result DataFrame is dropped, unlike a
-    CacheManager entry — which lets the big exploded table unpersist
-    BEFORE this function returns. Net: no cache entry outlives the
-    call (each invocation used to leak one exploded-table cache until
-    LRU eviction), and the retained footprint (set table + narrow
-    prefix) is strictly smaller than the exploded table it replaces.
+    The exploded shingle table feeds three consumers (set-collect,
+    doc-frequency, prefix ranking); it and the two derived tables the
+    returned plan reads (set table, narrow prefix) are materialized
+    eagerly, so parallel stages never race past a lazy one.
     """
     from pyspark.sql import Window
 
-    ex = (exploded_shingle_hashes(docs, SHINGLE_N)
-          .distinct()
-          .persist())
-    ex.count()
-    sh = (ex.groupBy("doc_id")
-          .agg(F.collect_set("h").alias("shingle_hashes"))
-          .localCheckpoint())
+    ex = materialize(exploded_shingle_hashes(docs, SHINGLE_N).distinct())
+    sh = materialize(ex.groupBy("doc_id")
+                     .agg(F.collect_set("h").alias("shingle_hashes")))
 
     dfreq = ex.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "h")
-    # Per-doc shingle count from the ALREADY-materialized set table
-    # (r19 optimization round, guide §2.3 — don't recompute what an
-    # earlier stage aggregated): ex is distinct, so count(*) per doc
-    # == size(collect_set) — the old second window
-    # (count(*) OVER (PARTITION BY doc_id)) buffered every exploded
-    # row a second time just to restate that size (measured: the
-    # extra window pass was ~5 s executor CPU of the query's 25 at
-    # sf0.1; plan loses one Window + one Sort). The sizes table is
-    # one narrow row per doc off the checkpoint — broadcastable by
+    # Per-doc shingle count from the already-materialized set table:
+    # ex is distinct, so count(*) per doc == size(collect_set). A
+    # second window (count(*) OVER (PARTITION BY doc_id)) would buffer
+    # every exploded row again just to restate that size (~5 s of the
+    # query's 25 s executor CPU at sf0.1, plus a Window and a Sort).
+    # The sizes table is one narrow row per doc — broadcastable by
     # AQE locally, an id-keyed join at scale, either way dominated by
     # the ranking exchange that must happen anyway.
     sizes = sh.select("doc_id", F.size("shingle_hashes").alias("n"))
@@ -309,9 +286,8 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     )
     prefix_len = (F.col("n")
                   - F.floor(F.lit(threshold) * F.col("n")).cast("int") + 1)
-    prefix = (ranked.where(F.col("rk") <= prefix_len).select("doc_id", "h")
-              .localCheckpoint())
-    ex.unpersist()
+    prefix = materialize(
+        ranked.where(F.col("rk") <= prefix_len).select("doc_id", "h"))
 
     cands = (
         prefix.select(F.col("doc_id").alias("id_a"), "h")
@@ -464,7 +440,7 @@ def dedup_survivors(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
 # host matching is case-insensitive via the inline (?i) flag, which
 # both engines support. Whitespace is an EXPLICIT ASCII class, never
 # \s: Java's \s includes vertical tab (\x0B) while RE2's does not
-# (r6 ADVICE — the engines would silently disagree on 'a.io/x\x0B');
+# (the engines would silently disagree on 'a.io/x\x0B');
 # [\s\S] stays, because the UNION of \s and \S is every character in
 # both engines regardless of how they partition it.
 _WS = r" \t\n\x0B\f\r"  # the shared explicit class (== Java's \s)
@@ -487,8 +463,7 @@ URL_CANON_STEPS = (
     #                            engines disagreed on a URL whose
     #                            text ends in one of those (e.g.
     #                            'a.io/x/' + U+2028);
-    #                            \z is end-of-input-only in BOTH
-    #                            (r13 dedup review, deferred here).
+    #                            \z is end-of-input-only in BOTH.
 )
 
 # Only scheme and host are case-insensitive per RFC 3986 — paths are
@@ -609,18 +584,14 @@ def repeated_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     size.
 
     The ``fpw`` subtree feeds BOTH the aggregate and the flagging
-    join. Until r19 the corpus tokenize + window-slice + md5 scan ran
-    twice per action — documented as the deliberate 100 TB trade
-    (recompute beats materializing a corpus-scale intermediate). The
-    r19 A/B measured the
-    opposite at BOTH scale points: eager localCheckpoint of fpw wins
-    2.3 → 1.7 s executor CPU at sf0.1 and 39.0 → 29.1 s at the 10×
-    corpus — the per-window md5 is the dominant cost and the
-    checkpointed triple is narrow (24 B/window, memory-and-disk
-    tier, GC-scoped blocks, no shuffle), so one materialization pass
-    beats two hash passes. Same flip in :func:`span_deduped_corpus`.
+    join, so it is materialized eagerly rather than recomputed: the
+    per-window md5 is the dominant cost and the (doc_id, i, fp)
+    triple is narrow (24 B/window, no shuffle). Materializing it cut
+    executor CPU from 2.3 to 1.7 s at sf0.1 and from 39.0 to 29.1 s
+    at the 10× corpus against scanning twice. Same in
+    :func:`span_deduped_corpus`.
     """
-    fpw = span_window_fingerprints(docs, n).localCheckpoint(eager=True)
+    fpw = materialize(span_window_fingerprints(docs, n))
     rep = (fpw.groupBy("fp")
            .agg(F.count_distinct("doc_id").alias("n_docs"))
            .where(F.col("n_docs") >= 2)
@@ -637,8 +608,8 @@ def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     guarantee real: every repeated window's content survives
     verbatim in its keeper doc (without it, two overlapping windows
     with different keepers could each be removed in the other's
-    keeper and the shared passage would survive NOWHERE — found by
-    review, pinned by test_span_dedup_overlapping_ownership).
+    keeper and the shared passage would survive NOWHERE — pinned by
+    test_span_dedup_overlapping_ownership).
     Returns (doc_id, n_spans_removed, clean_text) for EVERY input
     doc, n_spans_removed counting maximal contiguous removed runs;
     clean_text is the kept tokens rejoined with single spaces (span
@@ -653,9 +624,9 @@ def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     applied via a LEFT join of the corpus to its region lists: docs
     with nothing to remove stream through untouched.
     """
-    # Eager localCheckpoint shared by the owner aggregate and the
-    # flagging join — the r19 A/B flip documented in repeated_spans.
-    fpw = span_window_fingerprints(docs, n).localCheckpoint(eager=True)
+    # Shared by the owner aggregate and the flagging join, as in
+    # repeated_spans.
+    fpw = materialize(span_window_fingerprints(docs, n))
     owner = (fpw.groupBy("fp")
              .agg(F.count_distinct("doc_id").alias("n_docs"),
                   F.min("doc_id").alias("min_doc"))

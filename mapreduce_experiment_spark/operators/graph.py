@@ -32,9 +32,9 @@ Scale notes (SURVEY §4, §7 hard parts):
 - Edge dedup happens BEFORE the candidate stage (the reference
   dedups only at the very end, after a quadratic candidate explosion:
   4,055,477 raw emissions for 587,314 distinct on 100k.txt).
-- A triangle query materializes exactly two tables, both as eager
-  ``localCheckpoint``s: the deduped edge set and the oriented
-  out-adjacency arrays. Nothing is registered in the SQL cache.
+- A triangle query materializes exactly two tables, both eagerly
+  through :func:`~mapreduce_experiment_spark.session.materialize`:
+  the deduped edge set and the oriented out-adjacency arrays.
 - No ``collect()`` on the triangle path; adjacency lists exist only
   as a parity demo (:func:`adjacency`), never on it.
 - AQE skew-join handles residual hot keys (session.py).
@@ -48,18 +48,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from ..session import materialize
+
 
 # --- §2 row 3: edge symmetrization ---------------------------------------
 def symmetrize(edges: DataFrame) -> DataFrame:
     """Emit both orientations of every edge (T100:29-39).
 
     One narrow in-row explode — no shuffle, and ONE scan of the input.
-    (The pre-r18 union of two projections evaluated the whole upstream
-    subtree twice when it was not cached: for the registered queries
-    over derive_edges that doubled the per-order pair expansion AND
-    its dedup shuffle — adjacency measured 21.6 → 11.4 s executor CPU
-    from this change alone. Row multiset identical: the union was
-    UNION ALL, and explode emits the same two rows per edge.)
+    A union of two projections would evaluate an uncached upstream
+    subtree twice: for the registered queries over derive_edges, the
+    per-order pair expansion and its dedup shuffle (adjacency's
+    executor CPU is about half with the explode). The row multiset is
+    the same as the UNION ALL's.
     """
     return edges.select(
         F.explode(F.array(
@@ -93,10 +94,9 @@ def canonical_edges(edges: DataFrame,
 
 def edge_multiplicity(edges: DataFrame) -> DataFrame:
     """Unordered-pair multiplicities, self-loops included:
-    ``(u, v, mult)`` with ``u <= v``. Until r18 this fed the faithful
-    triangle path's literal multiset-adjacency replay; the shipped
-    path now uses the decomposition documented in :func:`triangles`,
-    and the replay survives as the test-side reference proving the
+    ``(u, v, mult)`` with ``u <= v``. The faithful triangle path uses
+    the decomposition documented in :func:`triangles`; this feeds the
+    test-side literal multiset-adjacency replay that proves the
     decomposition lossless
     (test_faithful_decomposition_matches_multadj_replay)."""
     return (
@@ -125,10 +125,10 @@ def adjacency(edges: DataFrame) -> DataFrame:
 
 
 def degrees_from_canonical(ce: DataFrame) -> DataFrame:
-    # In-row explode, not union-of-projections: one scan of ce (which
-    # is NOT always cached — the registered degrees/candidate_pairs
-    # queries reach here with the full derive+dedup pipeline upstream,
-    # and the union form ran it twice; r18 optimization round).
+    # In-row explode, not union-of-projections: one scan of ce, which
+    # is not always materialized (the registered degrees and
+    # candidate_pairs queries reach here with the full derive+dedup
+    # pipeline upstream, which the union form would run twice).
     return (
         ce.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
         .groupBy("node")
@@ -150,14 +150,12 @@ def candidate_pair_counts(edges: DataFrame) -> DataFrame:
     the scalable summary: a degree aggregate and a scalar expression,
     no quadratic blowup.
     """
-    # Integer DIV, not float `/ 2` + cast (r14 graph review): d(d-1)
-    # is always even so the small-degree values are identical, but
-    # above d ≈ 9.4e7 the double round-trip loses low bits — the
-    # same int64-exactness discipline as the packing operators. (The
-    # oracle moved from `/ 2` to `// 2` in the same commit; DuckDB's
-    # float `/` additionally ROUNDS on the BIGINT cast where Spark
-    # truncates, so the old forms also disagreed cross-engine in the
-    # lossy range.)
+    # Integer DIV, not float `/ 2` + cast: d(d-1) is always even, but
+    # above d ≈ 9.4e7 a double round-trip loses low bits — the same
+    # int64-exactness discipline as the packing operators. The oracle
+    # uses `// 2` too: DuckDB's float `/` ROUNDS on the BIGINT cast
+    # where Spark truncates, so float forms would also disagree
+    # cross-engine in the lossy range.
     return degrees(edges).select(
         "node",
         F.expr("degree * (degree - 1) div 2").alias("n_candidate_pairs"),
@@ -181,7 +179,7 @@ def _edge_common_closers(ce: DataFrame) -> DataFrame:
     appears exactly once — as y ∈ common on its (w, x) edge. Shared by
     the enumeration (explodes ``common``), the count (sums sizes — no
     explode), and faithful mode via the simple path. ``ce`` is the
-    canonical ``(u, v)`` edge set, already checkpointed by the caller:
+    canonical ``(u, v)`` edge set, already materialized by the caller:
     it feeds both the degrees and the orientation, so the upstream
     scan and dedup run once.
 
@@ -203,9 +201,8 @@ def _edge_common_closers(ce: DataFrame) -> DataFrame:
     # the repartition's hash(lo) layout (no extra exchange), and the
     # checkpoint keeps its physical partitions, so the compute-bound
     # intersection stage runs closure_partitions() tasks.
-    adj = _out_adjacency(
-        _oriented_repartitioned(ce, closure_partitions(ce.sparkSession))
-    ).localCheckpoint(eager=True)
+    adj = materialize(_out_adjacency(
+        _oriented_repartitioned(ce, closure_partitions(ce.sparkSession))))
     e1 = adj.select(F.col("lo").alias("w"), F.explode("nbrs").alias("x"),
                     F.col("nbrs").alias("n_lo"))
     e2 = e1.join(adj.select(F.col("lo").alias("x"),
@@ -236,7 +233,7 @@ def _out_adjacency(o: DataFrame) -> DataFrame:
 
 
 def _simple_triangle_corners(ce: DataFrame) -> DataFrame:
-    """Each triangle of the checkpointed canonical edge set ``ce``
+    """Each triangle of the materialized canonical edge set ``ce``
     exactly once, as canonical ``(a, b, c)``, ``a < b < c``: the
     (w, x, y) corners of :func:`_edge_common_closers` (w the source
     corner, x its out-neighbor on this edge, y the closing common
@@ -298,8 +295,7 @@ def triangles(edges: DataFrame, mode: str = "simple",
     """
     if mode == "simple":
         return _simple_triangle_corners(
-            canonical_edges(edges, assume_canonical)
-            .localCheckpoint(eager=True))
+            materialize(canonical_edges(edges, assume_canonical)))
     if mode == "faithful":
         # The reference's condition factors EXACTLY into three
         # disjoint classes by the output triple's node-multiset
@@ -327,18 +323,17 @@ def triangles(edges: DataFrame, mode: str = "simple",
         # and by the dirty-graph goldens in test_graph. On clean input
         # L = ∅ and this costs exactly the simple path.
         #
-        # The input is scanned once: one checkpointed distinct of the
+        # The input is scanned once: one materialized distinct of the
         # unordered pairs, self-loops kept, splits into S (u != v) and
         # L (u == v). Both are already distinct, and S goes to the
-        # simple path as is, without a checkpoint of its own.
+        # simple path as is, without a materialization of its own.
         # least/greatest skip nulls, so a row with one null endpoint
         # is dropped first rather than read as a self-loop.
-        pairs = (
+        pairs = materialize(
             edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
             .select(F.least("src", "dst").alias("u"),
                     F.greatest("src", "dst").alias("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         ce = pairs.where(F.col("u") != F.col("v"))
         loops = pairs.where(F.col("u") == F.col("v")).select(
@@ -368,8 +363,7 @@ def triangle_count(edges: DataFrame, mode: str = "simple",
     an edgeless input count 0 (a sum over zero rows is NULL).
     """
     if mode == "simple":
-        ce = canonical_edges(edges, assume_canonical) \
-            .localCheckpoint(eager=True)
+        ce = materialize(canonical_edges(edges, assume_canonical))
         return _edge_common_closers(ce).agg(
             F.coalesce(F.sum(F.size("common")), F.lit(0))
             .cast("long").alias("n_triangles"))
@@ -391,27 +385,21 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
     — every operation is integer, so the iteration is bit-identical
     across engines (float PageRank cannot be value-compared: the
     neighbor sum's order drifts). Fixed ``n_iter`` rounds; each round
-    is one shuffle (contrib aggregation), with localCheckpoint
-    truncating the join lineage.
+    is one shuffle (contrib aggregation), and materializing the ranks
+    truncates the join lineage.
 
     Returns (node, rank_micro) with rank_micro/1e12 ≈ probability.
     """
-    ce = canonical_edges(edges, assume_canonical).persist()
-    ce.count()
-    sym = ce.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-        ce.select(F.col("v").alias("a"), F.col("u").alias("b")))
+    ce = materialize(canonical_edges(edges, assume_canonical))
+    sym = symmetrize(ce.toDF("src", "dst")).toDF("a", "b")
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("outdeg"))
-    edges_deg = sym.join(deg, "a").persist()
-    nodes = sym.select(F.col("a").alias("node")).distinct().persist()
+    edges_deg = materialize(sym.join(deg, "a"), eager=False)
+    nodes = materialize(sym.select(F.col("a").alias("node")).distinct())
     n = nodes.count()
     if n == 0:
-        # An edgeless graph has no rank mass to distribute; unguarded,
-        # PAGERANK_SCALE // n crashed driver-side with
-        # ZeroDivisionError instead of returning the empty result
-        # every other operator produces on empty input (r14 graph
-        # review).
-        for df in (edges_deg, ce, nodes):
-            df.unpersist()
+        # An edgeless graph has no rank mass to distribute: return the
+        # empty result every other operator gives on empty input, not
+        # a ZeroDivisionError from PAGERANK_SCALE // n.
         return nodes.sparkSession.createDataFrame(
             [], "node long, rank_micro long")
     r0 = PAGERANK_SCALE // n
@@ -426,20 +414,14 @@ def pagerank(edges: DataFrame, n_iter: int = 10,
             .groupBy(F.col("b").alias("node"))
             .agg(F.sum("contrib").alias("sm"))
         )
-        ranks = (
+        ranks = materialize(
             nodes.join(sums, "node", "left")
             .select(
                 "node",
                 (F.lit(base)
                  + F.expr("85 * coalesce(sm, 0L) div 100")).alias("rank_micro"),
             )
-            .localCheckpoint()
         )
-    # Safe to drop every cached intermediate: localCheckpoint is eager,
-    # so the returned ranks no longer depend on any of them.
-    edges_deg.unpersist()
-    ce.unpersist()
-    nodes.unpersist()
     return ranks
 
 
@@ -494,7 +476,9 @@ def connected_components(edges: DataFrame,
     node id in the component.
 
     The canonical edge set is persisted and counted first, and its
-    measured size picks one of two exact paths:
+    measured size picks one of two exact paths (a checkpoint would
+    carry only the optimizer's size estimate, so this is the one
+    intermediate that is persisted rather than materialized):
 
     - At most ``spark.sql.autoBroadcastJoinThreshold`` bytes (and the
       threshold not negative): the edges are collected to the driver
@@ -503,8 +487,8 @@ def connected_components(edges: DataFrame,
       near-duplicate graphs the dedup queries build.
     - Larger: min-label propagation to fixpoint in Spark. Each round
       every node adopts the minimum label in its closed neighborhood;
-      stop when no label changes. ``localCheckpoint`` truncates the
-      lineage each round so plans don't grow unboundedly — the
+      stop when no label changes. Materializing the labels truncates
+      the lineage each round so plans don't grow unboundedly — the
       standard Spark idiom for iterative graph algorithms (GraphX
       does the same internally). Rounds needed = graph diameter ≤
       ``CC_MAX_ITER``; past that it warns and returns the labels so far.
@@ -519,16 +503,15 @@ def connected_components(edges: DataFrame,
         return ce.sparkSession.createDataFrame(
             pd.DataFrame({"node": nodes, "component": comp}),
             StructType([StructField("node", t), StructField("component", t)]))
-    # Directed both ways once; reused every iteration.
-    sym = ce.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-        ce.select(F.col("v").alias("a"), F.col("u").alias("b"))).persist()
-    # Lazy init checkpoint: round 1 materializes it along with its own
-    # labels (see the loop).
-    labels = (
+    # Directed both ways once; reused every iteration. Both tables are
+    # lazy: round 1 materializes them along with its own labels.
+    sym = materialize(symmetrize(ce.toDF("src", "dst")).toDF("a", "b"),
+                      eager=False)
+    labels = materialize(
         ce.select(F.explode(F.array(F.col("u"), F.col("v"))).alias("node"))
         .distinct()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint(eager=False)
+        .select("node", F.col("node").alias("component")),
+        eager=False,
     )
     converged = False
     for _ in range(CC_MAX_ITER):
@@ -539,14 +522,11 @@ def connected_components(edges: DataFrame,
         )
         # The convergence flag rides INSIDE the propagation result, so
         # detecting a fixpoint costs one scan of the just-materialized
-        # checkpoint blocks — not a second join-shuffle per round (the
-        # old labels never need re-reading). The checkpoint is lazy,
-        # but under AQE the localCheckpoint call still runs the
-        # round's shuffle-map stages itself (the adaptive plan is
-        # finalized to build its RDD); the count then runs only the
-        # round's final stage, which writes the checkpoint blocks as a
-        # side effect, plus its own one-row aggregate.
-        new_labels = (
+        # blocks — not a second join-shuffle per round (the old labels
+        # never need re-reading). The lazy materialize runs the round's
+        # shuffle-map stages; the count runs its final stage, which
+        # writes the blocks as a side effect, plus a one-row aggregate.
+        new_labels = materialize(
             labels.join(nbr_min, "node", "left")
             .select(
                 "node",
@@ -556,8 +536,8 @@ def connected_components(edges: DataFrame,
                 ).alias("component"),
                 (F.col("nbr_component") < F.col("component"))
                 .alias("changed"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         changed = new_labels.where(F.col("changed")).count()
         labels = new_labels.select("node", "component")
@@ -565,7 +545,6 @@ def connected_components(edges: DataFrame,
             converged = True
             break
     ce.unpersist()
-    sym.unpersist()
     if not converged:
         import warnings
         warnings.warn(

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, dot, q6
+from ..session import materialize
 
 N_CENTROIDS = 16
 N_PROBE = 4
@@ -105,9 +106,8 @@ def srp_signatures(embeddings: DataFrame, bands: int = SRP_BANDS,
 def _self_join_cands(sigs: DataFrame) -> DataFrame:
     """Distinct canonical candidate pairs from a signature self-join
     on (band_id, band_val) — shared by the recompute path and the
-    persisted-index path (duplicated byte-for-byte before r13), so a
-    candidate-generation change can never apply to one and not the
-    other."""
+    persisted-index path, so a candidate-generation change can never
+    apply to one and not the other."""
     a = sigs.select(F.col("vec_id").alias("id_a"), "band_id", "band_val")
     b = sigs.select(F.col("vec_id").alias("id_b"), "band_id", "band_val")
     return (
@@ -122,8 +122,8 @@ def _verify_pairs(cands: DataFrame, embeddings: DataFrame,
                   threshold: float) -> DataFrame:
     """Exact-cosine verify of canonical (id_a, id_b) candidates against
     ``embeddings`` — the threshold join shared by every LSH near-dup
-    path (four near-identical copies before r13; the zero-norm guard
-    in _cos now lands everywhere by construction)."""
+    path, so the zero-norm guard in _cos lands everywhere by
+    construction."""
     v = _prep(embeddings)
     va = v.select(F.col("vec_id").alias("id_a"), F.col("vec").alias("va"),
                   F.col("norm").alias("na"))
@@ -247,10 +247,10 @@ QUANT_SCALE = 1_000_000
 # Without it a huge-magnitude vector (legal float32 — think corrupt
 # or unnormalized embeddings in a 100 TB corpus) made
 # `astype(np.int64)` overflow UNDEFINED numpy garbage on the engine
-# side while the oracle's strict BIGINT cast crashed (r14 adversarial
-# rehearsal, 1e18-component vector, reproduced live). Clamping is the
-# deterministic defined behavior (same family as the zero-norm
-# cos := -1 floor): out-of-range components saturate identically in
+# side while the oracle's strict BIGINT cast crashed (a 1e18-component
+# vector reproduces it). Clamping is the deterministic defined
+# behavior (same family as the zero-norm cos := -1 floor):
+# out-of-range components saturate identically in
 # both engines, and the integer squared-L2 stays exact —
 # d * (2*QUANT_MAX)^2 <= int64max for any d <= 8,984. Shipped data
 # (|x| <= 0.58) never clamps. Pinned by
@@ -291,39 +291,34 @@ def kmeans_train(embeddings: DataFrame, k: int = KMEANS_K,
     Python ints, valid at every magnitude. The SQL mirror
     (plans/queries_similarity._kmeans_cte) replays it in exact HUGEINT
     arithmetic with a floor-mod adjustment; no double rounding on
-    either side (ADVICE r17: a DOUBLE-cast oracle form diverges once
+    either side (a DOUBLE-cast oracle form would diverge once
     per-(centroid,pos) |sum| >= 2^53).
     """
     import numpy as np
 
-    v = _vec_batches(embeddings).persist()
-    try:  # unpersist even when a training collect throws, else the
-        # cached plan holds executor storage for the app's lifetime
-        seeds = sorted(v.where(F.col("vec_id") < k).collect(),
-                       key=lambda r: r.vec_id)
-        cent_ids = [r.vec_id for r in seeds]
-        cents = _quantize_mat(
-            np.array([r.vec for r in seeds], dtype=np.float64))
-        for _ in range(n_iter):
-            agg = (
-                _kmeans_partial_sums(v, cent_ids, cents)
-                .groupBy("centroid_id", "pos")
-                .agg(F.sum("psum").alias("s"), F.sum("pcnt").alias("cnt"))
-                .collect()
-            )
-            by_cid: dict[int, dict[int, tuple[int, int]]] = {}
-            for r in agg:
-                by_cid.setdefault(r.centroid_id, {})[r.pos] = (r.s, r.cnt)
-            cent_ids = sorted(by_cid)
-            d = cents.shape[1]
-            cents = np.array(
-                [[by_cid[cid][p][0] // by_cid[cid][p][1]
-                  for p in range(1, d + 1)]
-                 for cid in cent_ids],
-                dtype=np.int64,
-            )
-    finally:
-        v.unpersist()
+    v = materialize(_vec_batches(embeddings), eager=False)
+    seeds = sorted(v.where(F.col("vec_id") < k).collect(),
+                   key=lambda r: r.vec_id)
+    cent_ids = [r.vec_id for r in seeds]
+    cents = _quantize_mat(np.array([r.vec for r in seeds], dtype=np.float64))
+    for _ in range(n_iter):
+        agg = (
+            _kmeans_partial_sums(v, cent_ids, cents)
+            .groupBy("centroid_id", "pos")
+            .agg(F.sum("psum").alias("s"), F.sum("pcnt").alias("cnt"))
+            .collect()
+        )
+        by_cid: dict[int, dict[int, tuple[int, int]]] = {}
+        for r in agg:
+            by_cid.setdefault(r.centroid_id, {})[r.pos] = (r.s, r.cnt)
+        cent_ids = sorted(by_cid)
+        d = cents.shape[1]
+        cents = np.array(
+            [[by_cid[cid][p][0] // by_cid[cid][p][1]
+              for p in range(1, d + 1)]
+             for cid in cent_ids],
+            dtype=np.int64,
+        )
     return cent_ids, cents
 
 
@@ -464,7 +459,7 @@ def _assign_to_centroids(corpus: DataFrame,
     row_number window (max cos, ties to the LOWEST centroid id;
     uniqueness of the struct per vector makes the aggregate
     order-insensitive, hence deterministic across partial merges).
-    Aggregate, not window, deliberately (r16): each vector's k scored
+    Aggregate, not window, deliberately: each vector's k scored
     rows are born in ONE input partition (map-side crossJoin
     fan-out), so the partial aggregate collapses them before the
     exchange — the shuffle carries ONE row per vector, where the
@@ -504,7 +499,7 @@ def ivf_assignments(embeddings: DataFrame,
     deterministic stand-in for k-means (which would converge to
     data-dependent floats and break value-level oracle checks).
     One broadcast join + one argmax aggregate (``max_by`` with
-    map-side partial combine — r16 rewrite); no iteration.
+    map-side partial combine); no iteration.
     """
     v = _prep(embeddings)
     return _assign_to_centroids(v.where(F.col("vec_id") >= n_centroids),
@@ -559,8 +554,8 @@ def _score_bucket_cands(probes: DataFrame, buckets: DataFrame,
                         v: DataFrame, queries: DataFrame) -> DataFrame:
     """probes(query_id, centroid_id) ⋈ buckets(vec_id, centroid_id) →
     exact-cosine-scored candidates — the candidate join shared by
-    :func:`knn_ivf` and :func:`knn_ivf_trained` (duplicated verbatim
-    before r13, invisible to the shared-helper tests)."""
+    :func:`knn_ivf` and :func:`knn_ivf_trained`, so the two cannot
+    drift apart."""
     corpus = v.select(F.col("vec_id").alias("neighbor_id"),
                       F.col("vec").alias("nv"), F.col("norm").alias("nn"))
     return (
@@ -865,12 +860,11 @@ def embedding_near_dups_probe_index(spark, batch: DataFrame,
     numeric, not batch-vs-index — recover "which endpoint is new" from
     the caller's own id ranges), verified by exact cosine against
     ``verify_vectors``, which MUST cover corpus AND batch ids (a real
-    deployment passes the corpus vector table). Renamed from
-    ``batch_vectors`` (r13 review: the old name invited passing only
-    the new batch's vectors, and the inner verify join then SILENTLY
-    dropped every cross-split candidate pair); coverage is now
-    machine-enforced — a candidate whose endpoint is missing from
-    ``verify_vectors`` raises at execution time instead of vanishing.
+    deployment passes the corpus vector table). Passing only the new
+    batch's vectors would drop every cross-split candidate pair, so
+    coverage is machine-enforced: a candidate whose endpoint is
+    missing from ``verify_vectors`` raises at execution time instead
+    of vanishing.
 
     This is the daily-ingest shape of a 100 TB dedup pipeline: index
     once, then each arriving batch pays signatures-over-batch plus a
@@ -900,14 +894,14 @@ def embedding_near_dups_probe_index(spark, batch: DataFrame,
                   F.col("norm").alias("nb"))
     # LEFT joins + a throwing ELSE branch, NOT _verify_pairs' inner
     # joins: here the candidate ids come from the index + batch while
-    # the vectors come from the caller, so an under-covering
-    # verify_vectors used to drop pairs silently. The guard is the
-    # else-branch VALUE of the cos expression itself — an optimizer
-    # can only eliminate it by proving coverage, which it can't (the
-    # r13 shape wrapped assert_true's null in when(...isNull...),
-    # whose elimination would have silently disabled the guard across
-    # a Spark upgrade — ADVICE r13). Still fully lazy: no extra
-    # driver job, the guard fires with the query itself.
+    # the vectors come from the caller, so inner joins would drop
+    # pairs of an under-covering verify_vectors silently. The guard is
+    # the else-branch VALUE of the cos expression itself — an
+    # optimizer can only eliminate it by proving coverage, which it
+    # can't (assert_true's null wrapped in when(...isNull...) could be
+    # eliminated, silently disabling the guard across a Spark
+    # upgrade). Still fully lazy: no extra driver job, the guard fires
+    # with the query itself.
     missing = F.concat(
         F.lit("embedding_near_dups_probe_index: verify_vectors is "
               "missing the embedding for candidate pair ("),
@@ -956,11 +950,9 @@ def knn_ivf_pruned(spark, embeddings: DataFrame, path: str,
             "centroids exceeds the static-pruning bound (10000); "
             "split the query batch or use knn_ivf's equi-join path")
     # Collect the probe PAIRS once (bounded by the guard above) and
-    # rebuild the broadcast side as a local relation: the old code
-    # collected only the distinct centroid ids and then joined the
-    # original `probes` plan, recomputing the whole query/centroid
-    # scan + window a second time on the recurring hot path (r13
-    # review).
+    # rebuild the broadcast side as a local relation: joining the
+    # original `probes` plan would recompute the whole query/centroid
+    # scan + window a second time on the recurring hot path.
     probe_rows = [(r.query_id, r.centroid_id) for r in probes.collect()]
     probe_ids = sorted({cid for _, cid in probe_rows})
     probes_local = spark.createDataFrame(

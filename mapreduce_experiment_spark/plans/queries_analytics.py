@@ -227,18 +227,6 @@ def q_monthly_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# RETIRED round 6 (registry saturation — new queries displace, never
-# accrete; see plans/registry.py): ``brand_revenue_by_year`` (Q9-family
-# broadcast-join rollup — its only operators, broadcast dim join +
-# year-keyed agg, are covered by volume_shipping and asia_market_share),
-# ``daily_event_type_pivot`` (pivot_counts surface duplicated by
-# mktsegment_pivot), ``order_value_histogram`` (fixed-width binning —
-# distribution surface covered by order_size_distribution and
-# value_distribution_stats). Displaced by canonical_url_groups and
-# clean_corpus (queries_dedup.py) plus the changed-plan ``triangles``
-# rotation slot.
-
-
 @register(
     "top_parts_per_nation",
     oracle="""

@@ -76,17 +76,6 @@ def q_exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.exact_dedup_groups(load_table(spark, sf_dir, "documents"))
 
 
-# RETIRED (r7): the ``minhash_signatures`` registration — a strict
-# intermediate of the still-registered MinHash family, retired for
-# displacement room (r6 verdict: saturation is displacement-only).
-# The signature VALUES stay driver-checked bit-for-bit:
-# ``streaming_minhash_dedup``'s oracle recomputes every permutation
-# and GROUPS BY the same CSV-rendered signature, so a single drifted
-# signature bit breaks that hash match exactly as it broke this one.
-# The operator (operators.dedup.minhash_signatures) and its
-# JVM-vs-Arrow bit-equality test (test_pipeline_ops.py) remain.
-
-
 @register(
     "minhash_dedup_pairs",
     oracle=_SH_CTE + f"""
@@ -238,15 +227,6 @@ def _simhash_sql() -> str:
         for j in range(D.SIMHASH_BITS)
     ]
     return "(" + " + ".join(terms) + ")"
-
-
-# RETIRED (r7): the ``simhash_signatures`` registration — the same
-# strict-intermediate shape as minhash_signatures above. Signature
-# bits stay driver-checked through ``simhash_near_dups``: its oracle
-# recomputes every signature from scratch and emits exact pairwise
-# Hamming distances, so any bit drift surfaces there. The operator
-# (operators.dedup.simhash_signatures) and its local signature-level
-# parity coverage remain; see test_pipeline_ops.py.
 
 
 @register(

@@ -12,13 +12,16 @@ Heavy-tailed graph degrees and hot aggregation keys (SURVEY §4.2) are
 handled by ``spark.sql.adaptive.skewJoin`` rather than manual salting
 in the default path; operators that need deterministic salting (e.g.
 the similarity cross-join) do it explicitly.
+
+Every intermediate an operator reuses is materialized through
+:func:`materialize`, so the caching policy lives here too.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Shuffle partition count: ~cores for local testing. On a real cluster
 # this is overridden by the submitter (or left to AQE's coalescing,
@@ -68,3 +71,34 @@ def get_session(app_name: str = "mapreduce_experiment_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df`` checkpointed: its rows computed once, its lineage cut.
+
+    A reliable ``checkpoint`` when the SparkContext has a checkpoint
+    dir (``sparkContext.setCheckpointDir``; on a cluster, shared
+    storage), so the rows survive the loss of the executor that
+    computed them. Otherwise a ``localCheckpoint``: the blocks live on
+    the executors and are lost with them.
+
+    Either way nothing is registered in the SQL CacheManager. The
+    blocks belong to the returned DataFrame and the ContextCleaner
+    frees them once it is garbage-collected, so there is no
+    ``unpersist`` to call and no ``count()`` to fill a cache.
+
+    ``eager=True`` runs a job now: use it when the table must exist
+    before the next step (its row count is read, or several jobs or
+    concurrent stages read it). ``eager=False`` materializes it inside
+    the first action that reads it, which saves a job when every
+    consumer sits in one action (under AQE the call still runs the
+    plan's shuffle-map stages, to build the RDD).
+
+    A checkpoint's plan carries the optimizer's size estimate, not the
+    measured bytes a ``persist`` reports, so a decision on a table's
+    actual size (``connected_components``' driver path) persists it
+    instead.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)

@@ -24,14 +24,14 @@ per micro-batch (``batch_key=r{run}b{batch_id}``), each written with
 mode("overwrite") — the pattern that scales AND survives replay:
 foreachBatch is only at-least-once, so a batch re-delivered after a
 partial failure must overwrite its own partition rather than append
-a duplicate (r13 review: blind appends double-emitted triangles on
-replay). The replay recomputes from exactly the pre-batch state —
-every state read excludes the replayed batch's own partition, so a
+a duplicate (a blind append double-emits triangles on replay). The
+replay recomputes from exactly the pre-batch state — every state
+read excludes the replayed batch's own partition, so a
 half-committed first attempt can't feed itself — and overwrites its
 partitions with identical content: idempotent. Existence is probed
 by attempting the read (not ``os.path.exists``, which is always
-false on HDFS/S3 — r13 review), and a source that yields zero
-micro-batches returns an empty result instead of PATH_NOT_FOUND.
+false on HDFS/S3), and a source that yields zero micro-batches
+returns an empty result instead of PATH_NOT_FOUND.
 
 State layout (guide §2.3/§6: make per-batch work proportional to
 the batch, not the state):
@@ -76,6 +76,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..operators.graph import canonical_edges
+from ..session import materialize
 from .pipeline import _COUNTER
 
 _EDGE_SCHEMA = "src long, dst long"
@@ -86,7 +87,7 @@ def _is_missing_path(ex: AnalysisException) -> bool:
     other analysis failure on the state/output root (corrupt layout,
     conflicting schema, permission mapping) must PROPAGATE: swallowing
     it as 'no prior state' would let the anti-join re-admit
-    already-seen edges and duplicate triangles (ADVICE r13)."""
+    already-seen edges and duplicate triangles."""
     return ex.getCondition() == "PATH_NOT_FOUND"
 
 
@@ -109,16 +110,16 @@ def _read_batches(spark: SparkSession, root: str, schema: str,
     return df.drop("batch_key")
 
 
-# Degree cap for the per-batch adjacency-INTERSECT fast path (r18
-# optimization round). A batch's triangles are found as w ∈ N(u)∩N(v)
-# per new edge; intersecting collected neighbor ARRAYS replaces the
-# row-expansion join (every (new edge, neighbor-of-u) candidate row
-# materialized and probed) — measured on the worst sf0.1 batch (398k
-# new edges vs 797k state): 120 s → 31 s executor CPU, 5.8 s → 2.4 s
-# wall. But a per-row array is as big as the node's degree, and a
-# 100 TB hub (d ~ 10^7+) would put an unsplittable multi-MB payload on
+# Degree cap for the per-batch adjacency-INTERSECT fast path. A
+# batch's triangles are found as w ∈ N(u)∩N(v) per new edge;
+# intersecting collected neighbor ARRAYS replaces the row-expansion
+# join (every (new edge, neighbor-of-u) candidate row materialized and
+# probed) — on the worst sf0.1 batch (398k new edges vs 797k state)
+# 31 s executor CPU instead of 120 s, 2.4 s wall instead of 5.8 s.
+# But a per-row array is as big as the node's degree, and a 100 TB
+# hub (d ~ 10^7+) would put an unsplittable multi-MB payload on
 # single rows, where the row expansion is AQE-skew-splittable. So
-# nodes above this cap keep NO array (r19: they are excluded from the
+# nodes above this cap keep NO array (they are excluded from the
 # adjacency DELTA writes, and in-batch degrees above the cap are
 # excluded before the delta collect_list, so no giant agg buffer ever
 # exists anywhere — the flatten-merge of non-hub deltas is likewise
@@ -145,26 +146,24 @@ def _process_batch(batch: DataFrame, batch_key: str, state_dir: str,
     """One micro-batch: admit the deduped edge delta, emit the
     triangles it completes, and append this batch's state deltas.
 
-    r19 optimization round (guide §2.3 "aggregate before you
-    shuffle" / §6 state layout): per-batch work is
-    now proportional to the BATCH, not the accumulated state. The
-    pre-r19 shape re-derived everything per batch from the edge
-    state — a 2m-row degree aggregate (hub check), a 2m-row
-    collect_list (full adjacency), and a full-state union persist —
-    measured 33.7 s executor CPU of the worst sf0.1 batch's 46 s.
-    Now degrees and adjacency live as per-batch DELTA partitions:
-    the batch aggregates only its own 2·|B_new| symmetrized rows,
-    total degrees and full adjacency come from merging the tiny
-    pre-aggregated deltas (O(n) rows, flatten of duplicate-free
-    arrays), and the edge state is only SCANNED once for the
-    membership anti-join (broadcast probe of the batch — no shuffle
-    of the state; see MAX_BROADCAST_BATCH_EDGES)."""
+    Per-batch work is proportional to the BATCH, not the accumulated
+    state ("aggregate before you shuffle"). Re-deriving everything
+    per batch from the edge state — a 2m-row degree aggregate (hub
+    check), a 2m-row collect_list (full adjacency), and a full-state
+    union — would cost 33.7 s executor CPU of the worst sf0.1 batch's
+    46 s. Instead degrees and adjacency live as per-batch DELTA
+    partitions: the batch aggregates only its own 2·|B_new|
+    symmetrized rows, total degrees and full adjacency come from
+    merging the tiny pre-aggregated deltas (O(n) rows, flatten of
+    duplicate-free arrays), and the edge state is only SCANNED once
+    for the membership anti-join (broadcast probe of the batch — no
+    shuffle of the state; see MAX_BROADCAST_BATCH_EDGES)."""
     spark = batch.sparkSession
     deg_dir = os.path.join(os.path.dirname(state_dir), "deg_state")
     adj_dir = os.path.join(os.path.dirname(state_dir), "adj_state")
 
-    new_raw = canonical_edges(batch).persist()
-    n_new = new_raw.count()  # materializes the cache; sizes the probe
+    new_raw = materialize(canonical_edges(batch))
+    n_new = new_raw.count()  # sizes the probe
     state = _read_batches(spark, state_dir, "u long, v long",
                           exclude_key=batch_key)
     if 0 < n_new <= MAX_BROADCAST_BATCH_EDGES:
@@ -173,30 +172,30 @@ def _process_batch(batch: DataFrame, batch_key: str, state_dir: str,
         # builds on the broadcast side), and the already-seen subset
         # (≤ |batch| rows) broadcasts back into the anti-join.
         seen = state.join(F.broadcast(new_raw), ["u", "v"], "left_semi")
-        new = new_raw.join(F.broadcast(seen), ["u", "v"], "left_anti") \
-            .persist()
+        new = new_raw.join(F.broadcast(seen), ["u", "v"], "left_anti")
     else:
-        new = new_raw.join(state, ["u", "v"], "left_anti").persist()
+        new = new_raw.join(state, ["u", "v"], "left_anti")
+    new = materialize(new, eager=False)
 
     sym_new = new.select(
         F.explode(F.array(
             F.struct(F.col("u").alias("a"), F.col("v").alias("w")),
             F.struct(F.col("v").alias("a"), F.col("u").alias("w")),
         )).alias("e")).select("e.a", "e.w")
-    # This batch's exact degree delta — persisted: consumed by the
-    # hub check here, the adjacency-delta hub exclusion, and its own
-    # state write below.
-    degd = sym_new.groupBy("a").agg(F.count(F.lit(1)).alias("d")).persist()
+    # This batch's exact degree delta, consumed by the hub check here,
+    # the adjacency-delta hub exclusion, and its own state write below.
+    degd = materialize(sym_new.groupBy("a").agg(F.count(F.lit(1)).alias("d")),
+                       eager=False)
     deg_prior = _read_batches(spark, deg_dir, "a long, d long",
                               exclude_key=batch_key)
     # Hub nodes by TOTAL degree (sum of deltas — exact; a node's
     # hub-ness is monotone, it can only ever grow into the cap).
     # Normally EMPTY; tiny by construction (≤ 2m / cap rows) and
-    # consumed by several anti-joins, so persisted + counted once.
-    hubs = (deg_prior.unionByName(degd)
-            .groupBy("a").agg(F.sum("d").alias("d"))
-            .where(F.col("d") > MAX_INTERSECT_DEGREE)
-            .select("a").persist())
+    # consumed by several anti-joins, so materialized once.
+    hubs = materialize(deg_prior.unionByName(degd)
+                       .groupBy("a").agg(F.sum("d").alias("d"))
+                       .where(F.col("d") > MAX_INTERSECT_DEGREE)
+                       .select("a"))
     any_hubs = hubs.count() > 0
 
     # Adjacency DELTA for this batch: each non-hub node's new
@@ -207,8 +206,8 @@ def _process_batch(batch: DataFrame, batch_key: str, state_dir: str,
     adj_src = sym_new
     if any_hubs:
         adj_src = sym_new.join(F.broadcast(hubs), "a", "left_anti")
-    adjd = (adj_src.groupBy("a").agg(F.collect_list("w").alias("nbrs"))
-            .persist())
+    adjd = materialize(adj_src.groupBy("a")
+                       .agg(F.collect_list("w").alias("nbrs")), eager=False)
     adj_prior = _read_batches(spark, adj_dir, "a long, nbrs array<long>",
                               exclude_key=batch_key)
     adj_all = adj_prior.unionByName(adjd)
@@ -216,21 +215,16 @@ def _process_batch(batch: DataFrame, batch_key: str, state_dir: str,
         # Drop deltas written before a node grew into the cap.
         adj_all = adj_all.join(F.broadcast(hubs), "a", "left_anti")
     # Full adjacency of E' for non-hub nodes: flatten-merge of the
-    # duplicate-free delta arrays — O(n) rows instead of the 2m-row
-    # collect_list the pre-r19 shape re-ran per batch; per-group
-    # buffers stay ≤ MAX_INTERSECT_DEGREE elements (hubs excluded).
-    # Checkpointed per batch: the fast path consumes the arrays under
-    # TWO differently-projected joins (u side, v side). A persist
-    # stopped the aggregate building twice (the r18 A/B: 109 → 68 s
-    # executor CPU) but the two BROADCASTS still built separately;
-    # an eager localCheckpoint makes both broadcasts hang off the
-    # same LogicalRDD leaf, so the second becomes a ReusedExchange
-    # (the same unification the r19 triangle-closure lifecycle
-    # measured), and the blocks are ContextCleaner-freed after the
-    # batch instead of living in the CacheManager.
-    adj = (adj_all.groupBy("a")
-           .agg(F.flatten(F.collect_list("nbrs")).alias("nbrs"))
-           .localCheckpoint(eager=True))
+    # duplicate-free delta arrays — O(n) rows instead of a 2m-row
+    # collect_list per batch; per-group buffers stay
+    # ≤ MAX_INTERSECT_DEGREE elements (hubs excluded). Materialized
+    # eagerly per batch: the fast path consumes the arrays under TWO
+    # differently-projected joins (u side, v side), and with both
+    # broadcasts hanging off the same LogicalRDD leaf the second
+    # becomes a ReusedExchange (a persist stops the aggregate building
+    # twice, 109 → 68 s executor CPU, but still builds two broadcasts).
+    adj = materialize(adj_all.groupBy("a")
+                      .agg(F.flatten(F.collect_list("nbrs")).alias("nbrs")))
     # Fast path: both endpoints sub-cap — one array intersection per
     # new edge, no candidate rows. w ≠ u/v holds by construction (the
     # canonical edge set has no self-loops, so u ∉ N(u)).
@@ -250,13 +244,13 @@ def _process_batch(batch: DataFrame, batch_key: str, state_dir: str,
     )
     tris = fast
     if any_hubs:
-        # Fallback for hub-touching edges: the pre-r18 row-expansion
-        # closure (candidates from u's adjacency rows, existence-
-        # checked against the edge set with LEFT SEMI — unique rows,
-        # so semi ≡ inner), which AQE can skew-split. Only this rare
-        # branch materializes the full-state union; it is persisted
-        # because the closure consumes sym twice.
-        all_edges = state.unionByName(new).persist()
+        # Fallback for hub-touching edges: the row-expansion closure
+        # (candidates from u's adjacency rows, existence-checked
+        # against the edge set with LEFT SEMI — unique rows, so
+        # semi ≡ inner), which AQE can skew-split. Only this rare
+        # branch materializes the full-state union, because the
+        # closure consumes sym twice.
+        all_edges = materialize(state.unionByName(new), eager=False)
         sym = all_edges.select(
             F.explode(F.array(
                 F.struct(F.col("u").alias("a"), F.col("v").alias("w")),
@@ -282,8 +276,8 @@ def _process_batch(batch: DataFrame, batch_key: str, state_dir: str,
     # Idempotent per-batch commits: overwrite THIS batch's partitions
     # only. A replay recomputes identical content (the reads above
     # excluded this partition) and overwrites in place — no appends,
-    # no duplicates (r13 review). Edge delta LAST: its existence must
-    # imply the deg/adj deltas exist (module docstring).
+    # no duplicates. Edge delta LAST: its existence must imply the
+    # deg/adj deltas exist (module docstring).
     tris.write.mode("overwrite").parquet(
         os.path.join(out_dir, f"batch_key={batch_key}"))
     degd.write.mode("overwrite").parquet(
@@ -292,10 +286,6 @@ def _process_batch(batch: DataFrame, batch_key: str, state_dir: str,
         os.path.join(adj_dir, f"batch_key={batch_key}"))
     new.write.mode("overwrite").parquet(
         os.path.join(state_dir, f"batch_key={batch_key}"))
-    for df in (new_raw, new, degd, hubs, adjd):
-        df.unpersist()
-    if any_hubs:
-        all_edges.unpersist()
 
 
 def streaming_triangles(spark: SparkSession, edges_dir: str,

@@ -386,6 +386,54 @@ def test_connected_components_driver_path_makes_no_checkpoint(spark,
     assert _cc_rows(labels) == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
 
 
+def test_materialize_uses_reliable_checkpoint_when_dir_is_set(tmp_path):
+    """With a checkpoint dir set on the SparkContext, materialize writes
+    reliable checkpoints there, and the operators that use it keep
+    their answers: both triangle modes hit the reference replay and
+    connected_components' distributed loop (threshold -1) matches the
+    union-find reference. A fresh process, because the suite's session
+    must not get a checkpoint dir."""
+    import json
+    import subprocess
+    import sys
+
+    tri_pairs = [(1, 2), (2, 3), (1, 3), (3, 4), (2, 4), (4, 4), (2, 1)]
+    cc_pairs, _ = CC_CASES["dup_reversed_self_loop"]
+    ckpt = str(tmp_path / "ckpt")
+    script = """
+import json, os, sys
+sys.path.insert(0, ".")
+from pyspark.sql import SparkSession
+from mapreduce_experiment_spark.operators import graph as G
+ckpt, tri, cc = sys.argv[1], json.loads(sys.argv[2]), json.loads(sys.argv[3])
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+         .getOrCreate())
+spark.sparkContext.setCheckpointDir(ckpt)
+e = spark.createDataFrame(tri, "src long, dst long")
+counts = [G.triangle_count(e, mode=m).collect()[0].n_triangles
+          for m in ("faithful", "simple")]
+labels = sorted((r.node, r.component) for r in G.connected_components(
+    spark.createDataFrame(cc, "src long, dst long")).collect())
+parts = [f for _, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")]
+print(json.dumps({"counts": counts, "labels": labels, "parts": len(parts)}))
+spark.stop()
+"""
+    r = subprocess.run(
+        [sys.executable, "-c", script, ckpt, json.dumps(tri_pairs),
+         json.dumps(cc_pairs)],
+        capture_output=True, text=True, timeout=300,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    assert r.returncode == 0, f"stdout:\n{r.stdout}\nstderr:\n{r.stderr[-2000:]}"
+    got = json.loads(r.stdout.strip().splitlines()[-1])
+    assert tuple(got["counts"]) == _replay_counts(
+        [f"{a} {b}" for a, b in tri_pairs])
+    assert [tuple(x) for x in got["labels"]] \
+        == _union_find_components(cc_pairs)
+    assert got["parts"] > 0, "no reliable checkpoint files were written"
+
+
 # --- property-based invariants (SURVEY §5.2 item 4) --------------------------
 
 edge_lists = st.lists(
@@ -408,24 +456,79 @@ def test_min_labels_matches_union_find(pairs):
         == _union_find_components(pairs)
 
 
-def test_triangle_queries_leave_no_cache_entries(spark):
-    """r18 review: _edge_common_closers left
-    three persisted DataFrames per invocation registered in the SQL
-    CacheManager with no unpersist — a long-lived session issuing
-    many triangle queries accumulated entries unboundedly. The r19
-    lifecycle replaces them with GC-scoped eager localCheckpoints
-    (ContextCleaner-freed with the result): after any triangle-family
-    action completes, the CacheManager must be EMPTY."""
-    spark.catalog.clearCache()
-    pairs = [(1, 2), (2, 3), (1, 3), (3, 4), (2, 4), (4, 4)]
-    e = _edges(spark, pairs)
+def _run_triangle_queries(spark, e, broadcast_off, tmp_path):
     assert G.triangle_count(e).collect()[0].n_triangles == 2
     assert len(_tri_set(G.triangles(e, mode="faithful"))) > 2
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    assert cm.isEmpty(), (
-        "triangle query left SQL cache entries registered — the "
-        "per-invocation cache leak is back"
+
+
+def _run_cc_distributed(spark, e, broadcast_off, tmp_path):
+    with broadcast_off():
+        G.connected_components(e).collect()
+
+
+def _run_streaming_triangles(spark, e, broadcast_off, tmp_path):
+    from mapreduce_experiment_spark.streaming.triangles import (
+        streaming_triangles,
     )
+    edges_dir = str(tmp_path / "edges_in")
+    e.coalesce(1).write.parquet(edges_dir)
+    work = str(tmp_path / "work")
+    assert len(_tri_set(streaming_triangles(spark, edges_dir, work))) == 2
+
+
+def _docs(spark):
+    base = "the quick brown fox jumps over the lazy dog " * 4
+    return spark.createDataFrame(
+        [(1, base), (2, base.replace("lazy", "sleepy", 1)),
+         (3, "completely different content about spark plans " * 4)],
+        "doc_id long, text string")
+
+
+def _run_kmeans(spark, e, broadcast_off, tmp_path):
+    from mapreduce_experiment_spark.operators import similarity as S
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 2), 1.0 - i % 2]) for i in range(6)],
+        "vec_id long, embedding array<float>")
+    assert S.kmeans_train(emb, k=2, n_iter=2)[0] == [0, 1]
+
+
+def _run_dedup(name):
+    def run(spark, e, broadcast_off, tmp_path):
+        from mapreduce_experiment_spark.operators import dedup as D
+
+        getattr(D, name)(_docs(spark)).collect()
+    return run
+
+
+NO_CACHE_CASES = {
+    "triangle_queries": _run_triangle_queries,
+    "pagerank": lambda spark, e, *_: G.pagerank(e).collect(),
+    "connected_components_driver":
+        lambda spark, e, *_: G.connected_components(e).collect(),
+    "connected_components_distributed": _run_cc_distributed,
+    "ngram_jaccard_pairs": _run_dedup("ngram_jaccard_pairs"),
+    "minhash_dedup_pairs": _run_dedup("minhash_dedup_pairs"),
+    "span_deduped_corpus": _run_dedup("span_deduped_corpus"),
+    "kmeans_train": _run_kmeans,
+    "streaming_triangles": _run_streaming_triangles,
+}
+
+
+@pytest.mark.parametrize("case", sorted(NO_CACHE_CASES))
+def test_operators_leave_no_cache_entries(spark, broadcast_off, tmp_path,
+                                          case):
+    """Operators materialize their reused intermediates through
+    session.materialize, whose blocks the ContextCleaner frees with
+    the result; connected_components unpersists the one table it
+    persists. So after any of these actions the SQL CacheManager is
+    EMPTY — a long-lived session issuing many queries accumulates no
+    entries."""
+    spark.catalog.clearCache()
+    e = _edges(spark, [(1, 2), (2, 3), (1, 3), (3, 4), (2, 4), (4, 4)])
+    NO_CACHE_CASES[case](spark, e, broadcast_off, tmp_path)
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty(), f"{case} left SQL cache entries registered"
 
 
 def test_streaming_triangles_span_batches(spark, tmp_path):

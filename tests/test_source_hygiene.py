@@ -212,3 +212,47 @@ def test_package_names_no_checkout_warehouse():
                     if "spark-warehouse" in f.read():
                         offenders.append(os.path.relpath(path, _REPO_DIR))
     assert not offenders, offenders
+
+
+def test_one_materialization_idiom():
+    """Every reused intermediate in the package is materialized through
+    ``session.materialize``, the one place that picks a reliable or a
+    local checkpoint. A ``persist``/``cache``/``localCheckpoint``/
+    ``checkpoint`` call anywhere else fails until it goes through the
+    helper or is added here with its reason."""
+    allowed = {
+        ("session.py", "materialize"),
+        # The canonical edge table: the driver-path decision reads the
+        # cached relation's MEASURED bytes, and a checkpoint carries
+        # only the optimizer's size estimate.
+        ("operators/graph.py", "connected_components"),
+    }
+    calls = set()
+    offenders = []
+    for root, _dirs, files in os.walk(_PKG_DIR):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, _PKG_DIR)
+            with open(path) as f:
+                tree = ast.parse(f.read(), filename=path)
+
+            def walk(node, func):
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    func = node.name
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in ("persist", "cache",
+                                               "localCheckpoint",
+                                               "checkpoint")):
+                    calls.add((rel, func))
+                    if (rel, func) not in allowed:
+                        offenders.append((rel, func, node.lineno))
+                for child in ast.iter_child_nodes(node):
+                    walk(child, func)
+            walk(tree, None)
+    assert not offenders, (
+        f"materialization outside session.materialize: {offenders} — "
+        "call materialize(df, eager) instead")
+    assert calls == allowed, f"stale allowlist entries: {allowed - calls}"
