@@ -516,22 +516,23 @@ SPAN_N = 8  # window length in tokens (scale-down of Lee et al.'s 50
 # for the synthetic ~54-token documents; a real corpus run raises it)
 
 
-def span_window_fingerprints(docs: DataFrame, n: int) -> DataFrame:
-    """One row per length-``n`` token window: (doc_id, i, fp) with
+def span_window_fingerprints(docs: DataFrame) -> DataFrame:
+    """One row per length-``SPAN_N`` token window: (doc_id, i, fp) with
     ``i`` the 1-based token position and ``fp`` the 60-bit hash of
     the window text. The single corpus-scale intermediate of the
     span-dedup family: token-count-sized, produced by one narrow
     scan (tokenize once, expand in-row) — no shuffle below it."""
     toks = tokenize(F.col("text"))
     win = F.transform(
-        F.sequence(F.lit(1), F.size("_toks") - (n - 1)),
+        F.sequence(F.lit(1), F.size("_toks") - (SPAN_N - 1)),
         lambda i: F.struct(
             i.alias("i"),
-            hash60(F.concat_ws(" ", F.slice("_toks", i, n))).alias("fp")),
+            hash60(F.concat_ws(" ", F.slice("_toks", i, SPAN_N)))
+            .alias("fp")),
     )
     return (
         docs.select("doc_id", toks.alias("_toks"))
-        .where(F.size("_toks") >= n)
+        .where(F.size("_toks") >= SPAN_N)
         .select("doc_id", F.explode(win).alias("w"))
         .select("doc_id", F.col("w.i").cast("long").alias("i"), "w.fp")
     )
@@ -569,7 +570,7 @@ def _merge_islands(flagged: DataFrame, n: int) -> DataFrame:
     )
 
 
-def repeated_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
+def repeated_spans(docs: DataFrame) -> DataFrame:
     """Maximal cross-document repeated regions: every merged run of
     token windows whose fingerprint occurs in >= 2 distinct docs, as
     (doc_id, span_start, span_len, lead_fp).
@@ -591,15 +592,15 @@ def repeated_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     at the 10× corpus against scanning twice. Same in
     :func:`span_deduped_corpus`.
     """
-    fpw = materialize(span_window_fingerprints(docs, n))
+    fpw = materialize(span_window_fingerprints(docs))
     rep = (fpw.groupBy("fp")
            .agg(F.count_distinct("doc_id").alias("n_docs"))
            .where(F.col("n_docs") >= 2)
            .select("fp"))
-    return _merge_islands(fpw.join(rep, "fp"), n)
+    return _merge_islands(fpw.join(rep, "fp"), SPAN_N)
 
 
-def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
+def span_deduped_corpus(docs: DataFrame) -> DataFrame:
     """Keep-first span removal (the Lee et al. removal step), at
     window granularity: a token is dropped iff it is covered by some
     repeated window whose keeper is ANOTHER doc (the window's
@@ -618,7 +619,7 @@ def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
 
     Scale shape: same fingerprint-group skeleton as repeated_spans;
     the coverage algebra (removable minus owned) runs on EXPLODED
-    flagged windows — bounded by repeated-window count x n, not
+    flagged windows — bounded by repeated-window count x SPAN_N, not
     corpus size; the removal itself is a pure per-row expression
     (filter tokens by index against the doc's merged removed runs),
     applied via a LEFT join of the corpus to its region lists: docs
@@ -626,7 +627,7 @@ def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     """
     # Shared by the owner aggregate and the flagging join, as in
     # repeated_spans.
-    fpw = materialize(span_window_fingerprints(docs, n))
+    fpw = materialize(span_window_fingerprints(docs))
     owner = (fpw.groupBy("fp")
              .agg(F.count_distinct("doc_id").alias("n_docs"),
                   F.min("doc_id").alias("min_doc"))
@@ -643,7 +644,8 @@ def span_deduped_corpus(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     # hash match cross-checks the two algebras against each other).
     coverage = flagged.select(
         "doc_id",
-        F.explode(F.sequence(F.col("i"), F.col("i") + (n - 1))).alias("j"),
+        F.explode(F.sequence(F.col("i"), F.col("i") + (SPAN_N - 1)))
+         .alias("j"),
         (F.col("doc_id") != F.col("min_doc")).alias("_removable"))
     removed = (coverage.groupBy("doc_id", "j")
                .agg(F.min("_removable").alias("_all_rm"))

@@ -82,16 +82,15 @@ def extract_features(media: DataFrame) -> DataFrame:
             if not len(pdf):
                 # A 0-row frame would build object-typed columns that
                 # Arrow can't map to the declared longs — the same
-                # hazard the minhash signature generator guards (r14
-                # review).
+                # hazard the minhash signature generator guards.
                 continue
             hists = [
                 np.bincount(
                     # NULL payload scores as empty bytes (all-zero
                     # histogram) instead of crashing the whole job
-                    # with a TypeError inside the Arrow worker (r14
-                    # review; unreachable from build_media_table,
-                    # whose payloads are encode() of non-null text).
+                    # with a TypeError inside the Arrow worker
+                    # (unreachable from build_media_table, whose
+                    # payloads are encode() of non-null text).
                     np.frombuffer(p if p is not None else b"",
                                   dtype=np.uint8) % N_BUCKETS,
                     minlength=N_BUCKETS,
@@ -111,11 +110,10 @@ FRAME_BYTES = 32
 FRAME_STRIDE = 4
 
 
-def sample_frames(media: DataFrame, frame_bytes: int = FRAME_BYTES,
-                  stride: int = FRAME_STRIDE) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame sampling over opaque binary payloads: treat the payload
-    as fixed-width frames, keep every ``stride``-th one, fingerprint
-    each kept frame.
+    as ``FRAME_BYTES``-wide frames, keep every ``FRAME_STRIDE``-th one,
+    fingerprint each kept frame.
 
     The video-pipeline shape (decode-free): a real sampler swaps the
     fixed-width slice for codec frame boundaries, but the Spark
@@ -124,31 +122,22 @@ def sample_frames(media: DataFrame, frame_bytes: int = FRAME_BYTES,
     All JVM expressions (sequence/explode/substring/md5 on binary), so
     the explosion and hashing run in codegen with no Python hop.
     """
-    # Parameter guards (r14 review): frame_bytes <= 0 fed a zero/
-    # negative divisor into the frame-count division (ANSI
-    # DIVIDE_BY_ZERO at runtime), and stride <= 0 a non-positive
-    # sequence step (runtime error mid-job) — fail at call time with
-    # the actual mistake named.
-    if int(frame_bytes) <= 0:
-        raise ValueError("frame_bytes must be positive")
-    if int(stride) <= 0:
-        raise ValueError("stride must be positive")
     df = media.select(
         "media_id", "payload",
-        F.floor(F.length("payload") / F.lit(frame_bytes))
+        F.floor(F.length("payload") / F.lit(FRAME_BYTES))
          .cast("long").alias("nf"),
     ).where(F.col("nf") >= 1)  # guard: sequence() counts DOWN if end < start
     return df.select(
         "media_id",
-        F.explode(F.sequence(F.lit(0), F.col("nf") - 1, F.lit(stride)))
+        F.explode(F.sequence(F.lit(0), F.col("nf") - 1, F.lit(FRAME_STRIDE)))
          .alias("frame_idx"),
         "payload",
     ).select(
         "media_id",
         F.col("frame_idx").cast("long").alias("frame_idx"),
         F.md5(F.expr(
-            f"substring(payload, frame_idx * {frame_bytes} + 1,"
-            f" {frame_bytes})")).alias("frame_md5"),
+            f"substring(payload, frame_idx * {FRAME_BYTES} + 1,"
+            f" {FRAME_BYTES})")).alias("frame_md5"),
     )
 
 

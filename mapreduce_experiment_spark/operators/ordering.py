@@ -38,20 +38,14 @@ _HASH60_SPACE = 1 << 60  # hash60 yields 15 hex chars: [0, 2^60)
 N_SHUFFLE_BUCKETS = 1024
 
 
-def corpus_shuffle(docs: DataFrame, seed: str = "shuffle-v1",
-                   n_buckets: int = N_SHUFFLE_BUCKETS) -> DataFrame:
+def corpus_shuffle(docs: DataFrame, seed: str = "shuffle-v1") -> DataFrame:
     """Deterministic seeded shuffle order: (doc_id, shuffle_pos) with
     ``shuffle_pos`` in 1..N, the rank of ``hash60(seed || id)`` (id
     tie-break for the negligible collision case). Same seed → same
     order on any cluster, any partitioning, any engine — the DuckDB
     oracle replays the hash and a global ``row_number`` and must
     match value-for-value."""
-    if n_buckets <= 0:
-        # Unguarded this crashed driver-side with ZeroDivisionError
-        # (r14 review); the parameter is a parallelism knob, never
-        # legitimately non-positive.
-        raise ValueError("n_buckets must be positive")
-    width = _HASH60_SPACE // n_buckets
+    width = _HASH60_SPACE // N_SHUFFLE_BUCKETS
     h = hash60(F.concat(F.lit(seed + ":"), F.col("doc_id").cast("string")))
     # Integer `div`, not float division: hashes exceed 2^53, where a
     # double quotient can round across a bucket boundary and break
@@ -61,7 +55,7 @@ def corpus_shuffle(docs: DataFrame, seed: str = "shuffle-v1",
         "_b", F.expr(f"_h div {width}"))
     counts = hashed.groupBy("_b").agg(F.count(F.lit(1)).alias("_n"))
     # Offsets over the B-row bucket-count table: the ONLY unpartitioned
-    # window, bounded by n_buckets — never by corpus size.
+    # window, bounded by N_SHUFFLE_BUCKETS — never by corpus size.
     offsets = counts.select(
         "_b",
         (F.sum("_n").over(

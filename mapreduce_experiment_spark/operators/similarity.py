@@ -8,7 +8,7 @@ Two paths, same output contract (query_id, neighbor_id, rank, cos):
   k rows per query survive per partition before the final merge.
 - **IVF** (inverted file): corpus vectors are pre-assigned to their
   nearest centroid (one narrow pass + a broadcast of centroids);
-  queries probe the ``nprobe`` nearest centroids and search only
+  queries probe the ``N_PROBE`` nearest centroids and search only
   those buckets. Sub-linear scan at scale; deterministic here
   (centroids are fixed seed vectors) so it is value-testable against
   a mirrored SQL oracle.
@@ -40,47 +40,48 @@ SRP_ROWS = 6
 EMBED_DIM = 64  # testdata embeddings.parquet vector width
 
 
-@_functools.lru_cache(maxsize=8)
-def _srp_planes_cached(n_planes: int) -> tuple[tuple[float, ...], ...]:
+@_functools.cache
+def _srp_planes_cached() -> tuple[tuple[float, ...], ...]:
     import hashlib
 
     return tuple(
         tuple(1.0 if hashlib.md5(
             f"srp-{p}-{i}".encode()).digest()[0] % 2 == 0
             else -1.0 for i in range(EMBED_DIM))
-        for p in range(n_planes)
+        for p in range(SRP_BANDS * SRP_ROWS)
     )
 
 
-def srp_planes(n_planes: int = SRP_BANDS * SRP_ROWS) -> list[list[float]]:
+def srp_planes() -> list[list[float]]:
     """Deterministic Rademacher (±1) hyperplanes for sign-random-
-    projection hashing. Components come from md5 of the (plane, index)
-    pair — no RNG state, so the SAME planes are embeddable as literals
-    in both the Spark plan and the DuckDB oracle SQL.
+    projection hashing, ``SRP_BANDS * SRP_ROWS`` of them. Components
+    come from md5 of the (plane, index) pair — no RNG state, so the
+    SAME planes are embeddable as literals in both the Spark plan and
+    the DuckDB oracle SQL.
 
-    The md5 work (thousands of digests) is memoized per n_planes —
+    The md5 work (thousands of digests) is memoized once per process —
     this is called on every index write, probe-time config
     validation, and oracle build. The cache holds immutable tuples;
     the fresh outer lists returned here keep callers free to mutate."""
-    return [list(p) for p in _srp_planes_cached(n_planes)]
+    return [list(p) for p in _srp_planes_cached()]
 
 
-def srp_signatures(embeddings: DataFrame, bands: int = SRP_BANDS,
-                   rows: int = SRP_ROWS) -> DataFrame:
+def srp_signatures(embeddings: DataFrame) -> DataFrame:
     """(vec_id, band_id, band_val) sign-projection signatures.
 
-    Each band value packs ``rows`` sign bits of q6-quantized plane dot
-    products (quantized so a last-ulp summation difference between
-    engines cannot flip a sign at the boundary). Executed as ONE numpy
-    matmul per Arrow batch (`mapInPandas`) — 72 dot products × 64 dims
-    per row as JVM fold expressions bloats the Catalyst tree and runs
-    interpreted; the BLAS path is both the fast and the scale shape
-    (narrow input, map-side only, no shuffle).
+    Each of ``SRP_BANDS`` band values packs ``SRP_ROWS`` sign bits of
+    q6-quantized plane dot products (quantized so a last-ulp summation
+    difference between engines cannot flip a sign at the boundary).
+    Executed as ONE numpy matmul per Arrow batch (`mapInPandas`) — 72
+    dot products × 64 dims per row as JVM fold expressions bloats the
+    Catalyst tree and runs interpreted; the BLAS path is both the fast
+    and the scale shape (narrow input, map-side only, no shuffle).
     """
     import numpy as np
     import pandas as pd
 
-    p_mat = np.array(srp_planes(bands * rows), dtype=np.float64)  # (P, dim)
+    bands, rows = SRP_BANDS, SRP_ROWS
+    p_mat = np.array(srp_planes(), dtype=np.float64)             # (P, dim)
     weights = (1 << np.arange(rows, dtype=np.int64))
 
     def sig(batches):
@@ -281,9 +282,9 @@ def _vec_batches(embeddings: DataFrame):
     return _prep(embeddings).select("vec_id", "vec")
 
 
-def kmeans_train(embeddings: DataFrame, k: int = KMEANS_K,
-                 n_iter: int = KMEANS_ITER):
-    """``n_iter`` Lloyd rounds from the ``vec_id < k`` seed vectors.
+def kmeans_train(embeddings: DataFrame):
+    """``KMEANS_ITER`` Lloyd rounds from the ``vec_id < KMEANS_K`` seed
+    vectors.
 
     Returns ``(cent_ids, cents)``: surviving centroid ids (ascending)
     and their int64 micro-unit vectors, one row each. Update rule per
@@ -297,11 +298,11 @@ def kmeans_train(embeddings: DataFrame, k: int = KMEANS_K,
     import numpy as np
 
     v = materialize(_vec_batches(embeddings), eager=False)
-    seeds = sorted(v.where(F.col("vec_id") < k).collect(),
+    seeds = sorted(v.where(F.col("vec_id") < KMEANS_K).collect(),
                    key=lambda r: r.vec_id)
     cent_ids = [r.vec_id for r in seeds]
     cents = _quantize_mat(np.array([r.vec for r in seeds], dtype=np.float64))
-    for _ in range(n_iter):
+    for _ in range(KMEANS_ITER):
         agg = (
             _kmeans_partial_sums(v, cent_ids, cents)
             .groupBy("centroid_id", "pos")
@@ -483,27 +484,26 @@ def _assign_to_centroids(corpus: DataFrame,
     )
 
 
-def _seed_centroids(v: DataFrame, n_centroids: int) -> DataFrame:
-    """(centroid_id, cv, cn): the seed vectors ``vec_id < n_centroids``
+def _seed_centroids(v: DataFrame) -> DataFrame:
+    """(centroid_id, cv, cn): the seed vectors ``vec_id < N_CENTROIDS``
     of prepped ``v``, the one centroid definition of every IVF path."""
-    return v.where(F.col("vec_id") < n_centroids).select(
+    return v.where(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("centroid_id"), F.col("vec").alias("cv"),
         F.col("norm").alias("cn"))
 
 
-def ivf_assignments(embeddings: DataFrame,
-                    n_centroids: int = N_CENTROIDS) -> DataFrame:
+def ivf_assignments(embeddings: DataFrame) -> DataFrame:
     """Assign every corpus vector to its nearest centroid.
 
-    Centroids are the seed vectors ``vec_id < n_centroids`` — a
+    Centroids are the seed vectors ``vec_id < N_CENTROIDS`` — a
     deterministic stand-in for k-means (which would converge to
     data-dependent floats and break value-level oracle checks).
     One broadcast join + one argmax aggregate (``max_by`` with
     map-side partial combine); no iteration.
     """
     v = _prep(embeddings)
-    return _assign_to_centroids(v.where(F.col("vec_id") >= n_centroids),
-                                _seed_centroids(v, n_centroids))
+    return _assign_to_centroids(v.where(F.col("vec_id") >= N_CENTROIDS),
+                                _seed_centroids(v))
 
 
 def _ivf_queries(v: DataFrame, n_queries: int) -> DataFrame:
@@ -516,13 +516,12 @@ def _ivf_queries(v: DataFrame, n_queries: int) -> DataFrame:
         F.col("norm").alias("qn"))
 
 
-def _ivf_probes(v: DataFrame, n_queries: int, n_centroids: int,
-                nprobe: int) -> DataFrame:
-    """Per-query nprobe nearest seed centroids by quantized cosine,
+def _ivf_probes(v: DataFrame, n_queries: int) -> DataFrame:
+    """Per-query ``N_PROBE`` nearest seed centroids by quantized cosine,
     (ccos desc, centroid_id) tie-break — the single source of truth
     for probe selection."""
     queries = _ivf_queries(v, n_queries)
-    centroids = _seed_centroids(v, n_centroids)
+    centroids = _seed_centroids(v)
     probe_scored = (
         F.broadcast(queries).crossJoin(F.broadcast(centroids))
         .select("query_id", "centroid_id",
@@ -533,7 +532,7 @@ def _ivf_probes(v: DataFrame, n_queries: int, n_centroids: int,
         F.col("ccos").desc(), F.col("centroid_id"))
     return (
         probe_scored.withColumn("rn", F.row_number().over(wp))
-        .where(F.col("rn") <= nprobe)
+        .where(F.col("rn") <= N_PROBE)
         .select("query_id", "centroid_id")
     )
 
@@ -569,19 +568,17 @@ def _score_bucket_cands(probes: DataFrame, buckets: DataFrame,
     )
 
 
-def _ivf_buckets(embeddings: DataFrame, n_queries: int,
-                n_centroids: int) -> DataFrame:
+def _ivf_buckets(embeddings: DataFrame, n_queries: int) -> DataFrame:
     """Bucketed corpus of the in-memory probe join: excludes queries
     AND centroid seeds, the same membership as :func:`_write_ivf_index`
-    (``vec_id >= max(n_queries, n_centroids)``)."""
-    return ivf_assignments(embeddings, n_centroids).where(
-        F.col("vec_id") >= n_queries)
+    (``vec_id >= max(n_queries, N_CENTROIDS)``)."""
+    return ivf_assignments(embeddings).where(F.col("vec_id") >= n_queries)
 
 
-def knn_ivf(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-            n_centroids: int = N_CENTROIDS, nprobe: int = N_PROBE) -> DataFrame:
-    """Approximate top-k: probe the ``nprobe`` nearest centroids per
-    query and search only their buckets.
+def knn_ivf(embeddings: DataFrame, n_queries: int = 10,
+            k: int = 5) -> DataFrame:
+    """Approximate top-k: probe the ``N_PROBE`` nearest of the
+    ``N_CENTROIDS`` centroids per query and search only their buckets.
 
     At 100 TB the bucketed corpus is written partitioned by
     ``centroid_id`` so a probe prunes partitions at the scan; here the
@@ -593,8 +590,8 @@ def knn_ivf(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     0.92) by ``test_ivf_recall_vs_bruteforce``.
     """
     v = _prep(embeddings)
-    probes = _ivf_probes(v, n_queries, n_centroids, nprobe)
-    buckets = _ivf_buckets(embeddings, n_queries, n_centroids)
+    probes = _ivf_probes(v, n_queries)
+    buckets = _ivf_buckets(embeddings, n_queries)
     cands = _score_bucket_cands(probes, buckets, v,
                                 _ivf_queries(v, n_queries))
     return _topk(cands, k)
@@ -612,8 +609,7 @@ def _write_ivf_index(batch: DataFrame, centroids_src: DataFrame, path: str,
     (:func:`_assign_to_centroids`)."""
     bv = _prep(batch).where(
         F.col("vec_id") >= max(n_queries, N_CENTROIDS))
-    assign = _assign_to_centroids(
-        bv, _seed_centroids(_prep(centroids_src), N_CENTROIDS))
+    assign = _assign_to_centroids(bv, _seed_centroids(_prep(centroids_src)))
     (assign.join(bv, "vec_id")
      .select("vec_id", "vec", "norm", "centroid_id")
      .write.mode(mode).partitionBy("centroid_id").parquet(path))
@@ -625,7 +621,7 @@ def write_ivf_index(embeddings: DataFrame, path: str,
     bucketed corpus written ``partitionBy("centroid_id")``. This is the
     persistence step that turns the probe's equi-join into a
     partition-PRUNED scan — at 100 TB the index is written once and
-    every query batch reads only ``nprobe`` of ``N_CENTROIDS``
+    every query batch reads only ``N_PROBE`` of ``N_CENTROIDS``
     directories."""
     _write_ivf_index(embeddings, embeddings, path, "overwrite", n_queries)
 
@@ -674,7 +670,7 @@ def compact_ivf_index(spark, path: str, new_path: str) -> None:
 SRP_INDEX_BUCKETS = 16
 
 
-def srp_config_props(bands: int, rows: int) -> dict[str, str]:
+def srp_config_props() -> dict[str, str]:
     """The banding configuration an SRP index is bound to, as table
     properties: bands/rows/dim plus an md5 fingerprint of the actual
     plane matrix (the planes are md5-derived from indices, so the
@@ -683,16 +679,16 @@ def srp_config_props(bands: int, rows: int) -> dict[str, str]:
     instead of silently probing with different geometry). The plane
     matrix, its repr, and the fingerprint are memoized — this runs on
     every index write AND every probe-time validation."""
-    return {"srp.bands": str(bands), "srp.rows": str(rows),
+    return {"srp.bands": str(SRP_BANDS), "srp.rows": str(SRP_ROWS),
             "srp.dim": str(EMBED_DIM),
-            "srp.planes_md5": _srp_planes_md5(bands * rows)}
+            "srp.planes_md5": _srp_planes_md5()}
 
 
-@_functools.lru_cache(maxsize=8)
-def _srp_planes_md5(n_planes: int) -> str:
+@_functools.cache
+def _srp_planes_md5() -> str:
     import hashlib
 
-    return hashlib.md5(repr(srp_planes(n_planes)).encode()).hexdigest()
+    return hashlib.md5(repr(srp_planes()).encode()).hexdigest()
 
 
 def _tblproperties(spark, table: str) -> dict[str, str]:
@@ -702,14 +698,13 @@ def _tblproperties(spark, table: str) -> dict[str, str]:
             for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()}
 
 
-def validate_srp_index_config(spark, table: str, bands: int,
-                              rows: int) -> None:
+def validate_srp_index_config(spark, table: str) -> None:
     """Raise ValueError unless ``table`` was written with exactly this
-    banding configuration: a mismatched probe equi-join silently
-    misses true pairs — band values pack ``rows`` sign bits, so there
-    is no schema-level error to save you."""
+    module's banding configuration: a mismatched probe equi-join
+    silently misses true pairs — band values pack ``SRP_ROWS`` sign
+    bits, so there is no schema-level error to save you."""
     got = _tblproperties(spark, table)
-    want = srp_config_props(bands, rows)
+    want = srp_config_props()
     bad = {k: (got.get(k), v) for k, v in want.items() if got.get(k) != v}
     if bad:
         raise ValueError(
@@ -739,8 +734,7 @@ def _write_srp_table(sigs: DataFrame, table: str, mode: str,
         sigs.sparkSession.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
 
 
-def write_srp_index(embeddings: DataFrame, table: str, path: str,
-                    bands: int = SRP_BANDS, rows: int = SRP_ROWS) -> None:
+def write_srp_index(embeddings: DataFrame, table: str, path: str) -> None:
     """Materialize the SRP-LSH signature index as an external table at
     ``path``, BUCKETED on (band_id, band_val) — the embedding analogue
     of :func:`write_ivf_index`: a 100 TB pipeline computes signatures
@@ -768,12 +762,11 @@ def write_srp_index(embeddings: DataFrame, table: str, path: str,
     raises instead of silently missing true pairs:
     :func:`embedding_near_dups_probe_index` validates them.
     """
-    _write_srp_table(srp_signatures(embeddings, bands, rows), table,
-                     "overwrite", srp_config_props(bands, rows), path=path)
+    _write_srp_table(srp_signatures(embeddings), table,
+                     "overwrite", srp_config_props(), path=path)
 
 
-def append_srp_index(batch: DataFrame, table: str,
-                     bands: int = SRP_BANDS, rows: int = SRP_ROWS) -> None:
+def append_srp_index(batch: DataFrame, table: str) -> None:
     """Append a new batch's signatures into an existing SRP index —
     the write half of the daily-ingest cycle (probe the batch with
     :func:`embedding_near_dups_probe_index`, THEN append it so
@@ -788,8 +781,8 @@ def append_srp_index(batch: DataFrame, table: str,
     (pinned by ``test_srp_index_append_cycle``). At 100 TB an ingest
     pipeline compacts buckets on a schedule; correctness never
     depends on file count."""
-    validate_srp_index_config(batch.sparkSession, table, bands, rows)
-    _write_srp_table(srp_signatures(batch, bands, rows), table, "append")
+    validate_srp_index_config(batch.sparkSession, table)
+    _write_srp_table(srp_signatures(batch), table, "append")
 
 
 def compact_srp_index(spark, table: str, new_table: str, path: str) -> None:
@@ -843,15 +836,13 @@ def embedding_near_dups_from_index(spark, embeddings: DataFrame, table: str,
 
 def embedding_near_dups_probe_index(spark, batch: DataFrame,
                                     verify_vectors: DataFrame, table: str,
-                                    threshold: float = 0.45,
-                                    bands: int = SRP_BANDS,
-                                    rows: int = SRP_ROWS) -> DataFrame:
+                                    threshold: float = 0.45) -> DataFrame:
     """Incremental near-dup probe: signatures are computed for the NEW
     ``batch`` only (one narrow Arrow pass over the batch — the indexed
     corpus is never re-projected) and equi-joined against the persisted
-    signature index on (band_id, band_val). ``bands``/``rows`` MUST
-    match the parameters the index was written with; that contract is
-    machine-checked here against the banding config
+    signature index on (band_id, band_val). The index MUST have been
+    written with this module's ``SRP_BANDS``/``SRP_ROWS``; that contract
+    is machine-checked here against the banding config
     :func:`write_srp_index` stores as table properties —
     :func:`validate_srp_index_config` raises on mismatch instead of
     letting the equi-join silently miss true pairs (pinned by
@@ -874,8 +865,8 @@ def embedding_near_dups_probe_index(spark, batch: DataFrame,
     pairs among batch rows come from the batch's own self-join, which
     is :func:`embedding_near_dup_pairs_lsh` on the batch alone).
     """
-    validate_srp_index_config(spark, table, bands, rows)
-    bsigs = srp_signatures(batch, bands, rows)
+    validate_srp_index_config(spark, table)
+    bsigs = srp_signatures(batch)
     isigs = spark.table(table)
     cands = (
         isigs.select(F.col("vec_id").alias("id_a"), "band_id", "band_val")
@@ -922,8 +913,7 @@ def embedding_near_dups_probe_index(spark, batch: DataFrame,
 
 
 def knn_ivf_pruned(spark, embeddings: DataFrame, path: str,
-                   n_queries: int = 10, k: int = 5,
-                   nprobe: int = N_PROBE) -> DataFrame:
+                   n_queries: int = 10, k: int = 5) -> DataFrame:
     """:func:`knn_ivf` served from the persisted index at ``path``
     (written by :func:`write_ivf_index`): value-identical output, but
     the corpus scan is partition-pruned to the probed centroids —
@@ -931,22 +921,22 @@ def knn_ivf_pruned(spark, embeddings: DataFrame, path: str,
     (``test_plans.py`` asserts the scan's PartitionFilters).
 
     The probed-centroid set is collected to the driver first (bounded
-    by nprobe x n_queries — query-batch-sized, like the query vectors
+    by N_PROBE x n_queries — query-batch-sized, like the query vectors
     themselves) so the pruning is STATIC: visible in the plan before
     execution, no DPP runtime machinery needed.
     """
     v = _prep(embeddings)
     queries = _ivf_queries(v, n_queries)
-    probes = _ivf_probes(v, n_queries, N_CENTROIDS, nprobe)
+    probes = _ivf_probes(v, n_queries)
     # Static pruning only makes sense for a bounded probe set: the
     # IN-list is driver state AND a per-task filter. A misconfigured
     # huge query batch must fail loudly here, not build a
     # million-element predicate — batch-split or fall back to the
     # equi-join path (knn_ivf) instead.
-    n_probe_ids = nprobe * n_queries
+    n_probe_ids = N_PROBE * n_queries
     if n_probe_ids > 10_000:
         raise ValueError(
-            f"knn_ivf_pruned: nprobe*n_queries = {n_probe_ids} probed "
+            f"knn_ivf_pruned: N_PROBE*n_queries = {n_probe_ids} probed "
             "centroids exceeds the static-pruning bound (10000); "
             "split the query batch or use knn_ivf's equi-join path")
     # Collect the probe PAIRS once (bounded by the guard above) and

@@ -32,10 +32,9 @@ LANGS = tuple(STOPWORDS)  # fixed order = deterministic tie-break
 # Whitespace is spelled out instead of `\s` because the engines
 # disagree on it: Java's default `\s` is [ \t\n\x0B\f\r] while
 # DuckDB's RE2 `\s` is [ \t\n\f\r] — WITHOUT vertical tab — so a
-# U+000B in the text made the oracle count one extra segment (r14
-# adversarial rehearsal, reproduced live). The explicit class is
-# Java's set, so Spark-side values are unchanged and both engines
-# now agree. Pinned by test_token_and_quality_survive_dirty_text.
+# U+000B in the text would make the oracle count one extra segment.
+# The explicit class is Java's set, so both engines agree. Pinned by
+# test_token_and_quality_survive_dirty_text.
 BPE_ISH = "[a-z0-9]+|[^a-z0-9 \\t\\n\\r\\f\\x0b]"
 
 # Word n-gram length of fingerprints and decontamination.
@@ -55,9 +54,8 @@ def lang_id(docs: DataFrame) -> DataFrame:
     """Predict language by stopword hits; ties resolve in LANGS order,
     zero hits → 'und' (undetermined). NULL text folds into the
     empty-string case (zero hits everywhere → 'und') — unguarded, the
-    hit counts were NULL and the when-chain fell through to a NULL
-    pred_lang bucket (r13 text review, deferred to r14); the same
-    convention quality_features uses."""
+    hit counts would be NULL and the when-chain would fall through to a
+    NULL pred_lang bucket; the same convention quality_features uses."""
     scores = lang_scores(F.coalesce(F.col("text"), F.lit("")))
     best = F.greatest(*[scores[lg] for lg in LANGS])
     pred = F.when(best == 0, F.lit("und"))
@@ -73,10 +71,10 @@ def quality_features(docs: DataFrame) -> DataFrame:
     All ratios come from integer counts quantized with floor(+0.5), so
     the values are cross-engine deterministic.
     """
-    # NULL text folds into the empty-string case (r13 review: NULL
-    # propagated through every feature, and F.least SKIPS null
-    # operands, so a null-text doc scored a PERFECT 1.0 and sailed
-    # through quality_filter's null-comparison when-chain as 'kept').
+    # NULL text folds into the empty-string case: NULL would propagate
+    # through every feature, and F.least SKIPS null operands, so a
+    # null-text doc would score a PERFECT 1.0 and sail through
+    # quality_filter's null-comparison when-chain as 'kept'.
     # As '' it takes the ordinary path: one phantom token, zero
     # ratios, score 0.0, reason 'too_short'.
     text = F.coalesce(F.col("text"), F.lit(""))
@@ -89,9 +87,9 @@ def quality_features(docs: DataFrame) -> DataFrame:
         toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
     q6 = lambda c: F.floor(c * 1_000_000 + 0.5) / 1_000_000.0  # noqa: E731
     # Zero-guard: ANSI-on Spark 4 (the session default) hard-fails
-    # the division on an empty doc instead of scoring it (r13 review,
-    # reproduced live); an empty doc is simply zero-alpha. n_tokens
-    # needs no guard — tokenize('') yields [''], so it is never 0.
+    # the division on an empty doc instead of scoring it; an empty doc
+    # is simply zero-alpha. n_tokens needs no guard — tokenize('')
+    # yields [''], so it is never 0.
     alpha_ratio = q6(F.when(n_chars == 0, F.lit(0.0))
                      .otherwise(n_alpha.cast("double") / n_chars))
     stop_ratio = q6(n_stop.cast("double") / n_tokens)
@@ -112,7 +110,7 @@ def quality_features(docs: DataFrame) -> DataFrame:
 def quality_filter(docs: DataFrame, min_tokens: int = 10,
                    min_alpha: float = 0.70, min_stop: float = 0.02,
                    min_score: float = 0.55) -> DataFrame:
-    """Keep/drop verdict per doc with a FIRST-FAILING-RULE reason —
+    """Keep/drop decision per doc with a FIRST-FAILING-RULE reason —
     the audit trail a production filter chain emits so drop rates are
     attributable per rule (C4/Gopher-rules family).
 
@@ -151,65 +149,56 @@ PACK_CAPACITY = 2048
 PACK_SHARDS = 8
 
 
-def pack_sequences(docs: DataFrame, capacity: int = PACK_CAPACITY,
-                   n_shards: int = PACK_SHARDS) -> DataFrame:
+def pack_sequences(docs: DataFrame) -> DataFrame:
     """Pack documents into fixed token-budget training sequences —
     the assembly step between a cleaned corpus and a trainer's
     dataloader.
 
     Deterministic streaming next-fit: docs are sharded by
-    ``hash60(id) % n_shards``, ordered within the shard by (hash, id)
+    ``hash60(id) % PACK_SHARDS``, ordered within the shard by (hash, id)
     — a stable pseudo-shuffle, so the mixing order is a pure function
     of the ids (restart-safe, rerun-identical, no RNG state) — then a
     per-shard running token total places each doc at
-    ``seq_id = floor(start / capacity)``, ``seq_offset = start %
-    capacity``. A doc whose tokens straddle a boundary belongs to the
+    ``seq_id = floor(start / PACK_CAPACITY)``, ``seq_offset = start %
+    PACK_CAPACITY``. A doc whose tokens straddle a boundary belongs to the
     sequence where it STARTS (may overflow by < its own length — the
     standard streaming-pack semantics; the trainer truncates or
     spills the tail).
 
     Scale shape: one shuffle on ``shard``; each shard's window cumsum
-    runs independently, so parallelism = ``n_shards`` (thousands at
+    runs independently, so parallelism = ``PACK_SHARDS`` (thousands at
     100 TB — here 8 so sf0.01 exercises multi-doc sequences). All
     arithmetic is integer — ``seq_id`` uses true integer division
     (Spark ``DIV``, oracle ``//``), never a double round-trip, so the
     cross-engine hash-exactness claim holds for the full int64 range,
     not just below 2^53.
     """
-    if int(capacity) < 1:
-        raise ValueError("capacity must be >= 1 (token budget per "
-                         "sequence; DIV 0 is an ANSI hard-fail)")
-    return _pack_starts(docs, n_shards).select(
+    return _pack_starts(docs).select(
         "doc_id", "n_tokens", "shard",
-        F.expr(f"_start DIV {int(capacity)}").alias("seq_id"),
-        (F.col("_start") % capacity).alias("seq_offset"),
+        F.expr(f"_start DIV {PACK_CAPACITY}").alias("seq_id"),
+        (F.col("_start") % PACK_CAPACITY).alias("seq_offset"),
     )
 
 
-def _pack_starts(docs: DataFrame, n_shards: int) -> DataFrame:
+def _pack_starts(docs: DataFrame) -> DataFrame:
     """Shared packing core: per-doc running token ``_start`` within its
     hash shard (see :func:`pack_sequences` for the ordering contract)."""
     from pyspark.sql import Window
 
     from ..functions.textfns import hash60
 
-    # n_shards < 1: `% 0` is an ANSI hard-fail, negative shards a
-    # nonsensical partitioning (r14 second-pass review).
-    if int(n_shards) < 1:
-        raise ValueError("n_shards must be >= 1")
     h = hash60(F.col("doc_id").cast("string"))
     # NULL text folds into the empty-string case (one phantom ''
-    # token), the repo-wide convention: unguarded, pack_sequences
-    # emitted a NULL-n_tokens row (and poisoned every later _start in
-    # the shard) while pack_sequence_fragments dropped the doc — the
-    # two views disagreed on corpus membership (r13 text review,
-    # deferred to r14).
+    # token), the repo-wide convention: otherwise pack_sequences would
+    # emit a NULL-n_tokens row (poisoning every later _start in the
+    # shard) while pack_sequence_fragments dropped the doc, and the two
+    # views would disagree on corpus membership.
     t = docs.select(
         F.col("doc_id"),
         F.size(tokenize(F.coalesce(F.col("text"), F.lit(""))))
          .cast("long").alias("n_tokens"),
         h.alias("_h"),
-        (h % n_shards).alias("shard"),
+        (h % PACK_SHARDS).alias("shard"),
     )
     w = (Window.partitionBy("shard").orderBy("_h", "doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -217,8 +206,7 @@ def _pack_starts(docs: DataFrame, n_shards: int) -> DataFrame:
     return t.select("doc_id", "n_tokens", "shard", start.alias("_start"))
 
 
-def pack_sequence_fragments(docs: DataFrame, capacity: int = PACK_CAPACITY,
-                            n_shards: int = PACK_SHARDS) -> DataFrame:
+def pack_sequence_fragments(docs: DataFrame) -> DataFrame:
     """Boundary-splitting sequence packing: the trainer-facing variant
     of :func:`pack_sequences`.
 
@@ -226,26 +214,23 @@ def pack_sequence_fragments(docs: DataFrame, capacity: int = PACK_CAPACITY,
     it STARTS in (and lets the trainer spill the tail),
     this emits one row per (doc, sequence) FRAGMENT: a doc occupying
     token interval ``[start, start + n_tokens)`` is split at every
-    multiple of ``capacity``, yielding ``(doc_id, shard, seq_id,
+    multiple of ``PACK_CAPACITY``, yielding ``(doc_id, shard, seq_id,
     frag_offset, frag_len)`` with the invariants
 
     - per-doc ``sum(frag_len) == n_tokens``,
-    - ``0 <= frag_offset`` and ``frag_offset + frag_len <= capacity``
+    - ``0 <= frag_offset`` and ``frag_offset + frag_len <= PACK_CAPACITY``
       (no fragment crosses a boundary),
     - consecutive fragments of a doc tile adjacent sequences.
 
     Zero-token docs are dropped (nothing to train on). The fan-out is
     ``F.sequence`` over the spanned seq range + ``explode`` — pure
     expressions, and the explosion factor per doc is
-    ``ceil(n_tokens / capacity) + 1`` at most, so the output is
-    ~``total_tokens / capacity`` rows regardless of doc skew. All
+    ``ceil(n_tokens / PACK_CAPACITY) + 1`` at most, so the output is
+    ~``total_tokens / PACK_CAPACITY`` rows regardless of doc skew. All
     arithmetic integer (``DIV`` both sides).
     """
-    c = int(capacity)
-    if c < 1:
-        raise ValueError("capacity must be >= 1 (token budget per "
-                         "sequence; DIV 0 is an ANSI hard-fail)")
-    t = _pack_starts(docs, n_shards).where(F.col("n_tokens") > 0)
+    c = PACK_CAPACITY
+    t = _pack_starts(docs).where(F.col("n_tokens") > 0)
     f = t.select(
         "doc_id", "shard", "_start", "n_tokens",
         F.explode(F.sequence(
@@ -263,13 +248,20 @@ def pack_sequence_fragments(docs: DataFrame, capacity: int = PACK_CAPACITY,
     )
 
 
-def contamination_pairs(docs: DataFrame, eval_mod: int = 50,
-                        min_shared: int = 3) -> DataFrame:
-    """Benchmark decontamination: (train doc, eval doc) pairs sharing
-    ≥ ``min_shared`` distinct word ``GRAM_N``-grams — the overlap check a
-    training corpus runs against every eval benchmark before training.
+# Decontamination: the in-corpus eval slice is ``doc_id % EVAL_MOD == 0``,
+# and a (train, eval) pair is contaminated at MIN_SHARED_GRAMS shared
+# distinct grams.
+EVAL_MOD = 50
+MIN_SHARED_GRAMS = 3
 
-    Here the "benchmark" is the deterministic slice ``id % eval_mod
+
+def contamination_pairs(docs: DataFrame) -> DataFrame:
+    """Benchmark decontamination: (train doc, eval doc) pairs sharing
+    ≥ ``MIN_SHARED_GRAMS`` distinct word ``GRAM_N``-grams — the overlap
+    check a training corpus runs against every eval benchmark before
+    training.
+
+    Here the "benchmark" is the deterministic slice ``id % EVAL_MOD
     == 0`` of the corpus itself (the test dirs carry no separate eval
     table; at deployment the eval side is the real benchmark corpus).
 
@@ -282,10 +274,6 @@ def contamination_pairs(docs: DataFrame, eval_mod: int = 50,
     """
     from ..functions.textfns import hash60, shingles, tokenize as tok
 
-    # eval_mod < 1: `% 0` is an ANSI hard-fail mid-scan (r14
-    # second-pass review).
-    if int(eval_mod) < 1:
-        raise ValueError("eval_mod must be >= 1")
     # Token array materialized BELOW the explode: the shingle
     # expression references it three times (guard size, sequence
     # size, slice) and Generate inlines its generator — without the
@@ -295,25 +283,24 @@ def contamination_pairs(docs: DataFrame, eval_mod: int = 50,
         F.col("doc_id"),
         F.explode(F.transform(shingles(F.col("_toks"), GRAM_N), hash60))
          .alias("g"))
-    ev = h.where(F.col("doc_id") % eval_mod == 0).select(
+    ev = h.where(F.col("doc_id") % EVAL_MOD == 0).select(
         F.col("doc_id").alias("eval_doc_id"), "g")
-    tr = h.where(F.col("doc_id") % eval_mod != 0).select(
+    tr = h.where(F.col("doc_id") % EVAL_MOD != 0).select(
         F.col("doc_id").alias("train_doc_id"), "g")
     return (
         tr.join(F.broadcast(ev), "g")
         .groupBy("train_doc_id", "eval_doc_id")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
-        .where(F.col("n_shared_grams") >= min_shared)
+        .where(F.col("n_shared_grams") >= MIN_SHARED_GRAMS)
     )
 
 
 def contamination_pairs_external(train_docs: DataFrame,
-                                 eval_docs: DataFrame,
-                                 min_shared: int = 3) -> DataFrame:
+                                 eval_docs: DataFrame) -> DataFrame:
     """Decontamination against a genuinely EXTERNAL eval corpus.
 
     :func:`contamination_pairs` carves its "benchmark" out of the
-    corpus itself (``id % eval_mod``); this is the deployment shape —
+    corpus itself (``id % EVAL_MOD``); this is the deployment shape —
     the eval side is a separate table with its own schema (a string
     ``eval_id`` + ``prompt``, deliberately different column names and
     types from the train side's ``doc_id`` + ``text``, so train/eval
@@ -341,7 +328,7 @@ def contamination_pairs_external(train_docs: DataFrame,
         tr.join(F.broadcast(ev), "g")
         .groupBy("train_doc_id", "eval_id")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
-        .where(F.col("n_shared_grams") >= min_shared)
+        .where(F.col("n_shared_grams") >= MIN_SHARED_GRAMS)
     )
 
 
@@ -388,11 +375,11 @@ def tfidf_pairs(docs: DataFrame, threshold: float = 0.5,
         .groupBy("id_a", "id_b", "na", "nb")
         .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
     )
-    # Zero-norm guard (r13 review, reproduced live): a doc whose
-    # surviving terms all have df == N gets idf 0 everywhere, hence
-    # norm 0, and ANSI-on Spark 4 hard-failed the division for every
-    # pair it appears in. Degenerate docs carry no tf-idf signal —
-    # score their pairs 0, below any meaningful threshold.
+    # Zero-norm guard: a doc whose surviving terms all have df == N
+    # gets idf 0 everywhere, hence norm 0, and ANSI-on Spark 4 would
+    # hard-fail the division for every pair it appears in. Degenerate
+    # docs carry no tf-idf signal — score their pairs 0, below any
+    # meaningful threshold.
     sim = F.floor(F.when(F.col("na") * F.col("nb") == 0, F.lit(0.0))
                   .otherwise(F.col("dot") / (F.col("na") * F.col("nb")))
                   * 1_000_000 + 0.5) / 1_000_000.0
@@ -460,30 +447,23 @@ def fingerprints(docs: DataFrame) -> DataFrame:
     word ``GRAM_N``-grams. Equal fingerprints ⇒ near-identical prefixes
     of content; used for cheap shard-level dedup sweeps.
 
-    r18 optimization round: computed via the exploded codegen path
-    (posexplode + window leads + hash → min aggregate — the same
-    machinery MinHash uses, dedup.exploded_shingle_hashes) instead of
+    Computed via the exploded codegen path (posexplode + window leads
+    + hash → min aggregate — the same machinery MinHash uses,
+    dedup.exploded_shingle_hashes), not
     ``array_min(transform(shingles(...)))`` + an isNotNull filter.
-    The HOF form ran interpreted (higher-order functions exit
-    whole-stage codegen, so no common-subexpression elimination:
-    tokenize re-split the text several times per evaluation) AND the
-    pushed-down NULL filter evaluated the entire fingerprint
-    expression a second time below the projection (two interpreted
-    full evaluations per doc: the Filter and Project operators of the
-    formatted plan); on the single-row-group local scan that was
-    one task doing everything — measured 12.2 s wall ≈ 11.6 s CPU.
-    The exploded form is whole-stage codegen, hashes each gram once,
-    and parallelizes past the exchange. Values identical: same gram
-    strings (pinned bit-equal for MinHash), min is
-    duplicate-insensitive (the HOF path array_distinct'ed, the
-    exploded path does not), and docs with < n tokens emit no rows —
-    exactly the rows the old isNotNull filter dropped.
+    The HOF form runs interpreted (higher-order functions exit
+    whole-stage codegen, so tokenize re-splits the text several times
+    per evaluation) and its pushed-down NULL filter evaluates the
+    whole fingerprint a second time below the projection; on the
+    single-row-group local scan that was 12.2 s wall ≈ 11.6 s CPU in
+    one task. The exploded form is whole-stage codegen, hashes each
+    gram once, and parallelizes past the exchange. Docs with fewer
+    than ``GRAM_N`` tokens emit no row.
 
     Assumes ``doc_id`` is unique per document (true for every corpus
     this repo loads, and what the oracle checks): the groupBy
     collapses duplicate ids to ONE row carrying the min across all
-    their texts, where the pre-r18 per-row projection emitted one
-    fingerprint row per input row (r18 ADVICE)."""
+    their texts."""
     from .dedup import exploded_shingle_hashes
 
     return (exploded_shingle_hashes(docs, GRAM_N)
@@ -495,43 +475,29 @@ CHUNK_CHARS = 200
 CHUNK_OVERLAP = 50
 
 
-def chunk_documents(docs: DataFrame, chunk_chars: int = CHUNK_CHARS,
-                    overlap: int = CHUNK_OVERLAP) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Sliding-window document chunking — the ingest step that turns a
     corpus into retrieval/embedding-sized pieces (RAG prep, context-
     window packing, chunk-level dedup all start here).
 
-    One chunk every ``stride = chunk_chars - overlap`` characters;
-    consecutive chunks share ``overlap`` characters so no boundary
+    One chunk every ``stride = CHUNK_CHARS - CHUNK_OVERLAP`` characters;
+    consecutive chunks share ``CHUNK_OVERLAP`` characters so no boundary
     ever splits content without a covering neighbor. The last chunk
     is the first one whose window reaches the end of the doc (it may
-    be shorter than ``chunk_chars``); a doc no longer than one window
+    be shorter than ``CHUNK_CHARS``); a doc no longer than one window
     yields exactly one chunk. Chunk count per doc is
-    ``1 + ceil(max(len - chunk_chars, 0) / stride)`` — computed with
+    ``1 + ceil(max(len - CHUNK_CHARS, 0) / stride)`` — computed with
     POSITIVE-operand integer division only (Spark ``DIV`` truncates,
     DuckDB ``//`` floors; they agree only for non-negative operands,
-    so the ``len <= chunk_chars`` case is handled by CASE, not by
+    so the ``len <= CHUNK_CHARS`` case is handled by CASE, not by
     division of a negative numerator).
 
     Shape: ``sequence`` + ``explode`` + ``substring`` — pure codegen
     expressions, embarrassingly parallel, fan-out per doc is
     ~``len / stride`` rows regardless of doc-length skew.
     """
-    # Parameter guards (r13 text review, deferred to r14): a negative
-    # overlap silently produced stride > chunk_chars — windows with
-    # UNCOVERED gaps between them, the exact failure the overlap
-    # contract exists to prevent; chunk_chars <= 0 made the substring
-    # width nonsensical.
-    if int(chunk_chars) <= 0:
-        raise ValueError("chunk_chars must be positive")
-    if int(overlap) < 0:
-        raise ValueError(
-            "overlap must be >= 0 (negative overlap leaves uncovered "
-            "gaps between consecutive chunks)")
-    if overlap >= chunk_chars:
-        raise ValueError("overlap must be < chunk_chars")
-    stride = int(chunk_chars) - int(overlap)
-    c = int(chunk_chars)
+    stride = CHUNK_CHARS - CHUNK_OVERLAP
+    c = CHUNK_CHARS
     # Integer DIV is written in SQL over the projected length.
     length = F.length(F.col("text"))
     last_i = F.when(length <= c, F.lit(0)).otherwise(
@@ -596,13 +562,13 @@ BM25_B = 0.75
 BM25_TOP_K = 10
 
 
-def bm25_topk(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
-              b: float = BM25_B, top_k: int = BM25_TOP_K) -> DataFrame:
-    """BM25 retrieval: top-``top_k`` documents per query (Robertson/
+def bm25_topk(docs: DataFrame, queries: DataFrame) -> DataFrame:
+    """BM25 retrieval: top-``BM25_TOP_K`` documents per query (Robertson/
     Sparck Jones probabilistic ranking — the lexical-retrieval
     baseline every RAG/data-curation stack ships).
 
     ``score(q, d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))``
+    with ``k1 = BM25_K1`` and ``b = BM25_B``,
     with ``idf = ln(1 + (N-df+0.5)/(df+0.5))`` (the non-negative
     Lucene form). Document frequency is computed over the corpus
     (restricted to query terms — df of a term is the same whether or
@@ -612,8 +578,8 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
 
     Cross-engine determinism: each per-term contribution is quantized
     to integer micro-units BEFORE summation, so the score sum is
-    exact int64 arithmetic — no float-accumulation-order hazard (the
-    lesson of the r3 percentile ADVICE applied up front). The only
+    exact int64 arithmetic — no float-accumulation-order hazard, which
+    is what made float percentile sums differ across engines. The only
     float step is the identical scalar expression both engines
     evaluate per (doc, term).
 
@@ -624,26 +590,13 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
     docs. The 100 TB side never shuffles text. ``queries`` holds
     (query_id, qtext).
     """
-    # Parameter domain guards (r14 second-pass review — the
-    # chunk_documents guard class): b > 1 makes the length-norm term
-    # 1-b+b·dl/avgdl cross zero for short docs, so the per-term
-    # weight divides by zero (ANSI hard-fail mid-job) or flips sign;
-    # k1 < 0 the same. The BM25 contract is b ∈ [0, 1], k1 >= 0.
-    if not 0.0 <= float(b) <= 1.0:
-        raise ValueError("b must be in [0, 1] (BM25 length-normalization "
-                         "slope; outside it the score denominator can "
-                         "reach zero)")
-    if float(k1) < 0.0:
-        raise ValueError("k1 must be >= 0")
-    k1p1 = float(k1) + 1.0
-    one_minus_b = 1.0 - float(b)
-    # Zero-length terms are filtered on BOTH sides (r13 text review,
-    # deferred to r14): tokenize('') yields the phantom '' token, so
-    # an empty or punctuation-only QUERY matched every empty DOCUMENT
-    # and retrieved them rank-1 (idf of '' is high precisely because
-    # almost no doc is empty). The corpus-side filter also keeps ''
-    # rows out of the explode → vocab join even when a degenerate
-    # query slips through.
+    k1, b = float(BM25_K1), float(BM25_B)
+    # Zero-length terms are filtered on BOTH sides: tokenize('') yields
+    # the phantom '' token, so an empty or punctuation-only QUERY would
+    # match every empty DOCUMENT and retrieve them rank-1 (idf of '' is
+    # high precisely because almost no doc is empty). The corpus-side
+    # filter also keeps '' rows out of the explode → vocab join even
+    # when a degenerate query slips through.
     qterms = queries.select(
         "query_id",
         F.explode(F.array_distinct(tokenize(F.col("qtext"))))
@@ -671,10 +624,9 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
                   F.avg(F.size("_toks").cast("long")).alias("_avgdl"))
     idf = F.log(1.0 + (F.col("_n") - F.col("df") + 0.5)
                 / (F.col("df") + 0.5))
-    denom = F.col("tf") + F.lit(float(k1)) * (
-        F.lit(one_minus_b) + F.lit(float(b))
-        * (F.col("dl") / F.col("_avgdl")))
-    w_micro = F.floor(idf * ((F.col("tf") * F.lit(k1p1)) / denom)
+    denom = F.col("tf") + F.lit(k1) * (
+        F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / F.col("_avgdl")))
+    w_micro = F.floor(idf * ((F.col("tf") * F.lit(k1 + 1.0)) / denom)
                       * 1_000_000 + 0.5).cast("long")
     # dfr is query-vocabulary-sized (tiny): broadcast it explicitly so
     # a stats misestimate can never shuffle the corpus-sized tf table
@@ -692,4 +644,4 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k1: float = BM25_K1,
         .orderBy(F.col("score_micro").desc(), "doc_id"))
     return (scored.select("query_id", "doc_id", "score_micro",
                           rank.cast("long").alias("rank"))
-            .where(F.col("rank") <= int(top_k)))
+            .where(F.col("rank") <= BM25_TOP_K))

@@ -22,8 +22,7 @@ def _hits_sql(lang: str) -> str:
 
 
 # lang_id folds NULL text into '' (zero hits → 'und'), so its oracle
-# tokenizes coalesce(text, '') — mirroring operators/text.lang_id
-# (r13 text review fix, landed r14).
+# tokenizes coalesce(text, '') — mirroring operators/text.lang_id.
 _LANG_T_CTE = ("WITH t AS (SELECT doc_id, "
                + tokenize_sql("coalesce(text, '')")
                + " AS toks FROM documents)\n")
@@ -63,10 +62,9 @@ _NSTOP = _hits_sql("en")
 _TOKCHARS = "list_sum(list_transform(toks, x -> length(x)))"
 
 # quality_features' oracle needs its own CTE: the Spark side folds
-# NULL text into '' (r13 review) and floors alpha_ratio to 0.0 on an
-# empty doc, while _T_CTE's raw text let a NULL row emit NULL
-# features and DuckDB's x/0 emit NULL instead of 0.0 (r14
-# adversarial rehearsal, reproduced live — dormant on shipped data,
+# NULL text into '' and floors alpha_ratio to 0.0 on an empty doc,
+# while _T_CTE's raw text would let a NULL row emit NULL features and
+# DuckDB's x/0 emit NULL instead of 0.0 (dormant on shipped data,
 # which has no NULL/empty text). Mirror both: coalesce in the CTE,
 # CASE-guard the one division whose denominator can be 0
 # (len(toks) >= 1 always — tokenize('') yields the phantom token).
@@ -239,7 +237,7 @@ _PACK_H = hash60_sql("CAST(doc_id AS VARCHAR)")
 
 
 # coalesce(text, ''): NULL text packs as the empty-string case (one
-# phantom token), matching _pack_starts (r13 text review fix, r14).
+# phantom token), matching _pack_starts.
 _PACK_W_CTE = f"""
 WITH t AS (
   SELECT doc_id,
@@ -299,17 +297,18 @@ def q_packed_sequence_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SH5 = f"list_transform({shingles_sql('toks', 5)}, s -> {hash60_sql('s')})"
+_EM = TX.EVAL_MOD
 
 
 @register(
     "decontamination_pairs",
     oracle=_T_CTE + f"""
 , x AS (SELECT doc_id, unnest({_SH5}) AS g FROM t),
-ev AS (SELECT doc_id AS eval_doc_id, g FROM x WHERE doc_id % 50 = 0),
-tr AS (SELECT doc_id AS train_doc_id, g FROM x WHERE doc_id % 50 <> 0)
+ev AS (SELECT doc_id AS eval_doc_id, g FROM x WHERE doc_id % {_EM} = 0),
+tr AS (SELECT doc_id AS train_doc_id, g FROM x WHERE doc_id % {_EM} <> 0)
 SELECT train_doc_id, eval_doc_id, count(*) AS n_shared_grams
 FROM tr JOIN ev USING (g)
-GROUP BY 1, 2 HAVING count(*) >= 3
+GROUP BY 1, 2 HAVING count(*) >= {TX.MIN_SHARED_GRAMS}
 """,
 )
 def q_decontamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -353,7 +352,7 @@ evg AS (
 trg AS (SELECT doc_id AS train_doc_id, unnest({_SH5}) AS g FROM t)
 SELECT train_doc_id, eval_id, count(*) AS n_shared_grams
 FROM trg JOIN evg USING (g)
-GROUP BY 1, 2 HAVING count(*) >= 3
+GROUP BY 1, 2 HAVING count(*) >= {TX.MIN_SHARED_GRAMS}
 """,
 )
 def q_decontamination_external(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -460,12 +459,11 @@ _QF_REASON = f"""CASE
 
 @register(
     "quality_filtered_corpus",
-    # _QF_CTE + the guarded alpha_ratio, NOT raw _T_CTE (r14
-    # adversarial rehearsal): the engine folds NULL text to '' and
-    # floors alpha_ratio to 0.0 on an empty doc (r13 review), while
-    # the raw CTE emitted NULL features for a NULL-text doc and NULL
-    # (DuckDB x/0) for an empty one — same class quality_scores'
-    # oracle already fixed; this one lagged a round out-of-window.
+    # _QF_CTE + the guarded alpha_ratio, NOT raw _T_CTE: the engine
+    # folds NULL text to '' and floors alpha_ratio to 0.0 on an empty
+    # doc, while the raw CTE would emit NULL features for a NULL-text
+    # doc and NULL (DuckDB x/0) for an empty one — the same mirror as
+    # quality_scores' oracle.
     oracle=_QF_CTE + f"""
 , f AS (
   SELECT doc_id,
@@ -488,7 +486,7 @@ FROM g
 )
 def q_quality_filtered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-filter pass over the corpus: composes the quality
-    features into a keep/drop verdict with a FIRST-FAILING-RULE reason
+    features into a keep/drop decision with a FIRST-FAILING-RULE reason
     column (the audit trail a production filter chain emits, so
     dropped-data rates are attributable per rule)."""
     return TX.quality_filter(

@@ -8,8 +8,7 @@ reader takes a ``sep`` regex defaulting to ``\\s+``.
 
 Unlike the reference — which throws NumberFormatException on any
 malformed line (SURVEY §1.1) — malformed lines are dropped (cast
-returns null → filtered), with a ``permissive=False`` escape hatch
-that keeps nulls visible for data-quality checks.
+returns null → filtered).
 """
 
 from __future__ import annotations
@@ -18,8 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_edge_list(spark: SparkSession, path: str, sep: str = r"\s+",
-                   permissive: bool = True) -> DataFrame:
+def read_edge_list(spark: SparkSession, path: str,
+                   sep: str = r"\s+") -> DataFrame:
     """Read a text edge list into ``edges(src BIGINT, dst BIGINT)``.
 
     Parallelism comes from ``spark.sql.files.maxPartitionBytes`` (the
@@ -31,11 +30,8 @@ def read_edge_list(spark: SparkSession, path: str, sep: str = r"\s+",
     # try_cast, not cast: Spark 4 runs ANSI mode by default, where a
     # plain cast of a malformed token throws (the reference's behavior,
     # SURVEY §1.1) instead of yielding null.
-    df = lines.select(
+    return lines.select(
         parts.getItem(0).try_cast("long").alias("src"),
         F.when(F.size(parts) >= 2, parts.getItem(1))
          .otherwise(F.lit(None)).try_cast("long").alias("dst"),
-    )
-    if permissive:
-        df = df.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    return df
+    ).where(F.col("src").isNotNull() & F.col("dst").isNotNull())

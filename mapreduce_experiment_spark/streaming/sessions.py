@@ -5,13 +5,10 @@ express: arbitrary per-session accumulators (exact integer cents,
 event counts, bounds) with explicit keyed state that survives across
 micro-batches. The Python-side accumulation is arbitrary-precision
 (plain ints), and the persisted state column is ``cents
-decimal(38,0)`` (r16, closing the last open site in SCALING.md's
-money-migration ledger): the old ``cents long`` column silently
-round-tripped a past-int64 session total as NULL — the Arrow state
-serializer neither errors nor wraps — so the next batch touching
-that user crashed on ``None`` cents, while every batch-side cents
-sum had already moved to decimal in r15 (the exact crash-vs-value
-asymmetry the migration eliminates; pinned by
+decimal(38,0)``, like every batch-side cents sum: a ``cents long``
+column would silently round-trip a past-int64 session total as NULL
+— the Arrow state serializer neither errors nor wraps — so the next
+batch touching that user would crash on ``None`` cents (pinned by
 ``test_sessionizer_state_survives_int64_overflow``). decimal(38,0)
 holds ±1e38 cents ≈ 3e25 contract-extreme events in ONE session —
 unreachable. State schema holds the trailing open session; each
@@ -23,16 +20,15 @@ Under an ``availableNow`` drain of a single parquet file the whole
 stream is one micro-batch, so the emitted set equals the batch
 sessionization exactly — which is how the driver value-checks this
 operator against the same SQL oracle as the batch path. Across
-micro-batches both variants classify whole within-batch GAP-CHAINS
-against the open session (bounds widen, never regress — since r13
-this includes the retained-counter variant, whose per-event loop
-previously regressed ``last_us`` on an out-of-order arrival) and
-emit pre-session stragglers as ts-keyed orphan rows (_orphan_rows).
+micro-batches both variants fold whole within-batch GAP-CHAINS into
+the open session through one shared fold (_fold_chains: bounds
+widen, never regress) and emit pre-session stragglers as ts-keyed
+orphan rows (_orphan_rows).
 
 Scale shape: output is one row per session — LINEAR in the input —
 so the drain goes through the checkpointed parquet sink
 (executor-written, exactly-once via _spark_metadata), never the
-memory sink (the r7 verdict's ``weak``). State is one fixed-width
+driver-resident memory sink. State is one fixed-width
 tuple per user (the trailing open session + the per-user session
 counter): bounded by ACTIVE-user cardinality, not event volume, and
 held in the executor state store. Idle-user eviction by timeout is
@@ -48,7 +44,7 @@ mode, demonstrated and eviction-tested
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from decimal import Decimal
 from typing import Any
 
@@ -89,7 +85,7 @@ def _state_cents(raw) -> int:
         # _cents_state. A None here means the cents column NULL-round-
         # tripped (old-schema checkpoint or a write-side regression);
         # name that failure mode instead of dying with a bare
-        # "int() argument must not be None" TypeError (ADVICE r16).
+        # "int() argument must not be None" TypeError.
         raise ValueError(
             "session state 'cents' read back NULL: the decimal(38,0) "
             "state column round-tripped as None — written from a "
@@ -137,10 +133,9 @@ def _batch_ts_cents(pdfs: Iterator[pd.DataFrame]):
     # HALF-AWAY-FROM-ZERO, while pandas rounds half-to-even, so a
     # dyadic half-cent product (value*100 exactly .5, e.g.
     # value=0.125) would diverge between the streaming and
-    # batch/oracle totals (r13 review). The sign-symmetric form
-    # extends the mirror to negative values — bare floor(x+0.5)
-    # rounds -0.5 UP to 0 where both engines give -1 (r14
-    # adversarial events rehearsal). A NULL value would quietly
+    # batch/oracle totals. The sign-symmetric form extends the mirror
+    # to negative values — bare floor(x+0.5) rounds -0.5 UP to 0
+    # where both engines give -1. A NULL value would quietly
     # become int64-min garbage cents in the astype (reproduced:
     # one NULL-value session summed to -1.8e17) — the events
     # contract is value NON-NULL and finite, and the guard makes a
@@ -180,11 +175,7 @@ def _gap_chains(ts_us, val_cents, gap_us: int) -> list[list[tuple[int, int]]]:
     event in the same batch chains it into the session's reach: state
     [60m, 60m], gap 30m, batch {25m, 31m} — 25m alone sits below
     start-gap, but 31m bridges it.) Chains keep their per-event rows
-    because orphan EMISSION is per-microsecond (see _orphan_rows).
-    Shared by both sessionizer variants since r13 — previously only
-    the evicting variant chained, and the retained-counter variant's
-    per-event loop REGRESSED last_us on a cross-batch out-of-order
-    event (r13 review)."""
+    because orphan EMISSION is per-microsecond (see _orphan_rows)."""
     chains: list[list[tuple[int, int]]] = []  # [(us, cents), ...]
     for us, cent in zip(ts_us.to_numpy(), val_cents.to_numpy()):
         us, cent = int(us), int(cent)
@@ -236,38 +227,50 @@ def _orphan_rows(user_id, ch: list[tuple[int, int]]) -> list[tuple]:
             for o_us, (o_n, o_cents) in orphans.items()]
 
 
-def _sessionize_group(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-    gap_us: int,
-) -> Iterator[pd.DataFrame]:
-    user_id = key[0]
-    if state.exists:
-        sid, start_us, last_us, n, cents = state.get
-        cents = _state_cents(cents)
-    else:
-        sid, start_us, last_us, n, cents = 0, None, None, 0, 0
+def _open_session(state: GroupState, no_sid) -> tuple:
+    """The trailing open session held in ``state`` as (sid, start_us,
+    last_us, n, cents) with int cents, or ``(no_sid, None, None, 0,
+    0)`` when the user has none."""
+    if not state.exists:
+        return no_sid, None, None, 0, 0
+    sid, start_us, last_us, n, cents = state.get
+    return sid, start_us, last_us, n, _state_cents(cents)
 
-    prep = _batch_ts_cents(pdfs)
-    if prep is None:
-        yield _empty_out()
-        return
-    ts_us, val_cents = prep
 
-    # Classify whole gap-chains against the open session (r13 review:
-    # the previous per-event loop REGRESSED last_us — and never
-    # widened start_us — on an out-of-order event arriving in a later
-    # micro-batch, wrongly splitting sessions and emitting amendment
-    # rows whose session_end moved backwards; within a single batch —
-    # the driver-verified availableNow drain — chains are exactly the
-    # batch sessions, so that contract is byte-identical). The case
-    # analysis mirrors _sessionize_group_evicting; the one divergence
-    # is ids: a straggler chain from before the open session's reach
-    # cannot take the batch oracle's ordinal (that would renumber
-    # every later session — unknowable without retained history), so
-    # it is emitted as per-microsecond orphan rows with ts-keyed
-    # NEGATIVE ids, same as the evicting variant.
+def _fold_chains(user_id, ts_us, val_cents, gap_us: int, session: tuple,
+                 new_sid: Callable[[Any, int], Any]):
+    """Fold a sorted batch's gap-chains (see _gap_chains) into the open
+    ``session`` (sid, start_us, last_us, n, cents), in ascending order.
+    Returns (output rows, updated session). Three cases, none of which
+    may REGRESS the session's bounds (a shrinking last_us would emit
+    amendment rows whose session_end moves backwards and, in the
+    evicting variant, re-arm the timeout earlier):
+
+    - ``c_min > last + gap``: close the session and start a new one
+      from the chain, with id ``new_sid(sid, c_min)`` — the next
+      per-user ordinal in the retained-counter variant, the chain's
+      first microtimestamp in the evicting one;
+    - ``c_max >= start - gap``: absorb the WHOLE chain; bounds only
+      WIDEN (start=min, last=max);
+    - ``c_max < start - gap``: a straggler chain from before the open
+      session's reach. It cannot take the batch oracle's ordinal (that
+      would renumber every later session, unknowable without retained
+      history), so it is emitted as per-microsecond orphan rows with
+      NEGATIVE ts-keyed ids (_orphan_rows).
+
+    Within a single batch — the driver-verified availableNow drain —
+    chains are exactly the batch sessions. Orphan classification is
+    stable under SAME-BATCH widening: a chain absorbed later in this
+    batch starts > gap above the orphan chain's max (chains are
+    maximal within the batch), so the widened start can never reach
+    back over a chain this batch already orphaned. Across batches the
+    claim does NOT hold: a later batch can absorb an event that widens
+    start to within gap of a previously-orphaned ts, where batch
+    sessionization would have merged that orphan in. Events stay
+    conserved (the orphan row stands on its own key); the divergence
+    is part of the documented out-of-order approximation, bounded by
+    the watermark delay."""
+    sid, start_us, last_us, n, cents = session
     out: list[tuple] = []
     touched = False
     for ch in _gap_chains(ts_us, val_cents, gap_us):
@@ -278,7 +281,7 @@ def _sessionize_group(
         if last_us is None or c_min - last_us > gap_us:
             if last_us is not None:
                 out.append((user_id, sid, n, start_us, last_us, cents))
-            sid += 1
+            sid = new_sid(sid, c_min)
             start_us, last_us, n, cents = c_min, c_max, 0, 0
         start_us = min(start_us, c_min)
         last_us = max(last_us, c_max)
@@ -287,7 +290,22 @@ def _sessionize_group(
         touched = True
     if touched:  # trailing amendment — only if this batch changed it
         out.append((user_id, sid, n, start_us, last_us, cents))
+    return out, (sid, start_us, last_us, n, cents)
 
+
+def _sessionize_group(
+    key: tuple[Any, ...],
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+    gap_us: int,
+) -> Iterator[pd.DataFrame]:
+    session = _open_session(state, 0)
+    prep = _batch_ts_cents(pdfs)
+    if prep is None:
+        yield _empty_out()
+        return
+    out, (sid, start_us, last_us, n, cents) = _fold_chains(
+        key[0], *prep, gap_us, session, lambda sid, c_min: sid + 1)
     state.update((sid, start_us, last_us, n, _cents_state(cents)))
     yield _emit(out)
 
@@ -330,7 +348,6 @@ def _sessionize_group_evicting(
     state: GroupState,
     gap_us: int,
 ) -> Iterator[pd.DataFrame]:
-    user_id = key[0]
     if state.hasTimedOut:
         # The watermark passed (last event + gap): no admissible
         # on-time event can extend the open session, so its final
@@ -338,19 +355,14 @@ def _sessionize_group_evicting(
         # Drop the state; the user costs nothing until they return.
         state.remove()
         return
-    if state.exists:
-        sid_us, start_us, last_us, n, cents = state.get
-        cents = _state_cents(cents)
-    else:
-        sid_us, start_us, last_us, n, cents = None, None, None, 0, 0
-
+    session = _open_session(state, None)
     prep = _batch_ts_cents(pdfs)
     if prep is None:
         yield _empty_out()
         return
     ts_us, val_cents = prep
     if int(ts_us.iloc[0]) < 0:
-        # The negative-id orphan scheme below relies on every REAL
+        # The negative-id orphan scheme relies on every REAL
         # session id (a first-observed event microtimestamp) being
         # non-negative; a pre-epoch event (corrupt producer clock)
         # would make a real id collide with an orphan id and clobber
@@ -362,63 +374,16 @@ def _sessionize_group_evicting(
             f"({int(ts_us.iloc[0])} us) — the ts-keyed session-id "
             "scheme requires non-negative event times")
 
-    # 1. Segment the sorted batch into maximal gap-chains — see
-    # _gap_chains (shared with the retained-counter variant).
-    #
-    # 2. Classify each chain against the OPEN session, in ascending
-    # order. Three cases, none of which may REGRESS the session's
-    # bounds or its eviction deadline (a shrinking last_us would
-    # re-arm the timeout earlier and emit amendment rows whose
-    # session_end moves backwards):
-    #   c_min >  last + gap       -> close the session, start a new
-    #                                one from the chain
-    #   c_max >= start - gap      -> absorb the WHOLE chain; bounds
-    #                                only WIDEN (start=min, last=max)
-    #   c_max <  start - gap      -> a straggler chain from before
-    #                                the open session's reach: emit
-    #                                per-microsecond orphan rows —
-    #                                see _orphan_rows (a straggler
-    #                                CAN share its ts with an old
-    #                                session's first event; ids stay
-    #                                disjoint because orphan ids are
-    #                                negative and the pre-epoch guard
-    #                                above keeps real ts-keyed ids
-    #                                non-negative).
-    # Orphan classification is stable under SAME-BATCH widening: a
-    # chain absorbed later in this batch starts > gap above the
-    # orphan chain's max (chains are maximal within the batch), so
-    # the widened start can never reach back over a chain this batch
-    # already orphaned. Across batches the claim does NOT hold
-    # (r8 ADVICE): a later batch can absorb an event that widens
-    # start to within gap of a previously-orphaned ts — batch
-    # sessionization would have merged that orphan in. Events stay
-    # conserved (the orphan row stands on its own key); the
-    # divergence is part of the documented out-of-order
-    # approximation, bounded by the watermark delay.
-    out: list[tuple] = []
-    touched = False
-    for ch in _gap_chains(ts_us, val_cents, gap_us):
-        c_min, c_max = ch[0][0], ch[-1][0]
-        if last_us is not None and c_max < start_us - gap_us:
-            out.extend(_orphan_rows(user_id, ch))
-            continue
-        if last_us is None or c_min - last_us > gap_us:
-            if last_us is not None:
-                out.append((user_id, sid_us, n, start_us, last_us, cents))
-            sid_us, start_us, last_us, n, cents = c_min, c_min, c_max, 0, 0
-        start_us = min(start_us, c_min)
-        last_us = max(last_us, c_max)
-        n += len(ch)
-        cents += sum(c for _, c in ch)
-        touched = True
-    if touched:  # trailing amendment — only if this batch changed it
-        out.append((user_id, sid_us, n, start_us, last_us, cents))
-
+    # A straggler CAN share its ts with an old session's first event;
+    # ids stay disjoint because orphan ids are negative and the guard
+    # above keeps real ts-keyed ids non-negative.
+    out, (sid_us, start_us, last_us, n, cents) = _fold_chains(
+        key[0], ts_us, val_cents, gap_us, session, lambda sid, c_min: c_min)
     state.update((sid_us, start_us, last_us, n, _cents_state(cents)))
     # Event-time deadline: an event extending this session must carry
     # ts <= last + gap, so once the watermark passes that point the
     # session is closed for every admissible event and the state can
-    # go. CEILING division to milliseconds (r8 ADVICE): flooring
+    # go. CEILING division to milliseconds: flooring
     # last_us and gap_us separately could park the armed deadline up
     # to 999 us BELOW the true microsecond contract, so an admissible
     # event in that sub-ms window arriving after the watermark passed

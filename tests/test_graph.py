@@ -47,13 +47,12 @@ def test_self_loop_divergence_micro(spark):
     }
 
 
-def test_faithful_ignores_rows_with_a_null_endpoint(spark, tmp_path):
-    """A malformed line kept by the non-permissive reader has a null
-    endpoint; least/greatest skip nulls, so faithful mode must drop the
-    row rather than read it as a self-loop."""
-    path = tmp_path / "nulls.txt"
-    path.write_text("1 2\n2 3\n1 3\n4 banana\n")
-    edges = read_edge_list(spark, str(path), permissive=False)
+def test_faithful_ignores_rows_with_a_null_endpoint(spark):
+    """``triangles`` accepts any edges DataFrame, and a row may carry a
+    null endpoint; least/greatest skip nulls, so faithful mode must
+    drop the row rather than read it as a self-loop."""
+    edges = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (4, None)],
+                                  EDGE_SCHEMA)
     assert _tri_set(G.triangles(edges, mode="faithful")) == {(1, 2, 3)}
 
 
@@ -490,7 +489,10 @@ def _run_kmeans(spark, e, broadcast_off, tmp_path):
     emb = spark.createDataFrame(
         [(i, [float(i % 2), 1.0 - i % 2]) for i in range(6)],
         "vec_id long, embedding array<float>")
-    assert S.kmeans_train(emb, k=2, n_iter=2)[0] == [0, 1]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(S, "KMEANS_K", 2)
+        mp.setattr(S, "KMEANS_ITER", 2)
+        assert S.kmeans_train(emb)[0] == [0, 1]
 
 
 def _run_dedup(name):

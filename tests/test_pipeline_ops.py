@@ -242,21 +242,6 @@ def test_media_features_null_payload_scores_zero(spark):
     assert sum(getattr(byid[2], f"b{i}") for i in range(16)) == 2
 
 
-def test_sample_frames_rejects_bad_params(spark):
-    """r14 review: frame_bytes <= 0 fed a zero divisor into the
-    frame-count division (ANSI DIVIDE_BY_ZERO mid-job) and
-    stride <= 0 a non-positive sequence step; both now fail at call
-    time."""
-    import pytest
-
-    media = spark.createDataFrame([(1, b"x" * 64)],
-                                  "media_id long, payload binary")
-    with pytest.raises(ValueError, match="frame_bytes"):
-        MM.sample_frames(media, frame_bytes=0)
-    with pytest.raises(ValueError, match="stride"):
-        MM.sample_frames(media, stride=0)
-
-
 def test_media_binary_hostile_payloads(spark):
     """r15/r16 carried item, closed with coverage instead of a
     rationale: the media table was the only corpus without
@@ -312,19 +297,6 @@ def test_media_binary_hostile_payloads(spark):
     assert (5, 0) in got_frames and (6, 0) in got_frames
     # the 1 MiB blob sampled every 4th of its 32,768 frames
     assert sum(1 for k in got_frames if k[0] == 8) == 8192
-
-
-def test_corpus_shuffle_rejects_nonpositive_buckets(spark):
-    """r14 review: n_buckets <= 0 crashed driver-side with
-    ZeroDivisionError; it is a parallelism knob, never legitimately
-    non-positive."""
-    import pytest
-
-    from mapreduce_experiment_spark.operators.ordering import corpus_shuffle
-
-    docs = _docs(spark, [(1, "a")])
-    with pytest.raises(ValueError, match="n_buckets"):
-        corpus_shuffle(docs, n_buckets=0)
 
 
 def test_decode_image_is_stubbed():
@@ -442,7 +414,7 @@ def test_kmeans_survives_extreme_magnitudes(spark, tmp_path):
             "FROM embeddings", sf)
 
 
-def test_kmeans_separates_planted_clusters(spark):
+def test_kmeans_separates_planted_clusters(spark, monkeypatch):
     """Lloyd training on two well-separated planted clusters: the two
     seed centroids must converge to the cluster means (exact integer
     floor of the mean) and every vector must land in its own cluster."""
@@ -459,7 +431,9 @@ def test_kmeans_separates_planted_clusters(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     # seeds = vec_id < 2 → one seed from each planted cluster
-    cent_ids, cents = S.kmeans_train(emb, k=2, n_iter=2)
+    monkeypatch.setattr(S, "KMEANS_K", 2)
+    monkeypatch.setattr(S, "KMEANS_ITER", 2)
+    cent_ids, cents = S.kmeans_train(emb)
     assert cent_ids == [0, 1]
     assign = {r.vec_id: r.centroid_id
               for r in S.kmeans_assignments_df(emb, cent_ids, cents).collect()}
@@ -468,7 +442,7 @@ def test_kmeans_separates_planted_clusters(spark):
     assert (cents[0] > 900_000).all() and (cents[1] < -900_000).all()
 
 
-def test_pack_sequences_invariants(spark):
+def test_pack_sequences_invariants(spark, monkeypatch):
     """Packing semantics on a fixture big enough to straddle
     boundaries: every doc placed exactly once; offsets are in
     [0, capacity); docs in one sequence are contiguous in the shard
@@ -476,8 +450,10 @@ def test_pack_sequences_invariants(spark):
     no gaps); reruns are byte-identical (determinism)."""
     rows = [(i, ("tok " * (5 + i % 37)).strip()) for i in range(60)]
     docs = _docs(spark, rows)
+    monkeypatch.setattr(TX, "PACK_CAPACITY", 64)
+    monkeypatch.setattr(TX, "PACK_SHARDS", 4)
     out = sorted(
-        TX.pack_sequences(docs, capacity=64, n_shards=4).collect(),
+        TX.pack_sequences(docs).collect(),
         key=lambda r: (r.shard, r.seq_id, r.seq_offset))
     assert len(out) == 60 and len({r.doc_id for r in out}) == 60
     for r in out:
@@ -492,7 +468,7 @@ def test_pack_sequences_invariants(spark):
             assert r.seq_id * 64 + r.seq_offset == pos
             pos += r.n_tokens
     rerun = sorted(
-        TX.pack_sequences(docs, capacity=64, n_shards=4).collect(),
+        TX.pack_sequences(docs).collect(),
         key=lambda r: (r.shard, r.seq_id, r.seq_offset))
     assert rerun == out
 
@@ -509,13 +485,12 @@ def test_contamination_pairs_planted(spark):
     ]
     docs = _docs(spark, rows)
     got = {(r.train_doc_id, r.eval_doc_id): r.n_shared_grams
-           for r in TX.contamination_pairs(docs, eval_mod=50,
-                                           min_shared=3).collect()}
+           for r in TX.contamination_pairs(docs).collect()}
     # eval doc has 6 distinct 5-grams, all contained in doc 1
     assert got == {(1, 0): 6}
 
 
-def test_pack_sequence_fragments_invariants(spark):
+def test_pack_sequence_fragments_invariants(spark, monkeypatch):
     """Boundary-splitting packing: fragments reassemble every doc
     exactly (per-doc frag_len sums to n_tokens), no fragment crosses a
     capacity boundary, and a doc's fragments tile consecutive
@@ -528,10 +503,11 @@ def test_pack_sequence_fragments_invariants(spark):
     # operator's n_tokens > 0 guard is purely defensive.
     rows.append((40, ""))
     docs = _docs(spark, rows)
-    packed = {r.doc_id: r for r in
-              TX.pack_sequences(docs, capacity=64, n_shards=4).collect()}
+    monkeypatch.setattr(TX, "PACK_CAPACITY", 64)
+    monkeypatch.setattr(TX, "PACK_SHARDS", 4)
+    packed = {r.doc_id: r for r in TX.pack_sequences(docs).collect()}
     assert packed[40].n_tokens == 1
-    frags = TX.pack_sequence_fragments(docs, capacity=64, n_shards=4).collect()
+    frags = TX.pack_sequence_fragments(docs).collect()
     assert {r.doc_id for r in frags} == set(range(41))
     bydoc = defaultdict(list)
     for r in frags:
@@ -565,8 +541,7 @@ def test_contamination_pairs_external_planted(spark):
         [("bench-a", prompt), ("bench-b", "nothing shared at all honestly")],
         "eval_id string, prompt string")
     got = {(r.train_doc_id, r.eval_id): r.n_shared_grams
-           for r in TX.contamination_pairs_external(
-               train, evals, min_shared=3).collect()}
+           for r in TX.contamination_pairs_external(train, evals).collect()}
     assert got == {(1, "bench-a"): 6}
 
 
@@ -867,8 +842,9 @@ def test_srp_index_append_cycle(spark, sf_smoke, tmp_path):
     index serves the complete pair set — identical to a full rebuild
     over corpus+batch — and (b) the candidate self-join over the
     appended (multi-file-per-bucket) table still plans with zero
-    Exchange. Also pins that an append with mismatched banding is
-    rejected before it can poison the index."""
+    Exchange. Also pins that an append to an index whose stored
+    banding differs from the module's is rejected before it can
+    poison the index."""
     import pytest
 
     from pyspark.sql import functions as F
@@ -881,8 +857,11 @@ def test_srp_index_append_cycle(spark, sf_smoke, tmp_path):
     table = "srp_index_append_test"
     S.write_srp_index(corpus, table, path=str(tmp_path / table))
     try:
+        spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ('srp.rows'='4')")
         with pytest.raises(ValueError, match="banding config mismatch"):
-            S.append_srp_index(batch, table, rows=4)
+            S.append_srp_index(batch, table)
+        spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES "
+                  f"('srp.rows'='{S.SRP_ROWS}')")
         S.append_srp_index(batch, table)
         got = {(r.id_a, r.id_b, r.cos)
                for r in S.embedding_near_dups_from_index(
@@ -944,7 +923,7 @@ def test_srp_index_compaction(spark, sf_smoke, tmp_path):
         # can share a file), and a plain count() could be fooled by a
         # drop+duplicate combination — exceptAll in both directions
         # is what pins compaction writing each source row exactly
-        # once (r9 review, twice-refined).
+        # once.
         src, dst = spark.table(table), spark.table(ctable)
         assert dst.exceptAll(src).count() == 0
         assert src.exceptAll(dst).count() == 0
@@ -956,7 +935,7 @@ def test_srp_index_compaction(spark, sf_smoke, tmp_path):
                    spark, emb, ctable, threshold=0.45).collect()}
         assert got == want and got
         # banding props carried: probe validation passes on the compacted
-        S.validate_srp_index_config(spark, ctable, S.SRP_BANDS, S.SRP_ROWS)
+        S.validate_srp_index_config(spark, ctable)
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         try:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -978,11 +957,11 @@ def test_srp_index_compaction(spark, sf_smoke, tmp_path):
 
 
 def test_srp_probe_rejects_mismatched_banding(spark, sf_smoke, tmp_path):
-    """r7 ADVICE, closed: the bands/rows contract between index writer
-    and prober is machine-checked via the table properties
-    write_srp_index stores — a probe with different banding raises
-    instead of silently missing true pairs (mismatched band values
-    simply fail the equi-join; nothing else would ever error)."""
+    """The bands/rows contract between index writer and prober is
+    machine-checked via the table properties write_srp_index stores —
+    probing an index written with different banding raises instead of
+    silently missing true pairs (mismatched band values simply fail
+    the equi-join; nothing else would ever error)."""
     import pytest
 
     from pyspark.sql import functions as F
@@ -995,9 +974,11 @@ def test_srp_probe_rejects_mismatched_banding(spark, sf_smoke, tmp_path):
     table = "srp_index_bandcheck_test"
     S.write_srp_index(corpus, table, path=str(tmp_path / table))
     try:
+        spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ('srp.rows'='4')")
         with pytest.raises(ValueError, match="banding config mismatch"):
-            S.embedding_near_dups_probe_index(
-                spark, batch, emb, table, rows=4)
+            S.embedding_near_dups_probe_index(spark, batch, emb, table)
+        spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES "
+                  f"('srp.rows'='{S.SRP_ROWS}')")
         # matching config passes the gate (and returns lazily — no job)
         S.embedding_near_dups_probe_index(spark, batch, emb, table)
     finally:
@@ -1133,20 +1114,20 @@ FROM sigs GROUP BY band_id, band_val
                    "srp_bucket_stats(retired)")
 
 
-def test_ivf_recall_vs_bruteforce(spark, sf_smoke):
-    """Recall gate for the approximate ANN paths (r3 verdict item 2):
-    the registered knn_ivf / knn_ivf_trained oracles MIRROR the
-    bucket/probe logic, so a parameter choice that tanks recall would
-    still hash-match — this test is the statement the oracles
-    structurally can't make, the exact analogue of the SRP gate above.
+def test_ivf_recall_vs_bruteforce(spark, sf_smoke, monkeypatch):
+    """Recall gate for the approximate ANN paths: the registered
+    knn_ivf / knn_ivf_trained oracles MIRROR the bucket/probe logic, so
+    a parameter choice that tanks recall would still hash-match — this
+    test is the statement the oracles structurally can't make, the
+    exact analogue of the SRP gate above.
 
     recall@5 against knn_bruteforce on the sf0.001 embeddings, at the
-    REGISTERED default parameters (16 centroids, nprobe=4). Every path
+    REGISTERED parameters (16 centroids, N_PROBE=4). Every path
     is deterministic (seed centroids / int64 Lloyd / q6 cosine), so
     the observed recalls (0.92 untrained, 0.90 trained) never drift;
     the 0.8 floor leaves headroom only for intentional parameter
     changes, which must re-clear it. A fragmented configuration
-    (64 centroids, nprobe=1) measures 0.68 — the floor discriminates."""
+    (64 centroids, N_PROBE=1) measures 0.68 — the floor discriminates."""
     from mapreduce_experiment_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
@@ -1164,8 +1145,9 @@ def test_ivf_recall_vs_bruteforce(spark, sf_smoke):
     # fragments the corpus into 64 buckets probing only 1 must land
     # UNDER the floor; if it ever clears it, the gate has gone soft
     # (e.g. corpus too small relative to k) and needs re-derivation.
-    frag = {(r.query_id, r.neighbor_id)
-            for r in S.knn_ivf(emb, n_centroids=64, nprobe=1).collect()}
+    monkeypatch.setattr(S, "N_CENTROIDS", 64)
+    monkeypatch.setattr(S, "N_PROBE", 1)
+    frag = {(r.query_id, r.neighbor_id) for r in S.knn_ivf(emb).collect()}
     assert len(frag & bf) / len(bf) < 0.8
 
 
@@ -1471,7 +1453,7 @@ def test_decontaminated_corpus_removes_only_contaminated(spark):
         (3, "more clean content that shares nothing with the benchmark set"),
     ])
     evals = spark.createDataFrame([("b", prompt)], "eval_id string, prompt string")
-    hits = TX.contamination_pairs_external(docs, evals, min_shared=3)
+    hits = TX.contamination_pairs_external(docs, evals)
     flagged = {r.train_doc_id for r in hits.collect()}
     clean = {r.doc_id for r in
              docs.join(hits.select(F.col("train_doc_id").alias("doc_id"))
@@ -1521,7 +1503,7 @@ def test_ngram_counts_occurrences_not_distinct(spark):
     assert got == {"a b a": 2, "b a b": 1}
 
 
-def test_bm25_ranks_relevant_doc_first(spark):
+def test_bm25_ranks_relevant_doc_first(spark, monkeypatch):
     rare = _docs(spark, [
         (1, "spark shuffle partitions " * 5),
         (2, "spark spark spark shuffle shuffle partitions broadcast join"),
@@ -1530,7 +1512,8 @@ def test_bm25_ranks_relevant_doc_first(spark):
     ])
     qs = spark.createDataFrame([("q1", "broadcast join")],
                                "query_id string, qtext string")
-    rows = TX.bm25_topk(rare, qs, top_k=3).collect()
+    monkeypatch.setattr(TX, "BM25_TOP_K", 3)
+    rows = TX.bm25_topk(rare, qs).collect()
     assert [r.doc_id for r in sorted(rows, key=lambda r: r.rank)][0] == 4
     ids = {r.doc_id for r in rows}
     assert 3 not in ids                      # no matching term → no row
@@ -1568,16 +1551,16 @@ def test_lang_id_null_text_is_und(spark):
     assert out == {1: ("und", 0), 2: ("en", 5)}
 
 
-def test_pack_views_agree_on_null_text(spark):
-    """r13 text review (landed r14): pack_sequences emitted a
-    NULL-n_tokens row for NULL text (poisoning every later _start in
-    its shard) while pack_sequence_fragments dropped the doc — the
-    two views disagreed on corpus membership. NULL now folds into the
-    empty-string case (one phantom token) in the shared core, so both
-    views carry the doc and the tiling invariants hold."""
+def test_pack_views_agree_on_null_text(spark, monkeypatch):
+    """NULL text folds into the empty-string case (one phantom token)
+    in the shared packing core, so both pack views carry the doc and
+    the tiling invariants hold; unguarded, pack_sequences would emit a
+    NULL-n_tokens row (poisoning every later _start in its shard)
+    while pack_sequence_fragments dropped the doc."""
     docs = _docs(spark, [(1, None), (2, "tok " * 10), (3, "")])
-    ps = {r.doc_id: r for r in TX.pack_sequences(docs, capacity=8).collect()}
-    pf = TX.pack_sequence_fragments(docs, capacity=8).collect()
+    monkeypatch.setattr(TX, "PACK_CAPACITY", 8)
+    ps = {r.doc_id: r for r in TX.pack_sequences(docs).collect()}
+    pf = TX.pack_sequence_fragments(docs).collect()
     assert set(ps) == {1, 2, 3}
     assert all(r.n_tokens is not None for r in ps.values())
     assert ps[1].n_tokens == 1 and ps[3].n_tokens == 1  # NULL ≡ ''
@@ -1585,22 +1568,6 @@ def test_pack_views_agree_on_null_text(spark):
     for r in pf:
         frag_sum[r.doc_id] = frag_sum.get(r.doc_id, 0) + r.frag_len
     assert frag_sum == {d: r.n_tokens for d, r in ps.items()}
-
-
-def test_chunk_documents_rejects_bad_params(spark):
-    """r13 text review (landed r14): a negative overlap silently made
-    stride > chunk_chars — consecutive windows with UNCOVERED gaps —
-    and chunk_chars <= 0 a nonsensical substring width; both now
-    raise."""
-    import pytest
-
-    docs = _docs(spark, [(1, "x" * 500)])
-    with pytest.raises(ValueError, match="uncovered"):
-        TX.chunk_documents(docs, chunk_chars=200, overlap=-50)
-    with pytest.raises(ValueError, match="positive"):
-        TX.chunk_documents(docs, chunk_chars=0, overlap=0)
-    with pytest.raises(ValueError, match="< chunk_chars"):
-        TX.chunk_documents(docs, chunk_chars=50, overlap=50)
 
 
 def test_word_ngrams_helper_semantics(spark):
@@ -2736,26 +2703,29 @@ def test_dedup_survivors_one_per_cluster(spark):
 
 
 # --- global ordering ---------------------------------------------------------
-def test_corpus_shuffle_is_permutation_and_bucket_invariant(spark):
+def test_corpus_shuffle_is_permutation_and_bucket_invariant(spark,
+                                                            monkeypatch):
     """corpus_shuffle must assign a permutation of 1..N, be
     deterministic across invocations, change with the seed, and —
     the core algebra check — produce IDENTICAL positions for any
     bucket count (the bucketing is a parallelization detail, not a
     semantic one; a bucket-boundary bug would show up as a
     disagreement between coarse and fine bucketings)."""
+    from mapreduce_experiment_spark.operators import ordering as O
     from mapreduce_experiment_spark.operators.ordering import corpus_shuffle
     from mapreduce_experiment_spark.sources.tables import load_table
     from tests.conftest import SF_SMOKE
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    a = {r.doc_id: r.shuffle_pos
-         for r in corpus_shuffle(docs, n_buckets=1024).collect()}
+    monkeypatch.setattr(O, "N_SHUFFLE_BUCKETS", 1024)
+    a = {r.doc_id: r.shuffle_pos for r in corpus_shuffle(docs).collect()}
     assert sorted(a.values()) == list(range(1, len(a) + 1))  # permutation
-    b = {r.doc_id: r.shuffle_pos
-         for r in corpus_shuffle(docs, n_buckets=7).collect()}
+    monkeypatch.setattr(O, "N_SHUFFLE_BUCKETS", 7)
+    b = {r.doc_id: r.shuffle_pos for r in corpus_shuffle(docs).collect()}
     assert a == b  # bucket-count invariance
+    monkeypatch.setattr(O, "N_SHUFFLE_BUCKETS", 1024)
     again = {r.doc_id: r.shuffle_pos
-             for r in corpus_shuffle(docs, n_buckets=1024).collect()}
+             for r in corpus_shuffle(docs).collect()}
     assert a == again  # deterministic
     other = {r.doc_id: r.shuffle_pos
              for r in corpus_shuffle(docs, seed="other-seed").collect()}
@@ -2986,7 +2956,7 @@ def test_repeated_spans_finds_planted_boilerplate(spark):
         (4, _BOILER),
         (5, "way too short"),
     ])
-    rows = D.repeated_spans(docs, n=8).collect()
+    rows = D.repeated_spans(docs).collect()
     got = {(r.doc_id, r.span_start, r.span_len) for r in rows}
     # 12-token boilerplate → windows at 5 starts, merged to one
     # 12-token region per doc, at each doc's plant offset.
@@ -3006,7 +2976,7 @@ def test_repeated_spans_merges_overlapping_coverage(spark):
         (2, "w1 w2 w3 w4 w5 w6 w7 w8 pad pad"),  # start-1 window only
         (3, "pad w5 w6 w7 w8 w9 w10 w11 w12"),   # start-5 window only
     ])
-    rows = D.repeated_spans(docs, n=8).where(F.col("doc_id") == 1).collect()
+    rows = D.repeated_spans(docs).where(F.col("doc_id") == 1).collect()
     assert {(r.span_start, r.span_len) for r in rows} == {(1, 12)}
 
 
@@ -3016,7 +2986,7 @@ def test_span_deduped_corpus_keep_first_semantics(spark):
         (2, "other beta stuff " + _BOILER + " and a unique ending"),
         (4, _BOILER),
     ])
-    got = {r.doc_id: r for r in D.span_deduped_corpus(docs, n=8).collect()}
+    got = {r.doc_id: r for r in D.span_deduped_corpus(docs).collect()}
     assert set(got) == {1, 2, 4}
     # doc 1 (minimum id) keeps its copy verbatim
     assert got[1].n_spans_removed == 0
@@ -3041,7 +3011,7 @@ def test_span_dedup_overlapping_ownership(spark):
         (1, a + " b1"),                               # owns a1..a8
         (2, "pad " + a + " tail"),
     ])
-    got = {r.doc_id: r for r in D.span_deduped_corpus(docs, n=8).collect()}
+    got = {r.doc_id: r for r in D.span_deduped_corpus(docs).collect()}
     # doc 0 keeps its window (it is the keeper) — untouched
     assert got[0].n_spans_removed == 0
     assert got[0].clean_text == "a2 a3 a4 a5 a6 a7 a8 b1"
@@ -3089,7 +3059,7 @@ def _py_span_dedup(texts: dict[int, str], n: int):
     return out, groups
 
 
-def test_span_dedup_at_production_window_length(spark):
+def test_span_dedup_at_production_window_length(spark, monkeypatch):
     """SPAN_N=8 is a scale-down for the ~54-token synthetic corpus;
     this proves the token-window algebra at the Lee-et-al operating
     grain (n=50) on long synthetic docs with planted boilerplate:
@@ -3122,8 +3092,9 @@ def test_span_dedup_at_production_window_length(spark):
     texts[7] = " ".join(words(280, "clean"))             # no repeats
 
     docs = _docs(spark, sorted(texts.items()))
+    monkeypatch.setattr(D, "SPAN_N", n)
     got = {r.doc_id: (r.n_spans_removed, r.clean_text)
-           for r in D.span_deduped_corpus(docs, n=n).collect()}
+           for r in D.span_deduped_corpus(docs).collect()}
     want, groups = _py_span_dedup(texts, n)
     assert got == want
     # Ownership guarantee at n=50, per WINDOW (the operator's actual
@@ -3170,7 +3141,7 @@ def test_span_dedup_randomized_corpora_match_python_mirror(spark):
         base += 5  # fixed stride keeps ids disjoint and deterministic
     docs = _docs(spark, sorted(texts.items()))
     got = {r.doc_id: (r.n_spans_removed, r.clean_text)
-           for r in D.span_deduped_corpus(docs, n=8).collect()}
+           for r in D.span_deduped_corpus(docs).collect()}
     want, groups = _py_span_dedup(texts, 8)
     assert got == want
     # sanity: the generator actually produced cross-doc repeats
@@ -3179,7 +3150,7 @@ def test_span_dedup_randomized_corpora_match_python_mirror(spark):
     # corpora: maximal merged flagged regions per doc.
     import re as _re
     det = {(r.doc_id, r.span_start, r.span_len, r.n_windows)
-           for r in D.repeated_spans(docs, n=8).collect()}
+           for r in D.repeated_spans(docs).collect()}
     want_det = set()
     for d, t in texts.items():
         ts = _re.sub(r"[^a-z0-9]+", " ", t.lower()).strip().split()
@@ -3203,7 +3174,7 @@ def test_span_dedup_hot_fingerprint_many_holders(spark):
     docs = _docs(spark, [
         (i, f"u{i}a u{i}b " + _BOILER + f" u{i}c") for i in range(100)
     ])
-    got = {r.doc_id: r for r in D.span_deduped_corpus(docs, n=8).collect()}
+    got = {r.doc_id: r for r in D.span_deduped_corpus(docs).collect()}
     assert len(got) == 100
     assert got[0].n_spans_removed == 0
     assert got[0].clean_text == "u0a u0b " + _BOILER + " u0c"
@@ -3214,7 +3185,7 @@ def test_span_dedup_hot_fingerprint_many_holders(spark):
 
 def test_knn_ivf_pruned_rejects_unbounded_probe_sets(spark):
     """The static-pruning guard, pinned: a query batch whose
-    nprobe x n_queries exceeds the IN-list bound must fail loudly
+    N_PROBE x n_queries exceeds the IN-list bound must fail loudly
     BEFORE collecting probe ids (batch-split or use knn_ivf
     instead), not build a million-element predicate."""
     import pytest as _pytest
@@ -3226,7 +3197,7 @@ def test_knn_ivf_pruned_rejects_unbounded_probe_sets(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     with _pytest.raises(ValueError, match="static-pruning bound"):
         S.knn_ivf_pruned(spark, emb, "/nonexistent-index-path",
-                         n_queries=10_001, nprobe=1)
+                         n_queries=10_001)
 
 
 def test_span_dedup_short_and_clean_docs_pass_through(spark):
@@ -3234,14 +3205,15 @@ def test_span_dedup_short_and_clean_docs_pass_through(spark):
         (7, "short"),
         (8, "a perfectly original sentence with eight distinct tokens"),
     ])
-    got = {r.doc_id: r for r in D.span_deduped_corpus(docs, n=8).collect()}
+    got = {r.doc_id: r for r in D.span_deduped_corpus(docs).collect()}
     assert got[7].n_spans_removed == 0 and got[7].clean_text == "short"
     assert got[8].n_spans_removed == 0
     assert got[8].clean_text == \
         "a perfectly original sentence with eight distinct tokens"
 
 
-def test_ivf_pruned_index_scan_and_value_parity(spark, sf_smoke, tmp_path):
+def test_ivf_pruned_index_scan_and_value_parity(spark, sf_smoke, tmp_path,
+                                                monkeypatch):
     """The persisted-IVF demo the knn_ivf docstring promises: the
     corpus written partitionBy(centroid_id), the probe served by a
     partition-PRUNED scan (PartitionFilters on centroid_id, probed
@@ -3252,7 +3224,8 @@ def test_ivf_pruned_index_scan_and_value_parity(spark, sf_smoke, tmp_path):
     path = str(tmp_path / "ivf_index")
     S.write_ivf_index(emb, path)
 
-    got_df = S.knn_ivf_pruned(spark, emb, path, nprobe=1)
+    monkeypatch.setattr(S, "N_PROBE", 1)
+    got_df = S.knn_ivf_pruned(spark, emb, path)
     plan = got_df._jdf.queryExecution().executedPlan().toString()
     # The index scan must carry a partition filter on centroid_id
     # (static INSET pruning, not a post-scan filter).
@@ -3272,11 +3245,11 @@ def test_ivf_pruned_index_scan_and_value_parity(spark, sf_smoke, tmp_path):
     got = {(r.query_id, r.neighbor_id, r.cos, r.rank)
            for r in got_df.collect()}
     want = {(r.query_id, r.neighbor_id, r.cos, r.rank)
-            for r in S.knn_ivf(emb, nprobe=1).collect()}
+            for r in S.knn_ivf(emb).collect()}
     assert got == want and len(got) > 0
 
 
-def test_span_dedup_matches_python_reference_property(spark):
+def test_span_dedup_matches_python_reference_property(spark, monkeypatch):
     """Property: on random small-alphabet docs (maximal window
     collisions), the distributed span pipeline equals an independent
     pure-Python reference for BOTH halves — detection regions and
@@ -3287,6 +3260,7 @@ def test_span_dedup_matches_python_reference_property(spark):
     from hypothesis import given, settings, strategies as st
 
     N = 3
+    monkeypatch.setattr(D, "SPAN_N", N)
 
     def ref(rows):
         toks = {d: t.split() if t else [] for d, t in rows}
@@ -3339,9 +3313,9 @@ def test_span_dedup_matches_python_reference_property(spark):
         docs = _docs(spark, rows)
         want_regions, want_nrm, want_clean = ref(rows)
         got_regions = {(r.doc_id, r.span_start, r.span_len)
-                       for r in D.repeated_spans(docs, n=N).collect()}
+                       for r in D.repeated_spans(docs).collect()}
         assert got_regions == want_regions
-        got = {r.doc_id: r for r in D.span_deduped_corpus(docs, n=N).collect()}
+        got = {r.doc_id: r for r in D.span_deduped_corpus(docs).collect()}
         assert set(got) == set(want_clean)
         for d in want_clean:
             assert got[d].n_spans_removed == want_nrm[d], f"doc {d}"
@@ -4523,41 +4497,12 @@ def test_percentile_bounds_and_null_priority_cross_engine(spark, tmp_path):
     assert duck == "" and spark_val is None
 
 
-def test_bm25_rejects_out_of_domain_params(spark):
-    """r14 second-pass text review: b > 1 makes the BM25 length-norm
-    term 1-b+b*dl/avgdl cross zero for docs shorter than average, so
-    the per-term weight divides by zero — an ANSI hard-fail in the
-    middle of a 100 TB job for a parameter mistake detectable at call
-    time (the chunk_documents guard class)."""
-    import pytest
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    qs = spark.createDataFrame([(1, "a")], "query_id long, qtext string")
-    with pytest.raises(ValueError, match="b must be in"):
-        TX.bm25_topk(docs, qs, b=1.5)
-    with pytest.raises(ValueError, match="k1 must be"):
-        TX.bm25_topk(docs, qs, k1=-0.1)
-
-
 def test_param_guards_reject_degenerate_divisors(spark):
-    """r14 second-pass review, the chunk_documents guard class swept
-    across the remaining operator entry points: capacity/eval_mod/
-    n_shards < 1 are ANSI DIV-or-MOD-by-zero hard-fails mid-job (or
-    nonsensical partitionings), and word_ngrams n < 1 produces
-    silently meaningless grams. All rejected at call time."""
+    """word_ngrams n < 1 would produce silently meaningless grams, so
+    it is rejected at call time."""
     import pytest
 
     from mapreduce_experiment_spark.functions.textfns import word_ngrams
 
-    docs = spark.createDataFrame([(1, "a b c d e")],
-                                 "doc_id long, text string")
-    with pytest.raises(ValueError, match="capacity"):
-        TX.pack_sequences(docs, capacity=0)
-    with pytest.raises(ValueError, match="capacity"):
-        TX.pack_sequence_fragments(docs, capacity=-5)
-    with pytest.raises(ValueError, match="n_shards"):
-        TX.pack_sequences(docs, n_shards=0)
-    with pytest.raises(ValueError, match="eval_mod"):
-        TX.contamination_pairs(docs, eval_mod=0)
     with pytest.raises(ValueError, match="n must be"):
         word_ngrams(F.col("x"), 0)

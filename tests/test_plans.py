@@ -539,10 +539,10 @@ def test_streaming_attribution_file_sink(spark):
 def test_knn_ivf_pruned_registered_query_scans_pruned_index(spark):
     """The REGISTERED pruned-IVF query must carry a static partition
     filter on centroid_id at its index scan — the 100 TB probe path
-    (read nprobe of n_centroids directories), not a full-index scan
+    (read N_PROBE of N_CENTROIDS directories), not a full-index scan
     with a post-filter. (The operator-level test additionally proves
-    value parity with knn_ivf and strict-subset pruning at nprobe=1;
-    this pin covers the registered default configuration.)"""
+    value parity with knn_ivf and strict-subset pruning at N_PROBE=1;
+    this pin covers the registered configuration.)"""
     plan = _plan(spark, "knn_ivf_pruned")
     assert any("FileScan parquet" in line
                and "PartitionFilters: [centroid_id" in line

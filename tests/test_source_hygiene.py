@@ -256,3 +256,87 @@ def test_one_materialization_idiom():
         f"materialization outside session.materialize: {offenders} — "
         "call materialize(df, eager) instead")
     assert calls == allowed, f"stale allowlist entries: {allowed - calls}"
+
+
+# Defaulted parameters no caller passes, each kept on purpose.
+_UNCALLED_PARAM_ALLOWLIST = {
+    # Mirrors qavg_sql, which a registered oracle calls with scale=.
+    ("functions/compare.py", "qavg", "scale"),
+    # The near-dup family keeps its threshold keyword throughout:
+    # perfbench passes threshold= to dedup_survivors,
+    # minhash_dedup_pairs and embedding_near_dups_from_index, and the
+    # two quadratic reference paths below serve tests as recall and
+    # parity references.
+    ("operators/similarity.py", "embedding_near_dup_pairs_lsh", "threshold"),
+    ("operators/dedup.py", "ngram_jaccard_pairs_allpairs", "threshold"),
+    ("operators/similarity.py", "embedding_near_dup_pairs", "threshold"),
+}
+
+
+def _py_files(top: str) -> list[str]:
+    if os.path.isfile(top):
+        return [top]
+    return sorted(os.path.join(root, f) for root, _d, files in os.walk(top)
+                  for f in files if f.endswith(".py"))
+
+
+def test_operator_parameters_have_a_caller():
+    """Every defaulted parameter of a package function is passed at
+    some call site in the package, perfbench/, scripts/ or bench.py.
+    A knob that only a test turns belongs in a module constant the
+    test monkeypatches, not in the signature (with a call-time guard
+    and a test of that guard). Call sites match by function name; a
+    ``*args``/``**kwargs`` spread counts as passing everything. The
+    registered ``q_*`` entry points and ``cli.main`` are exempt."""
+    kw_names: dict[str, set] = {}   # keywords passed, per function name
+    n_pos: dict[str, int] = {}      # most positional args passed
+    for top in (_PKG_DIR, os.path.join(_REPO_DIR, "perfbench"),
+                os.path.join(_REPO_DIR, "scripts"),
+                os.path.join(_REPO_DIR, "bench.py")):
+        for path in _py_files(top):
+            with open(path) as f:
+                tree = ast.parse(f.read(), filename=path)
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                name = (fn.id if isinstance(fn, ast.Name) else
+                        fn.attr if isinstance(fn, ast.Attribute) else None)
+                if name is None:
+                    continue
+                kw_names.setdefault(name, set()).update(
+                    k.arg for k in node.keywords)
+                n = (sys.maxsize if any(isinstance(a, ast.Starred)
+                                        for a in node.args)
+                     else len(node.args))
+                n_pos[name] = max(n_pos.get(name, 0), n)
+    uncalled = set()
+    for path in _py_files(_PKG_DIR):
+        rel = os.path.relpath(path, _PKG_DIR)
+        with open(path) as f:
+            tree = ast.parse(f.read(), filename=path)
+        for node in ast.walk(tree):
+            if (not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    or node.name.startswith("q_")
+                    or (rel, node.name) == ("cli.py", "main")):
+                continue
+            a = node.args
+            pos = a.posonlyargs + a.args
+            defaulted = [(i, p.arg) for i, p in enumerate(pos)
+                         if i >= len(pos) - len(a.defaults)]
+            defaulted += [(None, p.arg) for p, d
+                          in zip(a.kwonlyargs, a.kw_defaults)
+                          if d is not None]
+            kws = kw_names.get(node.name, set())
+            npos = n_pos.get(node.name, 0)
+            for i, arg in defaulted:
+                if not (arg in kws or None in kws
+                        or (i is not None and i < npos)):
+                    uncalled.add((rel, node.name, arg))
+    assert uncalled <= _UNCALLED_PARAM_ALLOWLIST, (
+        "defaulted parameters no caller passes — make each a module "
+        "constant the tests monkeypatch, or allowlist it with its "
+        f"reason: {sorted(uncalled - _UNCALLED_PARAM_ALLOWLIST)}")
+    assert uncalled == _UNCALLED_PARAM_ALLOWLIST, (
+        "stale allowlist entries: "
+        f"{sorted(_UNCALLED_PARAM_ALLOWLIST - uncalled)}")
